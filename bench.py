@@ -7,8 +7,9 @@ recorded ``parsed: null``):
 
   line 1 — the DETAIL record: probe timings (skew / graph-scale /
            dedup-scale), per-size round counts, fitted exponents,
-           sentinel start/end.  Unbounded size; consumers that want
-           probe history read this line.
+           sentinel start/end, registry-query warm-up failures.
+           Unbounded size; consumers that want probe history read
+           this line.
   line 2 — the COMPACT HEADLINE, always the FINAL stdout line and
            pinned < 1800 chars by ``tests/test_registry.py``:
            {"metric", "value", "unit", "queries": {headline only},
@@ -20,6 +21,11 @@ timings on this box swing ±15% run-to-run, masking real regressions —
 the min is the steady-state capability).  A warm-up pass at the
 smallest SF runs first so JIT/codegen/Python-worker spin-up lands
 outside the timings.
+
+Every scale probe is one ``Probe`` entry in ``PROBES``, timed by
+``run_probe``: input built and materialized outside the clock, one
+untimed warm-up of every variant at a tenth of the x1 size, then
+min-of-``reps`` per point with the variant order alternating per rep.
 """
 
 from __future__ import annotations
@@ -27,14 +33,30 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
+from collections.abc import Callable
+from contextlib import contextmanager
+from functools import partial
 from pathlib import Path
+from typing import NamedTuple
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from pyspark.sql import Window  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from parcial_bigdata_spark.operators import dedup as D  # noqa: E402
+from parcial_bigdata_spark.operators import graph as G  # noqa: E402
+from parcial_bigdata_spark.operators import sampling as S  # noqa: E402
+from parcial_bigdata_spark.operators import similarity as SIM  # noqa: E402
+from parcial_bigdata_spark.operators.analytics import mad_outliers  # noqa: E402
+from parcial_bigdata_spark.operators.scale import distributed_rank  # noqa: E402
 from parcial_bigdata_spark.plans.registry import QUERIES  # noqa: E402
 from parcial_bigdata_spark.session import get_spark  # noqa: E402
+from parcial_bigdata_spark.streaming import windows as W  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -73,181 +95,84 @@ HEADLINE = [
 
 N_ITER = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
 
-# ---- LSH skew stress (round-4 verdict item 4) -----------------------------
-# A boilerplate-heavy corpus with ONE degenerate >=10^4-member band bucket
-# (10,500 byte-identical "license page" docs — every LSH band collides), plus
-# 100 planted genuine near-dup pairs and unique filler.  Without the
-# MAX_LSH_BUCKET cap the hot bucket emits ~5.5e7 pairs from one grouped row;
-# with it, pair generation stays bounded and wall-time flat.  The bench times
-# the capped run + the observability twin, and reports the cap's measured
-# recall effect: planted-pair recall (must stay high — real near-dups live in
-# small buckets) vs the identical block (deliberately truncated; exact dedup
-# catches identical texts upstream).
 
-_SKEW_IDENTICAL = 10_500
-_SKEW_PLANTED = 100
+# ---- the timing primitive -------------------------------------------------
+
+def _noop(df) -> None:
+    """Execute ``df`` fully into the noop sink (no driver collect)."""
+    df.write.mode("overwrite").format("noop").save()
 
 
-def _skew_corpus(spark):
-    boiler = ("terms of service agreement all rights reserved no warranty "
-              "of any kind either expressed or implied including but not "
-              "limited to the implied warranties of merchantability and "
-              "fitness for a particular purpose " * 2)
-    rows = [(i, boiler) for i in range(_SKEW_IDENTICAL)]
-    vid = _SKEW_IDENTICAL
-    for p in range(_SKEW_PLANTED):  # pair = 30-word text, last 2 words mutated
-        words = [f"w{p}x{j}" for j in range(30)]
-        rows.append((vid, " ".join(words)))
-        rows.append((vid + 1, " ".join(words[:-2] + [f"m{p}a", f"m{p}b"])))
-        vid += 2
-    for f in range(1_300):
-        rows.append((vid, " ".join(f"f{f}u{j}" for j in range(25))))
-        vid += 1
-    return spark.createDataFrame(rows, "doc_id long, text string")
+def best_of(runs: dict[str, Callable], reps: int,
+            warm: Callable | None = None) -> dict[str, tuple[float, object]]:
+    """Min-of-``reps`` wall seconds for each zero-argument callable in
+    ``runs``, returned as ``{label: (best_sec, result_of_last_run)}``.
+
+    ``warm`` runs once, untimed, before the first timed rep.  Even reps
+    run the labels in order and odd reps reversed, so ambient drift
+    lands on every variant alike.  Exceptions propagate."""
+    if warm is not None:
+        warm()
+    labels = list(runs)
+    best: dict[str, float] = {}
+    out: dict[str, object] = {}
+    for rep in range(max(1, reps)):
+        for label in labels if rep % 2 == 0 else labels[::-1]:
+            t0 = time.perf_counter()
+            out[label] = runs[label]()
+            el = time.perf_counter() - t0
+            best[label] = min(best.get(label, float("inf")), el)
+    return {label: (round(best[label], 3), out[label]) for label in labels}
 
 
-def _warm_probe_session(spark) -> None:
-    """One warm-up pass for the FRESH probe session (round-7 advice:
-    the skew stress used to run cold, so JIT/codegen/Python-worker
-    spin-up landed inside its timings and broke cross-round
-    comparability — noted in BASELINE.md's history).  Warms both probe
-    shapes: a small CC contraction (Arrow union-find workers, the
-    groupBy/join codegen) and a small minhash pipeline (shingle/
-    signature expressions, the banded-join codegen)."""
-    from parcial_bigdata_spark.operators import dedup as D
-
-    warm_edges = _cc_edges(spark, 10_000).persist()
-    warm_edges.count()
-    D.duplicate_components(warm_edges).count()
-    warm_edges.unpersist()
-    warm_docs = _split_corpus(spark, 40)
-    D.minhash_near_duplicates(warm_docs, threshold=0.6).count()
+@contextmanager
+def _persisted(spark, inp, n):
+    """Persist the probe input (one frame or a tuple of frames) and
+    count it, outside the clock; yields ``(input, rows of the first
+    frame)``."""
+    frames = inp if isinstance(inp, tuple) else (inp,)
+    try:
+        counts = [f.persist().count() for f in frames]
+        yield inp, counts[0]
+    finally:
+        for f in frames:
+            f.unpersist()
 
 
-def _run_skew_stress(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import dedup as D
-
-    corpus = _skew_corpus(spark).persist()
-    corpus.count()
-    timings: dict[str, float] = {}
-
-    best = float("inf")
-    for _ in range(max(1, N_ITER)):
-        t0 = time.perf_counter()
-        banded = D.band_rows(corpus, 3)
-        stats_row = D.bucket_truncation_stats(
-            banded, ["band_id", "band_hash"]
-        ).collect()[0]
-        best = min(best, time.perf_counter() - t0)
-    timings["lsh_skew_bucket_stats"] = round(best, 3)
-
-    best, found = float("inf"), None
-    for _ in range(max(1, N_ITER)):
-        t0 = time.perf_counter()
-        pairs = D.minhash_near_duplicates(corpus, threshold=0.6).persist()
-        n_pairs = pairs.count()
-        best = min(best, time.perf_counter() - t0)
-        if found is None:
-            from pyspark.sql import functions as F
-
-            planted = (F.col("doc_a") >= _SKEW_IDENTICAL) & (
-                F.col("doc_b") == F.col("doc_a") + 1
-            ) & ((F.col("doc_a") - _SKEW_IDENTICAL) % 2 == 0)
-            found = pairs.where(planted).count()
-            n_identical_pairs = pairs.where(
-                F.col("doc_b") < _SKEW_IDENTICAL
-            ).count()
-        pairs.unpersist()
-    timings["lsh_skew_capped_pairs"] = round(best, 3)
-    corpus.unpersist()
-
-    detail = {
-        "identical_block_docs": _SKEW_IDENTICAL,
-        "max_bucket_size": stats_row.max_bucket_size,
-        "n_truncated_buckets": stats_row.n_truncated_buckets,
-        "n_members_dropped": stats_row.n_members_dropped,
-        "pairs_emitted_total": n_pairs,
-        "identical_block_pairs_emitted": n_identical_pairs,
-        "planted_pairs": _SKEW_PLANTED,
-        "planted_found": found,
-        "planted_recall": round(found / _SKEW_PLANTED, 4),
-    }
-    return timings, detail
+@contextmanager
+def _parquet_dir(spark, inp, n):
+    """Write the probe input to a scratch parquet directory (the file
+    source a streaming query reads); yields ``((spark, dir), n)``."""
+    tmp = tempfile.mkdtemp(prefix="bench-probe-")
+    try:
+        inp.coalesce(8).write.mode("overwrite").parquet(tmp)
+        yield (spark, tmp), n
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
-# ---- graph-family scale exponent (round-5 verdict item 2) -----------------
-# The 100 TB story for connected components / leakage-safe split rests on
-# O(E·α) contraction + O(log diameter) levels; the per-round bench measures
-# only one graph size.  These probes time the SAME operators on synthetic
-# corpora at ×1/×4/×16 edge counts (driver testdata is read-only, so the
-# corpora are generated distributed via spark.range — no driver-side row
-# loops) and report a fitted log-log scaling exponent.  Near-linear (< ~1.3
-# after fixed per-level Spark-job overhead) validates the design; anything
-# super-linear is a regression the JSON makes visible.
+class Probe(NamedTuple):
+    """One probe series.  Timing keys and detail rows are format
+    strings over ``s`` (the scale) and ``v`` (the variant label; ``""``
+    is the series itself)."""
 
-# CC gets a ×64 point (6.4M edges — round-6 verdict item 8: the tail
-# exponent needs a reading past the fixed-overhead regime); the split
-# probe composes shingling+jaccard+CC+window and stays at ×16 to keep
-# the probe session bounded.
-_GRAPH_SCALES = (1, 4, 16)
-_CC_SCALES = (1, 4, 16, 64)
-_CC_BASE_EDGES = 100_000
-_SPLIT_BASE_CLUSTERS = 200  # ×5 docs, ×10 intra-cluster edges
-
-
-def _cc_edges(spark, n_edges):
-    """Synthetic near-dup edge list: 80% 5-cliques (the bulk shape real
-    near-dup graphs take) + 20% disjoint 100-edge chains (diameter
-    stress for the Borůvka level count).  Deterministic, generated
-    executor-side."""
-    from pyspark.sql import functions as F
-
-    n_cliques = int(n_edges * 0.8) // 10
-    cliques = (
-        spark.range(n_cliques)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform("
-                    "  flatten(transform(sequence(0, 3), i ->"
-                    "    transform(sequence(i + 1, 4), j -> array(i, j)))),"
-                    "  p -> named_struct("
-                    "    'doc_a', id * 5 + p[0], 'doc_b', id * 5 + p[1]))"
-                )
-            ).alias("e")
-        )
-        .select("e.doc_a", "e.doc_b")
-    )
-    n_chain_edges = n_edges - n_cliques * 10
-    off = n_cliques * 5
-    chains = spark.range(n_chain_edges).select(
-        (F.lit(off) + F.col("id") + F.floor(F.col("id") / 100)).alias("doc_a"),
-        (F.lit(off) + F.col("id") + F.floor(F.col("id") / 100) + 1).alias("doc_b"),
-    )
-    return cliques.unionByName(chains)
-
-
-def _split_corpus(spark, n_clusters):
-    """Documents in 5-doc near-dup clusters (28 shared + 2 unique words
-    → pairwise Jaccard ≈ 0.87 on either word-set or 3-gram semantics,
-    identical lengths) — exactly 10 exact-near-dup edges per cluster."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.range(n_clusters * 5)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.expr(
-                "concat_ws(' ',"
-                "  concat_ws(' ', transform(sequence(0, 27), j ->"
-                "    concat('c', CAST(id DIV 5 AS STRING), 'w', CAST(j AS STRING)))),"
-                "  concat('c', CAST(id DIV 5 AS STRING), 'v', CAST(id % 5 AS STRING), 'a'),"
-                "  concat('c', CAST(id DIV 5 AS STRING), 'v', CAST(id % 5 AS STRING), 'b'))"
-            ).alias("text"),
-        )
-        .withColumn("lang", F.lit("en"))
-        .withColumn("n_chars", F.length("text"))
-    )
+    path: tuple[str, ...]       # where the series lands in the detail record
+    key: str                    # probe_queries timing key
+    scales: tuple[int, ...]
+    base: int                   # build size at x1
+    build: Callable             # (spark, n) -> input, not yet materialized
+    runs: dict[str, Callable]   # variant label -> timed work on the input
+    reps: int = 1
+    size: str | None = "edges"  # row field for the materialized input size
+    fields: Callable | None = None  # (input, n, result, label) -> row fields
+    sec: str | None = "sec"     # row field for the best time
+    point: str | None = "x{s}{v}"   # row name under path; None: path itself
+    axis: str | None = None     # row field the exponent fits on (default size)
+    fit: str = "own"            # exponents go on "own" path, "parent" or "none"
+    variant_scales: tuple[int, ...] = ()  # scales of labels other than ""
+    optional: tuple[str, ...] = ()  # labels whose warm-up failure is recorded
+    stage: Callable = _persisted    # materializes the input outside the clock
+    finish: Callable | None = None  # extra fits over the finished series
 
 
 def _fit_exponent(sizes, secs):
@@ -275,101 +200,233 @@ def _tail_exponent(sizes, secs):
     return _fit_exponent(sizes[-2:], secs[-2:])
 
 
-def _run_graph_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import dedup as D
-    from parcial_bigdata_spark.operators import graph as G
-    from parcial_bigdata_spark.operators import sampling as S
+def _fit(dest: dict, sizes, secs, suffix: str = "") -> None:
+    dest[f"exponent{suffix}"] = _fit_exponent(sizes, secs)
+    dest[f"exponent{suffix}_tail"] = _tail_exponent(sizes, secs)
 
+
+def run_probe(spark, p: Probe, timings: dict[str, float], detail: dict) -> None:
+    """Time one probe series into ``timings`` (probe_queries keys) and
+    ``detail`` (the detail record)."""
+    parent = detail
+    for k in p.path[:-1]:
+        parent = parent.setdefault(k, {})
+    rows = parent.setdefault(p.path[-1], {})
+    runs = dict(p.runs)
+
+    def scales_of(label):
+        return p.variant_scales if label and p.variant_scales else p.scales
+
+    with p.stage(spark, p.build(spark, max(p.base // 10, 1)), None) as (small, _):
+        for label in list(runs):
+            try:
+                runs[label](small)
+            except Exception as e:  # an optional variant missing on this build
+                if label not in p.optional:
+                    raise
+                del runs[label]
+                for s in scales_of(label):
+                    rows[p.point.format(s=s, v=label)] = {"error": str(e)[:200]}
+
+    for s in p.scales:
+        n = p.base * s
+        with p.stage(spark, p.build(spark, n), n) as (inp, size):
+            best = best_of({lb: partial(run, inp) for lb, run in runs.items()
+                            if s in scales_of(lb)}, p.reps)
+            for label, (sec, result) in best.items():
+                row = rows if p.point is None else rows.setdefault(
+                    p.point.format(s=s, v=label), {})
+                if p.size:
+                    row[p.size] = size
+                if p.fields:
+                    row.update(p.fields(inp, n, result, label))
+                if p.sec:
+                    row[p.sec.format(v=label)] = sec
+                timings[p.key.format(s=s, v=label)] = sec
+    if p.fit != "none":
+        pts = [rows[p.point.format(s=s, v="")] for s in p.scales]
+        _fit(rows if p.fit == "own" else parent,
+             [pt[p.axis or p.size] for pt in pts], [pt[p.sec] for pt in pts])
+    if p.finish:
+        p.finish(rows)
+
+
+def run_probes(spark, probes) -> tuple[dict[str, float], dict]:
     timings: dict[str, float] = {}
-    detail: dict = {"cc": {}, "leakage_split": {}, "pagerank": {}}
+    detail: dict = {}
+    for p in probes:
+        run_probe(spark, p, timings, detail)
+    return timings, detail
 
-    # Session warm-up (JIT, codegen, Arrow Python workers — otherwise
-    # the x1 point absorbs the cold start and inverts the fit) happens
-    # once in _warm_probe_session before ANY probe family runs.
 
-    cc_secs, cc_sizes = [], []
-    cc_units = []
-    for s in _CC_SCALES:
-        n_edges = _CC_BASE_EDGES * s
-        edges = _cc_edges(spark, n_edges).persist()
-        n_real = edges.count()  # materialize input outside the timing
-        t0 = time.perf_counter()
-        n_comp_rows = D.duplicate_components(edges).count()
-        el = round(time.perf_counter() - t0, 3)
-        edges.unpersist()
-        timings[f"cc_scale_x{s}"] = el
-        cc_secs.append(el)
-        cc_sizes.append(n_real)
-        # job units = star rounds + 1 if the Arrow tail ran: the raw
-        # wall-time conflates per-edge cost with ROUND COUNT, and round
-        # counts differ across sizes because the tail cutoff truncates
-        # rounds at small scales (x16 runs 2 star rounds, x64 runs ~10
-        # on the same diameter-100 chains).  Rounds are O(log diameter)
-        # — bounded, not a scaling axis — so sec/unit isolates the
-        # per-edge axis that must stay ~linear at 100 TB.
-        stats = dict(D._LAST_CC_STATS)
-        units = stats["star_rounds"] + (1 if stats["tail_edges"] else 0)
-        cc_units.append(max(units, 1))
-        detail["cc"][f"x{s}"] = {
-            "edges": n_real, "labeled_vertices": n_comp_rows, "sec": el,
-            "star_rounds": stats["star_rounds"],
-            "tail_edges": stats["tail_edges"],
-            # contraction engagement: out/in → 1 means the pass
-            # degraded to pass-through (layout regression flag)
-            "contract_in": stats.get("contract_edges_in"),
-            "contract_out": stats.get("contract_edges_out"),
+def _as(name: str) -> Callable:
+    """Row fields holding the run's result under ``name`` (formatted
+    with the variant label)."""
+    return lambda inp, n, r, v: {name.format(v=v): r}
+
+
+# ---- LSH skew stress (round-4 verdict item 4) -----------------------------
+# A boilerplate-heavy corpus with ONE degenerate >=10^4-member band bucket
+# (10,500 byte-identical "license page" docs — every LSH band collides), plus
+# 100 planted genuine near-dup pairs and unique filler.  Without the
+# MAX_LSH_BUCKET cap the hot bucket emits ~5.5e7 pairs from one grouped row;
+# with it, pair generation stays bounded and wall-time flat.  The bench times
+# the capped run + the observability twin, and reports the cap's measured
+# recall effect: planted-pair recall (must stay high — real near-dups live in
+# small buckets) vs the identical block (deliberately truncated; exact dedup
+# catches identical texts upstream).
+
+_SKEW_IDENTICAL = 10_500
+_SKEW_PLANTED = 100
+
+
+def _skew_corpus(spark, n_identical):
+    boiler = ("terms of service agreement all rights reserved no warranty "
+              "of any kind either expressed or implied including but not "
+              "limited to the implied warranties of merchantability and "
+              "fitness for a particular purpose " * 2)
+    rows = [(i, boiler) for i in range(n_identical)]
+    vid = n_identical
+    for p in range(_SKEW_PLANTED):  # pair = 30-word text, last 2 words mutated
+        words = [f"w{p}x{j}" for j in range(30)]
+        rows.append((vid, " ".join(words)))
+        rows.append((vid + 1, " ".join(words[:-2] + [f"m{p}a", f"m{p}b"])))
+        vid += 2
+    for f in range(1_300):
+        rows.append((vid, " ".join(f"f{f}u{j}" for j in range(25))))
+        vid += 1
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _skew_fields(inp, n_identical, r, label):
+    if label == "bucket_stats":
+        return {
+            "identical_block_docs": n_identical,
+            "max_bucket_size": r.max_bucket_size,
+            "n_truncated_buckets": r.n_truncated_buckets,
+            "n_members_dropped": r.n_members_dropped,
         }
-    detail["cc"]["exponent"] = _fit_exponent(cc_sizes, cc_secs)
-    detail["cc"]["exponent_tail"] = _tail_exponent(cc_sizes, cc_secs)
-    per_round = [t / u for t, u in zip(cc_secs, cc_units)]
-    detail["cc"]["exponent_per_round"] = _fit_exponent(cc_sizes, per_round)
-    detail["cc"]["exponent_per_round_tail"] = _tail_exponent(
-        cc_sizes, per_round
+    found = sum(
+        1 for x in r
+        if x.doc_a >= n_identical and x.doc_b == x.doc_a + 1
+        and (x.doc_a - n_identical) % 2 == 0
+    )
+    return {
+        "pairs_emitted_total": len(r),
+        "identical_block_pairs_emitted": sum(
+            1 for x in r if x.doc_b < n_identical
+        ),
+        "planted_pairs": _SKEW_PLANTED,
+        "planted_found": found,
+        "planted_recall": round(found / _SKEW_PLANTED, 4),
+    }
+
+
+# ---- graph-family scale exponent (round-5 verdict item 2) -----------------
+# The 100 TB story for connected components / leakage-safe split rests on
+# O(E·α) contraction + O(log diameter) levels; the per-round bench measures
+# only one graph size.  These probes time the SAME operators on synthetic
+# corpora at ×1/×4/×16 edge counts (driver testdata is read-only, so the
+# corpora are generated distributed via spark.range — no driver-side row
+# loops) and report a fitted log-log scaling exponent.  Near-linear (< ~1.3
+# after fixed per-level Spark-job overhead) validates the design; anything
+# super-linear is a regression the JSON makes visible.
+
+# CC gets a ×64 point (6.4M edges — round-6 verdict item 8: the tail
+# exponent needs a reading past the fixed-overhead regime); the split
+# probe composes shingling+jaccard+CC+window and stays at ×16 to keep
+# the probe session bounded.
+_GRAPH_SCALES = (1, 4, 16)
+_CC_SCALES = (1, 4, 16, 64)
+_CC_BASE_EDGES = 100_000
+_SPLIT_BASE_CLUSTERS = 200  # ×5 docs, ×10 intra-cluster edges
+
+
+def _clique_chain(spark, n_edges, clique_share, chain_edges,
+                  src="doc_a", dst="doc_b"):
+    """Deterministic executor-side graph: 5-cliques (10 edges each)
+    holding ``clique_share`` of the edges, the rest disjoint
+    ``chain_edges``-edge chains."""
+    n_cliques = int(n_edges * clique_share) // 10
+    cliques = (
+        spark.range(n_cliques)
+        .select(
+            F.explode(
+                F.expr(
+                    "transform("
+                    "  flatten(transform(sequence(0, 3), i ->"
+                    "    transform(sequence(i + 1, 4), j -> array(i, j)))),"
+                    "  p -> named_struct("
+                    f"    '{src}', id * 5 + p[0], '{dst}', id * 5 + p[1]))"
+                )
+            ).alias("e")
+        )
+        .select(f"e.{src}", f"e.{dst}")
+    )
+    off = n_cliques * 5
+    step = F.col("id") + F.floor(F.col("id") / chain_edges)
+    chains = spark.range(n_edges - n_cliques * 10).select(
+        (F.lit(off) + step).alias(src),
+        (F.lit(off) + step + 1).alias(dst),
+    )
+    return cliques.unionByName(chains)
+
+
+def _cc_edges(spark, n_edges):
+    """Near-dup edge list: 80% 5-cliques (the bulk shape real near-dup
+    graphs take) + 20% disjoint 100-edge chains (diameter stress for
+    the Borůvka level count)."""
+    return _clique_chain(spark, n_edges, 0.8, 100)
+
+
+def _split_corpus(spark, n_clusters):
+    """Documents in 5-doc near-dup clusters (28 shared + 2 unique words
+    → pairwise Jaccard ≈ 0.87 on either word-set or 3-gram semantics,
+    identical lengths) — exactly 10 exact-near-dup edges per cluster."""
+    return (
+        spark.range(n_clusters * 5)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.expr(
+                "concat_ws(' ',"
+                "  concat_ws(' ', transform(sequence(0, 27), j ->"
+                "    concat('c', CAST(id DIV 5 AS STRING), 'w', CAST(j AS STRING)))),"
+                "  concat('c', CAST(id DIV 5 AS STRING), 'v', CAST(id % 5 AS STRING), 'a'),"
+                "  concat('c', CAST(id DIV 5 AS STRING), 'v', CAST(id % 5 AS STRING), 'b'))"
+            ).alias("text"),
+        )
+        .withColumn("lang", F.lit("en"))
+        .withColumn("n_chars", F.length("text"))
     )
 
-    sp_secs, sp_sizes = [], []
-    for s in _GRAPH_SCALES:
-        docs = _split_corpus(spark, _SPLIT_BASE_CLUSTERS * s).persist()
-        n_docs = docs.count()
-        t0 = time.perf_counter()
-        rows = S.leakage_safe_split(docs, threshold=0.6).collect()
-        el = round(time.perf_counter() - t0, 3)
-        docs.unpersist()
-        timings[f"leakage_split_scale_x{s}"] = el
-        sp_secs.append(el)
-        sp_sizes.append(n_docs)
-        detail["leakage_split"][f"x{s}"] = {
-            "docs": n_docs,
-            "components": sum(r.n_components for r in rows),
-            "sec": el,
-        }
-    detail["leakage_split"]["exponent"] = _fit_exponent(sp_sizes, sp_secs)
-    detail["leakage_split"]["exponent_tail"] = _tail_exponent(sp_sizes, sp_secs)
 
-    # PageRank: fixed 3 power iterations over the same synthetic edge
-    # sets as the CC probe — per-iteration work is strictly ∝ edges
-    # (one ranks-onto-edges join + one in-sum groupBy + one vertex-set
-    # left join), so unlike CC there is no round-count axis to divide
-    # out; the raw exponent IS the per-edge signal.
-    pr_secs, pr_sizes = [], []
-    for s in _GRAPH_SCALES:
-        edges = _cc_edges(spark, _CC_BASE_EDGES * s).persist()
-        n_real = edges.count()
-        t0 = time.perf_counter()
-        n_nodes = G.pagerank(
-            edges, src="doc_a", dst="doc_b", iterations=3
-        ).count()
-        el = round(time.perf_counter() - t0, 3)
-        edges.unpersist()
-        timings[f"pagerank_scale_x{s}"] = el
-        pr_secs.append(el)
-        pr_sizes.append(n_real)
-        detail["pagerank"][f"x{s}"] = {
-            "edges": n_real, "nodes": n_nodes, "sec": el,
-        }
-    detail["pagerank"]["exponent"] = _fit_exponent(pr_sizes, pr_secs)
-    detail["pagerank"]["exponent_tail"] = _tail_exponent(pr_sizes, pr_secs)
-    return timings, detail
+def _cc_fields(inp, n, r, v):
+    stats = D._LAST_CC_STATS
+    return {
+        "labeled_vertices": r,
+        "star_rounds": stats["star_rounds"],
+        "tail_edges": stats["tail_edges"],
+        # contraction engagement: out/in → 1 means the pass
+        # degraded to pass-through (layout regression flag)
+        "contract_in": stats.get("contract_edges_in"),
+        "contract_out": stats.get("contract_edges_out"),
+    }
+
+
+def _cc_per_round(cc: dict) -> None:
+    """Exponents of sec per job unit (star rounds + 1 if the Arrow tail
+    ran): the raw wall-time conflates per-edge cost with ROUND COUNT,
+    and round counts differ across sizes because the tail cutoff
+    truncates rounds at small scales (x16 runs 2 star rounds, x64 runs
+    ~10 on the same diameter-100 chains).  Rounds are O(log diameter) —
+    bounded, not a scaling axis — so sec/unit isolates the per-edge axis
+    that must stay ~linear at 100 TB."""
+    pts = [cc[f"x{s}"] for s in _CC_SCALES]
+    per_round = [
+        pt["sec"] / max(pt["star_rounds"] + (1 if pt["tail_edges"] else 0), 1)
+        for pt in pts
+    ]
+    _fit(cc, [pt["edges"] for pt in pts], per_round, "_per_round")
 
 
 # ---- MinHash/LSH pipeline scale exponent (round-7 verdict item 4) --------
@@ -394,102 +451,22 @@ _DEDUP_BASE_CLUSTERS = 16_000  # ×5 docs per cluster
 
 # r17 (verdict item 1): carried-shingles vs slim-pairs+rejoin verify A/B
 # for minhash_near_duplicates, at the two LARGEST corpus sizes (below
-# ~300k docs fixed overhead hides the shuffle-byte axis).  Order
-# alternates between reps so ambient drift hits both variants equally.
+# ~300k docs fixed overhead hides the shuffle-byte axis).  The probe
+# corpora are in-memory frames (local_scan_bytes → None), so the public
+# operator's adaptive gate routes them to the rejoin form; the A/B times
+# the two private impls explicitly.
 _DEDUP_AB_SCALES = (16, 64)
-
-
-def _run_dedup_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import dedup as D
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _DEDUP_SCALES:
-        docs = _split_corpus(spark, _DEDUP_BASE_CLUSTERS * s).persist()
-        n_docs = docs.count()
-        best, n_pairs = float("inf"), None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n_pairs = D.minhash_near_duplicates(docs, threshold=0.6).count()
-            best = min(best, time.perf_counter() - t0)
-        el = round(best, 3)
-        docs.unpersist()
-        timings[f"dedup_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(n_docs)
-        detail[f"x{s}"] = {"docs": n_docs, "pairs": n_pairs, "sec": el}
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-
-    # Carried-vs-rejoin verify A/B (r17).  The probe corpora are
-    # in-memory frames (local_scan_bytes → None), so the public
-    # operator's adaptive gate routes them to the rejoin form; here the
-    # two private impls are timed explicitly, interleaved min-of-2 with
-    # alternating order (the BASELINE.md protocol for this box).
-    variants = (
-        ("carried", D._minhash_verify_carried),
-        ("rejoin", D._minhash_verify_rejoin),
-    )
-    detail["verify_ab"] = {}
-    for s in _DEDUP_AB_SCALES:
-        docs = _split_corpus(spark, _DEDUP_BASE_CLUSTERS * s).persist()
-        n_docs = docs.count()
-        best: dict[str, float] = {}
-        pairs: dict[str, int] = {}
-        for rep in range(2):
-            order = variants if rep % 2 == 0 else variants[::-1]
-            for label, fn in order:
-                t0 = time.perf_counter()
-                pairs[label] = fn(docs, 0.6, 3).count()
-                el = time.perf_counter() - t0
-                best[label] = min(best.get(label, float("inf")), el)
-        docs.unpersist()
-        for label, _ in variants:
-            timings[f"dedup_verify_{label}_x{s}"] = round(best[label], 3)
-        detail["verify_ab"][f"x{s}"] = {
-            "docs": n_docs,
-            **{f"{lb}_sec": round(best[lb], 3) for lb, _ in variants},
-            **{f"{lb}_pairs": pairs[lb] for lb, _ in variants},
-        }
-    return timings, detail
-
 
 # ---- Containment-dedup scale exponent (round 16) -------------------------
 # containment_pairs is the exact asymmetric twin of the minhash pipeline
 # (prefix-filtered candidate join, no length band, full-token B side) —
 # the B-side token explode is the linear-cost stage and the prefix join
-# the candidate driver.  Same cluster corpus and sizing rationale as
-# _run_dedup_scale (fixed overhead dominates below ~300k docs); pair
-# volume scales linearly with the corpus by construction.  Calibration
-# (quiet box): 13.1 / 14.7 / 36.7 s at 80k / 320k / 1.28M docs — tail
-# exponent ≈ 0.66; a tail drifting well above ~1.2 is the regression
-# flag (candidate blowup past the prefix filter).
-
-def _run_containment_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import dedup as D
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _DEDUP_SCALES:
-        docs = _split_corpus(spark, _DEDUP_BASE_CLUSTERS * s).persist()
-        n_docs = docs.count()
-        best, n_pairs = float("inf"), None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n_pairs = D.containment_pairs(docs, threshold=0.7).count()
-            best = min(best, time.perf_counter() - t0)
-        el = round(best, 3)
-        docs.unpersist()
-        timings[f"containment_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(n_docs)
-        detail[f"x{s}"] = {"docs": n_docs, "pairs": n_pairs, "sec": el}
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
-
+# the candidate driver.  Same cluster corpus and sizing rationale as the
+# dedup probe (fixed overhead dominates below ~300k docs); pair volume
+# scales linearly with the corpus by construction.  Calibration (quiet
+# box): 13.1 / 14.7 / 36.7 s at 80k / 320k / 1.28M docs — tail exponent
+# ≈ 0.66; a tail drifting well above ~1.2 is the regression flag
+# (candidate blowup past the prefix filter).
 
 # ---- Triangle-family scale exponent (round-8 verdict item 4) -------------
 # The CC/PageRank probes run on the clique+chain fixture whose max degree
@@ -500,7 +477,8 @@ def _run_containment_scale(spark) -> tuple[dict[str, float], dict]:
 # are true hubs with degrees in the 10³-10⁴ range at ×16) and times the
 # full triangle census at ×1/×4/×16 edges.  Theory bound is O(m^1.5)
 # worst case; the orientation should hold the fixture well under that —
-# a tail exponent drifting above ~1.5 is the regression flag.
+# a tail exponent drifting above ~1.5 is the regression flag.  The fit
+# axis is the distinct undirected edge count the census reports.
 
 _TRI_SCALES = (1, 4, 16)
 # Base sizing deliberately large (×16 → 6.4M raw edges): a first
@@ -514,8 +492,6 @@ def _powerlaw_edges(spark, n_edges):
     inverse-CDF map v = floor(N·u³).  Self-loops and duplicate edges are
     left in — the operator's canonicalize+distinct stage is part of the
     timed pipeline, exactly as a real near-dup edge dump would arrive."""
-    from pyspark.sql import functions as F
-
     n_nodes = max(n_edges // 8, 16)
 
     def node(salt):
@@ -533,37 +509,6 @@ def _powerlaw_edges(spark, n_edges):
     )
 
 
-def _run_triangle_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import graph as G
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _TRI_SCALES:
-        edges = _powerlaw_edges(spark, _TRI_BASE_EDGES * s).persist()
-        n_raw = edges.count()  # materialize input outside the timing
-        best, row = float("inf"), None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            row = G.triangle_stats(edges, src="src", dst="dst").collect()[0]
-            best = min(best, time.perf_counter() - t0)
-        el = round(best, 3)
-        edges.unpersist()
-        timings[f"triangle_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(row.n_edges)  # distinct undirected edges = work axis
-        detail[f"x{s}"] = {
-            "raw_edges": n_raw,
-            "edges": row.n_edges,
-            "nodes": row.n_nodes,
-            "triangles": row.n_triangles,
-            "sec": el,
-        }
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
-
-
 # ---- Incremental-dedup scale probe (round 9) -----------------------------
 # jaccard_pairs_incremental's claim is that candidate work scales with
 # the NEW batch, not the settled base — probe it: a FIXED 400-doc batch
@@ -577,44 +522,12 @@ _INCR_BASE_CLUSTERS = 2_000  # ×5 docs per cluster
 _INCR_NEW_DOCS = 400
 
 
-def _run_incr_dedup_scale(spark) -> tuple[dict[str, float], dict]:
-    from pyspark.sql import functions as F
-
-    from parcial_bigdata_spark.operators import dedup as D
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _INCR_SCALES:
-        corpus = _split_corpus(spark, _INCR_BASE_CLUSTERS * s)
-        # new batch: the id%5==0 doc of the FIRST 400 clusters (fixed
-        # size at every scale); base: every other doc
-        is_new = (F.col("doc_id") % 5 == 0) & (
-            F.col("doc_id") < _INCR_NEW_DOCS * 5
-        )
-        base = corpus.where(~is_new).persist()
-        new = corpus.where(is_new).persist()
-        n_base, n_new = base.count(), new.count()
-        best, n_pairs = float("inf"), None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            n_pairs = D.jaccard_pairs_incremental(
-                base, new, threshold=0.6
-            ).count()
-            best = min(best, time.perf_counter() - t0)
-        el = round(best, 3)
-        base.unpersist()
-        new.unpersist()
-        timings[f"incr_dedup_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(n_base)
-        detail[f"x{s}"] = {
-            "base_docs": n_base, "new_docs": n_new,
-            "pairs": n_pairs, "sec": el,
-        }
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
+def _incr_inputs(spark, n_clusters):
+    """(base, new): the new batch is the id%5==0 doc of the FIRST 400
+    clusters (fixed size at every scale); the base is every other doc."""
+    corpus = _split_corpus(spark, n_clusters)
+    is_new = (F.col("doc_id") % 5 == 0) & (F.col("doc_id") < _INCR_NEW_DOCS * 5)
+    return corpus.where(~is_new), corpus.where(is_new)
 
 
 # ---- k-core peel scale exponent (round-9 verdict item 5) ------------------
@@ -636,66 +549,18 @@ _KCORE_ARM_EDGES = 12
 
 
 def _kcore_graph(spark, n_edges):
-    from pyspark.sql import functions as F
-
-    n_cliques = (n_edges // 2) // 10
-    cliques = (
-        spark.range(n_cliques)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform("
-                    "  flatten(transform(sequence(0, 3), i ->"
-                    "    transform(sequence(i + 1, 4), j -> array(i, j)))),"
-                    "  p -> named_struct("
-                    "    'src', id * 5 + p[0], 'dst', id * 5 + p[1]))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-    )
-    n_path_edges = n_edges - n_cliques * 10
-    off = n_cliques * 5
-    arm = _KCORE_ARM_EDGES
-    paths = spark.range(n_path_edges).select(
-        (F.lit(off) + F.col("id") + F.floor(F.col("id") / arm)).alias("src"),
-        (F.lit(off) + F.col("id") + F.floor(F.col("id") / arm) + 1).alias("dst"),
-    )
-    return cliques.unionByName(paths)
+    return _clique_chain(spark, n_edges, 0.5, _KCORE_ARM_EDGES, "src", "dst")
 
 
-def _run_kcore_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import graph as G
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _KCORE_SCALES:
-        edges = _kcore_graph(spark, _KCORE_BASE_EDGES * s).persist()
-        n_edges = edges.count()  # materialize input outside the timing
-        # single shot per size, like the CC probe: the ~8 fixed peel
-        # rounds dominate and are stable run-to-run
-        t0 = time.perf_counter()
-        n_core = G.kcore(edges, k=2, max_rounds=16).count()
-        el = round(time.perf_counter() - t0, 3)
-        rounds = G._LAST_KCORE_STATS.get("peel_rounds")
-        edges.unpersist()
-        timings[f"kcore_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(n_edges)
-        detail[f"x{s}"] = {
-            "edges": n_edges,
-            "core_nodes": n_core,
-            "peel_rounds": rounds,
-            # per-round surviving-node trace (r12 verdict item 8): a
-            # peel-layout regression moves this sequence before it
-            # moves the wall clock
-            "round_nodes": G._LAST_KCORE_STATS.get("round_nodes"),
-            "sec": el,
-        }
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
+def _kcore_fields(inp, n, r, v):
+    return {
+        "core_nodes": r,
+        "peel_rounds": G._LAST_KCORE_STATS.get("peel_rounds"),
+        # per-round surviving-node trace (r12 verdict item 8): a
+        # peel-layout regression moves this sequence before it moves
+        # the wall clock
+        "round_nodes": G._LAST_KCORE_STATS.get("round_nodes"),
+    }
 
 
 # ---- BFS scale probe (round 10) -------------------------------------------
@@ -712,8 +577,6 @@ _BFS_HUBS = 1_000
 
 
 def _bfs_graph(spark, n_edges):
-    from pyspark.sql import functions as F
-
     hubs = spark.range(_BFS_HUBS).select(
         F.lit(0).alias("src"), (F.col("id") + 1).alias("dst")
     )
@@ -725,31 +588,10 @@ def _bfs_graph(spark, n_edges):
     return hubs.unionByName(leaves)
 
 
-def _run_bfs_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import graph as G
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _BFS_SCALES:
-        edges = _bfs_graph(spark, _BFS_BASE_EDGES * s).persist()
-        n_edges = edges.count()  # materialize input outside the timing
-        t0 = time.perf_counter()
-        rows = {
-            r["hop"]: r["n_nodes"]
-            for r in G.bfs_hop_histogram(edges, max_hops=4).collect()
-        }
-        el = round(time.perf_counter() - t0, 3)
-        edges.unpersist()
-        if rows.get(0) != 1 or rows.get(2) != n_edges - _BFS_HUBS or rows.get(-1):
-            raise RuntimeError(f"bfs probe integrity failed at x{s}: {rows}")
-        timings[f"bfs_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(n_edges)
-        detail[f"x{s}"] = {"edges": n_edges, "hop2_nodes": rows[2], "sec": el}
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
+def _bfs_fields(inp, n_edges, hops, v):
+    if hops.get(0) != 1 or hops.get(2) != n_edges - _BFS_HUBS or hops.get(-1):
+        raise RuntimeError(f"bfs probe integrity failed at {n_edges} edges: {hops}")
+    return {"hop2_nodes": hops[2]}
 
 
 # ---- distributed_rank scale probe (round 10) ------------------------------
@@ -767,8 +609,6 @@ _RANK_BASE_ROWS = 1_000_000
 
 
 def _rank_rows(spark, n):
-    from pyspark.sql import functions as F
-
     return spark.range(n).select(
         F.lit("g").alias("g"),
         F.pmod(F.xxhash64("id"), F.lit(max(n // 50, 1))).alias("v"),
@@ -790,9 +630,7 @@ _WEDGE_D = 8
 
 
 def _wedge_graph(spark, n_edges):
-    from pyspark.sql import functions as F
-
-    n = n_edges // _WEDGE_D
+    n = max(n_edges // _WEDGE_D, 1)
     return (
         spark.range(n)
         .select(
@@ -807,28 +645,6 @@ def _wedge_graph(spark, n_edges):
     )
 
 
-def _run_wedge_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators import graph as G
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    secs, sizes = [], []
-    for s in _WEDGE_SCALES:
-        edges = _wedge_graph(spark, _WEDGE_BASE_EDGES * s).persist()
-        n_edges = edges.count()  # materialize input outside the timing
-        t0 = time.perf_counter()
-        n_out = G.common_neighbor_scores(edges, k=20).count()
-        el = round(time.perf_counter() - t0, 3)
-        edges.unpersist()
-        timings[f"wedge_scale_x{s}"] = el
-        secs.append(el)
-        sizes.append(n_edges)
-        detail[f"x{s}"] = {"edges": n_edges, "top_k": n_out, "sec": el}
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
-
-
 # ---- sketch-median scale probe (round 11) ---------------------------------
 # events_mad_outliers' sketch-guided exact selection claims ZERO
 # full-stream shuffles (the r10 rank form paid two).  This probe times
@@ -841,8 +657,6 @@ _MADSKETCH_BASE_ROWS = 250_000
 
 
 def _madsketch_rows(spark, n):
-    from pyspark.sql import functions as F
-
     return spark.range(n).select(
         F.col("id").alias("event_id"),
         F.concat(F.lit("t"), F.pmod(F.col("id"), F.lit(4))).alias(
@@ -852,39 +666,20 @@ def _madsketch_rows(spark, n):
     )
 
 
-def _run_madsketch_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators.analytics import mad_outliers
-
-    timings: dict[str, float] = {}
-    detail: dict = {}
-    mad_outliers(_madsketch_rows(spark, 20_000)).count()  # warm the shapes
-    secs, sizes = [], []
-    for s in _MADSKETCH_SCALES:
-        rows = _madsketch_rows(spark, _MADSKETCH_BASE_ROWS * s).persist()
-        n = rows.count()
-        t0 = time.perf_counter()
-        mad_outliers(rows).write.mode("overwrite").format("noop").save()
-        el = round(time.perf_counter() - t0, 3)
-        timings[f"madsketch_scale_x{s}"] = el
-        detail[f"x{s}"] = {"rows": n, "sec": el}
-        secs.append(el)
-        sizes.append(n)
-        rows.unpersist()
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
-
-
 # kNN/ANN scale probe (round-13 verdict item 4): the similarity family
 # was the one load-bearing 100 TB claim without a measured exponent —
 # its scale story rested on plan shape alone (batch-local top-k prune
 # bounds the Arrow shuffle at k·|queries| rows/batch; IVF prunes the
 # scan to nprobe/|clusters| of the corpus).  This probe times the full
-# brute-force-Arrow and IVF operators end-to-end on synthetic 64-dim
-# embeddings at x1/x4/x16 vectors; a flat-ish tail exponent is the
-# measured backing.  Clustered geometry (a label-dependent component
-# dominating the per-id term) keeps IVF's probe pruning meaningful
-# rather than degenerate.
+# brute-force-Arrow, IVF and LSH operators end-to-end on synthetic
+# 64-dim embeddings at x1/x4/x16 vectors; a flat-ish tail exponent is
+# the measured backing.  Clustered geometry (a label-dependent
+# component dominating the per-id term) keeps IVF's probe pruning
+# meaningful rather than degenerate.  r17 (verdict item 6): ivf and lsh
+# additionally probe x64 (3.2M vectors) to confirm the nprobe/bucket
+# pruning exponents hold past the fixed-overhead regime; arrow keeps
+# x16 (its matmul cost is linear by construction, and the x64 point
+# would add ~4x the probe session's Arrow bytes for no open question).
 
 _KNN_SCALES = (1, 4, 16)
 _KNN_BASE_VECS = 50_000
@@ -892,8 +687,6 @@ _KNN_QUERY_IDS = list(range(0, 40, 2))  # 20 queries, same every scale
 
 
 def _knn_rows(spark, n):
-    from pyspark.sql import functions as F
-
     return spark.range(n).select(
         F.col("id").alias("vec_id"),
         F.expr(
@@ -905,71 +698,30 @@ def _knn_rows(spark, n):
     )
 
 
-def _run_knn_scale(spark) -> tuple[dict[str, float], dict]:
-    from parcial_bigdata_spark.operators.similarity import (
-        knn_brute_force_arrow, knn_ivf, knn_lsh,
-    )
+# Streaming STATE-SCALE probe (round-14 verdict item 5 — the last 100 TB
+# family without a measured exponent): run the two heaviest stateful
+# shapes — session_window aggregation and the watermarked stream-stream
+# LEFT OUTER interval join — as REAL AvailableNow streams over synthetic
+# event volumes, timing the full run (source discovery, state-store
+# build/merge/evict, sink).  The tail exponent answers the question the
+# correctness gate cannot: does state-store cost stay ~linear as event
+# volume and live state grow together?  x64 (3.84M events) included
+# because the first probe run read the stream-stream join FLAT through
+# x16 — 9.5 s at every volume, pure fixed micro-batch overhead — so the
+# state-cost tail only becomes visible past ~1M events.
 
-    timings: dict[str, float] = {}
-    detail: dict = {"arrow": {}, "ivf": {}, "lsh": {}}
-    # warm all plan shapes (Arrow python workers + matmul JIT for the
-    # brute-force path, centroid broadcast + window for IVF, plane
-    # projections + bucket join for LSH)
-    knn_brute_force_arrow(_knn_rows(spark, 5_000), _KNN_QUERY_IDS).count()
-    knn_ivf(_knn_rows(spark, 5_000), _KNN_QUERY_IDS).count()
-    knn_lsh(_knn_rows(spark, 5_000), _KNN_QUERY_IDS).count()
-    # r17 (verdict item 6): ivf and lsh additionally probe x64 (3.2M
-    # vectors) to confirm the nprobe/bucket pruning exponents hold past
-    # the fixed-overhead regime; arrow keeps x16 (its matmul cost is
-    # linear by construction, and the x64 point would add ~4x the probe
-    # session's Arrow bytes for no open question).
-    fam_scales = {
-        "arrow": _KNN_SCALES,
-        "ivf": _KNN_SCALES + (64,),
-        "lsh": _KNN_SCALES + (64,),
-    }
-    for family, fn in (
-        ("arrow", knn_brute_force_arrow), ("ivf", knn_ivf), ("lsh", knn_lsh)
-    ):
-        secs, sizes = [], []
-        for s in fam_scales[family]:
-            rows = _knn_rows(spark, _KNN_BASE_VECS * s).persist()
-            n = rows.count()  # materialize input outside the timing
-            t0 = time.perf_counter()
-            fn(rows, _KNN_QUERY_IDS).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            el = round(time.perf_counter() - t0, 3)
-            timings[f"knn_{family}_scale_x{s}"] = el
-            detail[family][f"x{s}"] = {"vecs": n, "sec": el}
-            secs.append(el)
-            sizes.append(n)
-            rows.unpersist()
-        detail[family]["exponent"] = _fit_exponent(sizes, secs)
-        detail[family]["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
-
-
-# x64 (3.84M events) included because the first probe run read the
-# stream-stream join FLAT through x16 — 9.5 s at every volume, pure
-# fixed micro-batch overhead — so the state-cost tail only becomes
-# visible past ~1M events
 _STREAM_SCALES = (1, 4, 16, 64)
 _STREAM_BASE_EVENTS = 60_000
-_STREAM_BASE_USERS = 1_500
+_STREAM_EVENTS_PER_USER = 40
 
 
-def _stream_events(spark, scale: int):
-    """Deterministic synthetic event stream for the streaming
-    state-scale probe: users scale WITH volume (constant ~40 events
-    per user over a 2-day span, pseudo-random arrival via id*37 mod
-    172800), so session-window state and join buffer state both grow
-    ~linearly with the scale factor — the dimension the probe
-    measures."""
-    from pyspark.sql import functions as F
-
-    n = _STREAM_BASE_EVENTS * scale
-    users = _STREAM_BASE_USERS * scale
+def _stream_events(spark, n):
+    """Deterministic synthetic event stream: users scale WITH volume
+    (constant ~40 events per user over a 2-day span, pseudo-random
+    arrival via id*37 mod 172800), so session-window state and join
+    buffer state both grow ~linearly with the event count — the
+    dimension the probe measures."""
+    users = max(n // _STREAM_EVENTS_PER_USER, 1)
     return spark.range(n).select(
         F.col("id").alias("event_id"),
         F.timestamp_seconds(
@@ -987,152 +739,140 @@ def _stream_events(spark, scale: int):
     )
 
 
-def _run_streaming_scale(spark) -> tuple[dict[str, float], dict]:
-    """Streaming STATE-SCALE probe (round-14 verdict item 5 — the last
-    100 TB family without a measured exponent): run the two heaviest
-    stateful shapes — session_window aggregation and the watermarked
-    stream-stream LEFT OUTER interval join — as REAL AvailableNow
-    streams over synthetic event volumes at x1/x4/x16, timing the full
-    run (source discovery, state-store build/merge/evict, sink).  The
-    tail exponent answers the question the correctness gate cannot:
-    does state-store cost stay ~linear as event volume and live state
-    grow together?"""
-    import shutil
-    import tempfile
+def _sessionize(src) -> None:
+    _noop(W.sessionize_available_now(*src))
 
-    from parcial_bigdata_spark.streaming.windows import (
-        outer_attribution_available_now, sessionize_available_now,
-    )
 
-    timings: dict[str, float] = {}
-    detail: dict = {"sessionize": {}, "outer_join": {}}
-    # warm both streaming plan shapes (file-stream source machinery,
-    # state-store codecs, memory sink) so x1 doesn't absorb cold start
-    warm_dir = tempfile.mkdtemp(prefix="stream-scale-warm-")
+# r17 (verdict item 7): state-store provider A/B at the largest state
+# point — the default HDFS-backed in-memory provider vs the built-in
+# RocksDB provider (the documented cluster posture for state that
+# outgrows executor heap, guide §5; gate: SPARK_GRAFT_STATE_STORE=rocksdb
+# in session.get_spark).  The provider conf binds at query start, so one
+# session can time both.
+_STATE_STORE = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def _on_rocksdb(run: Callable, src):
+    spark = src[0]
+    prev = spark.conf.get(_STATE_STORE, None)
+    spark.conf.set(_STATE_STORE, _ROCKSDB)
     try:
-        _stream_events(spark, 1).limit(4_000).coalesce(2).write.mode(
-            "overwrite"
-        ).parquet(warm_dir)
-        sessionize_available_now(spark, warm_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        outer_attribution_available_now(spark, warm_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-    finally:
-        shutil.rmtree(warm_dir, ignore_errors=True)
-    for family, fn in (
-        ("sessionize", sessionize_available_now),
-        ("outer_join", outer_attribution_available_now),
-    ):
-        secs, sizes = [], []
-        for s in _STREAM_SCALES:
-            tmp = tempfile.mkdtemp(prefix=f"stream-scale-x{s}-")
-            try:
-                rows = _stream_events(spark, s)
-                rows.coalesce(8).write.mode("overwrite").parquet(tmp)
-                n = _STREAM_BASE_EVENTS * s
-                t0 = time.perf_counter()
-                fn(spark, tmp).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                el = round(time.perf_counter() - t0, 3)
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            timings[f"streaming_{family}_scale_x{s}"] = el
-            detail[family][f"x{s}"] = {"events": n, "sec": el}
-            secs.append(el)
-            sizes.append(n)
-        detail[family]["exponent"] = _fit_exponent(sizes, secs)
-        detail[family]["exponent_tail"] = _tail_exponent(sizes, secs)
-
-    # r17 (verdict item 7): state-store provider A/B at the largest
-    # state point — the default HDFS-backed in-memory provider vs the
-    # built-in RocksDB provider (the documented cluster posture for
-    # state that outgrows executor heap, guide §5; gate:
-    # SPARK_GRAFT_STATE_STORE=rocksdb in session.get_spark).  The
-    # provider conf binds at query start, so one session can time both.
-    import shutil
-    import tempfile
-
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    s = _STREAM_SCALES[-1]
-    tmp = tempfile.mkdtemp(prefix=f"stream-scale-rocksdb-x{s}-")
-    try:
-        _stream_events(spark, s).coalesce(8).write.mode("overwrite").parquet(tmp)
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-        t0 = time.perf_counter()
-        sessionize_available_now(spark, tmp).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        el = round(time.perf_counter() - t0, 3)
-        timings[f"streaming_sessionize_scale_x{s}_rocksdb"] = el
-        detail["sessionize"][f"x{s}_rocksdb"] = {
-            "events": _STREAM_BASE_EVENTS * s,
-            "sec": el,
-            "provider": "rocksdb",
-        }
-    except Exception as e:  # provider missing on an exotic build: record, don't abort
-        detail["sessionize"][f"x{s}_rocksdb"] = {"error": str(e)[:200]}
+        return run(src)
     finally:
         if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+            spark.conf.unset(_STATE_STORE)
         else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        shutil.rmtree(tmp, ignore_errors=True)
-    return timings, detail
+            spark.conf.set(_STATE_STORE, prev)
 
 
-def _run_rank_scale(spark) -> tuple[dict[str, float], dict]:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
-    timings: dict[str, float] = {}
-    detail: dict = {"distributed": {}, "window": {}}
-    # warm both plan shapes (percentile sketch + bucket windows vs the
-    # plain window) so the x1 point doesn't absorb codegen cold start —
-    # a first calibration read x1 at 2x the x4 time from exactly that
-    warm = _rank_rows(spark, 10_000)
-    distributed_rank(warm, "v", "tb", part_cols=["g"], out_col="rk").count()
-    warm.withColumn(
-        "rk", F.row_number().over(Window.partitionBy("g").orderBy("v", "tb"))
-    ).count()
-    secs, sizes = [], []
-    for s in _RANK_SCALES:
-        rows = _rank_rows(spark, _RANK_BASE_ROWS * s).persist()
-        n = rows.count()
-        t0 = time.perf_counter()
-        distributed_rank(
-            rows, "v", "tb", part_cols=["g"], out_col="rk"
-        ).write.mode("overwrite").format("noop").save()
-        el = round(time.perf_counter() - t0, 3)
-        timings[f"rank_scale_x{s}"] = el
-        detail["distributed"][f"x{s}"] = {"rows": n, "sec": el}
-        secs.append(el)
-        sizes.append(n)
-        if s <= 4:  # the single-task window baseline, for the ratio
-            t0 = time.perf_counter()
-            rows.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("g").orderBy("v", "tb")
-                ),
-            ).write.mode("overwrite").format("noop").save()
-            wel = round(time.perf_counter() - t0, 3)
-            timings[f"rank_window_x{s}"] = wel
-            detail["window"][f"x{s}"] = {"rows": n, "sec": wel}
-        rows.unpersist()
-    detail["exponent"] = _fit_exponent(sizes, secs)
-    detail["exponent_tail"] = _tail_exponent(sizes, secs)
-    return timings, detail
+# Execution order matters: the dedup-scale probes run BEFORE the graph
+# probes — the ×64 CC run (6.4M edges) leaves enough JVM GC pressure
+# behind to inflate whatever runs next (a calibration run read the
+# 10k-doc dedup point at 4.2 s post-CC vs 1.5 s standalone).
+PROBES = [
+    Probe(("skew_lsh",), "lsh_skew_{v}", (1,), _SKEW_IDENTICAL, _skew_corpus,
+          {"bucket_stats": lambda c: D.bucket_truncation_stats(
+              D.band_rows(c, 3), ["band_id", "band_hash"]).collect()[0],
+           "capped_pairs": lambda c: D.minhash_near_duplicates(
+               c, threshold=0.6).collect()},
+          reps=N_ITER, size=None, fields=_skew_fields, sec=None, point=None,
+          fit="none"),
+    Probe(("dedup_scale",), "dedup_scale_x{s}", _DEDUP_SCALES,
+          _DEDUP_BASE_CLUSTERS, _split_corpus,
+          {"": lambda d: D.minhash_near_duplicates(d, threshold=0.6).count()},
+          reps=2, size="docs", fields=_as("pairs")),
+    Probe(("dedup_scale", "verify_ab"), "dedup_verify_{v}_x{s}",
+          _DEDUP_AB_SCALES, _DEDUP_BASE_CLUSTERS, _split_corpus,
+          {"carried": lambda d: D._minhash_verify_carried(d, 0.6, 3).count(),
+           "rejoin": lambda d: D._minhash_verify_rejoin(d, 0.6, 3).count()},
+          reps=2, size="docs", fields=_as("{v}_pairs"), sec="{v}_sec",
+          point="x{s}", fit="none"),
+    Probe(("containment_scale",), "containment_scale_x{s}", _DEDUP_SCALES,
+          _DEDUP_BASE_CLUSTERS, _split_corpus,
+          {"": lambda d: D.containment_pairs(d, threshold=0.7).count()},
+          reps=2, size="docs", fields=_as("pairs")),
+    Probe(("triangle_scale",), "triangle_scale_x{s}", _TRI_SCALES,
+          _TRI_BASE_EDGES, _powerlaw_edges,
+          {"": lambda e: G.triangle_stats(e, src="src", dst="dst").collect()[0]},
+          reps=2, size="raw_edges", axis="edges",
+          fields=lambda inp, n, r, v: {
+              "edges": r.n_edges, "nodes": r.n_nodes, "triangles": r.n_triangles,
+          }),
+    Probe(("incr_dedup_scale",), "incr_dedup_scale_x{s}", _INCR_SCALES,
+          _INCR_BASE_CLUSTERS, _incr_inputs,
+          {"": lambda bn: D.jaccard_pairs_incremental(*bn, threshold=0.6).count()},
+          reps=2, size="base_docs",
+          fields=lambda inp, n, r, v: {"new_docs": inp[1].count(), "pairs": r}),
+    Probe(("kcore_scale",), "kcore_scale_x{s}", _KCORE_SCALES,
+          _KCORE_BASE_EDGES, _kcore_graph,
+          {"": lambda e: G.kcore(e, k=2, max_rounds=16).count()},
+          fields=_kcore_fields),
+    Probe(("bfs_scale",), "bfs_scale_x{s}", _BFS_SCALES, _BFS_BASE_EDGES,
+          _bfs_graph,
+          {"": lambda e: {r["hop"]: r["n_nodes"] for r in
+                          G.bfs_hop_histogram(e, max_hops=4).collect()}},
+          fields=_bfs_fields),
+    Probe(("rank_scale", "distributed"), "rank_scale_x{s}", _RANK_SCALES,
+          _RANK_BASE_ROWS, _rank_rows,
+          {"": lambda r: _noop(distributed_rank(
+              r, "v", "tb", part_cols=["g"], out_col="rk"))},
+          size="rows", fit="parent"),
+    Probe(("rank_scale", "window"), "rank_window_x{s}", _RANK_SCALES[:2],
+          _RANK_BASE_ROWS, _rank_rows,
+          {"": lambda r: _noop(r.withColumn("rk", F.row_number().over(
+              Window.partitionBy("g").orderBy("v", "tb"))))},
+          size="rows", fit="none"),
+    Probe(("madsketch_scale",), "madsketch_scale_x{s}", _MADSKETCH_SCALES,
+          _MADSKETCH_BASE_ROWS, _madsketch_rows,
+          {"": lambda r: _noop(mad_outliers(r))}, size="rows"),
+    *(
+        Probe(("knn_scale", family), f"knn_{family}_scale_x{{s}}", scales,
+              _KNN_BASE_VECS, _knn_rows,
+              {"": lambda r, fn=fn: _noop(fn(r, _KNN_QUERY_IDS))}, size="vecs")
+        for family, fn, scales in (
+            ("arrow", SIM.knn_brute_force_arrow, _KNN_SCALES),
+            ("ivf", SIM.knn_ivf, _KNN_SCALES + (64,)),
+            ("lsh", SIM.knn_lsh, _KNN_SCALES + (64,)),
+        )
+    ),
+    Probe(("streaming_scale", "sessionize"),
+          "streaming_sessionize_scale_x{s}{v}", _STREAM_SCALES,
+          _STREAM_BASE_EVENTS, _stream_events,
+          {"": _sessionize, "_rocksdb": partial(_on_rocksdb, _sessionize)},
+          reps=2, size="events", variant_scales=_STREAM_SCALES[-1:],
+          optional=("_rocksdb",), stage=_parquet_dir,
+          fields=lambda inp, n, r, v: {"provider": "rocksdb"} if v else {}),
+    Probe(("streaming_scale", "outer_join"),
+          "streaming_outer_join_scale_x{s}", _STREAM_SCALES,
+          _STREAM_BASE_EVENTS, _stream_events,
+          {"": lambda src: _noop(W.outer_attribution_available_now(*src))},
+          size="events", stage=_parquet_dir),
+    Probe(("wedge_scale",), "wedge_scale_x{s}", _WEDGE_SCALES,
+          _WEDGE_BASE_EDGES, _wedge_graph,
+          {"": lambda e: G.common_neighbor_scores(e, k=20).count()},
+          fields=_as("top_k")),
+    Probe(("graph_scale", "cc"), "cc_scale_x{s}", _CC_SCALES, _CC_BASE_EDGES,
+          _cc_edges, {"": lambda e: D.duplicate_components(e).count()},
+          fields=_cc_fields, finish=_cc_per_round),
+    Probe(("graph_scale", "leakage_split"), "leakage_split_scale_x{s}",
+          _GRAPH_SCALES, _SPLIT_BASE_CLUSTERS, _split_corpus,
+          {"": lambda d: sum(r.n_components for r in
+                             S.leakage_safe_split(d, threshold=0.6).collect())},
+          size="docs", fields=_as("components")),
+    # PageRank: fixed 3 power iterations over the same synthetic edge sets
+    # as the CC probe — per-iteration work is strictly ∝ edges (one
+    # ranks-onto-edges join + one in-sum groupBy + one vertex-set left
+    # join), so unlike CC there is no round-count axis to divide out; the
+    # raw exponent IS the per-edge signal.
+    Probe(("graph_scale", "pagerank"), "pagerank_scale_x{s}", _GRAPH_SCALES,
+          _CC_BASE_EDGES, _cc_edges,
+          {"": lambda e: G.pagerank(e, src="doc_a", dst="doc_b",
+                                    iterations=3).count()},
+          fields=_as("nodes")),
+]
 
 
 # Round-8 additions, timed at the bench SF in the probe session (real
@@ -1293,19 +1033,34 @@ _NEW_OPS_R8 = [
 ]
 
 
-def _run_new_ops(spark, sf_dir: str) -> dict[str, float]:
+def warm_query(spark, name: str, sf_dir: str, failures: dict[str, str]) -> None:
+    """One untimed run of registry query ``name``.  A failure is
+    recorded as ``{name: "<ExcType>: <first line>"}`` rather than
+    raised: a query that fails at the warm-up SF still gets its timed
+    run, which raises if it is really broken."""
+    try:
+        _noop(QUERIES[name](spark, sf_dir))
+    except Exception as e:
+        msg = (str(e).strip().splitlines() or [""])[0][:200]
+        failures[name] = f"{type(e).__name__}: {msg}"
+
+
+def query_run(spark, name: str, sf_dir: str) -> Callable:
+    """A timed run of registry query ``name``: construction is inside
+    the clock too (the triangle family eagerly materializes its
+    checkpointed intermediates at plan time)."""
+    return lambda: _noop(QUERIES[name](spark, sf_dir))
+
+
+def _run_new_ops(spark, sf_dir: str, warm_dir: str,
+                 warmup_failures: dict[str, str]) -> dict[str, float]:
     timings: dict[str, float] = {}
     for name in _NEW_OPS_R8:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            # construction timed too: the triangle family eagerly
-            # materializes its checkpointed intermediates at plan time
-            QUERIES[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        timings[f"newop_{name}"] = round(best, 3)
+        best = best_of(
+            {name: query_run(spark, name, sf_dir)}, 2,
+            warm=partial(warm_query, spark, name, warm_dir, warmup_failures),
+        )
+        timings[f"newop_{name}"] = best[name][0]
     return timings
 
 
@@ -1314,12 +1069,15 @@ _SENTINEL = "q6_revenue_forecast"
 
 
 def _time_query(spark, name: str, sf_dir: str, iters: int | None = None) -> float:
-    best = float("inf")
-    for _ in range(max(1, iters if iters is not None else N_ITER)):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
+    reps = iters if iters is not None else N_ITER
+    return best_of({name: query_run(spark, name, sf_dir)}, reps)[name][0]
+
+
+def warm_sf_dir(sf_dir: str) -> str:
+    """Where warm-ups run: the sf0.001 sibling of ``sf_dir`` (the
+    smallest generated SF), or ``sf_dir`` itself if there is none."""
+    warm_dir = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), "sf0.001")
+    return warm_dir if os.path.isdir(warm_dir) else sf_dir
 
 
 def main() -> None:
@@ -1332,14 +1090,10 @@ def main() -> None:
     # whole-stage-codegen compilation, Python worker pools, and parquet
     # footer caches are paid before the timed runs (the metric is
     # steady-state throughput, not cold start).
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
+    warm_dir = warm_sf_dir(sf_dir)
+    warmup_failures: dict[str, str] = {}
     for name in HEADLINE:
-        try:
-            QUERIES[name](spark, warm_dir).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
+        warm_query(spark, name, warm_dir, warmup_failures)
 
     # Noise sentinel (round-6 verdict item 2): the same untouched query
     # timed immediately BEFORE and AFTER the headline window.  A ratio
@@ -1370,43 +1124,11 @@ def main() -> None:
     # a fresh one, strictly after the sentinel-bracketed window closes.
     spark.stop()
     probe_spark = get_spark("bench-probes")
-    _warm_probe_session(probe_spark)
-    # Probe order: the dedup-scale probe runs BEFORE the graph probes —
-    # the ×64 CC run (6.4M edges) leaves enough JVM GC pressure behind
-    # to inflate whatever runs next (a calibration run read the 10k-doc
-    # dedup point at 4.2 s post-CC vs 1.5 s standalone).
-    probe_timings: dict[str, float] = {}
     # new-ops first: they read real sf data and should not sit behind
     # the GC pressure the synthetic skew/CC probes leave behind
-    probe_timings.update(_run_new_ops(probe_spark, sf_dir))
-    skew_timings, skew_detail = _run_skew_stress(probe_spark)
-    probe_timings.update(skew_timings)
-    dedup_timings, dedup_detail = _run_dedup_scale(probe_spark)
-    probe_timings.update(dedup_timings)
-    containment_timings, containment_detail = _run_containment_scale(
-        probe_spark
-    )
-    probe_timings.update(containment_timings)
-    tri_timings, tri_detail = _run_triangle_scale(probe_spark)
-    probe_timings.update(tri_timings)
-    incr_timings, incr_detail = _run_incr_dedup_scale(probe_spark)
-    probe_timings.update(incr_timings)
-    kcore_timings, kcore_detail = _run_kcore_scale(probe_spark)
-    probe_timings.update(kcore_timings)
-    bfs_timings, bfs_detail = _run_bfs_scale(probe_spark)
-    probe_timings.update(bfs_timings)
-    rank_timings, rank_detail = _run_rank_scale(probe_spark)
-    probe_timings.update(rank_timings)
-    mad_timings, mad_detail = _run_madsketch_scale(probe_spark)
-    probe_timings.update(mad_timings)
-    knn_timings, knn_detail = _run_knn_scale(probe_spark)
-    probe_timings.update(knn_timings)
-    stream_timings, stream_detail = _run_streaming_scale(probe_spark)
-    probe_timings.update(stream_timings)
-    wedge_timings, wedge_detail = _run_wedge_scale(probe_spark)
-    probe_timings.update(wedge_timings)
-    graph_timings, graph_detail = _run_graph_scale(probe_spark)
-    probe_timings.update(graph_timings)
+    probe_timings = _run_new_ops(probe_spark, sf_dir, warm_dir, warmup_failures)
+    scale_timings, probe_detail = run_probes(probe_spark, PROBES)
+    probe_timings.update(scale_timings)
 
     sentinel = {
         "query": _SENTINEL,
@@ -1437,20 +1159,9 @@ def main() -> None:
         "headline_total": total,
         "headline_queries": timings,
         "probe_queries": probe_timings,
-        "skew_lsh": skew_detail,
-        "graph_scale": graph_detail,
-        "dedup_scale": dedup_detail,
-        "containment_scale": containment_detail,
-        "triangle_scale": tri_detail,
-        "incr_dedup_scale": incr_detail,
-        "kcore_scale": kcore_detail,
-        "bfs_scale": bfs_detail,
-        "rank_scale": rank_detail,
-        "madsketch_scale": mad_detail,
-        "knn_scale": knn_detail,
-        "streaming_scale": stream_detail,
-        "wedge_scale": wedge_detail,
+        **probe_detail,
         "noise_sentinel": sentinel,
+        "warmup_failures": warmup_failures,
     }
     # Persist the detail record IN-REPO (round-9 verdict item 2): the
     # driver captures only the last 2000 chars of stdout, so the detail

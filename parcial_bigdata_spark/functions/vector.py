@@ -1,7 +1,8 @@
 """Vector math over ``array<float>`` columns — pure built-in higher-order
-functions (zip_with / aggregate), evaluated JVM-side inside codegen.  No
-Python crosses the row boundary, which is what keeps brute-force cosine
-viable over millions of embeddings per executor.
+functions (zip_with / aggregate), evaluated JVM-side.  No Python crosses
+the row boundary.  They do NOT run inside whole-stage codegen:
+``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback`` in Spark
+4.1.2, so every element goes through the expression interpreter.
 """
 
 from __future__ import annotations

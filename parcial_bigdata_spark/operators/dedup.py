@@ -1827,7 +1827,7 @@ def minhash_near_duplicates(documents: DataFrame, threshold: float = 0.7, k: int
     The posture gate is the repo's standard adaptive rule
     (SMALL_LOCAL_SCAN_BYTES): provably small local corpora take the
     carried form, unknown/remote/large corpora the rejoin form.
-    Crossover measured in bench.py `_run_dedup_scale` (r17): see
+    Crossover measured by bench.py's verify A/B probe (r17): see
     BENCH_DETAIL.json `dedup_scale.verify_ab`."""
     from parcial_bigdata_spark.operators.scale import (
         SMALL_LOCAL_SCAN_BYTES,

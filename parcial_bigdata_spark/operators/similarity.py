@@ -4,7 +4,8 @@ Baseline: exact brute-force cosine top-k (broadcast the query set,
 stream the corpus — one scan, no shuffle until the tiny per-query top-k).
 Scale paths: IVF (coarse centroids prune the corpus to nprobe clusters)
 and random-hyperplane LSH bucketing.  All vector math is built-in
-higher-order functions (functions/vector.py) — JVM-side, codegen'd.
+higher-order functions (functions/vector.py) — JVM-side, interpreted
+(the HOFs are CodegenFallback in Spark 4.1.2).
 """
 
 from __future__ import annotations
@@ -695,8 +696,8 @@ def random_projection_audit(
     vectors) are counted in their own row (bucket -1) rather than
     dividing by zero.
 
-    Scale: the projection is row-local (|dims|·k multiply-adds inside
-    codegen); pairing is ONE equi-join on vec_id+1; the histogram is a
+    Scale: the projection is row-local (|dims|·k multiply-adds in
+    interpreted HOFs); pairing is ONE equi-join on vec_id+1; the histogram is a
     |buckets|-row aggregate.  No all-pairs anything."""
     from parcial_bigdata_spark.functions.money import ratio_round  # noqa: F401
     from parcial_bigdata_spark.operators.scale import iter_checkpoint
@@ -773,7 +774,7 @@ def _exact_covariance_moments(embeddings: DataFrame):
     `embedding_dim_stats` technique, extended to cross-moments).
 
     The pair expansion is ROW-LOCAL (nested transform + flatten —
-    codegen, no self-join); the shuffle carries map-side-combined
+    interpreted HOFs, no self-join); the shuffle carries map-side-combined
     partials at the d(d+1)/2 pair grain.  A SENTINEL dimension of
     constant 1.0 is appended before the expansion, so the pair stream
     carries the first moments too — (i, d+1) products ARE the Σxᵢ line

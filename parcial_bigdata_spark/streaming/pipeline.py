@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows
+from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows, write_silver
 
 
 def read_bronze_stream(
@@ -165,12 +165,7 @@ def make_silver_batch_writer(
             rows = rows.persist()
             n_new = rows.count()
             if n_new > 0:  # ST6: empty batch skips the write entirely
-                (
-                    rows.withColumn("dt", F.to_date("fechahora"))
-                    .write.mode("append")
-                    .partitionBy("dt")
-                    .parquet(silver_path)
-                )
+                write_silver(rows, silver_path)
             # Ledger append AFTER the silver write: a crash in between
             # leaves the file unrecorded, and the replayed batch's
             # silver probe (above) re-filters it against silver itself.

@@ -1,5 +1,5 @@
-"""Optimization probe: time individual registry queries with the
-bench's exact methodology (noop sink, min-of-N, warm-up at sf0.001) and
+"""Optimization probe: time individual registry queries through the
+bench's timing primitive (noop sink, min-of-N, warm-up at sf0.001) and
 optionally dump their .explain("formatted") plans to plans/<round>/.
 
 Usage:
@@ -19,12 +19,12 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import best_of, query_run, warm_query, warm_sf_dir  # noqa: E402
 from parcial_bigdata_spark.plans.registry import QUERIES  # noqa: E402
 from parcial_bigdata_spark.session import get_spark  # noqa: E402
 
@@ -44,9 +44,8 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("opt-probe")
-    warm_dir = "/root/testdata/sf0.001"
-    if not os.path.isdir(warm_dir):
-        warm_dir = args.sf
+    sc = spark.sparkContext
+    warm_dir = warm_sf_dir(args.sf)
 
     plans_dir = Path(__file__).resolve().parent.parent / "plans" / args.plans_dir
     results: dict[str, float] = {}
@@ -54,12 +53,6 @@ def main() -> None:
         if name not in QUERIES:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
-        spark.sparkContext.setJobDescription(f"warm:{name}")
-        try:
-            QUERIES[name](spark, warm_dir).write.mode("overwrite").format(
-                "noop").save()
-        except Exception as e:  # warm-up failure is informative, not fatal
-            print(f"!! warm-up {name}: {e}", file=sys.stderr)
         if args.plans:
             plans_dir.mkdir(parents=True, exist_ok=True)
             df = QUERIES[name](spark, args.sf)
@@ -69,20 +62,25 @@ def main() -> None:
             (plans_dir / f"{name}_{args.plans}.txt").write_text(buf.getvalue())
         if args.no_time:
             continue
-        # Guard the timing loop like the warm-up: one failing query must
-        # not discard every already-collected timing (r16 advice).
-        best = float("inf")
+
+        def warm(name=name):
+            # a warm-up failure is informative, not fatal
+            sc.setJobDescription(f"warm:{name}")
+            failures: dict[str, str] = {}
+            warm_query(spark, name, warm_dir, failures)
+            for msg in failures.values():
+                print(f"!! warm-up {name}: {msg}", file=sys.stderr)
+            sc.setJobDescription(f"time:{name}")
+
+        # Guard the timing like the warm-up: one failing query must not
+        # discard every already-collected timing (r16 advice).
         try:
-            for i in range(max(1, args.iters)):
-                spark.sparkContext.setJobDescription(f"time:{name}:{i}")
-                t0 = time.perf_counter()
-                QUERIES[name](spark, args.sf).write.mode("overwrite").format(
-                    "noop").save()
-                best = min(best, time.perf_counter() - t0)
+            best = best_of({name: query_run(spark, name, args.sf)},
+                           args.iters, warm=warm)
         except Exception as e:
             print(f"!! timing {name}: {e}", file=sys.stderr)
             continue
-        results[name] = round(best, 3)
+        results[name] = best[name][0]
         print(f"{name}: {results[name]}", file=sys.stderr)
     print(json.dumps(results))
 
