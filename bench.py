@@ -7,7 +7,8 @@ recorded ``parsed: null``):
 
   line 1 — the DETAIL record: probe timings (skew / graph-scale /
            dedup-scale), per-size round counts, fitted exponents,
-           sentinel start/end, registry-query warm-up failures.
+           sentinel start/end, registry-query warm-up failures, and
+           the adaptive paths taken (``postures``).
            Unbounded size; consumers that want probe history read
            this line.
   line 2 — the COMPACT HEADLINE, always the FINAL stdout line and
@@ -53,7 +54,7 @@ from parcial_bigdata_spark.operators import graph as G  # noqa: E402
 from parcial_bigdata_spark.operators import sampling as S  # noqa: E402
 from parcial_bigdata_spark.operators import similarity as SIM  # noqa: E402
 from parcial_bigdata_spark.operators.analytics import mad_outliers  # noqa: E402
-from parcial_bigdata_spark.operators.scale import distributed_rank  # noqa: E402
+from parcial_bigdata_spark.operators.scale import distributed_rank, posture_log  # noqa: E402
 from parcial_bigdata_spark.plans.registry import QUERIES  # noqa: E402
 from parcial_bigdata_spark.session import get_spark  # noqa: E402
 from parcial_bigdata_spark.streaming import windows as W  # noqa: E402
@@ -1073,6 +1074,15 @@ def _time_query(spark, name: str, sf_dir: str, iters: int | None = None) -> floa
     return best_of({name: query_run(spark, name, sf_dir)}, reps)[name][0]
 
 
+def postures_since(before: list[dict]) -> list[dict]:
+    """Posture-log rows (``scale.posture_log``) taken since the snapshot
+    ``before``, each with the number of times it was taken since."""
+    seen = {(r["op"], r["branch"]): r["count"] for r in before}
+    rows = [{**r, "count": r["count"] - seen.get((r["op"], r["branch"]), 0)}
+            for r in posture_log()]
+    return [r for r in rows if r["count"]]
+
+
 def warm_sf_dir(sf_dir: str) -> str:
     """Where warm-ups run: the sf0.001 sibling of ``sf_dir`` (the
     smallest generated SF), or ``sf_dir`` itself if there is none."""
@@ -1104,9 +1114,13 @@ def main() -> None:
     # a first measurement read ratio 0.70 purely from JIT settling).
     sentinel_start = _time_query(spark, _SENTINEL, sf_dir, iters=5)
 
+    # which adaptive path each headline query took in its timed runs
     timings: dict[str, float] = {}
+    postures: dict = {"headline": {}}
     for name in HEADLINE:
+        before = posture_log()
         timings[name] = _time_query(spark, name, sf_dir)
+        postures["headline"][name] = postures_since(before)
 
     sentinel_end = _time_query(spark, _SENTINEL, sf_dir, iters=5)
 
@@ -1124,11 +1138,13 @@ def main() -> None:
     # a fresh one, strictly after the sentinel-bracketed window closes.
     spark.stop()
     probe_spark = get_spark("bench-probes")
+    before = posture_log()
     # new-ops first: they read real sf data and should not sit behind
     # the GC pressure the synthetic skew/CC probes leave behind
     probe_timings = _run_new_ops(probe_spark, sf_dir, warm_dir, warmup_failures)
     scale_timings, probe_detail = run_probes(probe_spark, PROBES)
     probe_timings.update(scale_timings)
+    postures["probes"] = postures_since(before)
 
     sentinel = {
         "query": _SENTINEL,
@@ -1162,6 +1178,7 @@ def main() -> None:
         **probe_detail,
         "noise_sentinel": sentinel,
         "warmup_failures": warmup_failures,
+        "postures": postures,
     }
     # Persist the detail record IN-REPO (round-9 verdict item 2): the
     # driver captures only the last 2000 chars of stdout, so the detail

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from parcial_bigdata_spark.functions.vector import dot, norm
+from parcial_bigdata_spark.operators import scale
 from parcial_bigdata_spark.operators.text import normalized
 
 
@@ -75,21 +76,13 @@ def paragraph_dedup(documents: DataFrame, para_words: int = 20) -> DataFrame:
 
     The paragraph frame feeds both the winners aggregate and the join
     probe, and their different shuffle keys prevent exchange reuse —
-    so the split+explode would evaluate twice.  When the input scan is
-    estimably small it is eagerly checkpointed instead (same adaptive
-    gate shape as the decontamination Bloom; ``iter_checkpoint`` so the
-    blocks are reclaimed with the result frame, not pinned for the
-    session); at cluster scale, where materializing the exploded corpus
-    is cost, the narrow re-scan is the right price and unknown/remote
-    sizes keep it.
+    so the split+explode would evaluate twice.  A provably small local
+    scan (``scale.small_local_scan``) checkpoints it once instead; at
+    cluster scale the narrow re-scan is the right price.
 
     Output: one row per document with paragraph accounting and the
     cleaned text (empty string when every paragraph was seen earlier —
     the fully-boilerplate case)."""
-    from parcial_bigdata_spark.operators.scale import (
-        SMALL_LOCAL_SCAN_BYTES,
-        local_scan_bytes,
-    )
 
     words = F.split(F.col("text"), " ")
     n_paras = F.ceil(F.size(words) / F.lit(para_words)).cast("int")
@@ -104,17 +97,8 @@ def paragraph_dedup(documents: DataFrame, para_words: int = 20) -> DataFrame:
             )
         ).alias("idx", "para"),
     )
-    scan_bytes = local_scan_bytes(documents)
-    if scan_bytes is not None and scan_bytes < SMALL_LOCAL_SCAN_BYTES:
-        # iter_checkpoint, NOT persist(): a bare persist here has no
-        # unpersist path (the result is returned lazily), so every call
-        # would pin cached blocks until session end (round-8 advice).
-        # localCheckpoint blocks are reclaimed by the ContextCleaner
-        # once the returned frame is dropped, bounding the cache to the
-        # result's lifetime instead of the session's.
-        from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-        paras = iter_checkpoint(paras)
+    if scale.small_local_scan("paragraph_dedup", documents):
+        paras = scale.iter_checkpoint(paras)
     winners = paras.groupBy("para").agg(
         F.min(F.struct("doc_id", "idx")).alias("first")
     )
@@ -173,9 +157,7 @@ PREFIX_COMMONS = 256
 def _word_sets(documents: DataFrame) -> DataFrame:
     import math
 
-    from parcial_bigdata_spark.operators.scale import fan_out_small_scan
-
-    documents = fan_out_small_scan(documents, "doc_id")
+    documents = scale.fan_out_small_scan(documents, "doc_id")
     # greatest(n_chars, 1): log(0) is NULL in Spark, and a null bucket
     # would silently exclude empty-text documents from all pairing (the
     # equality join never matches null) — clamp them into bucket 0.
@@ -237,26 +219,11 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
             "or lower length_slack"
         )
     ws = _word_sets(documents)
-    # Adaptive materialization (r16; guide §2.4): the word-set frame —
-    # normalize regex, split, array_distinct per doc, the CPU-heavy text
-    # pass — feeds the stat probe below AND both sides of the candidate
-    # join; lazily it executes 2-3× per call (the probe once, the join's
-    # b-side again, and a 3rd time when the planner broadcasts a side,
-    # since a broadcast child is not a reusable shuffle stage).  A
-    # provably small local corpus eagerly checkpoints it once (the
-    # paragraph_dedup / decontamination-Bloom gate; iter_checkpoint so
-    # blocks free with the result); unknown/remote/large corpora keep
-    # the lazy form — at 100 TB re-deriving the narrow scan is the cheap
-    # axis next to materializing the exploded word sets.
-    from parcial_bigdata_spark.operators.scale import (
-        SMALL_LOCAL_SCAN_BYTES,
-        iter_checkpoint,
-        local_scan_bytes,
-    )
-
-    _scan_bytes = local_scan_bytes(documents)
-    if _scan_bytes is not None and _scan_bytes < SMALL_LOCAL_SCAN_BYTES:
-        ws = iter_checkpoint(ws)
+    # The word-set frame (the CPU-heavy text pass) feeds the stat probe
+    # below AND both sides of the candidate join; lazily it executes
+    # 2-3× per call (a broadcast child is not a reusable shuffle stage).
+    if scale.small_local_scan("jaccard_pairs", documents):
+        ws = scale.iter_checkpoint(ws)
 
     # Adaptive stat probe (like AQE's runtime statistics), one top-K
     # aggregation job serving BOTH paths: when the corpus dictionary
@@ -941,10 +908,6 @@ def duplicate_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     id = min doc_id in the component (deterministic, and exactly
     reproducible by a recursive-CTE transitive closure, which is the
     DuckDB oracle)."""
-    from parcial_bigdata_spark.operators.scale import (
-        iter_checkpoint,
-        release_checkpoint,
-    )
 
     # ONE canonicalize+contract+distinct materialization serves both the
     # edge set and the (rare) self-pair ids — star rounds preserve the
@@ -964,7 +927,7 @@ def duplicate_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     # per tracked vertex).
     sc = pairs.sparkSession.sparkContext
     contract_in, contract_out = sc.accumulator(0), sc.accumulator(0)
-    canon = iter_checkpoint(
+    canon = scale.iter_checkpoint(
         _local_contract(
             pairs.select(
                 F.greatest("doc_a", "doc_b").alias("src"),
@@ -1036,7 +999,7 @@ def duplicate_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
         # checkpointed edge sets pile up until driver GC (round-6
         # advice); release_checkpoint(None) is a no-op
         if prev_edges is not edges:
-            release_checkpoint(prev_edges)
+            scale.release_checkpoint(prev_edges)
         prev_sig, prev_edges = sig, edges
 
         # large-star: und carries both directions so each vertex sees
@@ -1075,7 +1038,7 @@ def duplicate_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
         # emitted pairs stay canonically oriented; the rib copies per
         # row collapse in distinct's map-side partial aggregate.
         mins_s = large.groupBy("src").agg(F.min("dst").alias("m"))
-        edges = iter_checkpoint(
+        edges = scale.iter_checkpoint(
             large.join(mins_s, "src")
             .select(
                 F.explode(
@@ -1102,7 +1065,7 @@ def duplicate_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     # prev_edges — so its blocks free here, leaving at most the canon,
     # final-edges, and labels frames pinned
     if prev_edges is not edges:
-        release_checkpoint(prev_edges)
+        scale.release_checkpoint(prev_edges)
     if not converged and not edges.isEmpty():
         # Returning star-round edges here would hand the caller
         # partially-collapsed neighbor ids as if they were component
@@ -1141,7 +1104,7 @@ def duplicate_components(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
         # Checkpointed so consumers (survivors, leakage split, audit
         # twins) see a flat LogicalRDD instead of re-planning the
         # union+distinct inside their own (budgeted) plans.
-        labels = iter_checkpoint(
+        labels = scale.iter_checkpoint(
             edges.select(F.col("src").alias("v"), F.col("dst").alias("c"))
             .unionByName(
                 edges.select(F.col("dst").alias("v"), F.col("dst").alias("c"))
@@ -1255,40 +1218,48 @@ def _bloom_maybe(gram_col: str, bits: int, n_hashes: int):
 # Measured at sf0.1 (~5 MB scans): 2.0 s with Bloom vs 1.37 s without.
 _BLOOM_MIN_EVAL_BYTES = 64 * 1024 * 1024
 
-# Bloom auto-sizing (r17).  A Bloom filter saturates when items exceed
-# its capacity — at m/n = 0.58 bits/item with 2 hashes the
-# false-positive rate is ~93% (measured on a 7.2M-gram train against
-# the former fixed 4M-bit filter): nearly every eval gram passes, so
-# the prune cuts nothing while still paying the build scan + 2 hashes
-# per eval gram.  Under "auto" the filter is therefore sized from the
-# train side's local scan bytes (~1 gram occurrence per 6 text bytes —
-# an OVERestimate of distinct grams, which errs toward a bigger
-# filter): bits = 16 × est_grams clamped to [2^22, 2^27] (map ≤ 16 MiB
-# broadcast).  A train whose estimate exceeds 2^27/16 grams would
-# saturate even the largest filter → the prune is SKIPPED (pure
-# overhead otherwise).  Unknown train sizes (in-memory frames, remote
-# stores) keep the legacy 2^22 default rather than guessing.  All of
-# this is posture only — false positives fall through to the exact
-# join, so results never change.
+# Bloom auto-sizing.  A Bloom filter saturates when items exceed its
+# capacity — at m/n = 0.58 bits/item with 2 hashes the false-positive
+# rate is ~93% (measured on a 7.2M-gram train against the former fixed
+# 4M-bit filter): nearly every eval gram passes, so the prune cuts
+# nothing while still paying the build scan + 2 hashes per eval gram.
+# Under "auto" the filter is therefore sized from the train side's
+# ON-DISK scan bytes.  Text carries ~1 gram occurrence per 6 bytes, and
+# the fixture text is 2.3× (sf0.01) / 2.5× (sf0.1) its snappy parquet
+# size, so 6 / 2.5 rounded DOWN to 2 on-disk bytes per gram — an
+# overestimate of distinct grams, which errs toward a bigger filter.
+# bits = 16 × est_grams rounded up to a power of two within [2^22,
+# 2^27] (map ≤ 16 MiB broadcast).  A train too big for 16 bits/gram
+# gets the capped 2^27 filter while that still holds ≥ 6 bits/gram
+# (≈8% false positives with 2 hashes); past that, and whenever the
+# train size is unknown (in-memory frames, remote stores), the prune is
+# SKIPPED.  All of this is posture only — false positives fall through
+# to the exact join, so results never change.
 _BLOOM_MAX_BITS = 1 << 27
 _BLOOM_BITS_PER_ITEM = 16
-_BLOOM_BYTES_PER_GRAM = 6
+_BLOOM_MIN_BITS_PER_ITEM = 6
+_BLOOM_BYTES_PER_GRAM = 2
 
 
 def _auto_bloom_bits(train: DataFrame) -> int | None:
     """Bloom geometry for ``bloom_bits="auto"`` with a big eval: sized
-    from the train scan, or ``None`` (skip) when any filter we can
-    broadcast would saturate."""
-    from parcial_bigdata_spark.operators.scale import local_scan_bytes
+    from the train scan, or ``None`` (skip) when the train size is
+    unknown or even the capped filter would saturate.  The choice is
+    recorded in the posture log."""
 
-    train_bytes = local_scan_bytes(train)
+    train_bytes = scale.local_scan_bytes(train)
     if train_bytes is None:
-        return 1 << 22  # unknowable: keep the legacy default posture
+        scale.record_posture("ngram_contamination.bloom_bits", "skip_unknown")
+        return None
     est_grams = max(1, train_bytes // _BLOOM_BYTES_PER_GRAM)
     want = est_grams * _BLOOM_BITS_PER_ITEM
-    if want > _BLOOM_MAX_BITS:
-        return None
-    return max(1 << 22, 1 << (want - 1).bit_length())
+    bits = min(_BLOOM_MAX_BITS, max(1 << 22, 1 << (want - 1).bit_length()))
+    if bits < est_grams * _BLOOM_MIN_BITS_PER_ITEM:
+        branch, bits = "skip_saturated", None
+    else:
+        branch = "capped" if bits < want else "sized"
+    scale.record_posture("ngram_contamination.bloom_bits", branch, train_bytes)
+    return bits
 
 
 def ngram_contamination(
@@ -1341,22 +1312,21 @@ def ngram_contamination(
     sub-second and the build can never pay for itself, so under the
     default ``bloom_bits="auto"`` a provably small local file-backed
     eval side skips the Bloom (the result is bit-identical either way;
-    the prune only drops work), while unknown sizes — in-memory
+    the prune only drops work), while unknown eval sizes — in-memory
     frames, remote object stores — keep it: at 100 TB the decision
     must default to the scale path.  When the Bloom stays on, its
     geometry is sized from the TRAIN scan (``_auto_bloom_bits``):
-    ~16 bits per estimated gram, clamped to [2²², 2²⁷]; a train too
-    big for any broadcastable filter skips the prune instead of
-    paying for a saturated one (r17 — a 7.2M-gram train against the
-    former fixed 4M-bit filter measured ~93% false positives: all
-    cost, no cut).  An explicit int always builds the filter (the
-    heuristic override); ``None`` never does."""
+    ~16 bits per estimated gram, clamped to [2²², 2²⁷].  A train
+    whose size is unknown, or too big for even the capped filter to
+    hold 6 bits per gram, skips the prune instead of paying for a
+    saturated one (a 7.2M-gram train against the former fixed 4M-bit
+    filter measured ~93% false positives: all cost, no cut).  An
+    explicit int always builds the filter (the heuristic override);
+    ``None`` never does."""
     train_set = _doc_gram_stream(train, n).select("gram").distinct()
     if bloom_bits == "auto":
-        from parcial_bigdata_spark.operators.scale import local_scan_bytes
 
-        eval_bytes = local_scan_bytes(eval_)
-        small = eval_bytes is not None and eval_bytes < _BLOOM_MIN_EVAL_BYTES
+        small = scale.small_local_scan("ngram_contamination", eval_, _BLOOM_MIN_EVAL_BYTES)
         bloom_bits = None if small else _auto_bloom_bits(train)
     # Single eval scan (r17, guide §2.4): per-doc distinct grams build
     # ROW-LOCALLY (array_distinct over the in-row transform — the plan
@@ -1553,9 +1523,8 @@ def _word_hashes(documents: DataFrame) -> DataFrame:
     """Words of the normalized text, each hashed once to a long.  All
     downstream shingling/fingerprinting works on these 8-byte values —
     strings are hashed exactly once per word occurrence."""
-    from parcial_bigdata_spark.operators.scale import fan_out_small_scan
 
-    documents = fan_out_small_scan(documents, "doc_id")
+    documents = scale.fan_out_small_scan(documents, "doc_id")
     return documents.select(
         "doc_id",
         F.transform(
@@ -1824,18 +1793,12 @@ def minhash_near_duplicates(documents: DataFrame, threshold: float = 0.7, k: int
     - ``_minhash_verify_rejoin``: slim band rows; distinct pairs re-join
       the shingle table (one reused payload exchange).  ~2× fewer array
       bytes shuffled — the at-scale shape (guide §2.3/§8).
-    The posture gate is the repo's standard adaptive rule
-    (SMALL_LOCAL_SCAN_BYTES): provably small local corpora take the
-    carried form, unknown/remote/large corpora the rejoin form.
+    ``scale.small_local_scan`` picks the carried form for provably small
+    local corpora and the rejoin form otherwise.
     Crossover measured by bench.py's verify A/B probe (r17): see
     BENCH_DETAIL.json `dedup_scale.verify_ab`."""
-    from parcial_bigdata_spark.operators.scale import (
-        SMALL_LOCAL_SCAN_BYTES,
-        local_scan_bytes,
-    )
 
-    scan_bytes = local_scan_bytes(documents)
-    if scan_bytes is not None and scan_bytes < SMALL_LOCAL_SCAN_BYTES:
+    if scale.small_local_scan("minhash_near_duplicates", documents):
         return _minhash_verify_carried(documents, threshold, k)
     return _minhash_verify_rejoin(documents, threshold, k)
 
@@ -1906,9 +1869,7 @@ def simhash_arrow(documents: DataFrame) -> DataFrame:
     return wh.mapInPandas(batches, schema="doc_id long, simhash long")
 
 
-def simhash_near_duplicates(
-    documents: DataFrame, max_hamming: int = 3, arrow: bool = False
-) -> DataFrame:
+def simhash_near_duplicates(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup via adaptive chunk blocking: split the 64-bit
     fingerprint into ``max_hamming + 1`` chunks; by pigeonhole, any pair
     within the hamming radius agrees exactly on ≥1 chunk → pairs are
@@ -1921,9 +1882,8 @@ def simhash_near_duplicates(
     large radii trade shuffle volume for recall — the standard LSH
     radius/cost trade, made explicit instead of silently lossy.
 
-    ``arrow=True`` swaps the fingerprint stage for the bit-identical
-    numpy path (simhash_arrow) — same pairs, ~4× faster fingerprints on
-    wide corpora; the default stays pure built-ins."""
+    Fingerprints come from ``simhash_arrow``, the numpy twin of the
+    built-in ``simhash`` (bit-identical, ~4× faster on wide corpora)."""
     if not 0 <= max_hamming < SIMHASH_BITS:
         raise ValueError(
             f"max_hamming={max_hamming} out of range: chunk blocking needs "
@@ -1934,7 +1894,7 @@ def simhash_near_duplicates(
     base, rem = divmod(SIMHASH_BITS, n_chunks)
     widths = [base + 1 if i < rem else base for i in range(n_chunks)]
     offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    fp = (simhash_arrow if arrow else simhash)(documents)
+    fp = simhash_arrow(documents)
 
     def _chunk(i: int):
         # arithmetic shiftright sign-extends, but the AND mask keeps only
@@ -2224,7 +2184,6 @@ def minhash_recall_check(
             f"length_slack={length_slack} exceeds the lossless ±1-bucket bound "
             f"{max_slack:.4f} for bucket base {_BUCKET_BASE}"
         )
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
 
     samp_ids = _hash_topn_sample(documents, "doc_id", sample_size)
     samp_docs = documents.join(F.broadcast(samp_ids), "doc_id")
@@ -2232,7 +2191,7 @@ def minhash_recall_check(
     # sides, and it is bounded (≤ sample_size docs) — materializing it
     # once halves the sweep's scan+shuffle work and keeps the audit
     # inside the registry-wide exchange budget.
-    sh = iter_checkpoint(
+    sh = scale.iter_checkpoint(
         shingles(samp_docs, k).join(
             samp_docs.select("doc_id", "lang", "n_chars"), "doc_id"
         )
@@ -2318,13 +2277,12 @@ def simhash_recall_check(
       fixture docs)
     - ``recall_ok``          1 ⟺ |blocked ∩ truth| ≥ recall_floor·|truth|
     """
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
 
     samp_ids = _hash_topn_sample(documents, "doc_id", sample_size)
     samp_docs = documents.join(F.broadcast(samp_ids), "doc_id")
     # Checkpointed: consumed by the twin comparison AND both sides of
     # the all-pairs truth join; bounded at sample_size rows.
-    fp_hof = iter_checkpoint(simhash(samp_docs))
+    fp_hof = scale.iter_checkpoint(simhash(samp_docs))
     fp_arrow = simhash_arrow(samp_docs).withColumnRenamed("simhash", "simhash_np")
     twin_bad = (
         fp_hof.join(fp_arrow, "doc_id")
@@ -2338,7 +2296,7 @@ def simhash_recall_check(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
     )
     found = _in_sample(
-        simhash_near_duplicates(documents, max_hamming=max_hamming, arrow=True),
+        simhash_near_duplicates(documents, max_hamming=max_hamming),
         samp_ids, "doc_id", "doc_a", "doc_b",
     )
     # one pass over truth (see minhash_recall_check)
@@ -2391,11 +2349,10 @@ def embedding_lsh_recall_check(
     single-file sample table would run the whole O(n²) cosine sweep on
     one core (measured 26 s → 1.6 s at sf0.1 on local[32]).
     """
-    from parcial_bigdata_spark.operators.scale import fan_out_small_scan
 
     samp_ids = _hash_topn_sample(embeddings, "vec_id", sample_size)
     samp = (
-        fan_out_small_scan(embeddings, "vec_id")
+        scale.fan_out_small_scan(embeddings, "vec_id")
         .join(F.broadcast(samp_ids), "vec_id")
         .withColumn("nrm", norm("embedding"))
     )

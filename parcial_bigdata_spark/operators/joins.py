@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parcial_bigdata_spark.functions.money import money_sum
+from parcial_bigdata_spark.operators import scale
 
 
 def revenue_by_brand(lineitem: DataFrame, part: DataFrame) -> DataFrame:
@@ -914,7 +915,7 @@ def session_overlap_pairs(events: DataFrame, gap_minutes: int = 30) -> DataFrame
     float rounding anywhere.
 
     Eager side effect (r16 advice): on a provably small LOCAL
-    file-backed ``events`` scan (< SMALL_LOCAL_SCAN_BYTES) this function
+    file-backed ``events`` scan (``scale.small_local_scan``) this function
     runs a Spark job at DataFrame-CONSTRUCTION time — the slim session
     frame is iter_checkpointed so sessionization executes once instead
     of on both join sides.  Plan-only consumers therefore pay full
@@ -933,24 +934,11 @@ def session_overlap_pairs(events: DataFrame, gap_minutes: int = 30) -> DataFrame
     # Both join sides derive from this one session frame.  When the
     # planner can broadcast side b (small inputs), the broadcast child
     # is a SEPARATE subtree — the scan + two session windows execute
-    # TWICE (exchange reuse only dedupes identical shuffle stages, and
-    # a broadcast is not a shuffle).  Same adaptive gate as
-    # paragraph_dedup / the decontamination Bloom: a provably small
-    # local scan eagerly materializes the slim session frame once
-    # (iter_checkpoint — blocks are reclaimed with the result frame),
-    # so sessionization runs exactly once in either posture; unknown /
-    # remote / large sizes keep the lazy form, where both sides shuffle
-    # on the bucket key and AQE's stage cache already reuses the one
-    # sessionize exchange (r16; guide §2.4).
-    from parcial_bigdata_spark.operators.scale import (
-        SMALL_LOCAL_SCAN_BYTES,
-        iter_checkpoint,
-        local_scan_bytes,
-    )
-
-    scan_bytes = local_scan_bytes(events)
-    if scan_bytes is not None and scan_bytes < SMALL_LOCAL_SCAN_BYTES:
-        sess = iter_checkpoint(sess)
+    # TWICE (a broadcast is not a reusable shuffle stage).  Large inputs
+    # shuffle both sides on the bucket key, and AQE's stage cache
+    # already reuses the one sessionize exchange.
+    if scale.small_local_scan("session_overlap_pairs", events):
+        sess = scale.iter_checkpoint(sess)
     bucketed = sess.select(
         "*",
         F.explode(

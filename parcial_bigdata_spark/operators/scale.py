@@ -7,19 +7,71 @@ sequential loop); they are the engine's answer to SURVEY.md §4's
 
 from __future__ import annotations
 
+import logging
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Shared adaptive-materialization gate (paragraph_dedup, jaccard_pairs,
-# session_overlap_pairs): a file-backed input scan provably below this
-# many LOCAL bytes eagerly iter_checkpoints the reused intermediate —
-# above it (or when the size is unknowable) the lazy form stays, because
-# at cluster scale re-deriving a narrow scan is the cheap axis next to
-# materializing exploded/derived frames.  One constant so the threshold
-# cannot silently drift per operator (r16 advice).
+# The one "provably small local scan" threshold; see small_local_scan.
 SMALL_LOCAL_SCAN_BYTES = 256 * 1024 * 1024
+
+# Per-process adaptive-path log: (op, branch) -> [count, last input size].
+# Keyed by decision, not by call, so a long session cannot grow it.
+_POSTURES: dict[tuple[str, str], list] = {}
+_POSTURES_LOCK = threading.Lock()
+
+
+def record_posture(op: str, branch: str, size: int | None = None) -> bool:
+    """Count one adaptive decision of ``op`` in the posture log, with the
+    input size it was made on in the unit ``op`` measures (on-disk scan
+    bytes for the scan gates, tokens for heavy_hitters; ``None`` =
+    unknown).  True the first time this ``(op, branch)`` is recorded."""
+    with _POSTURES_LOCK:
+        entry = _POSTURES.setdefault((op, branch), [0, None])
+        entry[0] += 1
+        entry[1] = size
+        return entry[0] == 1
+
+
+def posture_log() -> list[dict]:
+    """Snapshot of the posture log: one row per ``(op, branch)`` taken
+    in this process, with its count and the last input size seen."""
+    with _POSTURES_LOCK:
+        return [
+            {"op": op, "branch": branch, "count": n, "last_input": size}
+            for (op, branch), (n, size) in _POSTURES.items()
+        ]
+
+
+def _degraded(key: tuple[str, str], msg: str) -> None:
+    """A degraded fallback tier fired: record it in the posture log and
+    warn the first time ``key`` fires in this process."""
+    if record_posture(*key):
+        logging.getLogger(__name__).warning(msg)
+
+
+def small_local_scan(op: str, df: DataFrame, limit: int = SMALL_LOCAL_SCAN_BYTES) -> bool:
+    """The shared adaptive gate: is ``df`` a file-backed LOCAL scan of
+    provably fewer than ``limit`` on-disk bytes?  Records the decision
+    under ``op`` in the posture log.
+
+    Small scans take the small-data shortcut of their operator (eager
+    ``iter_checkpoint`` of a reused intermediate, the carried minhash
+    verify, no decontamination Bloom).  Large scans, and scans whose
+    size is unknowable (in-memory frames, remote object stores), take
+    the scale path: at cluster scale re-deriving a narrow scan is the
+    cheap axis next to materializing exploded/derived frames, so an
+    unestimable input must never trigger a shortcut.  One threshold so
+    it cannot drift per operator.  The shortcuts materialize with
+    ``iter_checkpoint``, not ``persist()``: a lazily returned result has
+    no unpersist path, and checkpoint blocks are reclaimed with the
+    result frame instead of pinned for the session."""
+    nbytes = local_scan_bytes(df)
+    small = nbytes is not None and nbytes < limit
+    record_posture(op, "small" if small else "large", nbytes)
+    return small
 
 
 def lit_lookup(mapping: dict, key_col: str):
@@ -112,11 +164,6 @@ def salted_join(
     )
     out = l_s.join(r_s, [on, "_salt"], how)
     return out.drop("_salt")
-
-
-_WARNED_STATS_RESET = False
-_WARNED_STATS_RESET_SLOW = False
-_WARNED_RELEASE_CHECKPOINT = False
 
 
 def distributed_rank(
@@ -229,18 +276,14 @@ def _reset_stats_public(ck: DataFrame) -> DataFrame:
     BigInteger hazard, when internals drift)."""
     rebuilt = ck.sparkSession.createDataFrame(ck.rdd, schema=ck.schema)
     rebuilt._iter_ck_origin = ck
-    global _WARNED_STATS_RESET_SLOW
-    if not _WARNED_STATS_RESET_SLOW:
-        _WARNED_STATS_RESET_SLOW = True
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "iter_checkpoint(reset_stats=True): internalCreateDataFrame "
-            "unavailable on this Spark build; using the public-API "
-            "rebuild (createDataFrame over the checkpointed RDD).  The "
-            "stats reset still works, but each evaluation of the "
-            "rebuilt frame pays a JVM<->Python row round-trip."
-        )
+    _degraded(
+        ("iter_checkpoint.reset_stats", "public_rebuild"),
+        "iter_checkpoint(reset_stats=True): internalCreateDataFrame "
+        "unavailable on this Spark build; using the public-API "
+        "rebuild (createDataFrame over the checkpointed RDD).  The "
+        "stats reset still works, but each evaluation of the "
+        "rebuilt frame pays a JVM<->Python row round-trip.",
+    )
     return rebuilt
 
 
@@ -277,7 +320,8 @@ def iter_checkpoint(df: DataFrame, reset_stats: bool = False) -> DataFrame:
     ``createDataFrame(ck.rdd, schema)`` rebuild (still a fresh
     default-estimate leaf, but each evaluation pays a JVM<->Python row
     hop — warns once), then the plain checkpoint — correct but
-    planner-slow — with its own once-per-process warning, because that
+    planner-slow — with its own once-per-process warning (both degraded
+    tiers are also recorded in the posture log), because that
     degradation is otherwise invisible until the driver stalls in
     stats estimation (``test_iter_checkpoint_reset_stats...`` pins the
     fast tier on the dev build and the public tier under simulated
@@ -306,20 +350,16 @@ def iter_checkpoint(df: DataFrame, reset_stats: bool = False) -> DataFrame:
     try:
         return _reset_stats_public(ck)
     except Exception:
-        global _WARNED_STATS_RESET
-        if not _WARNED_STATS_RESET:
-            _WARNED_STATS_RESET = True
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "iter_checkpoint(reset_stats=True) could not rebuild the "
-                "frame without origin stats (neither the internal "
-                "constructor nor the public createDataFrame rebuild "
-                "succeeded); falling back to the plain checkpoint.  "
-                "Iterative join loops will plan correctly but "
-                "driver-side stats estimation may degrade severely "
-                "with round count."
-            )
+        _degraded(
+            ("iter_checkpoint.reset_stats", "plain_checkpoint"),
+            "iter_checkpoint(reset_stats=True) could not rebuild the "
+            "frame without origin stats (neither the internal "
+            "constructor nor the public createDataFrame rebuild "
+            "succeeded); falling back to the plain checkpoint.  "
+            "Iterative join loops will plan correctly but "
+            "driver-side stats estimation may degrade severely "
+            "with round count.",
+        )
         return ck
 
 
@@ -341,8 +381,9 @@ def release_checkpoint(df: DataFrame | None) -> None:
     (``unpersist(false)``): the release races nothing.  If the internal
     ``analyzed().rdd()`` accessor drifts on a future Spark build, the
     release degrades to a no-op — per-round block accumulation would
-    return invisibly, so that path WARNS once per process (round-7
-    advice), like the stats-reset tiers."""
+    return invisibly, so that path is recorded in the posture log and
+    WARNS once per process (round-7 advice), like the stats-reset
+    tiers."""
     if df is None:
         return
     target = getattr(df, "_iter_ck_origin", df)
@@ -365,16 +406,13 @@ def release_checkpoint(df: DataFrame | None) -> None:
                 )
             except Exception:
                 is_ck = True
-        global _WARNED_RELEASE_CHECKPOINT
-        if is_ck and not _WARNED_RELEASE_CHECKPOINT:
-            _WARNED_RELEASE_CHECKPOINT = True
-            import logging
-
-            logging.getLogger(__name__).warning(
+        if is_ck:
+            _degraded(
+                ("release_checkpoint", "no_op"),
                 "release_checkpoint: the internal analyzed().rdd() "
                 "accessor raised on this Spark build; superseded "
                 "localCheckpoint blocks will accumulate until driver "
-                "GC instead of being freed per round."
+                "GC instead of being freed per round.",
             )
 
 
@@ -433,24 +471,23 @@ def fan_out_small_scan(df: DataFrame, by_col: str) -> DataFrame:
     maxPartitionBytes``): at 100 TB the estimate is always ≥ the slot
     count, so this is a structural no-op there — the repartition never
     enters the plan.  In-memory DataFrames (no files) and non-local
-    object stores are left untouched.
+    object stores are left untouched.  Each decision is recorded in
+    the posture log.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:
-        return df
+        files = []
+    # None (in-memory frame or remote store): trust the scan's own planning
     total = local_scan_bytes(df, files)
-    if total is None:
-        # in-memory frame or remote store: trust the scan's own planning
-        return df
-    raw = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    max_split = _parse_bytes(str(raw))
-    est_splits = max(len(files), total // max_split)
-    if est_splits < target:
-        return df.repartition(target, by_col)
-    return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    fan_out = False
+    if total is not None:
+        raw = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+        est_splits = max(len(files), total // _parse_bytes(str(raw)))
+        fan_out = est_splits < target
+    record_posture("fan_out_small_scan", "repartition" if fan_out else "keep", total)
+    return df.repartition(target, by_col) if fan_out else df
 
 
 def read_pruned(

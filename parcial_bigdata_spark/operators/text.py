@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parcial_bigdata_spark.operators import scale
+
 # Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 LANG_MARKERS = {
     "en": ["the", "a", "of", "and", "is"],
@@ -863,9 +865,7 @@ def bpe_encode_token_counts(
             # lineage cut between chunks: the vocabulary is small
             # relative to the corpus, and without the cut a long merge
             # table nests thousands of projections into one plan
-            from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-            vocab = iter_checkpoint(vocab)
+            vocab = scale.iter_checkpoint(vocab)
     word_tokens = vocab.select(
         "word",
         F.size(F.filter(F.split("seg", "  "), lambda x: x != "")).alias(
@@ -1142,7 +1142,8 @@ def heavy_hitters(documents: DataFrame, min_count: int = 500) -> DataFrame:
     min_count·b/N drops below 1, pass 1 emits every word, and the
     broadcast would materialize the whole vocabulary on the driver
     (round-11 advice) — so past that point this falls back to the
-    plain hash aggregate, logged per the no-silent-caps rule.  The
+    plain hash aggregate, logged per the no-silent-caps rule.  Either
+    path is recorded in the posture log with the token count.  The
     1-row corpus total is a bounded-scalar collect by contract."""
     import pandas as pd
 
@@ -1161,7 +1162,9 @@ def heavy_hitters(documents: DataFrame, min_count: int = 500) -> DataFrame:
         )
         or 10000
     )
-    if n_total > min_count * arrow_batch:
+    fallback = n_total > min_count * arrow_batch
+    scale.record_posture("heavy_hitters", "hash_aggregate" if fallback else "two_pass", n_total)
+    if fallback:
         import logging
 
         logging.getLogger(__name__).warning(
@@ -1278,8 +1281,6 @@ def vocab_growth_curve(documents: DataFrame, n_slices: int = 10) -> DataFrame:
     cumulative window."""
     from pyspark.sql.window import Window
 
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
     hashed = documents.select(
         "doc_id",
         "text",
@@ -1287,7 +1288,7 @@ def vocab_growth_curve(documents: DataFrame, n_slices: int = 10) -> DataFrame:
         .cast("bigint")
         .alias("__h"),
     )
-    ranked = distributed_rank(hashed, "__h", "doc_id", out_col="__r")
+    ranked = scale.distributed_rank(hashed, "__h", "doc_id", out_col="__r")
     n_docs = ranked.agg(F.count(F.lit(1)).alias("__n"))
     with_slice = (
         ranked.crossJoin(F.broadcast(n_docs))

@@ -849,11 +849,7 @@ def q_dedup_minhash(spark, sf_dir):
 
 
 def q_dedup_simhash(spark, sf_dir):
-    # arrow=True: the bit-identical numpy fingerprint path (the HOF twin
-    # is the pytest-asserted ground truth, as with knn_cosine_arrow)
-    return dedup_ops.simhash_near_duplicates(
-        _t(spark, sf_dir, "documents"), max_hamming=3, arrow=True
-    )
+    return dedup_ops.simhash_near_duplicates(_t(spark, sf_dir, "documents"), max_hamming=3)
 
 
 def q_contamination(spark, sf_dir):

@@ -128,3 +128,17 @@ def test_probe_table_keeps_the_committed_detail_layout(spark):
     assert set(timings) == {
         k for k in committed["probe_queries"] if not k.startswith("newop_")
     }
+
+
+def test_postures_since_reports_decisions_taken_after_the_snapshot(monkeypatch):
+    from parcial_bigdata_spark.operators import scale
+
+    monkeypatch.setattr(scale, "_POSTURES", {})
+    scale.record_posture("op_a", "small", 10)
+    before = scale.posture_log()
+    scale.record_posture("op_a", "small", 12)
+    scale.record_posture("op_b", "large")
+    assert bench.postures_since(before) == [
+        {"op": "op_a", "branch": "small", "count": 1, "last_input": 12},
+        {"op": "op_b", "branch": "large", "count": 1, "last_input": None},
+    ]

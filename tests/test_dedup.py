@@ -201,6 +201,36 @@ def test_minhash_verify_shapes_equivalent(documents):
     assert carried == rejoin and carried
 
 
+def test_minhash_rejoin_reuses_the_payload_exchange(spark):
+    """Without broadcasts, both payload join sides of the rejoin verify
+    are one hashpartitioning(doc_id) exchange: the executed final
+    adaptive plan holds exactly one ReusedExchange of [doc_id, shingles]."""
+    import re
+
+    words = [f"w{i}" for i in range(60)]
+    corpus = spark.createDataFrame(
+        [(i, " ".join(words[i * 7 % 50:i * 7 % 50 + 10]), "en", "web", 10)
+         for i in range(200)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = dedup._minhash_verify_rejoin(corpus, 0.5, 3)
+        assert out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prev)
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("ReusedExchange") == 1
+    assert re.search(
+        r"ReusedExchange \[doc_id#\d+L, shingles#\d+\], "
+        r"Exchange hashpartitioning\(doc_id#\d+L", final
+    )
+
+
 def test_minhash_posture_gate_routes_by_scan_size(documents, monkeypatch):
     """In-memory / unknown-size corpora take the rejoin (at-scale) form;
     provably small local scans take the carried form.  Pin the routing by
@@ -216,16 +246,24 @@ def test_minhash_posture_gate_routes_by_scan_size(documents, monkeypatch):
         dedup, "_minhash_verify_rejoin",
         lambda d, t, k: calls.append("rejoin") or real_rejoin(d, t, k),
     )
+    import parcial_bigdata_spark.operators.scale as scale_mod
+
+    def last(branch):
+        return {
+            r["branch"]: r["last_input"] for r in scale_mod.posture_log()
+            if r["op"] == "minhash_near_duplicates"
+        }.get(branch, "absent")
+
     dedup.minhash_near_duplicates(documents, threshold=0.5)
     assert calls == ["rejoin"]  # in-memory frame → assume big → rejoin
-
-    import parcial_bigdata_spark.operators.scale as scale_mod
+    assert last("large") is None
 
     monkeypatch.setattr(
         scale_mod, "local_scan_bytes", lambda df, files=None: 1024
     )
     dedup.minhash_near_duplicates(documents, threshold=0.5)
     assert calls == ["rejoin", "carried"]  # small local scan → carried
+    assert last("small") == 1024
 
 
 def test_simhash_flags_near_dup_pair(documents):
@@ -593,14 +631,14 @@ def test_ngram_contamination_partial_overlap(spark, documents):
 
 
 def test_auto_bloom_bits_sizing(spark, documents, monkeypatch):
-    """r17 Bloom geometry: unknown train size keeps the legacy 2^22
-    default; a sized local train gets ~16 bits/gram rounded up to a
-    power of two within [2^22, 2^27]; a train too big for any
-    broadcastable filter skips the prune (None)."""
+    """Bloom geometry: an unknown train size skips the prune (None); a
+    sized local train gets ~16 bits/gram rounded up to a power of two
+    within [2^22, 2^27]; a bigger train gets the capped 2^27 filter
+    while that holds >= 6 bits/gram, and skips the prune past that."""
     import parcial_bigdata_spark.operators.scale as scale_mod
 
-    # in-memory frame: inputFiles empty -> unknowable -> legacy default
-    assert dedup._auto_bloom_bits(documents) == 1 << 22
+    # in-memory frame: inputFiles empty -> unknowable -> skip
+    assert dedup._auto_bloom_bits(documents) is None
 
     monkeypatch.setattr(
         scale_mod, "local_scan_bytes", lambda df, files=None: 12 * 1024 * 1024
@@ -609,6 +647,14 @@ def test_auto_bloom_bits_sizing(spark, documents, monkeypatch):
     est = (12 * 1024 * 1024) // dedup._BLOOM_BYTES_PER_GRAM
     assert bits == 1 << (est * dedup._BLOOM_BITS_PER_ITEM - 1).bit_length()
     assert (1 << 22) <= bits <= dedup._BLOOM_MAX_BITS
+
+    # 32 MiB: 16 bits/gram would overflow the cap, 2^27 still holds >= 6
+    monkeypatch.setattr(
+        scale_mod, "local_scan_bytes", lambda df, files=None: 32 * 1024 * 1024
+    )
+    est = (32 * 1024 * 1024) // dedup._BLOOM_BYTES_PER_GRAM
+    assert est * dedup._BLOOM_BITS_PER_ITEM > dedup._BLOOM_MAX_BITS
+    assert dedup._auto_bloom_bits(documents) == dedup._BLOOM_MAX_BITS
 
     monkeypatch.setattr(
         scale_mod, "local_scan_bytes", lambda df, files=None: 10 * 1024 ** 3
@@ -632,11 +678,6 @@ def test_simhash_arrow_matches_hof_fingerprints(documents):
     hof = {r.doc_id: r.simhash for r in dedup.simhash(documents).collect()}
     arw = {r.doc_id: r.simhash for r in dedup.simhash_arrow(documents).collect()}
     assert hof == arw
-    pairs_hof = {(r.doc_a, r.doc_b) for r in
-                 dedup.simhash_near_duplicates(documents, 10).collect()}
-    pairs_arw = {(r.doc_a, r.doc_b) for r in
-                 dedup.simhash_near_duplicates(documents, 10, arrow=True).collect()}
-    assert pairs_hof == pairs_arw
 
 
 def test_component_survivors_one_per_cluster(documents):
@@ -747,7 +788,7 @@ def test_ngram_bloom_prune_matches_exact_path(spark, documents):
 
     train = documents.where(F.col("doc_id") <= 3)
     ev = documents.where(F.col("doc_id") > 3)
-    with_bloom = dedup.ngram_contamination(train, ev, n=3).collect()
+    with_bloom = dedup.ngram_contamination(train, ev, n=3, bloom_bits=1 << 22).collect()
     exact = dedup.ngram_contamination(train, ev, n=3, bloom_bits=None).collect()
     assert [r.asDict() for r in with_bloom] == [r.asDict() for r in exact]
     assert len(with_bloom) > 0
@@ -760,7 +801,8 @@ def test_ngram_bloom_adaptive_skip_on_small_file_backed_eval(
     adaptive gate keys on the eval side: a provably SMALL file-backed
     eval skips the prune (round-7 adaptive decision, regardless of
     train), an in-memory/unestimable eval keeps it (scale-safe
-    default), and both paths must return identical rows."""
+    default) when the train scan can size the filter, and both paths
+    must return identical rows."""
     from pyspark.sql import functions as F
 
     train_mem = documents.where(F.col("doc_id") <= 3)
@@ -781,10 +823,11 @@ def test_ngram_bloom_adaptive_skip_on_small_file_backed_eval(
     # gate keys on eval alone — review finding: a small train says
     # nothing about the eval shuffles the prune exists to cut)
     assert not has_bloom(dedup.ngram_contamination(train_mem, ev_f, n=3))
-    kept = dedup.ngram_contamination(train_mem, ev_mem, n=3)
-    assert has_bloom(kept), "unestimable (in-memory) eval must keep the bloom"
     # unestimable eval keeps the bloom even with a tiny file-backed train
-    assert has_bloom(dedup.ngram_contamination(train_f, ev_mem, n=3))
+    kept = dedup.ngram_contamination(train_f, ev_mem, n=3)
+    assert has_bloom(kept), "unestimable (in-memory) eval must keep the bloom"
+    # ...but an unknown train size leaves no filter to size: skip
+    assert not has_bloom(dedup.ngram_contamination(train_mem, ev_mem, n=3))
     key = lambda d: d["doc_id"]  # noqa: E731
     assert sorted((r.asDict() for r in skipped.collect()), key=key) == sorted(
         (r.asDict() for r in kept.collect()), key=key

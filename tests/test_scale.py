@@ -187,6 +187,10 @@ def test_iter_checkpoint_reset_stats_public_fallback(spark, monkeypatch):
     size = int(reset._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert size > int(1 << 62), "fallback frame must carry the default estimate"
     assert sorted(r.a for r in reset.collect()) == list(range(100))
+    # the degraded tier leaves a record, not just a once-per-process warning
+    assert {"op": "iter_checkpoint.reset_stats", "branch": "public_rebuild"} in [
+        {"op": r["op"], "branch": r["branch"]} for r in scale.posture_log()
+    ]
 
 
 def test_release_checkpoint_frees_blocks_including_reset_frames(spark):
@@ -253,6 +257,60 @@ def test_cc_star_rounds_release_superseded_blocks(spark, monkeypatch):
     )
 
 
+def test_small_scan_threshold_lives_only_in_scale():
+    """Every "provably small local scan" gate goes through
+    scale.small_local_scan: no other engine module names the threshold."""
+    from pathlib import Path
+
+    import parcial_bigdata_spark
+
+    root = Path(parcial_bigdata_spark.__file__).parent
+    hits = sorted(
+        str(f.relative_to(root)) for f in root.rglob("*.py")
+        if "SMALL_LOCAL_SCAN_BYTES" in f.read_text()
+    )
+    assert hits == ["operators/scale.py"]
+
+
+def test_posture_log_snapshots_while_other_threads_record(monkeypatch):
+    """The posture log is process-wide: a snapshot taken while other
+    threads record new decisions must neither raise nor lose a record."""
+    import sys
+    import threading
+
+    from parcial_bigdata_spark.operators import scale
+
+    monkeypatch.setattr(scale, "_POSTURES", {})
+    errors: list[Exception] = []
+
+    def snapshot():
+        try:
+            for _ in range(500):
+                scale.posture_log()
+        except RuntimeError as e:  # dict changed size during iteration
+            errors.append(e)
+
+    recorders = [
+        threading.Thread(
+            target=lambda t=t: [scale.record_posture(f"op{t}", str(i)) for i in range(1000)]
+        )
+        for t in range(8)
+    ]
+    workers = recorders + [threading.Thread(target=snapshot) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(w.is_alive() for w in workers)
+    assert errors == []
+    assert sum(r["count"] for r in scale.posture_log()) == 8 * 1000
+
+
 def test_parse_bytes_handles_unit_suffixes():
     """Spark byte-size confs come plain or unit-suffixed; '128m' read as
     128 bytes would inflate split estimates and silently disable the
@@ -289,7 +347,7 @@ def test_release_checkpoint_warns_once_on_accessor_drift(spark, caplog):
             raise RuntimeError("simulated build drift")
 
     ck._iter_ck_origin = type("F", (), {"_jdf": _Broken()})()
-    scale._WARNED_RELEASE_CHECKPOINT = False
+    scale._POSTURES.pop(("release_checkpoint", "no_op"), None)
     with caplog.at_level(logging.WARNING, logger="parcial_bigdata_spark.operators.scale"):
         release_checkpoint(ck)
         release_checkpoint(ck)  # once per process, not per call
@@ -298,7 +356,7 @@ def test_release_checkpoint_warns_once_on_accessor_drift(spark, caplog):
     # plain frames and None never warn
     caplog.clear()
     with caplog.at_level(logging.WARNING, logger="parcial_bigdata_spark.operators.scale"):
-        scale._WARNED_RELEASE_CHECKPOINT = False
+        scale._POSTURES.pop(("release_checkpoint", "no_op"), None)
         release_checkpoint(spark.range(5))
         release_checkpoint(None)
     assert not [r for r in caplog.records if "release_checkpoint" in r.message]
