@@ -31,6 +31,13 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# the silver table's columns: create_silver_table's DDL, and the schema
+# the streaming writer pins when it probes silver
+SILVER_COLUMNS = (
+    "fechahora TIMESTAMP NOT NULL, valor DECIMAL(12,4) NOT NULL, "
+    "source_file STRING, dt DATE"
+)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -93,11 +100,7 @@ def create_silver_table(spark: SparkSession, table: str = "dolar", location: str
     table = ".".join("`{}`".format(p.replace("`", "``")) for p in table.split("."))
     spark.sql(
         f"""
-        CREATE TABLE IF NOT EXISTS {table} (
-            fechahora TIMESTAMP NOT NULL,
-            valor DECIMAL(12,4) NOT NULL,
-            source_file STRING,
-            dt DATE
-        ) USING parquet PARTITIONED BY (dt){loc}
+        CREATE TABLE IF NOT EXISTS {table} ({SILVER_COLUMNS})
+        USING parquet PARTITIONED BY (dt){loc}
         """
     )

@@ -11,37 +11,43 @@ Reference semantics preserved / upgraded:
   delivery — an upgrade from at-least-once to exactly-once discovery.
 - ST3 delivery: the reference re-inserts rows when an event redelivers
   (no PK, ``lambda/subirDB.py:72-77,116``).  We keep append-only silver
-  but make the write idempotent per source file: a batch first anti-joins
-  its file set against the files already present in silver, so a replayed
-  batch writes nothing.
+  but make the write idempotent per source file: a batch first probes
+  which of its files are already ingested, so a replayed batch writes
+  (and counts) nothing.
 - ST5 bad data: per-row drop-and-count runs in the same permissive parse
   as batch ingest (sources/ingest.py — one code path for both).
 - ST6 empty batch: zero surviving rows → skip the write, still record
   accounting.
 
 Scale: the file source lists incrementally (``maxFilesPerTrigger``
-bounds batch size); the idempotency filter anti-joins each batch's
-files against a PROCESSED-FILES LEDGER parquet (one row per ingested
-file — O(files), tiny) UNIONED with the silver files already present
-in the batch's own ``dt`` partitions.  The ledger covers every
-committed batch cheaply; the partition-pruned silver probe covers the
-one window the ledger cannot — a crash BETWEEN the silver write and
-the ledger append, where the replayed batch's files are in silver but
-not yet in the ledger.  A replayed file's rows land in exactly the dt
-partitions its deterministic parse produces, so probing the current
-batch's own dt set always sees the crashed-write copy; the probe is
-O(partitions the batch touches) every batch, never O(table).  Every
-transform is the same codegen'd expression pipeline as batch.
+bounds batch size), and a small trigger's cost is fixed per-job
+overhead (planning, codegen, scheduling), so the writer runs about six
+jobs per trigger: one per-file accounting aggregate, one probe, the
+silver write and the ledger append (``make_silver_batch_writer``).  The
+probe reads a PROCESSED-FILES LEDGER parquet (one row per ingested
+file — O(files), tiny) UNIONED with the silver partitions of the
+batch's own ``dt`` set, both with pinned schemas (no inference jobs).
+The ledger covers every committed batch cheaply; the partition-pruned
+silver side covers the one window the ledger cannot — a crash BETWEEN
+the silver write and the ledger append, where the replayed batch's
+files are in silver but not yet in the ledger.  A replayed file's rows
+land in exactly the dt partitions its deterministic parse produces, so
+probing the current batch's own dt set always sees the crashed-write
+copy; the probe lists and reads O(partitions the batch touches) every
+batch, never O(table).  Every transform is the same codegen'd
+expression pipeline as batch.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from parcial_bigdata_spark.catalog import SILVER_COLUMNS
 from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows, write_silver
 
 
@@ -67,43 +73,34 @@ def read_bronze_stream(
     )
 
 
-def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet table, returning None ONLY when the path does not
-    exist yet (first batch).  Any other failure — corrupt footer,
-    permissions, object-store hiccup — re-raises: swallowing it would
-    silently disable the idempotency anti-join and write duplicates."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if (e.getCondition() or "") == "PATH_NOT_FOUND":
-            return None
-        raise
+LEDGER_SCHEMA = "source_file string, batch_id long"
 
 
-def _existing_files(
-    spark: SparkSession, silver_path: str, dts: list | None = None
-) -> DataFrame | None:
-    """Silver-derived processed-file set for the crash-window side of
-    the idempotency filter.  ``dts`` restricts the scan to the given
-    ``dt`` partitions — sound because the caller passes the CURRENT
-    batch's distinct event dates: the silver write is job-atomic, and a
-    file's rows land in exactly the dt partitions its parse produces
-    (deterministically), so any crashed-write copy of a current-batch
-    file is visible inside the current batch's own dt set.  Probe cost
-    is O(partitions the batch touches), not O(table) (round-4 verdict
-    item 5)."""
-    df = _read_parquet_if_exists(spark, silver_path)
-    if df is None:  # first batch: silver does not exist yet
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the session's Hadoop FileSystem, so a first
+    batch asks instead of provoking (and logging) a failed read."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(p)
+
+
+def _existing_files(spark: SparkSession, silver_path: str, dts: list) -> DataFrame | None:
+    """``source_file`` of the silver rows in the ``dt`` partitions
+    ``dts`` — the crash-window side of the idempotency probe — or None
+    when none of those partitions exists.  Only those partition
+    directories are listed and read (schema pinned, no inference), so
+    the probe is O(partitions the batch touches), never O(table).
+    Sound because the caller passes the CURRENT batch's good-row dates:
+    the silver write is job-atomic, and a file's rows land in exactly
+    the dt partitions its parse produces (deterministically), so any
+    crashed-write copy of a current-batch file is visible inside the
+    current batch's own dt set."""
+    root = silver_path.rstrip("/")
+    parts = [f"{root}/dt={d.isoformat()}" for d in dts]
+    parts = [p for p in parts if _path_exists(spark, p)]
+    if not parts:
         return None
-    if dts is not None:
-        non_null = [d for d in dts if d is not None]
-        cond = F.col("dt").isin(non_null)
-        if len(non_null) < len(dts):  # unparseable dates partition separately
-            cond = cond | F.col("dt").isNull()
-        df = df.where(cond)
-    return df.select("source_file").distinct()
+    reader = spark.read.schema(SILVER_COLUMNS).option("basePath", root)
+    return reader.parquet(*parts).select("source_file")
 
 
 def _ledger_path(silver_path: str) -> str:
@@ -111,7 +108,58 @@ def _ledger_path(silver_path: str) -> str:
 
 
 def _read_ledger(spark: SparkSession, silver_path: str) -> DataFrame | None:
-    return _read_parquet_if_exists(spark, _ledger_path(silver_path))
+    """The processed-files ledger, or None when it does not exist yet
+    (first batch).  The schema is pinned, so building the frame reads
+    nothing: a ledger that exists but cannot be read (corrupt footer,
+    permissions, object-store hiccup) fails the first action on it —
+    the writer's probe — and is never taken for an empty ledger, which
+    would silently disable idempotency and write duplicates."""
+    path = _ledger_path(silver_path)
+    if not _path_exists(spark, path):
+        return None
+    return spark.read.schema(LEDGER_SCHEMA).parquet(path)
+
+
+def _per_file(batch_df: DataFrame) -> list:
+    """One aggregate job: ``(source_file, good, bad, dts)`` for every
+    file of the RAW batch — non-list files (which ``parse_rows`` drops,
+    P5) enter through a null row so they are counted and recorded too.
+    ``dts`` are the dates of the file's good rows, never null: a good
+    row has a non-null epoch, so its timestamp is non-null."""
+    rows = parse_rows(batch_df).select("source_file", "ok", F.to_date("fechahora").alias("d"))
+    return (
+        rows.unionByName(batch_df.select("source_file"), allowMissingColumns=True)
+        .groupBy("source_file")
+        .agg(
+            F.count_if("ok").alias("good"),
+            F.count_if(~F.col("ok")).alias("bad"),
+            F.collect_set(F.when(F.col("ok"), F.col("d"))).alias("dts"),
+        )
+        .collect()
+    )
+
+
+def _probe(spark: SparkSession, silver_path: str, files: list, dts: list) -> dict:
+    """One probe job over the ledger ∪ silver's ``dts`` partitions,
+    filtered to the batch's ``files``: ``{file: in_ledger}`` for every
+    file already ingested.  No job runs while neither exists."""
+    sides = [
+        df.select("source_file", F.lit(in_ledger).alias("in_ledger"))
+        for df, in_ledger in (
+            (_read_ledger(spark, silver_path), True),
+            (_existing_files(spark, silver_path, dts), False),
+        )
+        if df is not None
+    ]
+    if not sides or not files:
+        return {}
+    probe = functools.reduce(DataFrame.unionByName, sides)
+    return dict(
+        probe.where(F.col("source_file").isin(files))
+        .groupBy("source_file")
+        .agg(F.max("in_ledger"))
+        .collect()
+    )
 
 
 def make_silver_batch_writer(
@@ -121,87 +169,61 @@ def make_silver_batch_writer(
     """foreachBatch body: idempotent per-file append + accounting.
 
     Replayed batches (failure between write and checkpoint commit) are
-    filtered out by a source-file anti-join, upgrading the reference's
-    at-least-once duplicate inserts to effectively-once (ST3).
+    filtered out per source file, upgrading the reference's
+    at-least-once duplicate inserts to effectively-once (ST3).  Each
+    trigger runs at most six Spark jobs (AQE runs each aggregate as a
+    map-stage job plus a result job, and drops an empty result stage):
 
-    The anti-join's key set is the processed-files LEDGER (one row per
-    file seen, appended after each silver write — O(files) steady
-    state) UNIONED with the silver files already present in the batch's
-    own dt partitions.  The partition-pruned silver probe is what makes
-    the crash window between the silver write and the ledger append
-    safe: a batch replayed across that window finds its files in silver
-    even though the ledger never recorded them.  Probing every batch —
-    rather than gating on a ledger batch-id heuristic — costs one
-    O(batch-partitions) read and leaves no undetectable window.
+    1. one aggregate over the parsed batch: ``(source_file, good, bad,
+       dts)`` per file the raw batch saw; all accounting comes from this
+       driver-side list;
+    2. one probe over the processed-files LEDGER (one row per file
+       seen — O(files)) ∪ silver's partitions for the batch's dts,
+       filtered to the batch's files: which files are already ingested
+       and which of them the ledger holds.  The silver side runs every
+       batch and covers the crash window between the silver write and
+       the ledger append: a batch replayed across it finds its files in
+       silver even though the ledger never recorded them;
+    3. the silver write of the new files' good rows, skipped when there
+       are none (ST6).  It parses the batch again: re-parsing one
+       trigger's files costs less than caching the parse;
+    4. the ledger append of the batch's files the ledger lacks, from
+       the driver's list — after the silver write, so a crash in
+       between lands in the window the silver side of (2) covers.
+       All-bad-row and non-list files are recorded too, so no file is
+       ever re-parsed.
+
+    ``bad_rows`` and ``rows_inserted`` count only files not already
+    ingested, so a redelivered batch reports zero for both.
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # One parse, three consumers (silver rows, ledger file set,
-        # accounting) — persist so the JSON parse runs once per batch.
-        candidates = parse_rows(batch_df).persist()
-        rows = silver_rows(candidates)
-        seen = None
-        try:
-            ledger = _read_ledger(spark, silver_path)
-            # the dt partitions this batch's rows would land in — keys
-            # for the crash-window silver probe
-            batch_dts = [
-                r.d
-                for r in rows.select(F.to_date("fechahora").alias("d"))
-                .distinct()
-                .collect()
-            ]
-            silver_seen = (
-                _existing_files(spark, silver_path, batch_dts) if batch_dts else None
+        per_file = _per_file(batch_df)
+        files = [f.source_file for f in per_file]
+        done = _probe(spark, silver_path, files, sorted({d for f in per_file for d in f.dts}))
+        new = [f for f in per_file if f.source_file not in done]
+        if any(f.good for f in new):
+            rows = silver_rows(parse_rows(batch_df))
+            if done:
+                rows = rows.where(~F.col("source_file").isin(list(done)))
+            write_silver(rows, silver_path)
+        # new files, and files the silver probe alone found (crash window)
+        unrecorded = [f.source_file for f in per_file if not done.get(f.source_file)]
+        if unrecorded:
+            # a literal array keeps the append JVM-side; createDataFrame
+            # from Python rows measured 0.4-0.9 s per append (local[4])
+            ledger = spark.range(1, numPartitions=1).select(
+                F.explode(F.array(*map(F.lit, unrecorded))).alias("source_file"),
+                F.lit(batch_id).cast("long").alias("batch_id"),
             )
-            existing = None if ledger is None else ledger.select("source_file")
-            if silver_seen is not None:
-                existing = (
-                    silver_seen if existing is None else existing.union(silver_seen)
-                )
-            if existing is not None:
-                rows = rows.join(existing.distinct(), "source_file", "left_anti")
-            rows = rows.persist()
-            n_new = rows.count()
-            if n_new > 0:  # ST6: empty batch skips the write entirely
-                write_silver(rows, silver_path)
-            # Ledger append AFTER the silver write: a crash in between
-            # leaves the file unrecorded, and the replayed batch's
-            # silver probe (above) re-filters it against silver itself.
-            # Every file seen in the batch is recorded — including
-            # all-bad-row and non-list-payload files (from the RAW batch
-            # frame, which parse_rows' P5 filter never touches) — so no
-            # file is ever re-parsed.
-            seen = batch_df.select("source_file").distinct().persist()
-            new_files = seen
-            if ledger is not None:
-                new_files = seen.join(
-                    ledger.select("source_file").distinct(), "source_file", "left_anti"
-                )
-            (
-                new_files.withColumn("batch_id", F.lit(batch_id).cast("long"))
-                .write.mode("append")
-                .parquet(_ledger_path(silver_path))
-            )
-            if on_metrics is not None:
-                acct = candidates.groupBy().agg(
-                    F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("bad_rows"),
-                ).collect()[0]
-                on_metrics(
-                    batch_id,
-                    {
-                        "files_processed": seen.count(),
-                        "rows_inserted": n_new,
-                        "bad_rows": acct.bad_rows or 0,
-                    },
-                )
-        finally:
-            # unpersist is a no-op on frames that never got persisted
-            candidates.unpersist()
-            rows.unpersist()
-            if seen is not None:
-                seen.unpersist()
+            ledger.write.mode("append").parquet(_ledger_path(silver_path))
+        if on_metrics is not None:
+            on_metrics(batch_id, {
+                "files_processed": len(per_file),
+                "rows_inserted": sum(f.good for f in new),
+                "bad_rows": sum(f.bad for f in new),
+            })
 
     return _write
 

@@ -47,9 +47,13 @@ def test_incremental_discovery_and_idempotent_replay(spark, tmp_path):
     assert seen[-1][1]["bad_rows"] == 1
 
     # replay the same file content under a fresh checkpoint (simulated
-    # redelivery, reference's ST3 hazard): anti-join keeps silver stable
-    _run(spark, bronze, silver, tmp_path / "ckpt2")
+    # redelivery, reference's ST3 hazard): the ledger probe keeps silver
+    # stable, and the replay counts neither rows nor bad rows again
+    replay: list[dict] = []
+    _run(spark, bronze, silver, tmp_path / "ckpt2", metrics=lambda bid, m: replay.append(m))
     assert spark.read.parquet(str(silver)).count() == 3
+    assert replay and sum(m["rows_inserted"] for m in replay) == 0
+    assert sum(m["bad_rows"] for m in replay) == 0
 
 
 def test_empty_batch_skips_write(spark, tmp_path):
@@ -271,10 +275,10 @@ def test_available_now_rollup_matches_batch(spark):
 
 
 def test_recovery_fallback_scan_is_partition_pruned(spark, tmp_path):
-    """Round-5 hardening (r4 verdict item 5): the crash-recovery
-    silver-derived file set must partition-prune to the replayed batch's
-    own dt partitions — O(recent partitions), not O(table) — while still
-    seeing the files those partitions hold."""
+    """The crash-window silver probe must prune to the batch's own dt
+    partitions — O(recent partitions), not O(table) — while still
+    seeing the files those partitions hold: it lists and reads only
+    those partition directories."""
     silver = tmp_path / "silver"
     rows = [
         ("f1", dt.datetime(2025, 9, 10, 12), dt.date(2025, 9, 10)),
@@ -286,16 +290,20 @@ def test_recovery_fallback_scan_is_partition_pruned(spark, tmp_path):
     ).write.partitionBy("dt").parquet(str(silver))
 
     pruned = sp._existing_files(spark, str(silver), [dt.date(2025, 9, 11)])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "dt" in plan
-    # the plan keeps the dt predicate as a partition filter (metadata-only
-    # prune, no data read outside the batch's partitions)
-    assert "19976" in plan or "2025-09-11" in plan  # date literal rendering
+    # the scan's inputs are the batch's partition only (no data, and no
+    # listing, outside it)
+    assert pruned.inputFiles()
+    assert all("/dt=2025-09-11/" in f for f in pruned.inputFiles())
     assert {r.source_file for r in pruned.collect()} == {"f2"}
 
-    # unpruned fallback (no dts) still sees everything — semantics anchor
-    full = sp._existing_files(spark, str(silver), None)
-    assert {r.source_file for r in full.collect()} == {"f1", "f2", "f3"}
+    # several dts see every file they hold; a dt with no partition yet
+    # is skipped, and no existing partition at all means no probe
+    two = sp._existing_files(
+        spark, str(silver), [dt.date(2025, 9, 10), dt.date(2025, 9, 12), dt.date(2025, 9, 13)]
+    )
+    assert {r.source_file for r in two.collect()} == {"f1", "f3"}
+    assert sp._existing_files(spark, str(silver), [dt.date(2025, 9, 13)]) is None
+    assert sp._existing_files(spark, str(tmp_path / "nosilver"), [dt.date(2025, 9, 11)]) is None
 
 
 def test_crash_between_silver_write_and_ledger_append_no_duplicates(spark, tmp_path):
@@ -340,22 +348,51 @@ def test_crash_between_silver_write_and_ledger_append_no_duplicates(spark, tmp_p
 
 
 def test_ledger_read_failure_surfaces_instead_of_duplicating(spark, tmp_path):
-    """A ledger that EXISTS but cannot be read must raise — returning
-    None would silently disable the idempotency anti-join and write
-    duplicates (round-5 review)."""
+    """A ledger that EXISTS but cannot be read must raise — taking it
+    for a missing ledger (None) would silently disable the idempotency
+    probe and write duplicates.  The read pins its schema, so the
+    failure surfaces when the frame is first read, not when it is built."""
     silver = tmp_path / "silver"
+    assert sp._read_ledger(spark, str(silver)) is None  # no ledger yet
     ledger_dir = tmp_path / "silver_ledger"
     ledger_dir.mkdir()
     (ledger_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    ledger = sp._read_ledger(spark, str(silver))
+    assert ledger is not None
     with pytest.raises(Exception):
-        sp._read_ledger(spark, str(silver))
+        ledger.collect()
+
+
+def test_corrupt_ledger_fails_the_writer_before_silver_grows(spark, tmp_path):
+    """At the writer: a corrupt ledger makes the batch raise (the probe
+    job reads it), and silver gains no rows."""
+    silver = tmp_path / "silver"
+    writer = sp.make_silver_batch_writer(str(silver))
+    writer(
+        spark.createDataFrame(
+            [("file:///bronze/dolar-1.json", json.dumps(PAYLOAD_A))],
+            "source_file string, raw_payload string",
+        ),
+        0,
+    )
+    assert spark.read.parquet(str(silver)).count() == 2
+    ledger_dir = tmp_path / "silver_ledger"
+    for f in ledger_dir.glob("part-*.parquet"):
+        f.write_bytes(b"not a parquet file")
+    batch = spark.createDataFrame(
+        [("file:///bronze/dolar-2.json", json.dumps(PAYLOAD_B))],
+        "source_file string, raw_payload string",
+    )
+    with pytest.raises(Exception):
+        writer(batch, 1)
+    assert spark.read.parquet(str(silver)).count() == 2
 
 
 def test_all_bad_and_nonlist_files_recorded_in_ledger(spark, tmp_path):
     """Every file seen in a batch — including files whose payload is not
-    a JSON list (P5) — is recorded in the ledger and counted in
-    files_processed, so no file is ever re-parsed and accounting
-    matches what the batch actually saw."""
+    a JSON list (P5) and files whose rows are all bad — is recorded in
+    the ledger and counted in files_processed, so no file is ever
+    re-parsed and accounting matches what the batch actually saw."""
     silver = tmp_path / "silver"
     seen: list[tuple[int, dict]] = []
     writer = sp.make_silver_batch_writer(
@@ -365,6 +402,7 @@ def test_all_bad_and_nonlist_files_recorded_in_ledger(spark, tmp_path):
         [
             ("file:///bronze/dolar-1.json", json.dumps(PAYLOAD_A)),
             ("file:///bronze/dolar-err.json", json.dumps({"error": "maintenance"})),
+            ("file:///bronze/dolar-bad.json", json.dumps([["bad", "x"], ["1757509256000"]])),
         ],
         "source_file string, raw_payload string",
     )
@@ -373,8 +411,30 @@ def test_all_bad_and_nonlist_files_recorded_in_ledger(spark, tmp_path):
     assert {r.source_file for r in ledger.collect()} == {
         "file:///bronze/dolar-1.json",
         "file:///bronze/dolar-err.json",
+        "file:///bronze/dolar-bad.json",
     }
-    assert seen[-1][1]["files_processed"] == 2
+    assert seen[-1][1] == {"files_processed": 3, "rows_inserted": 2, "bad_rows": 2}
+    assert spark.read.parquet(str(silver)).count() == 2
+
+
+def test_silver_writer_runs_at_most_six_jobs_per_trigger(spark, tmp_path):
+    """Per-job fixed cost (planning, codegen, scheduling) dominates a
+    small trigger, so the writer keeps its job count down: one
+    accounting aggregate, one ledger+silver probe, the silver write and
+    the ledger append.  Same-day files make every steady-state trigger
+    probe an existing silver partition as well as the ledger."""
+    bronze, silver, ckpt = tmp_path / "bronze", tmp_path / "silver", tmp_path / "ckpt"
+    bronze.mkdir()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
+    for i in range(3):
+        payload = [[str(1757509256000 + i * 60_000 + k * 1000), "3920.00"] for k in range(3)]
+        (bronze / f"dolar-{i}.json").write_text(json.dumps(payload))
+        q = sp.start_silver_stream(spark, str(bronze), str(silver), str(ckpt))
+        q.awaitTermination()
+        jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))))
+    assert spark.read.parquet(str(silver)).count() == 9
+    assert all(n <= 6 for n in jobs[1:]), jobs
 
 
 def test_available_now_handles_directory_parquet(spark, tmp_path):
