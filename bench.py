@@ -747,9 +747,9 @@ def _sessionize(src) -> None:
 # r17 (verdict item 7): state-store provider A/B at the largest state
 # point — the default HDFS-backed in-memory provider vs the built-in
 # RocksDB provider (the documented cluster posture for state that
-# outgrows executor heap, guide §5; gate: SPARK_GRAFT_STATE_STORE=rocksdb
-# in session.get_spark).  The provider conf binds at query start, so one
-# session can time both.
+# outgrows executor heap, guide §5), selected with Spark's own
+# spark.sql.streaming.stateStore.providerClass.  That conf binds at
+# query start, so one session can time both.
 _STATE_STORE = "spark.sql.streaming.stateStore.providerClass"
 _ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

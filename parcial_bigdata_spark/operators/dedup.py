@@ -1161,114 +1161,7 @@ def cross_split_contamination(documents: DataFrame, split_col: str = "source") -
     )
 
 
-def gram_bloom(grams: DataFrame, bits: int, n_hashes: int) -> DataFrame:
-    """A Bloom filter over ``grams.gram`` as ONE DataFrame row: a
-    map<word_index → 64-bit mask> covering the set positions of a
-    ``bits``-wide filter.  Pure built-in exprs end to end — each gram
-    emits ``n_hashes`` seeded positions (xxhash64 double-hashing), the
-    positions bit-OR into per-word masks, and the masks collect into a
-    single broadcastable map.  1 MiB of filter ≈ 2²³ bits; the map
-    never exceeds min(n_hashes·|grams|, bits/64) entries."""
-    positions = grams.select(
-        F.explode(
-            F.array(
-                *[
-                    F.expr(f"pmod(xxhash64(gram, {i}), CAST({bits} AS BIGINT))")
-                    for i in range(n_hashes)
-                ]
-            )
-        ).alias("pos")
-    )
-    words = (
-        positions.select(
-            F.expr("pos DIV 64").alias("w"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias("m"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(m)").alias("mask"))
-    )
-    return words.agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "mask"))).alias("bloom")
-    )
-
-
-def _bloom_maybe(gram_col: str, bits: int, n_hashes: int):
-    """Membership predicate against the broadcast ``bloom`` map column:
-    true iff ALL seeded positions of the gram are set (no false
-    negatives; false positives fall through to the exact join).  Built
-    as one SQL expr so the position arithmetic is textually identical
-    to gram_bloom's builder."""
-    tests = []
-    for i in range(n_hashes):
-        pos = f"pmod(xxhash64({gram_col}, {i}), CAST({bits} AS BIGINT))"
-        word = f"coalesce(element_at(bloom, CAST({pos} DIV 64 AS BIGINT)), CAST(0 AS BIGINT))"
-        mask = f"shiftleft(CAST(1 AS BIGINT), CAST({pos} % 64 AS INT))"
-        tests.append(f"(({word} & {mask}) != 0)")
-    return F.expr(" AND ".join(tests))
-
-
-# Eval scans below this many local parquet bytes skip the Bloom prune.
-# The gate keys on the EVAL side because that is where the prune's
-# benefit lives (it cuts the eval gram shuffles; review finding): with
-# a small eval the unpruned shuffles are sub-second no matter how big
-# train is — and since the Bloom branch re-scans the train gram stream,
-# skipping it there also saves an entire extra train pass.  With a big
-# eval the build cost (a train scan + ~0.6-0.8 s of small-stage
-# overhead) is dwarfed by the 94% shuffle cut, so the Bloom stays.
-# Measured at sf0.1 (~5 MB scans): 2.0 s with Bloom vs 1.37 s without.
-_BLOOM_MIN_EVAL_BYTES = 64 * 1024 * 1024
-
-# Bloom auto-sizing.  A Bloom filter saturates when items exceed its
-# capacity — at m/n = 0.58 bits/item with 2 hashes the false-positive
-# rate is ~93% (measured on a 7.2M-gram train against the former fixed
-# 4M-bit filter): nearly every eval gram passes, so the prune cuts
-# nothing while still paying the build scan + 2 hashes per eval gram.
-# Under "auto" the filter is therefore sized from the train side's
-# ON-DISK scan bytes.  Text carries ~1 gram occurrence per 6 bytes, and
-# the fixture text is 2.3× (sf0.01) / 2.5× (sf0.1) its snappy parquet
-# size, so 6 / 2.5 rounded DOWN to 2 on-disk bytes per gram — an
-# overestimate of distinct grams, which errs toward a bigger filter.
-# bits = 16 × est_grams rounded up to a power of two within [2^22,
-# 2^27] (map ≤ 16 MiB broadcast).  A train too big for 16 bits/gram
-# gets the capped 2^27 filter while that still holds ≥ 6 bits/gram
-# (≈8% false positives with 2 hashes); past that, and whenever the
-# train size is unknown (in-memory frames, remote stores), the prune is
-# SKIPPED.  All of this is posture only — false positives fall through
-# to the exact join, so results never change.
-_BLOOM_MAX_BITS = 1 << 27
-_BLOOM_BITS_PER_ITEM = 16
-_BLOOM_MIN_BITS_PER_ITEM = 6
-_BLOOM_BYTES_PER_GRAM = 2
-
-
-def _auto_bloom_bits(train: DataFrame) -> int | None:
-    """Bloom geometry for ``bloom_bits="auto"`` with a big eval: sized
-    from the train scan, or ``None`` (skip) when the train size is
-    unknown or even the capped filter would saturate.  The choice is
-    recorded in the posture log."""
-
-    train_bytes = scale.local_scan_bytes(train)
-    if train_bytes is None:
-        scale.record_posture("ngram_contamination.bloom_bits", "skip_unknown")
-        return None
-    est_grams = max(1, train_bytes // _BLOOM_BYTES_PER_GRAM)
-    want = est_grams * _BLOOM_BITS_PER_ITEM
-    bits = min(_BLOOM_MAX_BITS, max(1 << 22, 1 << (want - 1).bit_length()))
-    if bits < est_grams * _BLOOM_MIN_BITS_PER_ITEM:
-        branch, bits = "skip_saturated", None
-    else:
-        branch = "capped" if bits < want else "sized"
-    scale.record_posture("ngram_contamination.bloom_bits", branch, train_bytes)
-    return bits
-
-
-def ngram_contamination(
-    train: DataFrame,
-    eval_: DataFrame,
-    n: int = 5,
-    bloom_bits: int | str | None = "auto",
-    bloom_hashes: int = 2,
-) -> DataFrame:
+def ngram_contamination(train: DataFrame, eval_: DataFrame, n: int = 5) -> DataFrame:
     """Token n-gram overlap decontamination (the GPT-3-style screen):
     for every eval doc, the fraction of its distinct word n-grams that
     appear ANYWHERE in the train split.  Catches partial containment —
@@ -1282,52 +1175,16 @@ def ngram_contamination(
     explode with an anchor row per doc carrying the gram total, so the
     gram join and a single per-doc aggregation produce totals and hit
     counts together (no second eval pass, no per-doc dedup exchange,
-    no totals join).  Eval grams are pre-pruned through a broadcast
-    Bloom filter built from the train set (``gram_bloom`` — round-3
-    verdict item 6) applied MAP-SIDE on the exploded rows, before any
-    exchange — so both eval-side shuffles (the gram equi-join, the
-    per-doc count) carry only Bloom-positive grams plus one anchor row
-    per doc, a fraction of a percent on a clean corpus.  False
-    positives are re-checked by the join itself, so the result is
-    exactly the unfiltered answer and the SQL oracle is unchanged.
-    Pass ``bloom_bits=None`` to disable the prune (the ground-truth
-    path the tests compare against); size ``bloom_bits`` ≈ 30× the
-    distinct train-gram count for a <1% false-positive rate with two
-    hashes (fp ≈ (k·n/m)^k).  Measured at sf0.1: 5.5% of eval gram
-    occurrences pass the filter (94% shuffle-volume cut); the
-    fixed-cost bloom-build stage adds ~0.3 s at this scale — noise
-    against the r3 baseline locally, and the term that vanishes at
-    scale while the shuffle cut compounds.
+    no totals join).  No Bloom pre-prune of the eval grams: building
+    one costs an extra train gram scan plus ~0.6-0.8 s of fixed
+    stages, and sizing it needs the train's on-disk size, which
+    in-memory frames and remote stores do not report.
 
     Eval docs with fewer than ``n`` words have no n-grams and are
     excluded (nothing to screen).  Output: one row per screened eval
     doc — ``n_ngrams`` distinct grams, ``n_contaminated`` of them found
-    in train, and the rounded fraction.
-
-    Adaptive prune (round-7): the Bloom's cost is an extra train gram
-    scan plus ~0.6-0.8 s of fixed stages (positions explode → per-word
-    bit_or exchange → single-row map assembly), while its benefit — the
-    eval-shuffle cut — scales with EVAL size.  Below
-    ``_BLOOM_MIN_EVAL_BYTES`` of eval scan the unpruned shuffles are
-    sub-second and the build can never pay for itself, so under the
-    default ``bloom_bits="auto"`` a provably small local file-backed
-    eval side skips the Bloom (the result is bit-identical either way;
-    the prune only drops work), while unknown eval sizes — in-memory
-    frames, remote object stores — keep it: at 100 TB the decision
-    must default to the scale path.  When the Bloom stays on, its
-    geometry is sized from the TRAIN scan (``_auto_bloom_bits``):
-    ~16 bits per estimated gram, clamped to [2²², 2²⁷].  A train
-    whose size is unknown, or too big for even the capped filter to
-    hold 6 bits per gram, skips the prune instead of paying for a
-    saturated one (a 7.2M-gram train against the former fixed 4M-bit
-    filter measured ~93% false positives: all cost, no cut).  An
-    explicit int always builds the filter (the heuristic override);
-    ``None`` never does."""
+    in train, and the rounded fraction."""
     train_set = _doc_gram_stream(train, n).select("gram").distinct()
-    if bloom_bits == "auto":
-
-        small = scale.small_local_scan("ngram_contamination", eval_, _BLOOM_MIN_EVAL_BYTES)
-        bloom_bits = None if small else _auto_bloom_bits(train)
     # Single eval scan (r17, guide §2.4): per-doc distinct grams build
     # ROW-LOCALLY (array_distinct over the in-row transform — the plan
     # materializes the array once per doc, then the Generate explodes
@@ -1342,10 +1199,7 @@ def ngram_contamination(
     # (never a null-key hot partition); an accidental collision with a
     # real train gram is harmless because hit counting ignores anchor
     # rows (n_ngrams IS NOT NULL).  Measured (r17): identical results
-    # at sf0.01/sf0.1 and on synthetic corpora both postures; sf0.1
-    # 1.88 → 1.66 s; Bloom-ON eval-scale probe x4 12.8 vs 13.7 s, x16
-    # statistically tied under ambient load (44-45 s both, three
-    # windows).
+    # at sf0.01/sf0.1 and on synthetic corpora; sf0.1 1.88 → 1.66 s.
     wh = _word_hashes(eval_).where(F.size("wh") >= n)
     gram_arr = F.array_distinct(
         F.transform(
@@ -1371,28 +1225,7 @@ def ngram_contamination(
             "gram",
         )
     )
-    if bloom_bits is not None:
-        # Build the filter from the PRE-distinct train gram stream:
-        # bit-OR insertion is idempotent, so duplicates change nothing,
-        # and skipping the distinct here means the expensive train-side
-        # dedup exchange runs ONCE (for the join) instead of being
-        # recomputed for the bloom branch.  The extra occurrences all
-        # fold map-side into ≤ bits/64 partial-agg groups — no
-        # gram-cardinality shuffle on this branch at any scale.  The
-        # prune applies MAP-SIDE on the exploded rows, before any
-        # exchange; anchors always pass.
-        bloom = gram_bloom(
-            _doc_gram_stream(train, n).select("gram"), bloom_bits, bloom_hashes
-        )
-        rows = (
-            rows.crossJoin(F.broadcast(bloom))
-            .where(
-                F.col("n_ngrams").isNotNull()
-                | _bloom_maybe("gram", bloom_bits, bloom_hashes)
-            )
-            .select("doc_id", "n_ngrams", "gram")
-        )
-    # Left join against the DISTINCT train set marks each surviving
+    # Left join against the DISTINCT train set marks each
     # per-doc-distinct gram row (no row multiplication possible); one
     # groupBy then yields totals and hit counts together.
     marked = rows.join(train_set.withColumn("_hit", F.lit(1)), "gram", "left")
@@ -1477,8 +1310,7 @@ def _doc_gram_stream(documents: DataFrame, n: int) -> DataFrame:
     """(doc_id, gram-hash) rows of word n-grams, PRE-dedup (one row per
     gram occurrence); docs below ``n`` words contribute nothing (exact
     sub-n semantics — a 4-word doc has zero 5-grams, no padded
-    pseudo-gram).  Map-side predicates (e.g. the Bloom prune) belong on
-    THIS stream, before the dedup exchange.
+    pseudo-gram).
 
     Deliberately explode-the-INDEX, hash-after: exploding a precomputed
     gram ARRAY lets Catalyst inline the array expression into the
@@ -1795,8 +1627,13 @@ def minhash_near_duplicates(documents: DataFrame, threshold: float = 0.7, k: int
       bytes shuffled — the at-scale shape (guide §2.3/§8).
     ``scale.small_local_scan`` picks the carried form for provably small
     local corpora and the rejoin form otherwise.
-    Crossover measured by bench.py's verify A/B probe (r17): see
-    BENCH_DETAIL.json `dedup_scale.verify_ab`."""
+    The two committed measurements disagree on which form wins at scale.
+    The standalone x64 window (5.12M docs, OPTIMIZATION_r17.md) read
+    rejoin 36.9/41.4 s vs carried 55.8/80.1 s.  bench.py's verify A/B
+    probe (BENCH_DETAIL.json `dedup_scale.verify_ab`) read carried
+    faster at both points: 19.6 vs 26.0 s at x16, 95.8 vs 113.5 s at
+    x64.  The fork stays until a benchmark workload on the large side
+    exists to settle it."""
 
     if scale.small_local_scan("minhash_near_duplicates", documents):
         return _minhash_verify_carried(documents, threshold, k)

@@ -26,8 +26,8 @@ _POSTURES_LOCK = threading.Lock()
 def record_posture(op: str, branch: str, size: int | None = None) -> bool:
     """Count one adaptive decision of ``op`` in the posture log, with the
     input size it was made on in the unit ``op`` measures (on-disk scan
-    bytes for the scan gates, tokens for heavy_hitters; ``None`` =
-    unknown).  True the first time this ``(op, branch)`` is recorded."""
+    bytes for the scan gates; ``None`` = unknown).  True the first time
+    this ``(op, branch)`` is recorded."""
     with _POSTURES_LOCK:
         entry = _POSTURES.setdefault((op, branch), [0, None])
         entry[0] += 1
@@ -59,8 +59,8 @@ def small_local_scan(op: str, df: DataFrame, limit: int = SMALL_LOCAL_SCAN_BYTES
 
     Small scans take the small-data shortcut of their operator (eager
     ``iter_checkpoint`` of a reused intermediate, the carried minhash
-    verify, no decontamination Bloom).  Large scans, and scans whose
-    size is unknowable (in-memory frames, remote object stores), take
+    verify).  Large scans, and scans whose size is unknowable
+    (in-memory frames, remote object stores), take
     the scale path: at cluster scale re-deriving a narrow scan is the
     cheap axis next to materializing exploded/derived frames, so an
     unestimable input must never trigger a shortcut.  One threshold so

@@ -1117,86 +1117,19 @@ def source_drift_chisq(
 
 def heavy_hitters(documents: DataFrame, min_count: int = 500) -> DataFrame:
     """EXACT corpus-wide heavy hitters (`text_heavy_hitters`): every
-    word with total count ≥ ``min_count``, via the two-pass candidate
-    prune — the distributed frequent-items protocol for vocabularies
-    too large to shuffle whole.
+    word with total count ≥ ``min_count``, ordered by word.
 
-    Pass 1 (Arrow-vectorized ``mapInPandas``, pandas ``value_counts``
-    per batch): a batch of b rows emits words with local count ≥
-    min_count·b/N.  WEIGHTED PIGEONHOLE makes the prune LOSSLESS for
-    ANY batching: if Σ_b count_b ≥ min_count with all count_b <
-    min_count·b_rows/N, then min_count ≤ Σ count_b < min_count·Σb/N =
-    min_count — contradiction; so every true heavy hitter survives
-    pass 1 regardless of how Arrow slices the stream.  Pass 2 exactly
-    recounts ONLY the candidates (broadcast semi-join), so the shuffle
-    and reduce-side state are bounded by the candidate set, not the
-    vocabulary.  The candidate SET varies with batching; the OUTPUT is
-    a pure function of the corpus (exact recount + exact threshold).
-
-    Scale note, stated honestly: Spark's hash aggregate already does
-    map-side partial counting with spill, so a plain groupBy survives
-    big vocabularies too — what the prune buys at 100 TB is the wire
-    (shuffle rows ≈ |candidates| · partitions, not |vocab| ·
-    partitions) and bounded reducer hash state.  The prune DEGENERATES
-    once N > min_count · arrow_batch: the per-batch bound
-    min_count·b/N drops below 1, pass 1 emits every word, and the
-    broadcast would materialize the whole vocabulary on the driver
-    (round-11 advice) — so past that point this falls back to the
-    plain hash aggregate, logged per the no-silent-caps rule.  Either
-    path is recorded in the posture log with the token count.  The
-    1-row corpus total is a bounded-scalar collect by contract."""
-    import pandas as pd
-
-    toks = documents.select(F.explode(words("text")).alias("word")).where(
-        F.col("word") != ""
-    )
-    n_total = toks.count()  # bounded scalar: one long
-    if n_total == 0:
-        return toks.groupBy("word").agg(
-            F.count(F.lit(1)).alias("n_occurrences")
-        )
-
-    arrow_batch = int(
-        documents.sparkSession.conf.get(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-        )
-        or 10000
-    )
-    fallback = n_total > min_count * arrow_batch
-    scale.record_posture("heavy_hitters", "hash_aggregate" if fallback else "two_pass", n_total)
-    if fallback:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "heavy_hitters: corpus of %d tokens exceeds min_count(%d) x "
-            "arrow_batch(%d) — the pass-1 prune threshold is < 1 token/"
-            "batch, so the candidate set would be the whole vocabulary; "
-            "using the plain hash aggregate instead",
-            n_total, min_count, arrow_batch,
-        )
-        return (
-            toks.groupBy("word")
-            .agg(F.count(F.lit(1)).alias("n_occurrences"))
-            .where(F.col("n_occurrences") >= min_count)
-            .orderBy("word")
-        )
-
-    def _candidates(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vc = pdf["word"].value_counts()
-            # EXACT rational bound count_b >= min_count*b/N, compared as
-            # integers (count_b*N >= min_count*b) — the float form
-            # `frac*b` can round UP past the true bound (observed:
-            # 5/147*147 = 5.000000000000001) and prune a boundary word,
-            # voiding the pigeonhole guarantee
-            keep = vc[vc * n_total >= min_count * len(pdf)]
-            yield pd.DataFrame({"word": keep.index})
-
-    cands = toks.mapInPandas(_candidates, "word string").distinct()
+    Plan: one word-keyed hash aggregate.  Spark's partial aggregate
+    counts map-side (spilling when a task's vocabulary outgrows
+    memory), so the shuffle carries at most |vocab| rows per map task
+    and the threshold applies after the exact count.  A candidate
+    pre-pass (per-batch local counts, then an exact recount of the
+    survivors) would cut the shuffle only while the corpus stays under
+    min_count × batch rows tokens, and it costs a counting job at
+    construction plus a Python stage."""
     return (
-        toks.join(F.broadcast(cands), "word", "left_semi")
+        documents.select(F.explode(words("text")).alias("word"))
+        .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .where(F.col("n_occurrences") >= min_count)

@@ -490,8 +490,7 @@ ORACLES["text_length_ks_drift"] = """
     FROM g ORDER BY gap DESC, len ASC LIMIT 1
 """
 
-# exact heavy hitters: the oracle is the definition; the Spark side's
-# candidate prune is lossless by weighted pigeonhole, so both produce
+# exact heavy hitters: the oracle is the definition; both sides produce
 # exactly the words with corpus count >= 500
 ORACLES["text_heavy_hitters"] = """
     SELECT word, count(*) AS n_occurrences

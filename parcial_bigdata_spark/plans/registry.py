@@ -859,8 +859,7 @@ def q_contamination(spark, sf_dir):
 def decontaminate_inputs(spark, sf_dir):
     """(train, eval) document frames for the decontamination queries:
     even-numbered sources = train split, odd = eval (fixture sources are
-    src0..src19; a real pipeline passes its actual split frames).  Also
-    used by tools/dump_plans.py to showcase the forced-Bloom plan."""
+    src0..src19; a real pipeline passes its actual split frames)."""
     docs = _t(spark, sf_dir, "documents")
     is_train = F.substring("source", 4, 10).cast("int") % 2 == 0
     return docs.where(is_train), docs.where(~is_train)
@@ -1488,8 +1487,6 @@ def q_activity_streaks(spark, sf_dir):
 
 
 def q_heavy_hitters(spark, sf_dir):
-    # exact two-pass heavy hitters: lossless Arrow candidate prune
-    # (weighted pigeonhole), exact recount of candidates only
     return text_ops.heavy_hitters(_t(spark, sf_dir, "documents"))
 
 

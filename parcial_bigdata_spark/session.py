@@ -32,7 +32,7 @@ def get_spark(
     re-planning (partition coalescing, skew-join splitting) at any scale.
     """
     cpus = _cpus()
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -45,22 +45,8 @@ def get_spark(
         .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .getOrCreate()
     )
-    # Cluster posture (r17, guide §5): SPARK_GRAFT_STATE_STORE=rocksdb
-    # switches streaming state to the built-in RocksDB provider —
-    # off-heap, spillable state for session windows / stream-stream
-    # joins whose live state outgrows executor memory.  Local default
-    # stays the HDFS-backed in-memory provider: at bench scale state is
-    # tiny and the in-memory provider avoids RocksDB's per-batch
-    # checkpoint overhead (measured in BENCH_DETAIL.json
-    # streaming_scale.sessionize.x64_rocksdb vs .x64).
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

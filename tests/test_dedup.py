@@ -630,38 +630,6 @@ def test_ngram_contamination_partial_overlap(spark, documents):
     assert (out[5].n_contaminated, out[5].contaminated_frac) == (0, 0.0)
 
 
-def test_auto_bloom_bits_sizing(spark, documents, monkeypatch):
-    """Bloom geometry: an unknown train size skips the prune (None); a
-    sized local train gets ~16 bits/gram rounded up to a power of two
-    within [2^22, 2^27]; a bigger train gets the capped 2^27 filter
-    while that holds >= 6 bits/gram, and skips the prune past that."""
-    import parcial_bigdata_spark.operators.scale as scale_mod
-
-    # in-memory frame: inputFiles empty -> unknowable -> skip
-    assert dedup._auto_bloom_bits(documents) is None
-
-    monkeypatch.setattr(
-        scale_mod, "local_scan_bytes", lambda df, files=None: 12 * 1024 * 1024
-    )
-    bits = dedup._auto_bloom_bits(documents)
-    est = (12 * 1024 * 1024) // dedup._BLOOM_BYTES_PER_GRAM
-    assert bits == 1 << (est * dedup._BLOOM_BITS_PER_ITEM - 1).bit_length()
-    assert (1 << 22) <= bits <= dedup._BLOOM_MAX_BITS
-
-    # 32 MiB: 16 bits/gram would overflow the cap, 2^27 still holds >= 6
-    monkeypatch.setattr(
-        scale_mod, "local_scan_bytes", lambda df, files=None: 32 * 1024 * 1024
-    )
-    est = (32 * 1024 * 1024) // dedup._BLOOM_BYTES_PER_GRAM
-    assert est * dedup._BLOOM_BITS_PER_ITEM > dedup._BLOOM_MAX_BITS
-    assert dedup._auto_bloom_bits(documents) == dedup._BLOOM_MAX_BITS
-
-    monkeypatch.setattr(
-        scale_mod, "local_scan_bytes", lambda df, files=None: 10 * 1024 ** 3
-    )
-    assert dedup._auto_bloom_bits(documents) is None
-
-
 def test_ngram_contamination_short_docs_excluded(spark, documents):
     """Eval docs below n words have no n-grams and emit no row."""
     short = spark.createDataFrame(
@@ -781,29 +749,16 @@ def test_bucket_truncation_stats_reports_dropped_members(spark):
     assert row.n_members_dropped == 36
 
 
-def test_ngram_bloom_prune_matches_exact_path(spark, documents):
-    """The Bloom pre-prune is a pure optimization: the screened result
-    must equal the unfiltered ground truth row for row."""
-    from pyspark.sql import functions as F
-
-    train = documents.where(F.col("doc_id") <= 3)
-    ev = documents.where(F.col("doc_id") > 3)
-    with_bloom = dedup.ngram_contamination(train, ev, n=3, bloom_bits=1 << 22).collect()
-    exact = dedup.ngram_contamination(train, ev, n=3, bloom_bits=None).collect()
-    assert [r.asDict() for r in with_bloom] == [r.asDict() for r in exact]
-    assert len(with_bloom) > 0
-
-
 def test_ngram_bloom_adaptive_skip_on_small_file_backed_eval(
     spark, documents, tmp_path
 ):
-    """The Bloom prune's benefit is the EVAL-shuffle cut, so the
-    adaptive gate keys on the eval side: a provably SMALL file-backed
-    eval skips the prune (round-7 adaptive decision, regardless of
-    train), an in-memory/unestimable eval keeps it (scale-safe
-    default) when the train scan can size the filter, and both paths
-    must return identical rows."""
+    """No input kind builds a Bloom prune: for each train x eval pair
+    (file-backed or in-memory on each side) the plan is the exact gram
+    join (no ``shiftleft``, the Bloom's bit-mask op), the rows are the
+    same, and no size gate is recorded in the posture log."""
     from pyspark.sql import functions as F
+
+    from parcial_bigdata_spark.operators import scale
 
     train_mem = documents.where(F.col("doc_id") <= 3)
     ev_mem = documents.where(F.col("doc_id") > 3)
@@ -813,68 +768,18 @@ def test_ngram_bloom_adaptive_skip_on_small_file_backed_eval(
     train_f = spark.read.parquet(tdir)
     ev_f = spark.read.parquet(edir)
 
-    # the bloom predicate is the only shiftleft in this plan family
-    def has_bloom(df):
-        return "shiftleft" in df._jdf.queryExecution().toString()
-
-    skipped = dedup.ngram_contamination(train_f, ev_f, n=3)
-    assert not has_bloom(skipped), "tiny file-backed eval must skip the bloom"
-    # small file-backed eval skips even with an unestimable train (the
-    # gate keys on eval alone — review finding: a small train says
-    # nothing about the eval shuffles the prune exists to cut)
-    assert not has_bloom(dedup.ngram_contamination(train_mem, ev_f, n=3))
-    # unestimable eval keeps the bloom even with a tiny file-backed train
-    kept = dedup.ngram_contamination(train_f, ev_mem, n=3)
-    assert has_bloom(kept), "unestimable (in-memory) eval must keep the bloom"
-    # ...but an unknown train size leaves no filter to size: skip
-    assert not has_bloom(dedup.ngram_contamination(train_mem, ev_mem, n=3))
     key = lambda d: d["doc_id"]  # noqa: E731
-    assert sorted((r.asDict() for r in skipped.collect()), key=key) == sorted(
-        (r.asDict() for r in kept.collect()), key=key
-    )
-
-
-def test_gram_bloom_has_no_false_negatives_and_prunes(spark):
-    """Every inserted gram must test positive (no false negatives);
-    a disjoint probe set must be mostly pruned (the join-input
-    reduction the prune exists for)."""
-    from pyspark.sql import functions as F
-
-    bits, k = 1 << 20, 3
-    train = spark.range(1000).select(F.col("id").alias("gram"))
-    probe = spark.range(5000, 15000).select(F.col("id").alias("gram"))
-    bloom = dedup.gram_bloom(train, bits, k)
-    hits_train = (
-        train.crossJoin(F.broadcast(bloom))
-        .where(dedup._bloom_maybe("gram", bits, k))
-        .count()
-    )
-    assert hits_train == 1000  # all members pass
-    survivors = (
-        probe.crossJoin(F.broadcast(bloom))
-        .where(dedup._bloom_maybe("gram", bits, k))
-        .count()
-    )
-    # 3 hashes over 2^20 bits with 1000 grams: fp rate ~(3000/2^20)^3
-    assert survivors < 100, f"bloom pruned nothing: {survivors}/10000 passed"
-
-
-def test_gram_bloom_identical_from_duplicated_stream(spark):
-    """Bit-OR insertion is idempotent: the filter built from a stream
-    with every gram repeated many times must be mask-for-mask identical
-    to one built from the distinct set — what lets ngram_contamination
-    feed the PRE-distinct train gram stream to the bloom branch."""
-    from pyspark.sql import functions as F
-
-    bits, k = 1 << 16, 2
-    distinct = spark.range(500).select(F.col("id").alias("gram"))
-    duplicated = (
-        spark.range(500)
-        .select(F.explode(F.array_repeat(F.col("id"), 7)).alias("gram"))
-    )
-    m1 = dedup.gram_bloom(distinct, bits, k).collect()[0].bloom
-    m2 = dedup.gram_bloom(duplicated, bits, k).collect()[0].bloom
-    assert m1 == m2
+    results = []
+    for train in (train_f, train_mem):
+        for ev in (ev_f, ev_mem):
+            out = dedup.ngram_contamination(train, ev, n=3)
+            assert "shiftleft" not in out._jdf.queryExecution().toString()
+            results.append(sorted((r.asDict() for r in out.collect()), key=key))
+    assert results[0]
+    assert all(r == results[0] for r in results[1:])
+    assert not [
+        p for p in scale.posture_log() if p["op"].startswith("ngram_contamination")
+    ]
 
 
 def test_contraction_equals_tail_on_fixture_corpus(spark, monkeypatch):

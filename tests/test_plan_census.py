@@ -125,9 +125,7 @@ CENSUS: dict[str, tuple[int, int]] = {
     "events_hourly_ohlc": (1, 0),  # one map-side struct-bookend groupBy
     "sample_temporal_split": (2, 0),  # distinct-user two-phase agg only
     "sample_group_kfold": (2, 0),  # row-local fold + two-phase distinct
-    # candidate distinct + bounded recount; the 1-row corpus total is a
-    # bounded-scalar collect at construction (docstring contract)
-    "text_heavy_hitters": (2, 0),
+    "text_heavy_hitters": (1, 0),  # one map-side-combining word count
     "events_activity_streaks": (3, 0),  # pair distinct + user window + islands
     # the unkeyed cumulative window runs over the |parts|-row aggregate
     # (documented post-aggregation pattern); single = that tiny frame

@@ -574,8 +574,8 @@ def test_media_header_decoders_total_on_magic_prefixed_bytes(payload, fmt_seed):
 @given(docs=doc_corpus(), min_count=st.integers(min_value=1, max_value=12))
 @settings(**_SETTINGS)
 def test_heavy_hitters_equals_naive_filter(spark, docs, min_count):
-    """The two-pass candidate prune must be LOSSLESS for any corpus and
-    threshold (weighted pigeonhole), under forced tiny Arrow batches."""
+    """Heavy hitters equal a naive count-and-filter for any corpus and
+    threshold, under forced tiny Arrow batches."""
     from collections import Counter
 
     from parcial_bigdata_spark.operators.text import heavy_hitters

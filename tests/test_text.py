@@ -554,9 +554,8 @@ def test_heavy_hitters_exact_under_tiny_arrow_batches(spark):
         [(i, t, "en", "srcA", len(t)) for i, t in enumerate(texts)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    # tiny Arrow batches make the pass-1 prune REAL (per-batch threshold
-    # min_count*b/N > 1); weighted pigeonhole must still keep every true
-    # heavy hitter in the candidate set
+    # tiny Arrow batches must not change the exact counts or drop a
+    # boundary word
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         out = {r.word: r.n_occurrences for r in heavy_hitters(docs, 20).collect()}
@@ -577,6 +576,28 @@ def test_heavy_hitters_empty_corpus(spark):
     out = heavy_hitters(docs, 5)
     assert out.columns == ["word", "n_occurrences"]
     assert out.count() == 0
+
+
+def test_heavy_hitters_builds_lazily(spark):
+    """Building the heavy-hitters frame runs no Spark job (no corpus
+    count at construction) and plans no Python stage."""
+    from parcial_bigdata_spark.operators.text import heavy_hitters
+
+    docs = spark.createDataFrame(
+        [(1, "a a b", "en", "srcA", 5), (2, "a c", "en", "srcA", 3)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    sc = spark.sparkContext
+    group = "heavy_hitters_builds_lazily"
+    sc.setJobGroup(group, "heavy_hitters laziness check")
+    try:
+        out = heavy_hitters(docs, 2)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert "MapInPandas" not in out._jdf.queryExecution().toString()
+        assert [(r.word, r.n_occurrences) for r in out.collect()] == [("a", 3)]
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_length_ks_drift_exact_argmax(spark):
@@ -626,10 +647,9 @@ def test_vocab_growth_monotone_on_fixture(documents):
 
 
 def test_heavy_hitters_exact_boundary_no_float_roundup(spark):
-    """Regression (round-10 review): the pass-1 threshold compared as
-    `frac*b` in floats, and 5/147*147 rounds UP to 5.000000000000001 —
-    a word with exactly min_count occurrences in a single batch was
-    pruned.  The integer cross-multiplied bound must keep it."""
+    """Regression (round-10 review): a word with exactly min_count
+    occurrences in a 147-token corpus is kept — a float threshold of
+    5/147*147 rounds UP to 5.000000000000001 and once pruned it."""
     from parcial_bigdata_spark.operators.text import heavy_hitters
 
     # corpus of exactly 147 tokens, one word exactly 5 times

@@ -23,7 +23,7 @@ SHOWCASE = [
     ("asof_purchase_signup", "as-of via union+window: ONE exchange, no range join"),
     ("sessionize_events", "two stacked windows sharing one user_id exchange"),
     ("dedup_ngram_jaccard", "length-bucket + prefix-filter blocked candidate join; word-set frame checkpointed once on small local corpora (r16 — the stat probe and both join sides otherwise re-run the text pass)"),
-    ("dedup_ngram_decontaminate", "adaptive: small file-backed eval skips the Bloom (no-prune plan here); the forced-Bloom scale plan is showcased separately below"),
+    ("dedup_ngram_decontaminate", "single eval scan: per-doc distinct grams row-local with one anchor row per doc; exact gram left join against the distinct train set, one per-doc aggregate for totals and hits"),
     ("knn_cosine_brute_force", "broadcast query set, single corpus scan, top-k window"),
     ("profile_orders_table", "every per-column aggregate in ONE HashAggregate pass"),
     ("snapshot_diff_orders", "pre-join per-side hashes: payloads never shuffle"),
@@ -46,7 +46,7 @@ SHOWCASE = [
     ("dedup_ngram_coverage", "duplicate-n-gram coverage: ONE gram-keyed doc-frequency exchange + semi-join; per-doc totals ride the row-local array branch"),
     ("events_sliding_distinct_users", "rolling distinct via contribution-explode inversion: w-day fan-out is row-local, shuffle volume w x |type-user-days|, history never rescanned"),
     ("events_mad_outliers", "sketch-selected MAD gate (r11 rewrite): both medians resolve at construction via GK-bracketed exact band selection (verified, full-rank fallback); the final plan is ONE scan + literal-map lookups + ONE groupBy - no broadcast, no rank, no full-stream shuffle"),
-    ("text_heavy_hitters", "exact two-pass heavy hitters: Arrow candidate prune (lossless by weighted pigeonhole), exact recount bounded by |candidates| not |vocab|"),
+    ("text_heavy_hitters", "exact heavy hitters: ONE map-side-combining word count, threshold after the exact count - no construction-time job, no Python stage"),
     ("graph_bfs_distances", "layered BFS: per-round frontier joins run at construction (lineage-cut); the final plan aggregates the labeled node frame"),
     ("parts_abc_classes", "ABC/Pareto: integer 1e-4-grid revenue; the unkeyed cumulative window touches only the |parts|-row aggregate (post-aggregation pattern)"),
     ("events_hourly_ohlc", "OHLC bars: struct argmin/argmax bookends in ONE map-side groupBy - no bucket-partitioned window over the raw stream"),
@@ -123,30 +123,9 @@ def main() -> None:
         )
         return re.sub(r"[^\x09\x0a\x20-\x7e]", "", raw).rstrip()
 
-    def showcase_entry(title: str, why: str, df) -> list[str]:
-        return [
-            f"## {title}", "", f"_{why}_", "", "```", formatted_plan(df), "```", "",
-        ]
-
     for name, why in SHOWCASE:
-        out += showcase_entry(name, why, QUERIES[name](spark, sf_dir))
-
-    # The 100 TB decontamination plan: an explicit bloom_bits overrides
-    # the adaptive skip, so this is the map-side-Bloom-pruned shape every
-    # big-eval run takes (the registry entry above showcases the
-    # small-eval no-prune shape the same query planned adaptively).
-    from parcial_bigdata_spark.operators import dedup as _dedup  # noqa: E402
-    from parcial_bigdata_spark.plans.registry import (  # noqa: E402
-        decontaminate_inputs,
-    )
-
-    train, eval_ = decontaminate_inputs(spark, sf_dir)
-    out += showcase_entry(
-        "dedup_ngram_decontaminate (forced Bloom \u2014 the scale plan)",
-        "map-side Bloom prune on the raw gram stream (before any"
-        " exchange), then semi-join; row-local per-doc totals",
-        _dedup.ngram_contamination(train, eval_, n=5, bloom_bits=1 << 22),
-    )
+        df = QUERIES[name](spark, sf_dir)
+        out += [f"## {name}", "", f"_{why}_", "", "```", formatted_plan(df), "```", ""]
     Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
         "\n".join(out)
     )
