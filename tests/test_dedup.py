@@ -186,86 +186,6 @@ def test_minhash_finds_exact_and_near_dups(documents):
     assert not any(4 in p or 5 in p for p in pairs)
 
 
-def test_minhash_verify_shapes_equivalent(documents):
-    """The carried-payload and slim-pairs+rejoin verify forms (r17 size
-    gate) must produce the identical pair set with identical jaccards —
-    the gate is a pure physical-plan choice."""
-    carried = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup._minhash_verify_carried(documents, 0.5, 3).collect()
-    }
-    rejoin = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup._minhash_verify_rejoin(documents, 0.5, 3).collect()
-    }
-    assert carried == rejoin and carried
-
-
-def test_minhash_rejoin_reuses_the_payload_exchange(spark):
-    """Without broadcasts, both payload join sides of the rejoin verify
-    are one hashpartitioning(doc_id) exchange: the executed final
-    adaptive plan holds exactly one ReusedExchange of [doc_id, shingles]."""
-    import re
-
-    words = [f"w{i}" for i in range(60)]
-    corpus = spark.createDataFrame(
-        [(i, " ".join(words[i * 7 % 50:i * 7 % 50 + 10]), "en", "web", 10)
-         for i in range(200)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        out = dedup._minhash_verify_rejoin(corpus, 0.5, 3)
-        assert out.collect()
-        plan = out._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(key, prev)
-    final = plan.split("== Initial Plan ==")[0]
-    assert "isFinalPlan=true" in final
-    assert final.count("ReusedExchange") == 1
-    assert re.search(
-        r"ReusedExchange \[doc_id#\d+L, shingles#\d+\], "
-        r"Exchange hashpartitioning\(doc_id#\d+L", final
-    )
-
-
-def test_minhash_posture_gate_routes_by_scan_size(documents, monkeypatch):
-    """In-memory / unknown-size corpora take the rejoin (at-scale) form;
-    provably small local scans take the carried form.  Pin the routing by
-    observing which private impl the public wrapper calls."""
-    calls = []
-    real_carried = dedup._minhash_verify_carried
-    real_rejoin = dedup._minhash_verify_rejoin
-    monkeypatch.setattr(
-        dedup, "_minhash_verify_carried",
-        lambda d, t, k: calls.append("carried") or real_carried(d, t, k),
-    )
-    monkeypatch.setattr(
-        dedup, "_minhash_verify_rejoin",
-        lambda d, t, k: calls.append("rejoin") or real_rejoin(d, t, k),
-    )
-    import parcial_bigdata_spark.operators.scale as scale_mod
-
-    def last(branch):
-        return {
-            r["branch"]: r["last_input"] for r in scale_mod.posture_log()
-            if r["op"] == "minhash_near_duplicates"
-        }.get(branch, "absent")
-
-    dedup.minhash_near_duplicates(documents, threshold=0.5)
-    assert calls == ["rejoin"]  # in-memory frame → assume big → rejoin
-    assert last("large") is None
-
-    monkeypatch.setattr(
-        scale_mod, "local_scan_bytes", lambda df, files=None: 1024
-    )
-    dedup.minhash_near_duplicates(documents, threshold=0.5)
-    assert calls == ["rejoin", "carried"]  # small local scan → carried
-    assert last("small") == 1024
-
-
 def test_simhash_flags_near_dup_pair(documents):
     out = dedup.simhash_near_duplicates(documents, max_hamming=10).collect()
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in out}

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from parcial_bigdata_spark.operators import scale
+from parcial_bigdata_spark.operators import dedup, joins, scale
 
 
 @pytest.fixture(scope="module")
@@ -109,8 +109,6 @@ def test_iter_checkpoint_uses_reliable_dir_when_configured(spark, tmp_path):
     loops must cut lineage via fault-tolerant .checkpoint() — files
     appear under the dir — and produce the same labels as local mode."""
     import os
-
-    from parcial_bigdata_spark.operators import dedup
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(6)] + [(10, 11)], "doc_a long, doc_b long"
@@ -237,8 +235,6 @@ def test_cc_star_rounds_release_superseded_blocks(spark, monkeypatch):
     """duplicate_components must not accumulate one materialized edge
     set per star round: after the call, at most the final frames stay
     pinned, not O(rounds) of history (round-6 advice)."""
-    from parcial_bigdata_spark.operators import dedup
-
     # disable the tail cut so a long chain actually spins star rounds
     monkeypatch.setattr(dedup, "_CC_TAIL_EDGES", 0)
 
@@ -257,19 +253,60 @@ def test_cc_star_rounds_release_superseded_blocks(spark, monkeypatch):
     )
 
 
-def test_small_scan_threshold_lives_only_in_scale():
-    """Every "provably small local scan" gate goes through
-    scale.small_local_scan: no other engine module names the threshold."""
-    from pathlib import Path
-
-    import parcial_bigdata_spark
-
-    root = Path(parcial_bigdata_spark.__file__).parent
-    hits = sorted(
-        str(f.relative_to(root)) for f in root.rglob("*.py")
-        if "SMALL_LOCAL_SCAN_BYTES" in f.read_text()
+def _in_memory_docs(spark):
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    return spark.createDataFrame(
+        [(1, base, "en", "web", len(base)), (2, base, "en", "web", len(base)),
+         (3, "uno dos tres", "es", "web", 12)],
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
-    assert hits == ["operators/scale.py"]
+
+
+def _in_memory_events(spark):
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 10)
+    return spark.createDataFrame(
+        [(i, t0 + dt.timedelta(minutes=5 * i), 1 + i % 2, "a", 0.0, "{}")
+         for i in range(4)],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    )
+
+
+_CHECKPOINT_ONCE = {
+    "paragraph_dedup": (_in_memory_docs, lambda d: dedup.paragraph_dedup(d, para_words=3)),
+    "jaccard_pairs": (_in_memory_docs, dedup.jaccard_pairs),
+    "session_overlap_pairs": (_in_memory_events, joins.session_overlap_pairs),
+}
+
+
+@pytest.mark.parametrize("op", list(_CHECKPOINT_ONCE))
+def test_in_memory_input_materializes_the_reused_frame_once(spark, op):
+    """An in-memory input gets the same plan as a file-backed one: the
+    reused derived frame is checkpointed while the result is built (at
+    least one Spark job), and every RDD leaf of the returned plan is
+    that checkpoint, never the input itself."""
+    import re
+
+    make_input, build = _CHECKPOINT_ONCE[op]
+    inp = make_input(spark)
+    sc = spark.sparkContext
+    group = f"checkpoint_once_{op}"
+    sc.setJobGroup(group, f"{op} build-time checkpoint check")
+    try:
+        out = build(inp)
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    leaves = [
+        {c.split("#")[0] for c in cols.split(", ")}
+        for cols in re.findall(r"LogicalRDD \[([^\]]*)\]", plan)
+    ]
+    assert leaves and set(inp.columns) not in leaves
+    if op == "session_overlap_pairs":
+        assert "Window [" not in plan
 
 
 def test_posture_log_snapshots_while_other_threads_record(monkeypatch):

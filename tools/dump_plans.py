@@ -22,12 +22,12 @@ SHOWCASE = [
     ("q5_region_revenue", "star join: dims broadcast, facts shuffle on natural keys"),
     ("asof_purchase_signup", "as-of via union+window: ONE exchange, no range join"),
     ("sessionize_events", "two stacked windows sharing one user_id exchange"),
-    ("dedup_ngram_jaccard", "length-bucket + prefix-filter blocked candidate join; word-set frame checkpointed once on small local corpora (r16 — the stat probe and both join sides otherwise re-run the text pass)"),
+    ("dedup_ngram_jaccard", "length-bucket + prefix-filter blocked candidate join; word-set frame checkpointed once for every input (the stat probe and both join sides otherwise re-run the text pass)"),
     ("dedup_ngram_decontaminate", "single eval scan: per-doc distinct grams row-local with one anchor row per doc; exact gram left join against the distinct train set, one per-doc aggregate for totals and hits"),
     ("knn_cosine_brute_force", "broadcast query set, single corpus scan, top-k window"),
     ("profile_orders_table", "every per-column aggregate in ONE HashAggregate pass"),
     ("snapshot_diff_orders", "pre-join per-side hashes: payloads never shuffle"),
-    ("session_overlap_pairs", "interval-overlap join as bucket equi-join; exactly-once overlap-start filter, no dedup shuffle; session frame checkpointed once on small local scans (r16 — the broadcast side otherwise re-runs sessionization)"),
+    ("session_overlap_pairs", "interval-overlap join as bucket equi-join; exactly-once overlap-start filter, no dedup shuffle; session frame checkpointed once for every input (the broadcast side otherwise re-runs sessionization)"),
     ("events_funnel_steps", "chained filtered min-aggregates, no event self-join"),
     ("dedup_component_survivors", "per-component survivor via min-over-struct aggregate (map-side partials, no per-group sort window); CC labels enter as a checkpointed scan"),
     ("q15_top_suppliers", "scalar-max branch, no single-partition window; the two identical aggregate exchanges dedupe at runtime (AQE stage reuse - executed plan shows ReusedExchange, pinned by test_top_revenue_suppliers_plan_shape)"),
