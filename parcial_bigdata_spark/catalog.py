@@ -89,9 +89,13 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
 def create_silver_table(spark: SparkSession, table: str = "dolar", location: str | None = None) -> None:
     """Idempotent silver DDL (S7) — the reference's CREATE TABLE IF NOT
     EXISTS ``dolar(fechahora DATETIME NOT NULL, valor DECIMAL(12,4) NOT
-    NULL)`` (``lambda/subirDB.py:71-77``), upgraded to partitioned
-    parquet: date partitioning gives the dynamic partition pruning the
-    unindexed MySQL table never had (SURVEY.md §4)."""
+    NULL)`` (``lambda/subirDB.py:71-77``), upgraded to parquet
+    partitioned by date, a layout the unindexed MySQL table never had
+    (SURVEY.md §4).  A filter on the ``dt`` partition column prunes
+    partitions from directory metadata.  The interval serve path does
+    not prune: ``interval._range_filter`` filters on ``fechahora``
+    alone, Spark derives no ``dt`` predicate from it, and the scan
+    reads every partition."""
     # escape/quote interpolated identifiers: a path with a single quote
     # would break the DDL (or smuggle SQL into it); backticks keep a
     # reserved-word table name valid

@@ -10,10 +10,11 @@ inside small buckets.
 
 from __future__ import annotations
 
+import math
 import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from parcial_bigdata_spark.functions.vector import dot, norm
@@ -154,8 +155,6 @@ PREFIX_COMMONS = 256
 
 
 def _word_sets(documents: DataFrame) -> DataFrame:
-    import math
-
     documents = scale.fan_out_small_scan(documents, "doc_id")
     # greatest(n_chars, 1): log(0) is NULL in Spark, and a null bucket
     # would silently exclude empty-text documents from all pairing (the
@@ -170,6 +169,113 @@ def _word_sets(documents: DataFrame) -> DataFrame:
         "n_chars",
         F.array_distinct(F.split(normalized(F.col("text")), " ")).alias("wset"),
     ).withColumn("bucket", bucket).withColumn("wsize", F.size("wset"))
+
+
+# ---- blocking kit shared by the set-similarity joins below ----------------
+
+
+def _check_slack(length_slack: float) -> None:
+    """±1-bucket blocking is lossless only while a qualifying pair can
+    span at most one bucket boundary: length_slack ≤ 1 − 1/_BUCKET_BASE.
+    The DEFAULT length_slack=0.2 sits exactly on this bound for
+    _BUCKET_BASE=1.25 (0.2 == 1 − 1/1.25) — intentional, accepted via
+    isclose; tests pin the invariant so changing _BUCKET_BASE without
+    revisiting the default fails loudly."""
+    max_slack = 1 - 1 / _BUCKET_BASE
+    if length_slack > max_slack and not math.isclose(length_slack, max_slack):
+        raise ValueError(
+            f"length_slack={length_slack} exceeds the lossless ±1-bucket "
+            f"blocking bound {max_slack:.4f} for bucket base {_BUCKET_BASE}; "
+            "widen _BUCKET_BASE or lower length_slack"
+        )
+
+
+def _top_tokens(ws: DataFrame, n: int) -> list[str]:
+    """The ``n`` most document-frequent tokens of a word-set frame, most
+    frequent first (ties by token): one top-K aggregation job, and at
+    most ``n`` rows reach the driver.  orderBy+take compiles to
+    TakeOrderedAndProject — a streaming top-K, never a full sort."""
+    rows = (
+        ws.select(F.explode("wset").alias("w"))
+        .groupBy("w")
+        .agg(F.count("*").alias("c"))
+        .orderBy(F.desc("c"), "w")
+        .take(n)
+    )
+    return [r.w for r in rows]
+
+
+def _prefix(freq: list[str], threshold: float) -> Column:
+    """The ``prefix`` column: token hashes of each word set's lossless
+    prefix under one canonical rarest-first order — Bayardo et al.,
+    "Scaling Up All Pairs Similarity Search" (WWW'07).  ``freq`` is the
+    corpus token list, most frequent first (``_top_tokens``).
+
+    The order is computed ROW-LOCALLY per doc: sort key = (Zipf-head
+    position — 0 for every rare token, ascending-frequency 1..C for the
+    PREFIX_COMMONS head —, 64-bit token hash, then the token string so
+    the total order is deterministic across recomputations of the
+    lineage).  The head map is a small literal: no broadcast join.
+
+    Lossless prefix length |x| − ⌈t·|x|⌉ + 1: a pair with J ≥ t shares
+    ≥ ⌈t·max(|A|,|B|)⌉ ≥ ⌈t·|x|⌉ tokens, and a containment C(A→B) ≥ t
+    makes A share ≥ ⌈t·|A|⌉; either way those tokens cannot all hide in
+    the ⌈t·|x|⌉ − 1 tokens after the prefix (Bayardo/PPJoin prefix
+    lemma).  Any two sides that sort by the same order therefore share a
+    prefix token; hash collisions only add candidates."""
+    commons_asc = list(reversed(freq[:PREFIX_COMMONS]))
+    cmap = F.create_map(
+        *[x for i, w in enumerate(commons_asc) for x in (F.lit(w), F.lit(i + 1))]
+    )
+    keyed = F.array_sort(
+        F.transform(
+            "wset",
+            lambda w: F.struct(
+                F.coalesce(F.element_at(cmap, w), F.lit(0)).alias("p"),
+                F.xxhash64(w).alias("h"),
+                w.alias("w"),
+            ),
+        )
+    )
+    plen = (
+        F.col("wsize") - F.ceil(F.lit(float(threshold)) * F.col("wsize")) + F.lit(1)
+    ).cast("int")
+    return F.transform(F.slice(keyed, F.lit(1), plen), lambda s: s["h"]).alias(
+        "prefix"
+    )
+
+
+def _near_buckets() -> Column:
+    """``jbucket``: a row's own length bucket and both neighbours, the
+    probe keys that make an exact-bucket equi-join lossless within the
+    length band (``_check_slack``)."""
+    return F.explode(
+        F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
+    ).alias("jbucket")
+
+
+def _band(threshold: float, length_slack: float) -> Column:
+    """Length-band and size-ratio conjuncts of an ``a``⋈``b`` pair join:
+    lengths within ``length_slack`` of the longer, and J ≥ t ⟹
+    min(|A|,|B|) ≥ t·max(|A|,|B|) — both implied by the final predicate,
+    so the prune is lossless.  Catalyst flattens inner-join conjuncts,
+    so nesting this sub-conjunction leaves the join condition of the
+    optimized plan unchanged."""
+    return (
+        (
+            F.abs(F.col("a.n_chars") - F.col("b.n_chars"))
+            <= length_slack * F.greatest(F.col("a.n_chars"), F.col("b.n_chars"))
+        )
+        & (F.col("a.wsize") >= threshold * F.col("b.wsize"))
+        & (F.col("b.wsize") >= threshold * F.col("a.wsize"))
+    )
+
+
+def _set_jaccard(a: str, b: str) -> Column:
+    """Exact set Jaccard |A ∩ B| / |A ∪ B| of two array columns."""
+    return F.size(F.array_intersect(a, b)).cast("double") / F.size(
+        F.array_union(a, b)
+    )
 
 
 def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: float = 0.2) -> DataFrame:
@@ -202,21 +308,7 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
     The exact length + Jaccard predicates re-apply at the end, so the
     blocking never changes the result — only the candidate count.
     """
-    # ±1-bucket blocking is lossless only while a qualifying pair can
-    # span at most one bucket boundary: length_slack ≤ 1 - 1/_BUCKET_BASE.
-    # The DEFAULT length_slack=0.2 sits exactly on this bound for
-    # _BUCKET_BASE=1.25 (0.2 == 1 - 1/1.25) — intentional, accepted via
-    # isclose; tests pin the invariant so changing _BUCKET_BASE without
-    # revisiting the default fails loudly.
-    import math
-
-    max_slack = 1 - 1 / _BUCKET_BASE
-    if length_slack > max_slack and not math.isclose(length_slack, max_slack):
-        raise ValueError(
-            f"length_slack={length_slack} exceeds the lossless blocking bound "
-            f"{max_slack:.4f} for bucket base {_BUCKET_BASE}; widen _BUCKET_BASE "
-            "or lower length_slack"
-        )
+    _check_slack(length_slack)
     ws = _word_sets(documents)
     # The word-set frame (the CPU-heavy text pass) feeds the stat probe
     # below AND both sides of the candidate join; lazily it would execute
@@ -228,17 +320,9 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
     # aggregation job serving BOTH paths: when the corpus dictionary
     # fits in MAX_MASK_LANES×64 bits it returns the whole vocabulary
     # (mask fast path engages); otherwise its head IS the Zipf-head
-    # common-token list the prefix filter needs.  orderBy+take compiles
-    # to TakeOrderedAndProject — a streaming top-K, never a full sort.
+    # common-token list the prefix filter needs.
     cap = 64 * MAX_MASK_LANES
-    probe_n = max(cap, PREFIX_COMMONS) + 1
-    freq = (
-        ws.select(F.explode("wset").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), "w")
-        .take(probe_n)
-    )
+    freq = _top_tokens(ws, max(cap, PREFIX_COMMONS) + 1)
     if len(freq) <= cap:
         # Dictionary-encode the token space: a word set becomes a
         # handful of longs and Jaccard collapses to per-lane bitwise
@@ -250,7 +334,7 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
         # scalar columns (wmask0..wmaskN), not an array, so the pair
         # predicate stays inside whole-stage codegen with no HOF per
         # candidate pair.
-        sorted_vocab = sorted(r.w for r in freq)
+        sorted_vocab = sorted(freq)
         n_lanes = max(1, (len(freq) + 63) // 64)
         mask_cols = []
         for lane in range(n_lanes):
@@ -289,12 +373,7 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
             f"wmask{i}" for i in range(n_lanes)
         ]
         a = feat.alias("a")
-        b = feat.select(
-            *pair_cols,
-            F.explode(
-                F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-            ).alias("jbucket"),
-        ).alias("b")
+        b = feat.select(*pair_cols, _near_buckets()).alias("b")
         jac = inter.cast("double") / union
         return (
             a.join(
@@ -302,12 +381,7 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
                 (F.col("a.lang") == F.col("b.lang"))
                 & (F.col("a.bucket") == F.col("b.jbucket"))
                 & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (
-                    F.abs(F.col("a.n_chars") - F.col("b.n_chars"))
-                    <= length_slack * F.greatest(F.col("a.n_chars"), F.col("b.n_chars"))
-                )
-                & (F.col("a.wsize") >= threshold * F.col("b.wsize"))
-                & (F.col("b.wsize") >= threshold * F.col("a.wsize")),
+                & _band(threshold, length_slack),
             )
             .select(
                 F.col("a.doc_id").alias("doc_a"),
@@ -318,31 +392,6 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
         )
 
     # ------------- array path: prefix-filtered candidate generation ----
-    # Canonical rarest-first token order, computed ROW-LOCALLY per doc:
-    # sort key = (Zipf-head position — 0 for every rare token, ascending-
-    # frequency 1..C for the head —, 64-bit token hash, then the token
-    # string so the total order is deterministic across recomputations of
-    # this lineage).  The head map is a small literal: no broadcast join.
-    commons_asc = [r.w for r in reversed(freq[:PREFIX_COMMONS])]
-    cmap = F.create_map(
-        *[x for i, w in enumerate(commons_asc) for x in (F.lit(w), F.lit(i + 1))]
-    )
-    keyed = F.array_sort(
-        F.transform(
-            "wset",
-            lambda w: F.struct(
-                F.coalesce(F.element_at(cmap, w), F.lit(0)).alias("p"),
-                F.xxhash64(w).alias("h"),
-                w.alias("w"),
-            ),
-        )
-    )
-    # Lossless prefix length |x| − ⌈t·|x|⌉ + 1: a pair with J ≥ t shares
-    # ≥ ⌈t·max(|A|,|B|)⌉ ≥ ⌈t·|x|⌉ tokens, which cannot all hide in the
-    # ⌈t·|x|⌉ − 1 tokens after the prefix (Bayardo/PPJoin prefix lemma).
-    plen = (
-        F.col("wsize") - F.ceil(F.lit(float(threshold)) * F.col("wsize")) + F.lit(1)
-    ).cast("int")
     feat = ws.select(
         "doc_id",
         "lang",
@@ -350,7 +399,7 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
         "bucket",
         "wsize",
         "wset",
-        F.transform(F.slice(keyed, F.lit(1), plen), lambda s: s["h"]).alias("prefix"),
+        _prefix(freq, threshold),
     )
     # Candidates are SLIM rows (ids + block keys only — the word arrays
     # never ride the exploded shuffle); payloads re-join after the pair
@@ -358,13 +407,7 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
     slim = ["doc_id", "lang", "n_chars", "bucket", "wsize"]
     a = feat.select(*slim, F.explode("prefix").alias("ptok")).alias("a")
     b = (
-        feat.select(
-            *slim,
-            "prefix",
-            F.explode(
-                F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-            ).alias("jbucket"),
-        )
+        feat.select(*slim, "prefix", _near_buckets())
         .select(*slim, "jbucket", F.explode("prefix").alias("ptok"))
         .alias("b")
     )
@@ -375,20 +418,13 @@ def jaccard_pairs(documents: DataFrame, threshold: float = 0.8, length_slack: fl
             & (F.col("a.bucket") == F.col("b.jbucket"))
             & (F.col("a.ptok") == F.col("b.ptok"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.abs(F.col("a.n_chars") - F.col("b.n_chars"))
-                <= length_slack * F.greatest(F.col("a.n_chars"), F.col("b.n_chars"))
-            )
-            & (F.col("a.wsize") >= threshold * F.col("b.wsize"))
-            & (F.col("b.wsize") >= threshold * F.col("a.wsize")),
+            & _band(threshold, length_slack),
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
     payload = feat.select("doc_id", "wset")
-    inter = F.size(F.array_intersect(F.col("pa.wset"), F.col("pb.wset")))
-    union = F.size(F.array_union(F.col("pa.wset"), F.col("pb.wset")))
-    jac = inter.cast("double") / union
+    jac = _set_jaccard("pa.wset", "pb.wset")
     return (
         cand.join(payload.alias("pa"), F.col("doc_a") == F.col("pa.doc_id"))
         .join(payload.alias("pb"), F.col("doc_b") == F.col("pb.doc_id"))
@@ -439,36 +475,13 @@ def containment_pairs(
     (the jaccard_pairs pattern): verify cost scales with candidates,
     not blocks²."""
     ws = _word_sets(documents).where(F.col("wsize") >= min_tokens)
-    freq = (
-        ws.select(F.explode("wset").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), "w")
-        .take(PREFIX_COMMONS + 1)
-    )
-    commons_asc = [r.w for r in reversed(freq[:PREFIX_COMMONS])]
-    cmap = F.create_map(
-        *[x for i, w in enumerate(commons_asc) for x in (F.lit(w), F.lit(i + 1))]
-    )
-    keyed = F.array_sort(
-        F.transform(
-            "wset",
-            lambda w: F.struct(
-                F.coalesce(F.element_at(cmap, w), F.lit(0)).alias("p"),
-                F.xxhash64(w).alias("h"),
-                w.alias("w"),
-            ),
-        )
-    )
-    plen = (
-        F.col("wsize") - F.ceil(F.lit(float(threshold)) * F.col("wsize")) + F.lit(1)
-    ).cast("int")
+    freq = _top_tokens(ws, PREFIX_COMMONS + 1)
     feat = ws.select(
         "doc_id",
         "lang",
         "wsize",
         "wset",
-        F.transform(F.slice(keyed, F.lit(1), plen), lambda s: s["h"]).alias("prefix"),
+        _prefix(freq, threshold),
     )
     slim = ["doc_id", "lang", "wsize"]
     a = feat.select(*slim, F.explode("prefix").alias("ptok")).alias("a")
@@ -548,42 +561,11 @@ def jaccard_pairs_incremental(
     current, only on both sides sorting by the SAME order, which they
     do).  The mask fast path is deliberately absent: incremental runs
     assume a corpus too big for a 512-word dictionary."""
-    import math
-
-    max_slack = 1 - 1 / _BUCKET_BASE
-    if length_slack > max_slack and not math.isclose(length_slack, max_slack):
-        raise ValueError(
-            f"length_slack={length_slack} exceeds the lossless blocking bound "
-            f"{max_slack:.4f} for bucket base {_BUCKET_BASE}"
-        )
-    tagged = _word_sets(base).withColumn("is_new", F.lit(False)).unionByName(
+    _check_slack(length_slack)
+    base_ws = _word_sets(base)
+    tagged = base_ws.withColumn("is_new", F.lit(False)).unionByName(
         _word_sets(new).withColumn("is_new", F.lit(True))
     )
-    freq = (
-        _word_sets(base)
-        .select(F.explode("wset").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-        .orderBy(F.desc("c"), "w")
-        .take(PREFIX_COMMONS)
-    )
-    commons_asc = [r.w for r in reversed(freq)]
-    cmap = F.create_map(
-        *[x for i, w in enumerate(commons_asc) for x in (F.lit(w), F.lit(i + 1))]
-    )
-    keyed = F.array_sort(
-        F.transform(
-            "wset",
-            lambda w: F.struct(
-                F.coalesce(F.element_at(cmap, w), F.lit(0)).alias("p"),
-                F.xxhash64(w).alias("h"),
-                w.alias("w"),
-            ),
-        )
-    )
-    plen = (
-        F.col("wsize") - F.ceil(F.lit(float(threshold)) * F.col("wsize")) + F.lit(1)
-    ).cast("int")
     feat = tagged.select(
         "doc_id",
         "lang",
@@ -592,9 +574,7 @@ def jaccard_pairs_incremental(
         "wsize",
         "wset",
         "is_new",
-        F.transform(F.slice(keyed, F.lit(1), plen), lambda s: s["h"]).alias(
-            "prefix"
-        ),
+        _prefix(_top_tokens(base_ws, PREFIX_COMMONS), threshold),
     )
     slim = ["doc_id", "lang", "n_chars", "bucket", "wsize"]
     probe = (
@@ -603,14 +583,7 @@ def jaccard_pairs_incremental(
         .alias("a")
     )
     build = (
-        feat.select(
-            *slim,
-            "is_new",
-            "prefix",
-            F.explode(
-                F.array(F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1)
-            ).alias("jbucket"),
-        )
+        feat.select(*slim, "is_new", "prefix", _near_buckets())
         .select(*slim, "is_new", "jbucket", F.explode("prefix").alias("ptok"))
         .alias("b")
     )
@@ -622,13 +595,7 @@ def jaccard_pairs_incremental(
             & (F.col("a.bucket") == F.col("b.jbucket"))
             & (F.col("a.ptok") == F.col("b.ptok"))
             & eligible
-            & (
-                F.abs(F.col("a.n_chars") - F.col("b.n_chars"))
-                <= length_slack
-                * F.greatest(F.col("a.n_chars"), F.col("b.n_chars"))
-            )
-            & (F.col("a.wsize") >= threshold * F.col("b.wsize"))
-            & (F.col("b.wsize") >= threshold * F.col("a.wsize")),
+            & _band(threshold, length_slack),
         )
         .select(
             F.col("a.doc_id").alias("new_doc"),
@@ -646,9 +613,7 @@ def jaccard_pairs_incremental(
     # (dup_of: any base doc or an earlier new doc) keeps the full union.
     payload_new = feat.where("is_new").select("doc_id", "wset")
     payload_all = feat.select("doc_id", "wset")
-    inter = F.size(F.array_intersect(F.col("pa.wset"), F.col("pb.wset")))
-    union = F.size(F.array_union(F.col("pa.wset"), F.col("pb.wset")))
-    jac = inter.cast("double") / union
+    jac = _set_jaccard("pa.wset", "pb.wset")
     return (
         cand.join(payload_new.alias("pa"), F.col("new_doc") == F.col("pa.doc_id"))
         .join(payload_all.alias("pb"), F.col("dup_of") == F.col("pb.doc_id"))
@@ -1548,20 +1513,25 @@ def minhash_candidates(documents: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def _minhash_verify_carried(documents: DataFrame, threshold: float, k: int) -> DataFrame:
-    """Carried-payload verify: shingle arrays ride the banded rows into
+def minhash_near_duplicates(documents: DataFrame, threshold: float = 0.7, k: int = 3) -> DataFrame:
+    """Full MinHash+LSH near-dup: banded candidates, then exact shingle-
+    Jaccard verification of ONLY the candidates.  (Approximate recall by
+    design → no SQL oracle; the exact ``jaccard_pairs`` operator is the
+    oracle-checked ground truth.)
+
+    Verification is carried: shingle arrays ride the banded rows into
     the bucket pair generator; exact Jaccard + threshold run MAP-SIDE on
     the collision rows (both arrays task-local from the grouped pair
     expansion, r16 guide §2.3), so the pair-dedup exchange carries only
     slim qualifying (doc_a, doc_b, jaccard) rows.  ONE text/shingle pass
     — the fewest-jobs shape; the cost is the band exchange shipping each
-    doc's shingle array × n_bands."""
+    doc's shingle array × n_bands.  Forced against a slim-pairs +
+    payload-rejoin verify on the same inputs, the carried verify ran
+    fewer Spark jobs (5 vs 8 at 1k docs) and was faster in every
+    alternating pair from 1k to 320k docs and at 1.28M and 5.12M docs in
+    the bench.py verify A/B."""
     banded = _banded(documents, k, carry_shingles=True)
-    jac = F.size(
-        F.array_intersect(F.col("a.shingles"), F.col("b.shingles"))
-    ).cast("double") / F.size(
-        F.array_union(F.col("a.shingles"), F.col("b.shingles"))
-    )
+    jac = _set_jaccard("a.shingles", "b.shingles")
     return (
         _bucket_pairs(banded, ["band_id", "band_hash"], ["shingles"])
         .select(
@@ -1572,22 +1542,6 @@ def _minhash_verify_carried(documents: DataFrame, threshold: float, k: int) -> D
         .where(F.col("jaccard") >= threshold)
         .dropDuplicates(["doc_a", "doc_b"])
     )
-
-
-def minhash_near_duplicates(documents: DataFrame, threshold: float = 0.7, k: int = 3) -> DataFrame:
-    """Full MinHash+LSH near-dup: banded candidates, then exact shingle-
-    Jaccard verification of ONLY the candidates.  (Approximate recall by
-    design → no SQL oracle; the exact ``jaccard_pairs`` operator is the
-    oracle-checked ground truth.)
-
-    Verification is carried (``_minhash_verify_carried``: one shingle
-    pass, arrays ride the band exchange) because, forced against a
-    slim-pairs + payload-rejoin verify on the same inputs, it ran fewer
-    Spark jobs (5 vs 8 at 1k docs) and was faster in every alternating
-    pair from 1k to 320k docs and at 1.28M and 5.12M docs in the bench.py
-    verify A/B."""
-
-    return _minhash_verify_carried(documents, threshold, k)
 
 
 # ------------------------------------------------------------------- SimHash
@@ -1963,14 +1917,7 @@ def minhash_recall_check(
     # hot keys (parallelism 5 on this fixture).  The exact length-band
     # and Jaccard predicates re-apply below, so blocking never changes
     # the truth set; the size-ratio prune is implied by J ≥ t (lossless).
-    import math
-
-    max_slack = 1 - 1 / _BUCKET_BASE
-    if length_slack > max_slack and not math.isclose(length_slack, max_slack):
-        raise ValueError(
-            f"length_slack={length_slack} exceeds the lossless ±1-bucket bound "
-            f"{max_slack:.4f} for bucket base {_BUCKET_BASE}"
-        )
+    _check_slack(length_slack)
 
     samp_ids = _hash_topn_sample(documents, "doc_id", sample_size)
     samp_docs = documents.join(F.broadcast(samp_ids), "doc_id")
@@ -1988,11 +1935,7 @@ def minhash_recall_check(
     b = sh.withColumn(
         "bkt", F.explode(F.array(bkt - 1, bkt, bkt + 1))
     ).alias("b")
-    jac = F.round(
-        F.size(F.array_intersect("a.shingles", "b.shingles")).cast("double")
-        / F.size(F.array_union("a.shingles", "b.shingles")),
-        4,
-    )
+    jac = F.round(_set_jaccard("a.shingles", "b.shingles"), 4)
     truth = (
         a.join(
             b,

@@ -3,9 +3,10 @@
 Baseline: exact brute-force cosine top-k (broadcast the query set,
 stream the corpus — one scan, no shuffle until the tiny per-query top-k).
 Scale paths: IVF (coarse centroids prune the corpus to nprobe clusters)
-and random-hyperplane LSH bucketing.  All vector math is built-in
+and random-hyperplane LSH bucketing.  Their vector math is built-in
 higher-order functions (functions/vector.py) — JVM-side, interpreted
-(the HOFs are CodegenFallback in Spark 4.1.2).
+(the HOFs are CodegenFallback in Spark 4.1.2).  ``knn_brute_force_arrow``
+is the exception: a numpy matmul over Arrow batches (``mapInPandas``).
 """
 
 from __future__ import annotations
@@ -22,26 +23,39 @@ from parcial_bigdata_spark.functions.vector import (
 )
 
 
+def _queries(embeddings: DataFrame, query_ids: list[int], *extra) -> DataFrame:
+    """The query set: ``(query_id, qvec, *extra)`` for each query id."""
+    return embeddings.where(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"), *extra
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``(query_id, vec_id, sim)`` candidate rows: a
+    window row_number per query over (sim desc, vec_id asc) —
+    rank-partitioned, so it scales with the candidate rows — returned
+    as ``(query_id, rnk, vec_id, sim)`` ordered by query and rank."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= k)
+        .select("query_id", "rnk", "vec_id", "sim")
+        .orderBy("query_id", "rnk")
+    )
+
+
 def knn_brute_force(embeddings: DataFrame, query_ids: list[int], k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     The query set (tiny) broadcasts; the corpus is scanned once; the
-    per-query top-k is a window row_number over (query, sim desc) —
-    rank-partitioned, so it scales with corpus size × |queries|.
+    per-query top-k is ``_top_k``'s window.
     """
-    queries = embeddings.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
     sim = cosine(F.col("qvec"), F.col("embedding"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        embeddings.crossJoin(F.broadcast(queries))
+    return _top_k(
+        embeddings.crossJoin(F.broadcast(_queries(embeddings, query_ids)))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.round(sim, 6).alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "rnk", "vec_id", "sim")
-        .orderBy("query_id", "rnk")
+        .select("query_id", "vec_id", F.round(sim, 6).alias("sim")),
+        k,
     )
 
 
@@ -68,9 +82,7 @@ def knn_ivf(
     (ties broken by cluster id) so the probe set is stable across engines
     — which is what lets the full query carry an exact SQL oracle."""
     cents = ivf_centroids(embeddings, cluster_col)
-    queries = embeddings.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
+    queries = _queries(embeddings, query_ids)
     csim = F.round(cosine(F.col("qvec"), F.col("centroid")), 6)
     wq = Window.partitionBy("query_id").orderBy(F.col("csim").desc(), F.col("cluster").asc())
     probes = (
@@ -81,17 +93,13 @@ def knn_ivf(
         .select("query_id", "qvec", "cluster")
     )
     sim = cosine(F.col("qvec"), F.col("embedding"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
+    return _top_k(
         embeddings.join(
             F.broadcast(probes), F.col(cluster_col) == F.col("cluster")
         )
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.round(sim, 6).alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "rnk", "vec_id", "sim")
-        .orderBy("query_id", "rnk")
+        .select("query_id", "vec_id", F.round(sim, 6).alias("sim")),
+        k,
     )
 
 
@@ -295,13 +303,7 @@ def knn_brute_force_arrow(embeddings: DataFrame, query_ids: list[int], k: int = 
     local = embeddings.select("vec_id", "embedding").mapInPandas(
         batches, schema="query_id long, vec_id long, sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "rnk", "vec_id", "sim")
-        .orderBy("query_id", "rnk")
-    )
+    return _top_k(local, k)
 
 
 def embedding_norm_stats(embeddings: DataFrame) -> DataFrame:
@@ -460,21 +462,13 @@ def knn_lsh(embeddings: DataFrame, query_ids: list[int], k: int = 10, n_planes: 
     (recall < 1) by design — rows-only correctness check; recall is
     asserted against brute force in tests."""
     bucketed = lsh_buckets(embeddings, n_planes)
-    queries = bucketed.where(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-        F.col("bucket").alias("qbucket"),
-    )
+    queries = _queries(bucketed, query_ids, F.col("bucket").alias("qbucket"))
     sim = cosine(F.col("qvec"), F.col("embedding"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("vec_id").asc())
-    return (
+    return _top_k(
         bucketed.join(F.broadcast(queries), F.col("bucket") == F.col("qbucket"))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", F.round(sim, 6).alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "rnk", "vec_id", "sim")
-        .orderBy("query_id", "rnk")
+        .select("query_id", "vec_id", F.round(sim, 6).alias("sim")),
+        k,
     )
 
 

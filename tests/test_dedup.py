@@ -172,9 +172,17 @@ def test_default_length_slack_within_blocking_bound():
     assert default <= bound or math.isclose(default, bound)
 
 
-def test_jaccard_rejects_slack_beyond_bound(documents):
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda d: dedup.jaccard_pairs(d, threshold=0.6, length_slack=0.5),
+        lambda d: dedup.jaccard_pairs_incremental(d, d, length_slack=0.5),
+    ],
+    ids=["jaccard_pairs", "jaccard_pairs_incremental"],
+)
+def test_jaccard_rejects_slack_beyond_bound(documents, build):
     with pytest.raises(ValueError, match="length_slack"):
-        dedup.jaccard_pairs(documents, threshold=0.6, length_slack=0.5)
+        build(documents)
 
 
 def test_minhash_finds_exact_and_near_dups(documents):
