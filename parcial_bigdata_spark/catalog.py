@@ -91,11 +91,11 @@ def create_silver_table(spark: SparkSession, table: str = "dolar", location: str
     EXISTS ``dolar(fechahora DATETIME NOT NULL, valor DECIMAL(12,4) NOT
     NULL)`` (``lambda/subirDB.py:71-77``), upgraded to parquet
     partitioned by date, a layout the unindexed MySQL table never had
-    (SURVEY.md §4).  A filter on the ``dt`` partition column prunes
-    partitions from directory metadata.  The interval serve path does
-    not prune: ``interval._range_filter`` filters on ``fechahora``
-    alone, Spark derives no ``dt`` predicate from it, and the scan
-    reads every partition."""
+    (SURVEY.md §4).  ``dt`` is the UTC date of ``fechahora``
+    (``sources.ingest.silver_date``).  A filter on it prunes partitions
+    from directory metadata; the interval serve path adds the window's
+    ``dt`` range to its ``fechahora`` filter, so a request opens only the
+    day partitions its window touches."""
     # escape/quote interpolated identifiers: a path with a single quote
     # would break the DDL (or smuggle SQL into it); backticks keep a
     # reserved-word table name valid

@@ -8,6 +8,17 @@ Spark-first: a declarative filter+project+sort plan.  Catalyst pushes the
 range predicate into the Parquet scan (row-group min/max pruning) and
 prunes unread columns, so at 100 TB only the matching row groups of two
 columns ever leave storage — unlike the reference's unindexed full scan.
+Over silver (partitioned by ``dt = silver_date(fechahora)``) the filter
+also carries the window's ``dt`` range, so the scan lists and opens only
+the day partitions the window touches (``PartitionFilters``).
+
+The returned rows are one API response, collected into one driver, so
+they are sorted in one task (``coalesce(1)`` before the sort): the scan
+reads about the window's days, and one task sorts what the driver must
+hold anyway.  A global sort would add a range exchange whose sampling
+job runs the scan a second time.  ``coalesce`` is no shuffle, so the
+scan and filter run in that task too; a table without ``dt`` partitions
+is read there in full, less what row-group pruning skips.
 """
 
 from __future__ import annotations
@@ -16,6 +27,8 @@ import datetime as dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from parcial_bigdata_spark.sources.ingest import silver_date
 
 
 def _range_filter(df: DataFrame, ts_col: str, start, end) -> DataFrame:
@@ -30,14 +43,25 @@ def _range_filter(df: DataFrame, ts_col: str, start, end) -> DataFrame:
     bound expressions are foldable, so Catalyst folds them to long
     literals and pushes the comparison into the parquet scan — row-group
     min/max pruning on the biggest time-series table, instead of a full
-    scan + post-filter on the derived timestamp."""
-    ts = F.col(ts_col)
+    scan + post-filter on the derived timestamp.
+
+    When the table carries a ``DATE`` column ``dt`` (silver's partition
+    column, ``dt = silver_date(ts)``), the filter also bounds ``dt`` by
+    the dates of the window's endpoints.  The bounds fold to date
+    literals, so the scan prunes partitions from directory metadata; the
+    timestamp predicate stays for the exact bounds and Parquet pushdown.
+    Both sides go through ``silver_date``, so the pruning is exact under
+    any session time zone."""
+    lo, hi = F.to_timestamp(F.lit(start)), F.to_timestamp(F.lit(end))
     nanos_col = f"{ts_col}_nanos"
     if nanos_col in df.columns:
-        lo = F.unix_micros(F.to_timestamp(F.lit(start))) * 1000
-        hi = F.unix_micros(F.to_timestamp(F.lit(end))) * 1000 + 999
-        return df.where(F.col(nanos_col).between(lo, hi))
-    return df.where(ts.between(F.lit(start), F.lit(end)))
+        return df.where(
+            F.col(nanos_col).between(F.unix_micros(lo) * 1000, F.unix_micros(hi) * 1000 + 999)
+        )
+    cond = F.col(ts_col).between(F.lit(start), F.lit(end))
+    if dict(df.dtypes).get("dt") == "date":
+        cond &= F.col("dt").between(silver_date(lo), silver_date(hi))
+    return df.where(cond)
 
 
 def interval(
@@ -50,11 +74,13 @@ def interval(
     """Rows with ``start <= ts <= end``, ascending by ts, two columns.
 
     Matches the reference's ``WHERE fechahora >= %s AND fechahora <= %s
-    ORDER BY fechahora ASC`` with the ``float(valor)`` downcast.
+    ORDER BY fechahora ASC`` with the ``float(valor)`` downcast.  The
+    sort runs in one task (module docstring): the plan has no exchange.
     """
     ts = F.col(ts_col)
     return (
         _range_filter(df, ts_col, start, end)
+        .coalesce(1)
         .orderBy(ts.asc())
         .select(ts.alias(ts_col), F.col(value_col).cast("double").alias(value_col))
     )
@@ -67,8 +93,25 @@ def interval_count(
     end: dt.datetime | str | Column,
 ) -> DataFrame:
     """The response-envelope ``count`` (reference ``main.py:85-86``) as a
-    single-row aggregate — computed distributed, never via driver len()."""
+    single-row aggregate, for callers that want the count without the
+    rows: computed distributed, nothing collected but one row."""
     return _range_filter(df, ts_col, start, end).agg(F.count("*").alias("cnt"))
+
+
+def serve_interval(
+    df: DataFrame,
+    ts_col: str,
+    value_col: str,
+    start: dt.datetime | str | Column,
+    end: dt.datetime | str | Column,
+) -> tuple[list, int]:
+    """One API request: ``(rows, count)`` from ONE ``interval`` collect,
+    with ``count = len(rows)`` — the reference's response envelope
+    (``main.py:85-86``).  The rows are collected anyway, so counting them
+    needs no second scan; ``interval_count`` stays for callers that want
+    only the count."""
+    rows = interval(df, ts_col, value_col, start, end).collect()
+    return rows, len(rows)
 
 
 def validate_range(start: dt.datetime, end: dt.datetime) -> None:

@@ -25,7 +25,7 @@ viable over millions of bronze files on a cluster.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -126,12 +126,23 @@ def ingest_summary(acct: DataFrame) -> DataFrame:
     )
 
 
+def silver_date(ts: Column | str) -> Column:
+    """The silver partition date of timestamp ``ts``: its UTC calendar
+    date, computed from epoch seconds, so it is the same whatever the
+    session time zone.  The writer (``write_silver``), the streaming
+    dedup probe and the interval reader's partition predicate all derive
+    ``dt`` through this one function; a reader that derived its bounds
+    with ``to_date`` under a non-UTC session would prune away partitions
+    holding matching rows."""
+    return F.date_from_unix_date(F.floor(F.unix_seconds(ts) / 86400).cast("int"))
+
+
 def write_silver(rows: DataFrame, path: str) -> None:
-    """Append to the silver table, partitioned by date for partition
-    pruning at scale (SURVEY.md §4 design choice; the reference table is
-    unpartitioned and unindexed)."""
+    """Append to the silver table, partitioned by ``dt = silver_date``
+    for partition pruning at scale (SURVEY.md §4 design choice; the
+    reference table is unpartitioned and unindexed)."""
     (
-        rows.withColumn("dt", F.to_date("fechahora"))
+        rows.withColumn("dt", silver_date("fechahora"))
         .write.mode("append")
         .partitionBy("dt")
         .parquet(path)

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from parcial_bigdata_spark.catalog import SILVER_COLUMNS
-from parcial_bigdata_spark.sources.ingest import parse_rows, silver_rows, write_silver
+from parcial_bigdata_spark.sources.ingest import parse_rows, silver_date, silver_rows, write_silver
 
 
 def read_bronze_stream(
@@ -126,7 +126,7 @@ def _per_file(batch_df: DataFrame) -> list:
     P5) enter through a null row so they are counted and recorded too.
     ``dts`` are the dates of the file's good rows, never null: a good
     row has a non-null epoch, so its timestamp is non-null."""
-    rows = parse_rows(batch_df).select("source_file", "ok", F.to_date("fechahora").alias("d"))
+    rows = parse_rows(batch_df).select("source_file", "ok", silver_date("fechahora").alias("d"))
     return (
         rows.unionByName(batch_df.select("source_file"), allowMissingColumns=True)
         .groupBy("source_file")
