@@ -12,13 +12,14 @@ Over silver (partitioned by ``dt = silver_date(fechahora)``) the filter
 also carries the window's ``dt`` range, so the scan lists and opens only
 the day partitions the window touches (``PartitionFilters``).
 
-The returned rows are one API response, collected into one driver, so
-they are sorted in one task (``coalesce(1)`` before the sort): the scan
-reads about the window's days, and one task sorts what the driver must
-hold anyway.  A global sort would add a range exchange whose sampling
-job runs the scan a second time.  ``coalesce`` is no shuffle, so the
-scan and filter run in that task too; a table without ``dt`` partitions
-is read there in full, less what row-group pruning skips.
+Over silver the returned rows are sorted in one task (``coalesce(1)``
+before the sort): they are one API response, collected into one driver,
+and the pruned scan reads about the window's days, so one task sorts
+what the driver must hold anyway.  A global sort would add a range
+exchange whose sampling job runs the scan a second time.  ``coalesce``
+is no shuffle, so the scan runs in that task too; that is why a frame
+without ``dt`` partitions (the ``events`` table) keeps the global sort
+and a scan over as many tasks as its splits.
 """
 
 from __future__ import annotations
@@ -59,9 +60,15 @@ def _range_filter(df: DataFrame, ts_col: str, start, end) -> DataFrame:
             F.col(nanos_col).between(F.unix_micros(lo) * 1000, F.unix_micros(hi) * 1000 + 999)
         )
     cond = F.col(ts_col).between(F.lit(start), F.lit(end))
-    if dict(df.dtypes).get("dt") == "date":
+    if _day_partitioned(df):
         cond &= F.col("dt").between(silver_date(lo), silver_date(hi))
     return df.where(cond)
+
+
+def _day_partitioned(df: DataFrame) -> bool:
+    """Whether ``df`` carries silver's ``DATE`` partition column ``dt``,
+    so a window's scan reads only the days it touches."""
+    return dict(df.dtypes).get("dt") == "date"
 
 
 def interval(
@@ -74,15 +81,16 @@ def interval(
     """Rows with ``start <= ts <= end``, ascending by ts, two columns.
 
     Matches the reference's ``WHERE fechahora >= %s AND fechahora <= %s
-    ORDER BY fechahora ASC`` with the ``float(valor)`` downcast.  The
-    sort runs in one task (module docstring): the plan has no exchange.
+    ORDER BY fechahora ASC`` with the ``float(valor)`` downcast.  Over
+    silver the sort runs in one task and the plan has no exchange; any
+    other frame keeps the global sort (module docstring).
     """
     ts = F.col(ts_col)
-    return (
-        _range_filter(df, ts_col, start, end)
-        .coalesce(1)
-        .orderBy(ts.asc())
-        .select(ts.alias(ts_col), F.col(value_col).cast("double").alias(value_col))
+    rows = _range_filter(df, ts_col, start, end)
+    if _day_partitioned(df):
+        rows = rows.coalesce(1)
+    return rows.orderBy(ts.asc()).select(
+        ts.alias(ts_col), F.col(value_col).cast("double").alias(value_col)
     )
 
 

@@ -271,6 +271,17 @@ def test_interval_over_silver_runs_one_job_and_no_exchange(spark, silver):
     assert len(ts) == 6 and ts == sorted(ts)  # closed at both 12:00 rows
 
 
+def test_interval_without_day_partitions_keeps_the_global_sort(silver):
+    """``coalesce`` folds the scan into its one task, so only a frame
+    whose scan is pruned to the window's days sorts that way; any other
+    frame (the ``events`` table) keeps a range-partitioned sort and a
+    scan split across tasks."""
+    q = iv.interval(silver.drop("dt"), "fechahora", "valor", "2025-01-01 12:00:00", "2025-01-02 12:00:00")
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning(fechahora" in plan
+    assert "Coalesce" not in plan
+
+
 def test_serve_interval_counts_its_rows_in_one_job(spark, silver):
     start, end = "2025-01-01 22:00:00", "2025-01-03 03:00:00"
     (rows, count), jobs = _jobs(

@@ -17,7 +17,7 @@ from parcial_bigdata_spark.plans.registry import QUERIES  # noqa: E402
 from parcial_bigdata_spark.session import get_spark  # noqa: E402
 
 SHOWCASE = [
-    ("interval_query", "predicate pushdown + 2-column pruning on the events scan; the collected rows sort in one task (coalesce, no exchange)"),
+    ("interval_query", "predicate pushdown + 2-column pruning on the events scan"),
     ("q3_shipping_priority", "broadcast dim filter, one fact shuffle, top-k"),
     ("q5_region_revenue", "star join: dims broadcast, facts shuffle on natural keys"),
     ("asof_purchase_signup", "as-of via union+window: ONE exchange, no range join"),
