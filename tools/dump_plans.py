@@ -4,10 +4,19 @@ pruning, broadcast choices, and shuffle counts, inspectable without
 running anything.
 
 Usage: python tools/dump_plans.py [sf_dir]
+
+The output depends only on the code and the data: the session is sized
+as on a 32-CPU machine (``local[32]``, 32 shuffle partitions) whatever
+the machine's CPU count, and each plan's
+expression ids (``#N``), ``plan_id=N`` and RDD ids (``MapPartitionsRDD[N]``)
+are renumbered in order of first appearance, so regenerating the file
+after a plan change shows that change alone.
 """
 
 from __future__ import annotations
 
+import os
+import re
 import sys
 from pathlib import Path
 
@@ -63,9 +72,28 @@ SHOWCASE = [
 ]
 
 
+# the session size every plan is dumped at: the engine sizes local
+# parallelism and shuffle partitions from SPARK_GRAFT_CPUS, and the
+# registry's tune_runtime caps the partitions at four times that count
+PLAN_CPUS = 32
+
+# run-dependent ids, each numbered from 0 within one plan
+_IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
+
+
+def renumber(plan: str) -> str:
+    """``plan`` with each kind of id replaced by its order of first
+    appearance."""
+    for pattern in _IDS:
+        ids: dict[str, int] = {}
+        plan = re.sub(pattern, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))), plan)
+    return plan
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("dump-plans")
+    os.environ["SPARK_GRAFT_CPUS"] = str(PLAN_CPUS)
+    spark = get_spark("dump-plans", shuffle_partitions=PLAN_CPUS)
     out = [
         "# PLANS — physical plan audit (`.explain formatted`)",
         "",
@@ -80,8 +108,6 @@ def main() -> None:
     # anything shuffle more than its design says".  Iterative loops and
     # streaming runs span many jobs, so one plan tree cannot represent
     # them; they are listed but audited by their own docstrings/bench.
-    import re
-
     from bench import HEADLINE  # noqa: E402
 
     multi_job = {
@@ -121,7 +147,7 @@ def main() -> None:
                 "formatted"
             )
         )
-        return re.sub(r"[^\x09\x0a\x20-\x7e]", "", raw).rstrip()
+        return renumber(re.sub(r"[^\x09\x0a\x20-\x7e]", "", raw).rstrip())
 
     for name, why in SHOWCASE:
         df = QUERIES[name](spark, sf_dir)
