@@ -7,6 +7,15 @@ lineitem events documents embeddings — one parquet file/dir per table at
 Parquet is the columnar at-rest format (vectorized reader, row-group
 statistics for predicate pushdown, column pruning) — the architecture
 upgrade over the reference's row-oriented MySQL table (SURVEY.md §1.3).
+
+Schema memo: reading a parquet file without a schema runs one Spark job
+to infer it.  ``load_table`` infers each table file once per process and
+reads it again with the inferred schema, which runs no job.  The memo
+holds one entry per path, keyed on the file's identity (real path,
+inode, size, mtime in ns) and on the session's values of every conf the
+parquet schema converter reads (``_SCHEMA_CONFS``); a rewritten file or
+a changed conf misses and re-infers.  A directory is inferred every
+time: its identity would be its whole listing.
 """
 
 from __future__ import annotations
@@ -15,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -39,6 +49,40 @@ SILVER_COLUMNS = (
 )
 
 
+# every SQL conf Spark's ParquetToSparkSchemaConverter reads: an inferred
+# schema is only valid under the values it was inferred with
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+
+# path -> (file identity, conf values, inferred StructType); shared by
+# every session of the process, since the key holds all the value depends on
+_schemas: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a file's schema only when
+    the file or the schema confs changed since the last read of it."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    ident = (os.path.realpath(path), st.st_ino, st.st_size, st.st_mtime_ns)
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    hit = _schemas.get(path)
+    if hit is not None and hit[:2] == (ident, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[path] = (ident, confs, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -58,7 +102,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         #    the parquet scan natively, no nanos escape needed.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         if dict(df.dtypes).get("ts") == "bigint":
             # FLOOR division, not `div` (which truncates toward zero):
             # interval's nanos-bound translation relies on floor algebra,
@@ -77,7 +121,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Reader built before the conf was set (cached schema) — coerce.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

@@ -30,6 +30,12 @@ def get_spark(
     On a real cluster the same code runs unchanged — only ``master`` and
     the memory knobs move to spark-submit conf.  AQE handles runtime
     re-planning (partition coalescing, skew-join splitting) at any scale.
+
+    The generated-class cache holds 1000 classes instead of Spark's 100,
+    so a query mix that is served again reuses the classes Janino
+    compiled for it (and the JIT code compiled for those) instead of
+    compiling them anew on every pass.  It is a static SQL conf, read
+    when the session is built (see ``tune_runtime``).
     """
     cpus = _cpus()
     spark = (
@@ -45,6 +51,13 @@ def get_spark(
         .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # One pass of the 8-query analytics_batch mix uses about 190
+        # generated classes.  At the default of 100 entries every pass
+        # evicts what the next one needs: 23.3 Janino compiles per op in
+        # every pass, and the JIT compiles each new class again.  At 1000
+        # a repeated pass compiles 0.5-0.9 per op (tools/jvm_cpu.py), with
+        # headroom for a larger mix.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
@@ -57,6 +70,10 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     The driver hands ``queries()`` callables an arbitrary session; these
     three settings are runtime-mutable and required for oracle-identical
     results (UTC timestamps) and sane local parallelism.
+
+    Static conf is out of its reach: a session not built by ``get_spark``
+    keeps Spark's generated-class cache of 100 entries, so a repeated
+    query mix larger than that recompiles its classes on every pass.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

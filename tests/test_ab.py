@@ -92,3 +92,8 @@ def test_wide_parent_spread_is_unresolved_unless_the_change_dominates():
 def test_side_summary_counts_failed_runs():
     runs = [parse_run(_stdout(7.0, 1500.0, steal=0.1)), None, parse_run(_stdout(7.0, 1500.0, steal=0.3))]
     assert side_summary(runs).startswith("2/3 runs ok, median cpu_steal_share 0.200")
+
+
+def test_side_summary_reports_median_peak_rss():
+    runs = [{"metrics": {}, "report": {"peak_rss_mb": mb}} for mb in (3000.0, 2900.0, 3300.0)]
+    assert side_summary(runs + [None]).endswith("median peak_rss_mb 3000")

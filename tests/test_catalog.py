@@ -79,12 +79,63 @@ def test_events_ts_layout_drift(spark, tmp_path, unit):
         }
     )
     pq.write_table(table, str(d / "events.parquet"))
-    df = load_table(spark, str(d), "events")
-    assert dict(df.dtypes)["ts"] == "timestamp"
-    got = sorted(r.ts for r in df.select("ts").collect())
-    assert got == stamps
-    if unit == "ns":
-        assert "ts_nanos" in df.columns  # raw column kept for pushdown
+    # the second load reads with the memoized schema: same layout handling
+    for _ in range(2):
+        df = load_table(spark, str(d), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = sorted(r.ts for r in df.select("ts").collect())
+        assert got == stamps
+        if unit == "ns":
+            assert "ts_nanos" in df.columns  # raw column kept for pushdown
+
+
+def _jobs(spark, group: str, action):
+    """``(result, number of Spark jobs)`` of ``action()`` run under a
+    job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _write_part(path, keys):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"p_partkey": keys,
+                  "p_name": ["a", "b", "c"],
+                  "p_brand": ["x", "y", "z"]}),
+        str(path),
+    )
+
+
+def test_repeat_load_runs_no_schema_job(spark, tmp_path):
+    """The first load of a table file infers its schema (one job); a
+    second load of the unchanged file reads with the memoized schema and
+    runs no job, with the same schema and rows."""
+    _write_part(tmp_path / "part.parquet", [1, 2, 3])
+    first, jobs = _jobs(spark, "schema_memo_first", lambda: load_table(spark, str(tmp_path), "part"))
+    assert jobs >= 1
+    again, jobs = _jobs(spark, "schema_memo_again", lambda: load_table(spark, str(tmp_path), "part"))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_rewritten_table_file_is_inferred_again(spark, tmp_path):
+    """Rewriting the same path with another column type changes the
+    file's identity: the next load infers the new type."""
+    path = tmp_path / "part.parquet"
+    _write_part(path, [1, 2, 3])
+    assert dict(load_table(spark, str(tmp_path), "part").dtypes)["p_partkey"] == "bigint"
+    _write_part(path, ["1", "2", "3"])
+    df = load_table(spark, str(tmp_path), "part")
+    assert dict(df.dtypes)["p_partkey"] == "string"
+    assert sorted(r.p_partkey for r in df.collect()) == ["1", "2", "3"]
 
 
 def test_create_silver_table_escapes_location(spark, tmp_path):

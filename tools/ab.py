@@ -24,7 +24,8 @@ per metric, each side's median and quartiles, the change's pair wins
   run (end-to-end metrics only);
 - ``level``: none of these.
 
-It also prints each side's median CPU steal share and error rate, and
+It also prints each side's median CPU steal share, error rate and peak
+resident memory of the process tree (``peak_rss_mb``), and
 every end-to-end value per seed.  ``--aa`` runs the parent against
 itself: the control that shows how far two identical sides drift.
 ``BENCHMARK.json`` is read, never written.
@@ -114,10 +115,12 @@ def side_summary(runs: list[dict | None]) -> str:
     ok = [r for r in runs if r is not None]
     steal = [r["report"].get("cpu_steal_share", 0.0) for r in ok]
     errors = [r["report"].get("error_rate", 0.0) for r in ok]
+    rss = [r["report"]["peak_rss_mb"] for r in ok if "peak_rss_mb" in r["report"]]
     return (
         f"{len(ok)}/{len(runs)} runs ok, median cpu_steal_share "
         f"{statistics.median(steal) if steal else float('nan'):.3f}, "
-        f"max error_rate {max(errors) if errors else float('nan'):.3f}"
+        f"max error_rate {max(errors) if errors else float('nan'):.3f}, "
+        f"median peak_rss_mb {statistics.median(rss) if rss else float('nan'):.0f}"
     )
 
 
