@@ -1,39 +1,51 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-Container HEADERS decode FOR REAL with zero dependencies: WAV via the
-stdlib ``wave`` module (sample rate, channels, frames, duration), PNG /
-BMP / GIF via stdlib ``struct`` over the container's declared geometry
-(width, height, channels, bit depth), AVI via a RIFF chunk-tree walk to
-``avih`` (geometry, frame count, duration), and MP4 via an ISO-BMFF box
-walk to ``mvhd`` (movie duration) — all from actual bytes.
+Container HEADERS decode for real with zero dependencies (``_DECODERS``):
+WAV via the stdlib ``wave`` module, PNG / BMP / GIF via ``struct`` over
+the declared geometry, JPEG via a T.81 marker walk to SOFn, AVI via a
+RIFF chunk-tree walk to ``avih``, and MP4 via an ISO-BMFF box walk to
+``mvhd``.
 
-Pixel/sample PAYLOAD decode: uncompressed 24-bit BMP pixel arrays
-decode FOR REAL (stdlib ``struct`` + numpy, stride-aware —
-``decode_pixels`` / ``_decode_bmp_pixels``), and so do 8-bit
-RGB/palette PNGs — plain or Adam7-interlaced, a genuinely COMPRESSED
-container — via stdlib ``zlib`` inflate plus the real five-filter
-scanline unfilter (``_decode_png_pixels``), single-frame palette GIFs
-(plain or interlaced) via a genuine variable-width LZW decode
-(``_decode_gif_pixels``), and baseline 8-bit grayscale/4:4:4 JPEGs via
-a genuine Huffman entropy decode + IDCT (``_decode_jpeg_pixels``);
-the remaining payload codecs (MP4/AVI video frames, plus out-of-scope
-variants: progressive/subsampled JPEG, animated GIF, 16-bit PNG)
-need PIL/ffmpeg.  Those ride an OPTIONAL tier probed at first use
-(round-11 verdict item 7): when PIL / PyAV are installed, real mode
-decodes them through the library; when absent (this container), the
-deterministic fake stands in behind ``use_fake_decode=True`` and the
-real path raises NotImplementedError naming the library it needs for
-unrecognized media, and ValueError for a recognized-but-corrupt
-container (corruption must never masquerade as a missing dependency).
-Everything around the decode — schema, Arrow batch shape, mapInPandas
-plumbing, partitioning — is real and tested on the guaranteed stdlib
-tier either way.
+PAYLOADS decode under one contract.  Each stdlib codec has exactly one
+decode function, and that function owns every guard for its format:
+ValueError for a corrupt payload, NotImplementedError for a valid one
+outside the stdlib scope.  What it returns:
+
+- ``_bmp_pixels`` (24-bit uncompressed), ``_png_pixels`` (8-bit RGB or
+  palette, plain or Adam7), ``_gif_pixels`` (single frame, LZW) and
+  ``_jpeg_pixels`` (baseline, gray or YCbCr up to 4:2:0): one (h, w, 3)
+  uint8 RGB array in image order;
+- ``_avi_frames`` (24-bit DIB or MJPG) and ``_mp4_frames`` (planar
+  I420): a list of such arrays, one per frame;
+- ``_wav_samples`` (PCM16): the int16 samples, (n_frames, channels).
+
+One reduction per kind turns arrays into statistics
+(``_frame_rgb_stats`` for pixels and frames, ``_pcm_stats`` for
+samples), and the derived operators (histogram, resize, frame
+features, silence runs, GIF census) read the same arrays and walks.
+One per-blob dispatcher (``_decode_blob``), keyed on ``_sniff_one``,
+applies the fallback policy for ``decode_media``, ``decode_pixels``,
+``decode_samples`` and ``decode_video_frames``:
+
+- fake mode (``use_fake_decode=True``): a ValueError, a
+  NotImplementedError or an unrecognised payload falls back to the
+  deterministic fake for that kind;
+- real mode: a ValueError raises (corruption never masquerades as a
+  missing dependency); a NotImplementedError or an unrecognised payload
+  tries the kind's optional tier (PIL for pixels and media, probed at
+  first use), then raises NotImplementedError.
+
+PyAV is probed the same way and used by ``frame_sample``'s real mode
+and the ``pyav_frame_summary`` twin.  Everything around the decode
+(schema, Arrow batch shape, mapInPandas plumbing, partitioning) is the
+same on every tier.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -91,7 +103,8 @@ def sniff_format(df: DataFrame, content_col: str = "content") -> DataFrame:
 
 def _fake_decode(content: bytes | None) -> tuple[int, int, int]:
     """Deterministic FAKE decode: derives (width, height, channels) from
-    the payload bytes.  Stands in for PIL/ffmpeg in this container."""
+    the payload bytes.  Fake mode's stand-in for payloads no stdlib
+    decoder takes."""
     if not content:
         return (0, 0, 0)
     h = sum(content[:64])
@@ -168,8 +181,9 @@ def _decode_bmp(content: bytes) -> dict | None:
     """REAL BMP header decode via stdlib ``struct``: geometry and bits
     per pixel from the DIB header (BITMAPINFOHEADER and later, plus the
     legacy BITMAPCOREHEADER).  Height may be negative (top-down rows);
-    the magnitude is the pixel height.  Returns None for payloads that
-    carry the BM magic but whose header is truncated or inconsistent."""
+    the magnitude is the pixel height and ``top_down`` keeps the sign.
+    Returns None for payloads that carry the BM magic but whose header
+    is truncated or inconsistent."""
     import struct
 
     if len(content) < 26:
@@ -190,6 +204,7 @@ def _decode_bmp(content: bytes) -> dict | None:
         # indexed/16-bit forms render to whole pixels; channel count is
         # the storage sample count (≥1), bit_depth the declared bpp
         "channels": max(1, bpp // 8), "bit_depth": bpp,
+        "top_down": h < 0,
     }
 
 
@@ -458,10 +473,10 @@ def _pil_decode_media(content: bytes) -> dict | None:
     }
 
 
-def _pil_decode_pixels(content: bytes) -> dict | None:
-    """Pixel statistics via the optional PIL tier, matching the stdlib
-    BMP/PNG stats contract (RGB-converted per-channel int sums, byte
-    extrema).  None when PIL is absent or cannot open the payload."""
+def _pil_pixels(content: bytes):
+    """The optional PIL tier's pixel decode: the RGB-converted (h, w, 3)
+    uint8 array, or None when PIL is absent or cannot open the
+    payload."""
     image_mod = _optional_pil()
     if image_mod is None or content is None:
         return None
@@ -471,104 +486,9 @@ def _pil_decode_pixels(content: bytes) -> dict | None:
 
     try:
         with image_mod.open(io.BytesIO(content)) as im:
-            arr = np.asarray(im.convert("RGB"), dtype=np.uint8)
+            return np.asarray(im.convert("RGB"), dtype=np.uint8)
     except Exception:
         return None
-    h, w = arr.shape[0], arr.shape[1]
-    chans = arr.reshape(-1, 3).astype(np.int64)
-    return {
-        "width": w,
-        "height": h,
-        "n_pixels": w * h,
-        "sum_b": int(chans[:, 2].sum()),
-        "sum_g": int(chans[:, 1].sum()),
-        "sum_r": int(chans[:, 0].sum()),
-        "min_byte": int(arr.min()),
-        "max_byte": int(arr.max()),
-    }
-
-
-def decode_media(df: DataFrame, use_fake_decode: bool = True) -> DataFrame:
-    """Decode/feature-extract via mapInPandas: Arrow-batched, partition-
-    parallel, constant memory per batch.
-
-    Container headers decode FOR REAL on both paths, zero dependencies:
-    WAV (stdlib ``wave`` — channels, sample rate, frames, sample width,
-    duration), PNG/BMP/GIF/JPEG (stdlib ``struct`` — width, height,
-    channels, bit depth; JPEG via a T.81 marker walk to SOFn), AVI
-    (RIFF walk — geometry, frame count, duration), and MP4 (box walk —
-    movie duration).  Payloads outside those containers need
-    PIL/ffmpeg (absent here):
-
-    - fake mode (default): the clearly-marked deterministic fake stands
-      in; recognized-but-corrupt containers also fall through to it
-      (never kill the batch over one bad blob).
-    - real mode (``use_fake_decode=False``): unrecognized media raises
-      NotImplementedError naming the missing library; a recognized
-      container whose header will not parse raises ValueError instead —
-      data corruption must not masquerade as a missing dependency
-      (round-7 advice)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in it:
-            rows = []
-            for mid, mtype, content in zip(
-                pdf["media_id"], pdf["media_type"], pdf["content"]
-            ):
-                fmt = _sniff_one(content)
-                meta = _DECODERS[fmt](content) if fmt else None
-                if meta is not None:
-                    fields = (
-                        meta["width"], meta["height"],
-                        meta["channels"], meta["bit_depth"],
-                        meta.get("sample_rate"), meta.get("n_frames"),
-                        meta.get("duration_ms"),
-                    )
-                elif not use_fake_decode:
-                    if fmt is not None:
-                        raise ValueError(
-                            f"unparseable {fmt} payload "
-                            f"(media_id={mid}): carries the {fmt} magic "
-                            "but its header does not decode"
-                        )
-                    pil_meta = _pil_decode_media(content)
-                    if pil_meta is None:
-                        raise NotImplementedError(
-                            "real decode for media outside wav/png/bmp/gif/"
-                            "jpeg/avi/mp4 requires the optional PIL/ffmpeg "
-                            "tier (not installed); pass use_fake_decode=True"
-                        )
-                    fields = (
-                        pil_meta["width"], pil_meta["height"],
-                        pil_meta["channels"], pil_meta["bit_depth"],
-                        None, None, None,
-                    )
-                else:
-                    w, h, ch = _fake_decode(content)
-                    fields = (w, h, ch, 8, None, None, None)
-                rows.append(
-                    (
-                        mid,
-                        mtype,
-                        len(content) if content is not None else 0,
-                        hashlib.md5(content).hexdigest()
-                        if content is not None
-                        else None,
-                        *fields,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "media_type", "byte_len", "sha",
-                    "width", "height", "channels", "bit_depth",
-                    "sample_rate", "n_frames", "duration_ms",
-                ],
-            )
-
-    return df.mapInPandas(batches, schema=DECODED_SCHEMA)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 1024, use_fake_decode: bool = True) -> DataFrame:
@@ -763,27 +683,40 @@ def synth_video_corpus(documents: DataFrame) -> DataFrame:
     )
 
 
-PIXEL_SCHEMA = (
-    "media_id long, width int, height int, n_pixels long, "
-    "sum_b long, sum_g long, sum_r long, min_byte int, max_byte int"
-)
+def _dib_stride(w: int) -> int:
+    """Bytes per stored row of a 24-bit DIB: 3 bytes per pixel, padded
+    to a multiple of 4."""
+    return (3 * w + 3) & ~3
 
 
-def _decode_bmp_pixels(content: bytes) -> dict:
-    """REAL pixel-payload decode for uncompressed 24-bit BMP — pure
-    stdlib ``struct`` + numpy, no PIL anywhere: locate the pixel array
-    via the file-header offset, honor the 4-byte row stride, slice off
-    the padding columns, and reduce per-channel sums / byte extrema
-    vectorized (``np.frombuffer`` — the same zero-copy form a real
-    cluster decode would take before handing PIL the hard codecs).
+def _dib_rgb(buf: bytes, offset: int, w: int, h: int, top_down: bool):
+    """The 24-bit DIB row walk shared by BMP files and AVI DIB frames:
+    ``h`` rows of ``_dib_stride(w)`` bytes from ``offset``, BGR samples,
+    stored bottom-up unless the header's height is negative.  Returns
+    the (h, w, 3) uint8 RGB image in image (top-down) order; the caller
+    has checked that ``buf`` holds the rows."""
+    import numpy as np
+
+    stride = _dib_stride(w)
+    rows = np.frombuffer(
+        buf, dtype=np.uint8, count=stride * h, offset=offset
+    ).reshape(h, stride)[:, : 3 * w].reshape(h, w, 3)
+    if not top_down:
+        rows = rows[::-1]
+    return rows[:, :, ::-1]
+
+
+def _bmp_pixels(content: bytes):
+    """REAL pixel decode for uncompressed 24-bit BMP (stdlib ``struct``
+    + numpy, no PIL): locate the pixel array via the file-header offset
+    and walk its stride-padded rows (``_dib_rgb``).  Returns the (h, w,
+    3) uint8 RGB image.
 
     Raises ValueError for corrupt payloads (unparseable header,
-    truncated pixel block) and NotImplementedError for valid-but-
-    unsupported encodings (non-24-bpp, compressed) — corruption must
-    never masquerade as a missing dependency (round-7 advice)."""
+    truncated pixel array) and NotImplementedError for valid but
+    unsupported encodings (bit depths other than 24, any compression
+    method)."""
     import struct
-
-    import numpy as np
 
     meta = _decode_bmp(content)
     if meta is None:
@@ -802,26 +735,13 @@ def _decode_bmp_pixels(content: bytes) -> dict:
             )
     (offset,) = struct.unpack("<I", content[10:14])
     w, h = meta["width"], meta["height"]
-    stride = (w * 3 + 3) & ~3
-    if len(content) < offset + stride * h:
+    need = offset + _dib_stride(w) * h
+    if len(content) < need:
         raise ValueError(
             f"truncated BMP pixel array: header declares {w}x{h} "
-            f"(need {offset + stride * h} bytes, have {len(content)})"
+            f"(need {need} bytes, have {len(content)})"
         )
-    rows = np.frombuffer(
-        content, dtype=np.uint8, count=stride * h, offset=offset
-    ).reshape(h, stride)[:, : w * 3]
-    chans = rows.reshape(-1, 3).astype(np.int64)
-    return {
-        "width": w,
-        "height": h,
-        "n_pixels": w * h,
-        "sum_b": int(chans[:, 0].sum()),
-        "sum_g": int(chans[:, 1].sum()),
-        "sum_r": int(chans[:, 2].sum()),
-        "min_byte": int(rows.min()),
-        "max_byte": int(rows.max()),
-    }
+    return _dib_rgb(content, offset, w, h, meta["top_down"])
 
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass, spec §8.2
@@ -897,10 +817,10 @@ def _png_unfilter(arr, bpp: int):
     return out
 
 
-def _decode_png_pixels(content: bytes) -> dict:
-    """REAL pixel-payload decode for 8-bit RGB and 8-bit PALETTE
-    non-interlaced PNG — stdlib ``struct`` + ``zlib`` + numpy, no PIL
-    anywhere: walk the chunk stream collecting IDAT (and PLTE for color
+def _png_pixels(content: bytes):
+    """REAL pixel decode for 8-bit RGB and 8-bit PALETTE PNG — stdlib
+    ``struct`` + ``zlib`` + numpy, no PIL anywhere: walk the chunk
+    stream collecting IDAT (and PLTE for color
     type 3), inflate with ``zlib.decompress`` (the adler32 trailer is
     verified end-to-end — the synthetic corpus computes it with a Spark
     HOF so the stream is a fully valid zlib stream), apply the REAL
@@ -910,8 +830,8 @@ def _decode_png_pixels(content: bytes) -> dict:
     left-dependent sequential predictors; bpp is 3 for RGB, 1 for
     palette indices), deinterlace Adam7 streams for real (seven
     independently-filtered sub-images scattered back onto the pixel
-    grid, spec §8.2), map palette indices through PLTE where
-    applicable, and reduce per-channel sums / byte extrema vectorized.
+    grid, spec §8.2), and map palette indices through PLTE where
+    applicable.  Returns the (h, w, 3) uint8 RGB image.
 
     Raises ValueError for corrupt payloads (bad chunk walk, inflate
     failure, wrong scanline volume, invalid filter id or interlace
@@ -998,37 +918,15 @@ def _decode_png_pixels(content: bytes) -> dict:
         if pos2 != len(raw):
             raise ValueError("PNG interlaced scanline volume mismatch")
     if color_type == 2:
-        chans = out.reshape(-1, 3).astype(np.int64)
-    else:
-        # palette: reconstructed bytes are PLTE indices; an index past
-        # the palette, or a missing/ragged PLTE, is corruption
-        if plte is None or len(plte) == 0 or len(plte) % 3 != 0:
-            raise ValueError("palette PNG without a valid PLTE chunk")
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
-        idxs = out.reshape(-1)
-        if idxs.size and int(idxs.max()) >= pal.shape[0]:
-            raise ValueError("PNG palette index out of range")
-        chans = pal[idxs].astype(np.int64)
-    flat = chans.reshape(-1)
-    return {
-        "width": w,
-        "height": h,
-        "n_pixels": w * h,
-        # PNG sample order is RGB (BMP's closed form is BGR)
-        "sum_b": int(chans[:, 2].sum()),
-        "sum_g": int(chans[:, 1].sum()),
-        "sum_r": int(chans[:, 0].sum()),
-        "min_byte": int(chans.min()) if chans.size else 0,
-        "max_byte": int(chans.max()) if chans.size else 0,
-        # position-weighted checksum (Σ byte_i · (i+1) over the RGB
-        # bytes in IMAGE order): channel sums are placement-blind, so
-        # this is the statistic the golden pytests pin to prove the
-        # interlace scatter put every pixel at the right coordinate.
-        # Internal only — decode_pixels' query schema ignores it.
-        "pos_weighted": int(
-            (flat * np.arange(1, flat.size + 1, dtype=np.int64)).sum()
-        ),
-    }
+        return out.reshape(h, w, 3)
+    # palette: reconstructed bytes are PLTE indices; an index past the
+    # palette, or a missing/ragged PLTE, is corruption
+    if plte is None or len(plte) == 0 or len(plte) % 3 != 0:
+        raise ValueError("palette PNG without a valid PLTE chunk")
+    pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)
+    if out.size and int(out.max()) >= pal.shape[0]:
+        raise ValueError("PNG palette index out of range")
+    return pal[out.reshape(h, w)]
 
 
 def _lzw_decode_gif(data: bytes, min_code_size: int) -> list:
@@ -1082,156 +980,135 @@ def _lzw_decode_gif(data: bytes, min_code_size: int) -> list:
     return out
 
 
-def _decode_gif_pixels(content: bytes) -> dict:
-    """REAL pixel-payload decode for single-frame non-interlaced
-    palette GIF — stdlib + numpy, no PIL: walk header + logical screen
-    descriptor + global color table, skip extensions, take the FIRST
-    image descriptor, collect its LZW sub-blocks, run the genuine LZW
-    decode (``_lzw_decode_gif``), verify the pixel volume, map indices
-    through the active palette (local table wins over global), and
-    reduce channel sums / byte extrema.
+def _gif_blocks(content: bytes):
+    """The one GIF block-stream walk (GIF89a §17-§27), shared by the
+    pixel decode and the frame census.  It checks the header and the
+    logical screen descriptor, then yields each block in stream order
+    as ``(block_id, head, data)``:
 
-    Interlaced frames decode for real too — GIF interlacing is a pure
-    four-pass ROW reordering (spec appendix E), undone after the LZW
-    decode.  Raises ValueError for corrupt payloads (bad magic,
-    truncation, no palette, wrong pixel volume, LZW errors, index past
-    the palette) — corruption never masquerades as a missing
-    dependency (round-7 advice)."""
-    import numpy as np
+    - ``(0x21, label, sub_blocks)`` for an extension, with its data
+      sub-blocks as a list of byte strings;
+    - ``(0x2C, (w, h, flags, palette, min_code_size), lzw)`` for an
+      image, where ``palette`` is the local color table, else the
+      global one, else None, and ``lzw`` its joined data sub-blocks;
+    - ``(0x3B, None, None)`` for the trailer, which ends the walk.
 
-    if content is None or len(content) < 14:
+    A stream that runs out without a trailer just ends; truncation
+    inside a block, and an unknown block id, raise ValueError."""
+    import struct
+
+    n = len(content) if content is not None else 0
+    if n < 14:
         raise ValueError("GIF payload too short for header + LSD")
     if content[:6] not in (b"GIF89a", b"GIF87a"):
         raise ValueError("bad GIF magic")
-    packed = content[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n_ent = 1 << ((packed & 0x07) + 1)
-        if pos + 3 * n_ent > len(content):
-            raise ValueError("truncated GIF global color table")
-        gct = content[pos : pos + 3 * n_ent]
-        pos += 3 * n_ent
-    while True:
-        if pos >= len(content):
-            raise ValueError("GIF stream ends before any image data")
+
+    def color_table(pos: int, flags: int, what: str):
+        if not flags & 0x80:
+            return None, pos
+        end = pos + 3 * (1 << ((flags & 0x07) + 1))
+        if end > n:
+            raise ValueError(f"truncated GIF {what} color table")
+        return content[pos:end], end
+
+    def sub_blocks(pos: int):
+        chunks = []
+        while True:
+            if pos >= n:
+                raise ValueError("truncated GIF sub-block chain")
+            ln = content[pos]
+            pos += 1
+            if ln == 0:
+                return chunks, pos
+            if pos + ln > n:
+                raise ValueError("truncated GIF sub-block")
+            chunks.append(content[pos : pos + ln])
+            pos += ln
+
+    gct, pos = color_table(13, content[10], "global")
+    while pos < n:
         block = content[pos]
         if block == 0x3B:
-            raise ValueError("GIF trailer before any image data")
-        if block == 0x21:  # extension: label + sub-block chain
-            pos += 2
-            while True:
-                if pos >= len(content):
-                    raise ValueError("truncated GIF extension chain")
-                ln = content[pos]
-                pos += 1
-                if ln == 0:
-                    break
-                pos += ln
+            yield 0x3B, None, None
+            return
+        if block == 0x21:
+            if pos + 1 >= n:
+                raise ValueError("truncated GIF extension")
+            label = content[pos + 1]
+            chunks, pos = sub_blocks(pos + 2)
+            yield 0x21, label, chunks
             continue
-        if block == 0x2C:
-            break
-        raise ValueError(f"unknown GIF block id 0x{block:02x}")
-    if pos + 10 > len(content):
-        raise ValueError("truncated GIF image descriptor")
-    import struct
+        if block != 0x2C:
+            raise ValueError(f"unknown GIF block id 0x{block:02x}")
+        if pos + 10 > n:
+            raise ValueError("truncated GIF image descriptor")
+        w, h = struct.unpack("<HH", content[pos + 5 : pos + 9])
+        flags = content[pos + 9]
+        lct, pos = color_table(pos + 10, flags, "local")
+        if pos >= n:
+            raise ValueError("GIF frame without LZW data")
+        chunks, end = sub_blocks(pos + 1)
+        yield 0x2C, (w, h, flags, lct or gct, content[pos]), b"".join(chunks)
+        pos = end
 
-    w, h = struct.unpack("<HH", content[pos + 5 : pos + 9])
-    iflags = content[pos + 9]
-    pos += 10
-    pal = gct
-    if iflags & 0x80:  # local color table wins
-        n_ent = 1 << ((iflags & 0x07) + 1)
-        if pos + 3 * n_ent > len(content):
-            raise ValueError("truncated GIF local color table")
-        pal = content[pos : pos + 3 * n_ent]
-        pos += 3 * n_ent
-    if pal is None:
-        raise ValueError("GIF frame without any color table")
-    if w == 0 or h == 0:
-        raise ValueError("GIF frame with zero geometry")
-    if pos >= len(content):
-        raise ValueError("GIF frame without LZW data")
-    min_code_size = content[pos]
-    pos += 1
-    lzw = bytearray()
-    while True:
-        if pos >= len(content):
-            raise ValueError("truncated GIF LZW sub-block chain")
-        ln = content[pos]
-        pos += 1
-        if ln == 0:
-            break
-        if pos + ln > len(content):
-            raise ValueError("truncated GIF LZW sub-block")
-        lzw += content[pos : pos + ln]
-        pos += ln
-    # walk the remainder of the block stream: a SECOND image descriptor
-    # means an animated (multi-frame) GIF — valid per GIF89a but outside
-    # this stdlib decoder's single-frame scope, so it raises
-    # NotImplementedError (NOT ValueError: the payload is not corrupt)
-    # and the optional PIL tier in ``decode_pixels`` takes over on
-    # equipped boxes (round-14 advice: keep that fallback arm reachable)
-    scan = pos
-    while scan < len(content):
-        blk = content[scan]
-        if blk == 0x3B:  # trailer
-            break
-        if blk == 0x2C:
+
+def _gif_pixels(content: bytes):
+    """REAL pixel decode for single-frame palette GIF — stdlib + numpy,
+    no PIL: walk the block stream (``_gif_blocks``), take the image
+    with its active palette (local table wins over global), run the
+    genuine LZW decode (``_lzw_decode_gif``), verify the pixel volume,
+    undo interlacing, and map indices through the palette.  Returns the
+    (h, w, 3) uint8 RGB image.
+
+    Interlaced frames decode for real too — GIF interlacing is a pure
+    four-pass ROW reordering (spec appendix E), undone after the LZW
+    decode.  A second image in the stream (an animated GIF) is valid
+    GIF89a outside this single-frame decoder, so it raises
+    NotImplementedError; corrupt payloads (bad magic, truncation, no
+    palette, wrong pixel volume, LZW errors, index past the palette)
+    raise ValueError."""
+    import numpy as np
+
+    image = None
+    for block, head, lzw in _gif_blocks(content):
+        if block != 0x2C:
+            continue
+        if image is not None:
             raise NotImplementedError(
                 "multi-frame (animated) GIF pixel decode requires the "
                 "optional PIL tier; the stdlib decoder is single-frame"
             )
-        if blk == 0x21:  # extension: label + sub-block chain
-            scan += 2
-            while scan < len(content):
-                ln = content[scan]
-                scan += 1
-                if ln == 0:
-                    break
-                scan += ln
-            continue
-        raise ValueError(f"unknown GIF block id 0x{blk:02x} after frame")
-    idxs = _lzw_decode_gif(bytes(lzw), min_code_size)
+        w, h, _, pal, _ = head
+        if pal is None:
+            raise ValueError("GIF frame without any color table")
+        if w == 0 or h == 0:
+            raise ValueError("GIF frame with zero geometry")
+        image = head, lzw
+    if image is None:
+        raise ValueError("GIF stream carries no image data")
+    (w, h, flags, pal, min_code_size), lzw = image
+    idxs = _lzw_decode_gif(lzw, min_code_size)
     if len(idxs) != w * h:
         raise ValueError(
             f"GIF pixel volume mismatch: {w}x{h} needs {w * h} indices, "
             f"LZW decoded {len(idxs)}"
         )
-    arr = np.asarray(idxs, dtype=np.int64)
-    if iflags & 0x40:
+    rows = np.asarray(idxs, dtype=np.int64).reshape(h, w)
+    if flags & 0x40:
         # GIF interlacing is pure ROW reordering (spec appendix E):
         # rows arrive in four passes (every 8th from 0, every 8th from
         # 4, every 4th from 2, every 2nd from 1) — scatter them back
-        rows = arr.reshape(h, w)
         order = (
             list(range(0, h, 8)) + list(range(4, h, 8))
             + list(range(2, h, 4)) + list(range(1, h, 2))
         )
         img = np.empty_like(rows)
         img[order] = rows
-        arr = img.reshape(-1)
+        rows = img
     palette = np.frombuffer(pal, dtype=np.uint8).reshape(-1, 3)
-    if arr.size and int(arr.max()) >= palette.shape[0]:
+    if int(rows.max()) >= palette.shape[0]:
         raise ValueError("GIF palette index out of range")
-    chans = palette[arr].astype(np.int64)
-    flat = chans.reshape(-1)
-    return {
-        "width": int(w),
-        "height": int(h),
-        "n_pixels": int(w) * int(h),
-        # GIF color table entries are (R, G, B)
-        "sum_b": int(chans[:, 2].sum()),
-        "sum_g": int(chans[:, 1].sum()),
-        "sum_r": int(chans[:, 0].sum()),
-        "min_byte": int(chans.min()) if chans.size else 0,
-        "max_byte": int(chans.max()) if chans.size else 0,
-        # position-weighted checksum — pins the interlace row-reorder
-        # in pytest (channel sums are placement-blind); internal only
-        "pos_weighted": int(
-            (flat * np.arange(1, flat.size + 1, dtype=np.int64)).sum()
-        ),
-    }
+    return palette[rows]
 
 
 def _jpeg_build_huffman(bits: bytes, vals: bytes) -> dict:
@@ -1332,16 +1209,17 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
-def _decode_jpeg_pixels(content: bytes) -> dict:
+def _jpeg_pixels(content: bytes):
     """REAL baseline JPEG pixel decode — stdlib ``struct`` + numpy, no
     PIL: full marker walk (DQT/SOF0/DHT/DRI/SOS), canonical Huffman
     table construction (annex C), the genuine entropy decode (DC
     difference categories + EXTEND, AC run/size with EOB and ZRL,
     byte-unstuffing, restart-marker resync), dequantization, inverse
-    zigzag, a float64 separable 2-D IDCT, level shift, clamp, and MCU
-    crop — the same general algorithm any conformant baseline decoder
-    runs (closed-form corpora just make its outputs oracle-checkable,
-    the PNG/GIF round-14 pattern).
+    zigzag, a float64 separable 2-D IDCT, level shift, clamp, MCU crop
+    and the JFIF YCbCr -> RGB transform; returns the (h, w, 3) uint8
+    RGB image — the same general algorithm any conformant baseline
+    decoder runs (closed-form corpora just make its outputs
+    oracle-checkable, the PNG/GIF round-14 pattern).
 
     Scope: baseline DCT (SOF0), 8-bit precision, grayscale or
     3-component YCbCr at the dominant sampling layouts — 4:4:4,
@@ -1563,50 +1441,30 @@ def _decode_jpeg_pixels(content: bytes) -> dict:
                         np.clip(np.rint(px), 0, 255).astype(np.uint8)
                     )
     if len(planes) == 1:
-        gray = planes[0][:h, :w].astype(np.int64)
-        chans = np.stack([gray, gray, gray], axis=-1).reshape(-1, 3)
-    else:
-        # per-component crop to the true sample grid, then nearest-
-        # neighbor (sample replication) upsample back to full frame —
-        # the same 2x2 replication the MP4 I420 path uses; for 4:4:4
-        # every factor is 1 and this is the identity
-        full = []
-        for p, c in zip(planes, sof["comps"]):
-            cw = (w * c["h"] + hmax - 1) // hmax
-            ch = (h * c["v"] + vmax - 1) // vmax
-            up = np.repeat(
-                np.repeat(p[:ch, :cw], vmax // c["v"], axis=0),
-                hmax // c["h"], axis=1,
-            )
-            full.append(up[:h, :w])
-        yp, cb, cr = (p.astype(np.float64) for p in full)
-        # JFIF YCbCr -> RGB (ITU T.871)
-        r = yp + 1.402 * (cr - 128.0)
-        g = yp - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        b = yp + 1.772 * (cb - 128.0)
-        chans = np.stack(
-            [
-                np.clip(np.rint(c), 0, 255).astype(np.int64)
-                for c in (r, g, b)
-            ],
-            axis=-1,
-        ).reshape(-1, 3)
-    flat = chans.reshape(-1)
-    return {
-        "width": int(w),
-        "height": int(h),
-        "n_pixels": int(w) * int(h),
-        "sum_b": int(chans[:, 2].sum()),
-        "sum_g": int(chans[:, 1].sum()),
-        "sum_r": int(chans[:, 0].sum()),
-        "min_byte": int(chans.min()) if chans.size else 0,
-        "max_byte": int(chans.max()) if chans.size else 0,
-        # position-weighted checksum — pins block placement and the
-        # raster MCU order in pytest (channel sums are placement-blind)
-        "pos_weighted": int(
-            (flat * np.arange(1, flat.size + 1, dtype=np.int64)).sum()
-        ),
-    }
+        gray = planes[0][:h, :w]
+        return np.stack([gray, gray, gray], axis=-1)
+    # per-component crop to the true sample grid, then nearest-
+    # neighbor (sample replication) upsample back to full frame —
+    # the same 2x2 replication the MP4 I420 path uses; for 4:4:4
+    # every factor is 1 and this is the identity
+    full = []
+    for p, c in zip(planes, sof["comps"]):
+        cw = (w * c["h"] + hmax - 1) // hmax
+        ch = (h * c["v"] + vmax - 1) // vmax
+        up = np.repeat(
+            np.repeat(p[:ch, :cw], vmax // c["v"], axis=0),
+            hmax // c["h"], axis=1,
+        )
+        full.append(up[:h, :w])
+    yp, cb, cr = (p.astype(np.float64) for p in full)
+    # JFIF YCbCr -> RGB (ITU T.871)
+    r = yp + 1.402 * (cr - 128.0)
+    g = yp - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = yp + 1.772 * (cb - 128.0)
+    return np.stack(
+        [np.clip(np.rint(c), 0, 255).astype(np.uint8) for c in (r, g, b)],
+        axis=-1,
+    )
 
 
 def _ordered_once(df: DataFrame) -> DataFrame:
@@ -1623,43 +1481,47 @@ def _ordered_once(df: DataFrame) -> DataFrame:
     return iter_checkpoint(df).orderBy("media_id")
 
 
-def _frame_rgb_stats(frames_rgb) -> dict:
-    """Reduce a list of (h, w, 3) RGB int arrays (one per video frame,
-    frame order) to the video-frame stats dict; the position-weighted
-    checksum runs over the concatenated frame stream so pytest can pin
-    frame ORDER and in-frame placement (channel sums are blind to
-    both)."""
+def _frame_rgb_stats(frames) -> dict:
+    """The one reduction from decoded pixels to statistics: ``frames``
+    is a list of (h, w, 3) uint8 RGB arrays in image order — a video's
+    frames in frame order, or a still image as a one-frame list.
+    Returns the geometry of the first frame, the frame count, and over
+    all frames the pixel count, per-channel sums and byte extrema.  The
+    position-weighted checksum (the sum of byte_i * (i + 1) over the
+    RGB bytes of the concatenated stream) is placement- and
+    order-sensitive where the channel sums are not, so pytest pins
+    interlace scatter, MCU order, row flips and frame order with it; no
+    query schema carries it."""
     import numpy as np
 
-    chans = np.concatenate([f.reshape(-1, 3) for f in frames_rgb], axis=0)
+    chans = np.concatenate([f.reshape(-1, 3) for f in frames]).astype(np.int64)
     flat = chans.reshape(-1)
-    h, w, _ = frames_rgb[0].shape
+    h, w, _ = frames[0].shape
     return {
         "width": int(w),
         "height": int(h),
-        "n_frames": len(frames_rgb),
+        "n_frames": len(frames),
         "n_pixels": int(chans.shape[0]),
         "sum_b": int(chans[:, 2].sum()),
         "sum_g": int(chans[:, 1].sum()),
         "sum_r": int(chans[:, 0].sum()),
-        "min_byte": int(chans.min()),
-        "max_byte": int(chans.max()),
+        "min_byte": int(chans.min()) if chans.size else 0,
+        "max_byte": int(chans.max()) if chans.size else 0,
         "pos_weighted": int(
-            (flat.astype(np.int64)
-             * np.arange(1, flat.size + 1, dtype=np.int64)).sum()
+            (flat * np.arange(1, flat.size + 1, dtype=np.int64)).sum()
         ),
     }
 
 
-def _decode_avi_frames(content: bytes) -> dict:
+def _avi_frames(content: bytes) -> list:
     """REAL AVI frame-payload decode — stdlib ``struct`` + numpy, no
     ffmpeg: full RIFF chunk-tree walk (hdrl → strl → strh/strf, movi →
     ``00db``/``00dc`` frame chunks), BITMAPINFOHEADER validation, then
-    per-frame decode for the uncompressed tiers: BI_RGB 24-bit DIB
-    frames (4-byte row stride, bottom-up row order for positive
-    biHeight — the BMP pixel-array geometry) and MJPG frames (each a
-    complete baseline JPEG, decoded by the genuine
-    ``_decode_jpeg_pixels`` — a real cross-codec composition).
+    per-frame decode: BI_RGB 24-bit DIB frames through the BMP row walk
+    (``_dib_rgb``: 4-byte row stride, bottom-up for positive biHeight)
+    and MJPG frames (each a complete baseline JPEG, decoded by the
+    genuine ``_jpeg_pixels`` — a real cross-codec composition).
+    Returns the frames as (h, w, 3) uint8 RGB arrays in frame order.
 
     Compressed codecs beyond MJPG (cvid, h264, …) are valid AVI
     outside the stdlib scope and raise NotImplementedError; corrupt
@@ -1667,8 +1529,6 @@ def _decode_avi_frames(content: bytes) -> dict:
     raise ValueError — corruption never masquerades as a missing
     dependency (round-7 advice)."""
     import struct
-
-    import numpy as np
 
     if (
         content is None or len(content) < 12
@@ -1720,51 +1580,26 @@ def _decode_avi_frames(content: bytes) -> dict:
     if compression == b"MJPG":
         rgb_frames = []
         for _, payload in frames:
-            st = _decode_jpeg_pixels(payload)
-            if (st["width"], st["height"]) != (w, h):
+            rgb_frames.append(_jpeg_pixels(payload))
+            if rgb_frames[-1].shape[:2] != (h, w):
                 raise ValueError("MJPG frame geometry contradicts strf")
-            rgb_frames.append(st)
-        # recombine per-frame stats (each frame's pos_weighted is
-        # frame-local; shift it by the preceding flat-stream length)
-        out = {
-            "width": w, "height": h, "n_frames": len(rgb_frames),
-            "n_pixels": sum(s["n_pixels"] for s in rgb_frames),
-            "sum_b": sum(s["sum_b"] for s in rgb_frames),
-            "sum_g": sum(s["sum_g"] for s in rgb_frames),
-            "sum_r": sum(s["sum_r"] for s in rgb_frames),
-            "min_byte": min(s["min_byte"] for s in rgb_frames),
-            "max_byte": max(s["max_byte"] for s in rgb_frames),
-        }
-        pw, offset = 0, 0
-        for s in rgb_frames:
-            pw += s["pos_weighted"] + offset * (
-                s["sum_r"] + s["sum_g"] + s["sum_b"]
-            )
-            offset += 3 * s["n_pixels"]
-        out["pos_weighted"] = pw
-        return out
+        return rgb_frames
     if compression != b"\x00\x00\x00\x00" or bitcount != 24:
         raise NotImplementedError(
             f"AVI codec {compression!r} at {bitcount} bpp requires "
             "ffmpeg; only BI_RGB 24-bit DIB and MJPG decode stdlib-side"
         )
-    stride = (3 * w + 3) // 4 * 4
-    rgb_frames = []
+    need = _dib_stride(w) * h
     for _, payload in frames:
-        if len(payload) != stride * h:
+        if len(payload) != need:
             raise ValueError(
                 f"AVI DIB frame volume mismatch: {w}x{h} needs "
-                f"{stride * h} bytes, chunk carries {len(payload)}"
+                f"{need} bytes, chunk carries {len(payload)}"
             )
-        rows = np.frombuffer(payload, dtype=np.uint8).reshape(h, stride)
-        bgr = rows[:, : 3 * w].reshape(h, w, 3)
-        if not top_down:
-            bgr = bgr[::-1]  # positive biHeight = bottom-up file order
-        rgb_frames.append(bgr[:, :, ::-1].astype(np.int64))
-    return _frame_rgb_stats(rgb_frames)
+    return [_dib_rgb(payload, 0, w, h, top_down) for _, payload in frames]
 
 
-def _decode_mp4_frames(content: bytes) -> dict:
+def _mp4_frames(content: bytes) -> list:
     """REAL MP4 (ISO BMFF) frame-payload decode — stdlib ``struct`` +
     numpy, no ffmpeg: full box walk (moov → trak → mdia → hdlr 'vide'
     → minf → stbl), genuine sample-table resolution (stsd sample
@@ -1772,7 +1607,8 @@ def _decode_mp4_frames(content: bytes) -> dict:
     offsets → per-sample file positions), then per-sample decode of
     the uncompressed planar ``I420`` tier: Y plane + 2x2-subsampled
     Cb/Cr planes, nearest-neighbor chroma upsample, full-range BT.601
-    (ITU T.871) YCbCr → RGB.
+    (ITU T.871) YCbCr → RGB.  Returns the frames as (h, w, 3) uint8 RGB
+    arrays in sample order.
 
     Compressed codecs (avc1/hev1/mp4v/…) are valid MP4 outside the
     stdlib scope and raise NotImplementedError; corrupt containers
@@ -1946,61 +1782,292 @@ def _decode_mp4_frames(content: bytes) -> dict:
             )
             b = np.clip(np.rint(y + 1.772 * (cb - 128.0)), 0, 255)
             rgb_frames.append(
-                np.stack([r, g, b], axis=-1).astype(np.int64)
+                np.stack([r, g, b], axis=-1).astype(np.uint8)
             )
     if not rgb_frames:
         raise ValueError("MP4 sample tables resolve to zero frames")
-    return _frame_rgb_stats(rgb_frames)
+    return rgb_frames
 
+
+def _wav_samples(content: bytes):
+    """REAL sample decode for PCM16 WAV — stdlib ``wave`` + numpy, no
+    ffmpeg.  The header guards are ``_decode_wav``'s; this adds the
+    sample width and the frame-block volume.  Returns ``(samples,
+    sample_rate)`` with ``samples`` the little-endian int16 frame block
+    as an (n_frames, channels) array.
+
+    Raises ValueError for corrupt payloads (unparseable container,
+    truncated frame block) and NotImplementedError for valid but
+    unsupported encodings (sample widths other than 16-bit; the stdlib
+    module already rejects non-PCM compression as a parse error, which
+    maps to corruption here because the container cannot be walked)."""
+    import io
+    import wave
+
+    import numpy as np
+
+    meta = _decode_wav(content)
+    if meta is None:
+        raise ValueError("carries the RIFF/WAVE magic but does not parse")
+    if meta["bit_depth"] != 16:
+        raise NotImplementedError(
+            f"{meta['bit_depth']}-bit WAV sample decode requires ffmpeg; "
+            "only PCM16 payloads decode stdlib-side"
+        )
+    ch, nf = meta["channels"], meta["n_frames"]
+    with wave.open(io.BytesIO(content)) as w:
+        frames = w.readframes(nf)
+    if len(frames) < 2 * nf * ch:
+        raise ValueError(
+            f"truncated WAV frame block: header declares {nf} frames x "
+            f"{ch} channels (need {2 * nf * ch} bytes, have {len(frames)})"
+        )
+    samples = np.frombuffer(frames, dtype="<i2", count=nf * ch)
+    return samples.reshape(nf, ch), meta["sample_rate"]
+
+
+def _pcm_stats(samples, sample_rate: int) -> dict:
+    """The one reduction from decoded PCM samples ((n_frames, channels)
+    int16) to clip statistics: amplitude sum, sum of squares and
+    extrema over every sample of every channel."""
+    import numpy as np
+
+    s = samples.reshape(-1).astype(np.int64)
+    return {
+        "channels": samples.shape[1],
+        "sample_rate": sample_rate,
+        "n_samples": s.size,
+        "sum_amp": int(s.sum()),
+        "sum_sq": int((s * s).sum()),
+        "min_amp": int(s.min()) if s.size else None,
+        "max_amp": int(s.max()) if s.size else None,
+    }
+
+
+def _fake_media(content: bytes | None) -> dict:
+    w, h, ch = _fake_decode(content)
+    return {"width": w, "height": h, "channels": ch, "bit_depth": 8}
+
+
+def _fake_pixels(content: bytes | None) -> dict:
+    w, h, _ = _fake_decode(content)
+    n = len(content) if content is not None else 0
+    return {
+        "width": w, "height": h, "n_pixels": w * h,
+        "sum_b": n, "sum_g": n, "sum_r": n, "min_byte": 0, "max_byte": 255,
+    }
+
+
+def _fake_samples(content: bytes | None) -> dict:
+    n = len(content) if content is not None else 0
+    return {
+        "channels": 1, "sample_rate": 8000, "n_samples": n,
+        "sum_amp": 0, "sum_sq": n, "min_amp": -1, "max_amp": 1,
+    }
+
+
+PIXEL_SCHEMA = (
+    "media_id long, width int, height int, n_pixels long, "
+    "sum_b long, sum_g long, sum_r long, min_byte int, max_byte int"
+)
 
 VIDEO_FRAME_SCHEMA = (
     "media_id long, width int, height int, n_frames int, n_pixels long, "
     "sum_b long, sum_g long, sum_r long, min_byte int, max_byte int"
 )
 
+SAMPLE_SCHEMA = (
+    "media_id long, channels int, sample_rate int, n_samples long, "
+    "sum_amp long, sum_sq long, min_amp int, max_amp int"
+)
 
-def decode_video_frames(df: DataFrame) -> DataFrame:
-    """Per-video frame-pixel statistics via mapInPandas: Arrow-batched,
-    partition-parallel, row-local (zero shuffles — the same shape as
-    ``decode_pixels``).  AVI BI_RGB 24-bit DIB / MJPG frames and MP4
-    planar I420 samples decode FOR REAL (``_decode_avi_frames`` /
-    ``_decode_mp4_frames``); compressed codecs raise
-    NotImplementedError naming ffmpeg, corrupt containers ValueError.
-    Closes the video half of the declared-fake list (round-14 verdict
-    item 4); the reference has no media surface at all
-    (SURVEY.md §2 — its 252 LoC are ingest/API glue), so this is part
-    of the declared multimodal extension tier."""
+
+class _Codec(NamedTuple):
+    """One payload kind's decode contract, applied by ``_decode_blob``."""
+
+    # sniffed format -> decode function: blob -> decoded value, raising
+    # ValueError (corrupt) or NotImplementedError (unsupported); a None
+    # return (the header decoders' form) counts as corrupt
+    decoders: dict
+    # decoded value -> the kind's statistics dict
+    reduce: Callable
+    # optional library tier for real mode: blob -> decoded value | None
+    tier: Callable | None
+    # fake mode's deterministic stand-in: blob -> statistics dict
+    fake: Callable | None
+    # NotImplementedError text for a payload no decoder or tier takes
+    unsupported: str
+    # mapInPandas output schema; its first column is media_id, the rest
+    # are read from the statistics dict
+    schema: str
+
+
+_MEDIA = _Codec(
+    decoders=_DECODERS,
+    reduce=lambda meta: meta,
+    tier=_pil_decode_media,
+    fake=_fake_media,
+    unsupported=(
+        "real decode for media outside wav/png/bmp/gif/jpeg/avi/mp4 "
+        "requires the optional PIL/ffmpeg tier (absent, or it rejected "
+        "the payload); pass use_fake_decode=True"
+    ),
+    schema=DECODED_SCHEMA,
+)
+
+_PIXELS = _Codec(
+    decoders={
+        "bmp": _bmp_pixels,
+        "png": _png_pixels,
+        "gif": _gif_pixels,
+        "jpeg": _jpeg_pixels,
+    },
+    reduce=lambda img: _frame_rgb_stats([img]),
+    tier=_pil_pixels,
+    fake=_fake_pixels,
+    unsupported=(
+        "real pixel decode outside 24-bit BMP, 8-bit RGB/palette PNG, "
+        "single-frame GIF and baseline JPEG requires the optional PIL "
+        "tier (absent, or it rejected the payload); pass "
+        "use_fake_decode=True"
+    ),
+    schema=PIXEL_SCHEMA,
+)
+
+_FRAMES = _Codec(
+    decoders={"avi": _avi_frames, "mp4": _mp4_frames},
+    reduce=_frame_rgb_stats,
+    tier=None,
+    fake=None,
+    unsupported=(
+        "real frame decode outside AVI (24-bit DIB / MJPG) and MP4 "
+        "(I420) requires ffmpeg"
+    ),
+    schema=VIDEO_FRAME_SCHEMA,
+)
+
+_SAMPLES = _Codec(
+    decoders={"wav": _wav_samples},
+    reduce=lambda decoded: _pcm_stats(*decoded),
+    tier=None,
+    fake=_fake_samples,
+    unsupported=(
+        "real sample decode outside PCM16 WAV requires ffmpeg; pass "
+        "use_fake_decode=True"
+    ),
+    schema=SAMPLE_SCHEMA,
+)
+
+def _decode_blob(blob: bytes | None, codec: _Codec, use_fake_decode: bool) -> dict:
+    """Decode one payload under ``codec``'s contract and return its
+    statistics.  The format comes from ``_sniff_one``.  Fake mode: a
+    ValueError, a NotImplementedError or an unrecognised payload falls
+    back to ``codec.fake``.  Real mode: a ValueError raises; a
+    NotImplementedError or an unrecognised payload tries ``codec.tier``,
+    then raises NotImplementedError."""
+    fmt = _sniff_one(blob)
+    decode = codec.decoders.get(fmt)
+    try:
+        if decode is None:
+            raise NotImplementedError(codec.unsupported)
+        decoded = decode(blob)
+        if decoded is None:
+            raise ValueError(
+                f"unparseable {fmt} payload: carries the {fmt} magic but "
+                "its header does not decode"
+            )
+    except (ValueError, NotImplementedError) as exc:
+        if use_fake_decode:
+            return codec.fake(blob)
+        if isinstance(exc, ValueError) or codec.tier is None:
+            raise
+        decoded = codec.tier(blob)
+        if decoded is None:
+            raise
+    return codec.reduce(decoded)
+
+
+def _decode_map(
+    df: DataFrame, codec: _Codec, use_fake_decode: bool = False
+) -> DataFrame:
+    """``_decode_blob`` over every (media_id, content) row via
+    mapInPandas: Arrow-batched, partition-parallel, row-local, constant
+    memory per batch; one output row per input row in ``codec.schema``."""
+    columns = [field.split()[0] for field in codec.schema.split(", ")]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 blob = bytes(content) if content is not None else None
-                if blob is not None and len(blob) >= 12 and blob[:4] == b"RIFF":
-                    stats = _decode_avi_frames(blob)
-                elif blob is not None and len(blob) >= 12 and blob[4:8] == b"ftyp":
-                    stats = _decode_mp4_frames(blob)
-                else:
-                    raise ValueError(
-                        "video frame decode needs an AVI or MP4 payload"
-                    )
+                stats = _decode_blob(blob, codec, use_fake_decode)
+                rows.append((mid, *(stats[c] for c in columns[1:])))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(batches, schema=codec.schema)
+
+
+def decode_media(df: DataFrame, use_fake_decode: bool = True) -> DataFrame:
+    """Container metadata per payload via mapInPandas: Arrow-batched,
+    partition-parallel, constant memory per batch.  Every row keeps its
+    media_type and gets its byte length and md5.
+
+    Headers decode for real on both paths, zero dependencies: WAV
+    (channels, sample rate, frames, sample width, duration), PNG / BMP /
+    GIF / JPEG (width, height, channels, bit depth), AVI (geometry,
+    frame count, duration) and MP4 (movie duration).  Everything else
+    follows ``_decode_blob``'s policy: a recognised container whose
+    header does not parse raises ValueError("unparseable <fmt> …") in
+    real mode, any other payload goes to the optional PIL tier and then
+    raises NotImplementedError; fake mode substitutes the deterministic
+    fake for both, so one bad blob never kills the batch."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import hashlib
+
+        for pdf in it:
+            rows = []
+            for mid, mtype, content in zip(
+                pdf["media_id"], pdf["media_type"], pdf["content"]
+            ):
+                meta = _decode_blob(content, _MEDIA, use_fake_decode)
                 rows.append(
                     (
-                        mid, stats["width"], stats["height"],
-                        stats["n_frames"], stats["n_pixels"],
-                        stats["sum_b"], stats["sum_g"], stats["sum_r"],
-                        stats["min_byte"], stats["max_byte"],
+                        mid,
+                        mtype,
+                        len(content) if content is not None else 0,
+                        hashlib.md5(content).hexdigest()
+                        if content is not None
+                        else None,
+                        meta["width"], meta["height"],
+                        meta["channels"], meta["bit_depth"],
+                        meta.get("sample_rate"), meta.get("n_frames"),
+                        meta.get("duration_ms"),
                     )
                 )
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "media_id", "width", "height", "n_frames", "n_pixels",
-                    "sum_b", "sum_g", "sum_r", "min_byte", "max_byte",
+                    "media_id", "media_type", "byte_len", "sha",
+                    "width", "height", "channels", "bit_depth",
+                    "sample_rate", "n_frames", "duration_ms",
                 ],
             )
 
-    return df.mapInPandas(batches, schema=VIDEO_FRAME_SCHEMA)
+    return df.mapInPandas(batches, schema=DECODED_SCHEMA)
+
+
+def decode_video_frames(df: DataFrame) -> DataFrame:
+    """Per-video frame-pixel statistics (real mode only): AVI 24-bit
+    DIB / MJPG frames and MP4 planar I420 samples decode for real
+    (``_avi_frames`` / ``_mp4_frames``) and reduce through
+    ``_frame_rgb_stats``.  A corrupt container raises ValueError; a
+    compressed codec, or a payload that is neither AVI nor MP4, raises
+    NotImplementedError (there is no optional tier for this kind).
+    Row-local, zero shuffles.  The reference has no media surface at
+    all (SURVEY.md §2 — its 252 LoC are ingest/API glue), so this is
+    part of the declared multimodal extension tier."""
+    return _decode_map(df, _FRAMES)
 
 
 def decode_pixels(df: DataFrame, use_fake_decode: bool = True) -> DataFrame:
@@ -2008,106 +2075,26 @@ def decode_pixels(df: DataFrame, use_fake_decode: bool = True) -> DataFrame:
     partition-parallel, constant memory per batch.
 
     Uncompressed 24-bit BMP, 8-bit RGB/palette PNG (plain or Adam7),
-    single-frame palette GIF, and baseline 8-bit grayscale/4:4:4 JPEG
-    decode FOR REAL on both paths (stdlib struct + zlib + numpy + a
-    genuine LZW decoder + a genuine Huffman-entropy + IDCT baseline
-    JPEG decoder — see ``_decode_bmp_pixels`` / ``_decode_png_pixels``
-    / ``_decode_gif_pixels`` / ``_decode_jpeg_pixels``); every other
-    payload needs PIL/ffmpeg
-    (absent here), so in fake mode the deterministic byte-length fake
-    stands in and in real mode the decode raises NotImplementedError
-    naming the missing library (ValueError for a payload that is
-    corrupt rather than unsupported)."""
+    single-frame GIF and baseline JPEG (gray or YCbCr at 4:4:4, 4:2:2,
+    4:4:0, 4:2:0) decode for real on both paths (``_bmp_pixels`` /
+    ``_png_pixels`` / ``_gif_pixels`` / ``_jpeg_pixels``) and reduce
+    through ``_frame_rgb_stats``.  Everything else follows
+    ``_decode_blob``'s policy: fake mode substitutes the deterministic
+    byte-length fake for a corrupt, unsupported or unrecognised
+    payload; real mode raises ValueError for a corrupt one and tries
+    the optional PIL tier for the others before raising
+    NotImplementedError."""
+    return _decode_map(df, _PIXELS, use_fake_decode)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                stats = None
-                blob = bytes(content) if content is not None else None
-                if blob is not None and blob[:2] == b"BM":
-                    try:
-                        stats = _decode_bmp_pixels(blob)
-                    except NotImplementedError:
-                        # valid-but-unsupported encoding: REAL mode may
-                        # try the optional PIL tier; fake mode must NOT
-                        # (the deterministic fake cannot depend on what
-                        # libraries the box happens to have)
-                        if not use_fake_decode:
-                            stats = _pil_decode_pixels(blob)
-                            if stats is None:
-                                raise
-                    except ValueError:
-                        if not use_fake_decode:
-                            raise
-                elif blob is not None and blob[:8] == b"\x89PNG\r\n\x1a\n":
-                    try:
-                        stats = _decode_png_pixels(blob)
-                    except NotImplementedError:
-                        if not use_fake_decode:
-                            stats = _pil_decode_pixels(blob)
-                            if stats is None:
-                                raise
-                    except ValueError:
-                        if not use_fake_decode:
-                            raise
-                elif blob is not None and blob[:6] in (b"GIF89a", b"GIF87a"):
-                    try:
-                        stats = _decode_gif_pixels(blob)
-                    except NotImplementedError:
-                        if not use_fake_decode:
-                            stats = _pil_decode_pixels(blob)
-                            if stats is None:
-                                raise
-                    except ValueError:
-                        if not use_fake_decode:
-                            raise
-                elif blob is not None and blob[:3] == b"\xff\xd8\xff":
-                    try:
-                        stats = _decode_jpeg_pixels(blob)
-                    except NotImplementedError:
-                        # valid baseline-scope miss (progressive, 12-bit,
-                        # subsampled): the optional PIL tier may decode it
-                        if not use_fake_decode:
-                            stats = _pil_decode_pixels(blob)
-                            if stats is None:
-                                raise
-                    except ValueError:
-                        if not use_fake_decode:
-                            raise
-                elif not use_fake_decode:
-                    stats = _pil_decode_pixels(blob)
-                    if stats is None:
-                        raise NotImplementedError(
-                            "real pixel decode outside uncompressed 24-bit "
-                            "BMP / 8-bit RGB PNG requires the optional PIL/"
-                            "ffmpeg tier (not installed); pass "
-                            "use_fake_decode=True"
-                        )
-                if stats is None:
-                    w, h, _ = _fake_decode(blob)
-                    n = len(blob) if blob is not None else 0
-                    stats = {
-                        "width": w, "height": h, "n_pixels": w * h,
-                        "sum_b": n, "sum_g": n, "sum_r": n,
-                        "min_byte": 0, "max_byte": 255,
-                    }
-                rows.append(
-                    (
-                        mid, stats["width"], stats["height"],
-                        stats["n_pixels"], stats["sum_b"], stats["sum_g"],
-                        stats["sum_r"], stats["min_byte"], stats["max_byte"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "sum_b", "sum_g", "sum_r", "min_byte", "max_byte",
-                ],
-            )
 
-    return df.mapInPandas(batches, schema=PIXEL_SCHEMA)
+def decode_samples(df: DataFrame, use_fake_decode: bool = True) -> DataFrame:
+    """Per-clip audio sample statistics via mapInPandas — the audio twin
+    of ``decode_pixels``.  PCM16 WAV decodes for real on both paths
+    (``_wav_samples``, reduced by ``_pcm_stats``); every other codec
+    needs ffmpeg, so fake mode substitutes the deterministic fake and
+    real mode raises NotImplementedError (ValueError for corrupt
+    WAV)."""
+    return _decode_map(df, _SAMPLES, use_fake_decode)
 
 
 def synth_bmp_pixel_corpus(documents: DataFrame) -> DataFrame:
@@ -2269,7 +2256,7 @@ def png_pixel_summary(documents: DataFrame) -> DataFrame:
     shrunk: stdlib ``zlib`` owns inflate): synthesize genuine 8-bit RGB
     PNGs with valid zlib IDAT streams (adler32 verified) and real
     scanline filters, decode with ``decode_pixels(use_fake_decode=
-    False)`` (chunk walk + inflate + genuine None/Sub/Up unfilter), and
+    False)`` (chunk walk + inflate + the genuine five-filter unfilter), and
     return per-image channel sums and byte extrema.  The DuckDB oracle
     replicates the construction's closed-form raw pixel arithmetic."""
     return decode_pixels(
@@ -2619,9 +2606,7 @@ def gif_pixel_summary(documents: DataFrame) -> DataFrame:
     sub-block reassembly, the GENUINE variable-width LZW decode, and
     the global-color-table map.  The DuckDB oracle replicates the
     construction's index → palette closed form, pinning every channel
-    sum and byte extremum end-to-end.  GIF pixels leave the
-    declared-fake list; JPEG pixels and MP4/AVI frames remain the
-    honest NotImplementedError tier."""
+    sum and byte extremum end-to-end."""
     return decode_pixels(
         synth_gif_pixel_corpus(documents), use_fake_decode=False
     ).transform(_ordered_once)
@@ -2922,8 +2907,7 @@ def jpeg_pixel_summary(documents: DataFrame) -> DataFrame:
     EXTEND + EOB), dequantization, IDCT, level shift, MCU raster.  The
     DuckDB oracle replicates the construction's closed form (block k's
     gray is D + 128 even / D − E + 128 odd), pinning every channel sum
-    and byte extremum end-to-end.  JPEG pixels leave the declared-fake
-    list; MP4/AVI frames remain the honest NotImplementedError tier."""
+    and byte extremum end-to-end."""
     return decode_pixels(
         synth_jpeg_pixel_corpus(documents), use_fake_decode=False
     ).transform(_ordered_once)
@@ -3018,14 +3002,11 @@ def avi_frame_summary(documents: DataFrame) -> DataFrame:
     ).transform(_ordered_once)
 
 
-def _pyav_decode_frames(content: bytes) -> dict | None:
-    """Frame-pixel stats via the optional PyAV (ffmpeg) tier: None when
-    PyAV is absent or cannot open the payload (the caller's guard then
-    fires).  Frames are demuxed/decoded by libavformat/libavcodec and
-    converted to RGB ndarrays, then reduced with the SAME
-    ``_frame_rgb_stats`` arithmetic as the stdlib path — on an equipped
-    box the tier is hash-checked against the stdlib queries' shared
-    closed-form oracles."""
+def _pyav_frames(content: bytes) -> list | None:
+    """The optional PyAV (ffmpeg) tier's frame decode: the frames as
+    (h, w, 3) uint8 RGB arrays, demuxed/decoded by
+    libavformat/libavcodec, or None when PyAV is absent, cannot open the
+    payload, or finds no frame."""
     av_mod = _optional_av()
     if av_mod is None or content is None:
         return None
@@ -3034,14 +3015,12 @@ def _pyav_decode_frames(content: bytes) -> dict | None:
     try:
         with av_mod.open(io.BytesIO(content)) as container:
             frames = [
-                f.to_ndarray(format="rgb24").astype("int64")
+                f.to_ndarray(format="rgb24")
                 for f in container.decode(video=0)
             ]
     except Exception:
         return None
-    if not frames:
-        return None
-    return _frame_rgb_stats(frames)
+    return frames or None
 
 
 def pyav_frame_summary(documents: DataFrame) -> DataFrame:
@@ -3050,7 +3029,8 @@ def pyav_frame_summary(documents: DataFrame) -> DataFrame:
     `multimodal_pil_pixel_decode` pattern extended to video, round-15
     verdict item 6): decode the SAME spec-valid uncompressed-DIB AVI
     corpus as ``avi_frame_summary``, but FORCE the decode through the
-    PyAV/ffmpeg tier instead of the stdlib RIFF walk.  BI_RGB rawvideo
+    PyAV/ffmpeg tier (``decode_video_frames``' contract with no stdlib
+    decoder) instead of the stdlib RIFF walk.  BI_RGB rawvideo
     is bit-exact in ffmpeg (no IDCT, no color-space approximation), so
     the closed-form DuckDB oracle is shared with the stdlib query
     verbatim and on an equipped box libavformat's RIFF demux +
@@ -3060,39 +3040,16 @@ def pyav_frame_summary(documents: DataFrame) -> DataFrame:
 
     Scale: same mapInPandas shape as ``decode_video_frames`` —
     Arrow-batched, partition-parallel, row-local, zero shuffles."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                stats = _pyav_decode_frames(
-                    bytes(content) if content is not None else None
-                )
-                if stats is None:
-                    raise NotImplementedError(
-                        "multimodal_pyav_frame_decode requires the optional "
-                        "PyAV tier (not installed, or payload rejected)"
-                    )
-                rows.append(
-                    (
-                        mid, stats["width"], stats["height"],
-                        stats["n_frames"], stats["n_pixels"],
-                        stats["sum_b"], stats["sum_g"], stats["sum_r"],
-                        stats["min_byte"], stats["max_byte"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_frames", "n_pixels",
-                    "sum_b", "sum_g", "sum_r", "min_byte", "max_byte",
-                ],
-            )
-
-    return (
-        synth_avi_frame_corpus(documents)
-        .mapInPandas(batches, schema=VIDEO_FRAME_SCHEMA)
-        .transform(_ordered_once)
+    forced = _FRAMES._replace(
+        decoders={},
+        tier=_pyav_frames,
+        unsupported=(
+            "multimodal_pyav_frame_decode requires the optional PyAV tier "
+            "(not installed, or payload rejected)"
+        ),
+    )
+    return _decode_map(synth_avi_frame_corpus(documents), forced).transform(
+        _ordered_once
     )
 
 
@@ -3202,8 +3159,9 @@ def pil_pixel_summary(documents: DataFrame) -> DataFrame:
     registered only when PIL is importable — round-12 verdict item 6):
     decode the SAME spec-valid synthetic PNG corpus as
     ``png_pixel_summary``, but FORCE the decode through the PIL tier
-    (``_pil_decode_pixels``: ``Image.open`` + RGB numpy stats) instead
-    of the stdlib zlib path.  The closed-form DuckDB oracle is shared
+    (``decode_pixels``' contract with no stdlib decoder: ``Image.open``
+    + RGB convert, reduced by ``_frame_rgb_stats``) instead of the
+    stdlib zlib path.  The closed-form DuckDB oracle is shared
     with the stdlib query, so on a PIL-equipped box the optional tier
     is hash-checked end-to-end — PIL's inflate, CRC verification, and
     unfilter must reproduce the construction arithmetic exactly, not
@@ -3214,44 +3172,21 @@ def pil_pixel_summary(documents: DataFrame) -> DataFrame:
     Scale: same mapInPandas shape as ``decode_pixels`` — Arrow-batched,
     partition-parallel, constant memory per batch; the PNG construction
     side stays pure built-in byte expressions."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                stats = _pil_decode_pixels(
-                    bytes(content) if content is not None else None
-                )
-                if stats is None:
-                    raise NotImplementedError(
-                        "multimodal_pil_pixel_decode requires the optional "
-                        "PIL tier (not installed, or payload rejected)"
-                    )
-                rows.append(
-                    (
-                        mid, stats["width"], stats["height"],
-                        stats["n_pixels"], stats["sum_b"], stats["sum_g"],
-                        stats["sum_r"], stats["min_byte"], stats["max_byte"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_pixels",
-                    "sum_b", "sum_g", "sum_r", "min_byte", "max_byte",
-                ],
-            )
-
-    return (
-        synth_png_pixel_corpus(documents)
-        .mapInPandas(batches, schema=PIXEL_SCHEMA)
-        .transform(_ordered_once)
+    forced = _PIXELS._replace(
+        decoders={},
+        unsupported=(
+            "multimodal_pil_pixel_decode requires the optional PIL tier "
+            "(not installed, or payload rejected)"
+        ),
+    )
+    return _decode_map(synth_png_pixel_corpus(documents), forced).transform(
+        _ordered_once
     )
 
 
 def bmp_pixel_summary(documents: DataFrame) -> DataFrame:
-    """Driver-checkable REAL pixel-payload decode — the one payload
-    format that decodes for real without PIL (round-8 verdict item 5):
+    """Driver-checkable REAL pixel-payload decode — the first payload
+    format that decoded for real without PIL (round-8 verdict item 5):
     synthesize genuine uncompressed 24-bit BMPs (headers + pixel
     arrays) from the documents table, decode the pixel arrays with
     ``decode_pixels(use_fake_decode=False)`` (stdlib struct + numpy,
@@ -3261,116 +3196,6 @@ def bmp_pixel_summary(documents: DataFrame) -> DataFrame:
     return decode_pixels(
         synth_bmp_pixel_corpus(documents), use_fake_decode=False
     ).transform(_ordered_once)
-
-
-SAMPLE_SCHEMA = (
-    "media_id long, channels int, sample_rate int, n_samples long, "
-    "sum_amp long, sum_sq long, min_amp int, max_amp int"
-)
-
-
-def _decode_wav_samples(content: bytes) -> dict:
-    """REAL sample-payload decode for PCM16 WAV — stdlib ``wave`` +
-    numpy, no ffmpeg: read the frame block, reinterpret as little-endian
-    int16, and reduce amplitude sums / squares / extrema vectorized.
-
-    Raises ValueError for corrupt payloads (unparseable container,
-    truncated frame block) and NotImplementedError for valid-but-
-    unsupported encodings (sample widths other than 16-bit; the stdlib
-    module already rejects non-PCM compression as a parse error, which
-    maps to corruption here because the container cannot be walked)."""
-    import io
-    import wave
-
-    import numpy as np
-
-    try:
-        with wave.open(io.BytesIO(content)) as w:
-            ch, sr, nf, sw = (
-                w.getnchannels(),
-                w.getframerate(),
-                w.getnframes(),
-                w.getsampwidth(),
-            )
-            frames = w.readframes(nf)
-    except Exception as exc:
-        raise ValueError(
-            f"carries the RIFF/WAVE magic but does not parse: {exc}"
-        ) from exc
-    if sw != 2:
-        raise NotImplementedError(
-            f"{sw * 8}-bit WAV sample decode requires ffmpeg; only PCM16 "
-            "payloads decode stdlib-side"
-        )
-    n = nf * ch
-    if len(frames) < n * 2:
-        raise ValueError(
-            f"truncated WAV frame block: header declares {nf} frames x "
-            f"{ch} channels (need {n * 2} bytes, have {len(frames)})"
-        )
-    samples = np.frombuffer(frames, dtype="<i2", count=n).astype(np.int64)
-    return {
-        "channels": ch,
-        "sample_rate": sr,
-        "n_samples": n,
-        "sum_amp": int(samples.sum()),
-        "sum_sq": int((samples * samples).sum()),
-        "min_amp": int(samples.min()) if n else None,
-        "max_amp": int(samples.max()) if n else None,
-    }
-
-
-def decode_samples(df: DataFrame, use_fake_decode: bool = True) -> DataFrame:
-    """Per-clip audio sample statistics via mapInPandas — the audio twin
-    of ``decode_pixels``.  PCM16 WAV decodes FOR REAL on both paths
-    (stdlib ``wave`` + numpy); every other codec needs ffmpeg, so fake
-    mode substitutes the deterministic fake and real mode raises
-    NotImplementedError (ValueError for corrupt WAV)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                stats = None
-                blob = bytes(content) if content is not None else None
-                if (
-                    blob is not None
-                    and blob[:4] == b"RIFF"
-                    and blob[8:12] == b"WAVE"
-                ):
-                    try:
-                        stats = _decode_wav_samples(blob)
-                    except (ValueError, NotImplementedError):
-                        if not use_fake_decode:
-                            raise
-                elif not use_fake_decode:
-                    raise NotImplementedError(
-                        "real sample decode outside PCM16 WAV requires "
-                        "ffmpeg; pass use_fake_decode=True"
-                    )
-                if stats is None:
-                    n = len(blob) if blob is not None else 0
-                    stats = {
-                        "channels": 1, "sample_rate": 8000, "n_samples": n,
-                        "sum_amp": 0, "sum_sq": n, "min_amp": -1,
-                        "max_amp": 1,
-                    }
-                rows.append(
-                    (
-                        mid, stats["channels"], stats["sample_rate"],
-                        stats["n_samples"], stats["sum_amp"],
-                        stats["sum_sq"], stats["min_amp"], stats["max_amp"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "channels", "sample_rate", "n_samples",
-                    "sum_amp", "sum_sq", "min_amp", "max_amp",
-                ],
-            )
-
-    return df.mapInPandas(batches, schema=SAMPLE_SCHEMA)
 
 
 def synth_wav_corpus(documents: DataFrame) -> DataFrame:
@@ -3497,8 +3322,9 @@ def wav_frame_features(documents: DataFrame, frame: int = 32) -> DataFrame:
     Clips synthesize via :func:`synth_wav_corpus` (samples are a closed
     form of doc_id, so the oracle recomputes every FRAME feature from
     arithmetic — end-to-end pinned through a genuine container decode);
-    decode is stdlib ``wave`` + numpy inside ONE mapInPandas stage,
-    per-frame sums vectorized by reshape.  Only FULL frames emit; the
+    decode is ``_wav_samples`` (stdlib ``wave`` + numpy, with its PCM16
+    and volume guards) inside ONE mapInPandas stage, per-frame sums
+    vectorized by reshape.  Only FULL frames emit; the
     tail remainder is visible as n_samples vs frame-count accounting
     (cite: reference has no audio path — SURVEY.md §2.10 extension).
     Features are integer-exact (int16 amplitudes, int64 sums), so rows
@@ -3511,30 +3337,21 @@ def wav_frame_features(documents: DataFrame, frame: int = 32) -> DataFrame:
     corpus = synth_wav_corpus(documents)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
         import numpy as np
 
         for pdf in it:
             rows = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
-                with wave.open(io.BytesIO(bytes(content))) as w:
-                    raw = w.readframes(w.getnframes())
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                nf = len(s) // frame
-                for f in range(nf):
-                    fr = s[f * frame : (f + 1) * frame]
-                    rows.append(
-                        (
-                            int(mid),
-                            f,
-                            frame,
-                            int(fr.sum()),
-                            int((fr * fr).sum()),
-                            int(((fr[:-1] * fr[1:]) < 0).sum()),
-                        )
-                    )
+                s = _wav_samples(bytes(content))[0].reshape(-1)
+                nf = s.size // frame
+                fr = s[: nf * frame].astype(np.int64).reshape(nf, frame)
+                sums = fr.sum(axis=1)
+                sq = (fr * fr).sum(axis=1)
+                zc = ((fr[:, :-1] * fr[:, 1:]) < 0).sum(axis=1)
+                rows.extend(
+                    (int(mid), f, frame, int(sums[f]), int(sq[f]), int(zc[f]))
+                    for f in range(nf)
+                )
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -3564,56 +3381,47 @@ def bmp_resized_summary(documents: DataFrame, factor: int = 2) -> DataFrame:
 
     The clips synthesize via :func:`synth_bmp_pixel_corpus`, whose
     pixel byte at (x, y, c) is the closed form
-    ``(doc_id + 3x + 5y + 11c) % 256`` — so the oracle recomputes every
-    post-resize statistic from arithmetic over the sampled (even-x,
-    even-y) grid, pinning the decode → stride-unpack → subsample chain
-    end-to-end.  Row order is file order and all statistics are
-    orientation-free, so bottom-up storage is irrelevant.
+    ``(doc_id + 3x + 5y + 11c) % 256`` with y the FILE row — so the
+    oracle recomputes every post-resize statistic from arithmetic over
+    the sampled (even-x, even-y) grid, pinning the decode → stride-unpack
+    → subsample chain end-to-end.  The kept rows are the file's rows 0,
+    factor, 2·factor, …: image rows ``r ≡ (h-1) mod factor`` of a
+    bottom-up file, ``img[::factor]`` of a top-down one.
 
-    Scale: one mapInPandas stage (stdlib struct + numpy slicing —
-    ``grid[::f, ::f]`` is a view, no copy), zero shuffles before the
+    Scale: one mapInPandas stage (``_bmp_pixels`` + numpy slicing —
+    ``img[r0::f, ::f]`` is a view, no copy), zero shuffles before the
     ordered output."""
     if factor < 1:
         raise ValueError("bmp_resized_summary: factor must be >= 1")
     corpus = synth_bmp_pixel_corpus(documents)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
         import numpy as np
 
-        rows_out = []
         for pdf in it:
+            rows = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
                 blob = bytes(content)
-                (offset,) = struct.unpack("<I", blob[10:14])
-                w, h = struct.unpack("<ii", blob[18:26])
-                stride = (w * 3 + 3) & ~3
-                grid = (
-                    np.frombuffer(
-                        blob, dtype=np.uint8, count=stride * h, offset=offset
-                    )
-                    .reshape(h, stride)[:, : w * 3]
-                    .reshape(h, w, 3)
-                )
-                small = grid[::factor, ::factor, :].astype(np.int64)
-                rows_out.append(
+                img = _bmp_pixels(blob)
+                h, w, _ = img.shape
+                r0 = 0 if _decode_bmp(blob)["top_down"] else (h - 1) % factor
+                small = img[r0::factor, ::factor].astype(np.int64)
+                rows.append(
                     (
                         int(mid), w, h, small.shape[1], small.shape[0],
-                        int(small[:, :, 0].sum()), int(small[:, :, 1].sum()),
-                        int(small[:, :, 2].sum()),
+                        int(small[:, :, 2].sum()), int(small[:, :, 1].sum()),
+                        int(small[:, :, 0].sum()),
                         int(small.min()), int(small.max()),
                     )
                 )
             yield pd.DataFrame(
-                rows_out,
+                rows,
                 columns=[
                     "media_id", "in_width", "in_height", "out_width",
                     "out_height", "sum_b", "sum_g", "sum_r",
                     "min_byte", "max_byte",
                 ],
             )
-            rows_out = []
 
     return corpus.mapInPandas(batches, RESIZE_SCHEMA).transform(_ordered_once)
 
@@ -3682,78 +3490,31 @@ def synth_gif_corpus(documents: DataFrame) -> DataFrame:
 
 
 def gif_frame_census(df: DataFrame) -> DataFrame:
-    """REAL GIF block-stream walk (`multimodal_gif_frame_census`):
+    """REAL GIF block-stream census (`multimodal_gif_frame_census`):
     frames, extensions, animation duration, and LZW payload volume per
     media — the census an animation-aware pipeline runs before
-    deciding frame-sampling rates.  Pure stdlib: header + logical
-    screen descriptor, optional global color table, then the block
-    loop — 0x21 extensions (graphic-control delays are read from the
-    0xF9 block), 0x2C image descriptors with optional local color
-    tables and LZW sub-block chains, 0x3B trailer.  Corrupt payloads
-    (bad magic, truncation, unknown block ids) raise ValueError — the
-    walk never guesses.
+    deciding frame-sampling rates.  The walk is ``_gif_blocks``, the
+    one the pixel decode uses: graphic-control delays are read from
+    the 0xF9 extensions, and the stream must end in a trailer.  Corrupt
+    payloads (bad magic, truncation, unknown block ids, no trailer)
+    raise ValueError — the walk never guesses.
 
     Arrow-batched mapInPandas, row-local, zero shuffles."""
 
     def _census_one(content: bytes) -> tuple:
-        if content is None or len(content) < 14:
-            raise ValueError("GIF payload too short for header + LSD")
-        if content[:6] not in (b"GIF89a", b"GIF87a"):
-            raise ValueError("bad GIF magic")
-        packed = content[10]
-        pos = 13
-        if packed & 0x80:  # global color table
-            pos += 3 * (1 << ((packed & 0x07) + 1))
         frames = exts = data_bytes = total_delay = 0
-
-        def skip_subblocks(p: int, count_data: bool) -> int:
-            nonlocal data_bytes
-            while True:
-                if p >= len(content):
-                    raise ValueError("truncated GIF sub-block chain")
-                ln = content[p]
-                p += 1
-                if ln == 0:
-                    return p
-                if count_data:
-                    data_bytes += ln
-                p += ln
-
-        while True:
-            if pos >= len(content):
-                raise ValueError("GIF stream ends without trailer")
-            block = content[pos]
-            if block == 0x3B:  # trailer
-                break
-            if block == 0x21:  # extension
-                exts += 1
-                body = pos + 2
-                if body >= len(content):
-                    raise ValueError("truncated GIF extension")
-                label = content[pos + 1]
-                if label == 0xF9:
-                    if body + 4 > len(content):
-                        raise ValueError(
-                            "truncated GIF graphic-control extension"
-                        )
-                    if content[body] >= 4:
-                        total_delay += content[body + 2] | (
-                            content[body + 3] << 8
-                        )
-                pos = skip_subblocks(body, count_data=False)
-            elif block == 0x2C:  # image descriptor
+        for block, head, data in _gif_blocks(content):
+            if block == 0x3B:
+                return frames, exts, data_bytes, total_delay
+            if block == 0x2C:
                 frames += 1
-                if pos + 10 > len(content):
-                    raise ValueError("truncated GIF image descriptor")
-                ipacked = content[pos + 9]
-                pos += 10
-                if ipacked & 0x80:  # local color table
-                    pos += 3 * (1 << ((ipacked & 0x07) + 1))
-                pos += 1  # LZW minimum code size
-                pos = skip_subblocks(pos, count_data=True)
-            else:
-                raise ValueError(f"unknown GIF block id 0x{block:02x}")
-        return frames, exts, data_bytes, total_delay
+                data_bytes += len(data)
+                continue
+            exts += 1
+            # graphic control: block size 4 = packed, delay (LE16), key
+            if head == 0xF9 and data and len(data[0]) >= 4:
+                total_delay += data[0][1] | (data[0][2] << 8)
+        raise ValueError("GIF stream ends without trailer")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -3836,23 +3597,18 @@ def wav_silence_runs(documents: DataFrame, threshold: int = 1000) -> DataFrame:
     the genuine container decode, int16 unpack, and run-length scan
     are pinned end-to-end.  All outputs are integer-exact.
 
-    Scale: row-local decode + numpy run-length inside ONE mapInPandas
-    stage; one output row per clip, no shuffle before the ordered
+    Scale: row-local decode (``_wav_samples``) + numpy run-length inside
+    ONE mapInPandas stage; one output row per clip, no shuffle before the ordered
     output."""
     corpus = synth_wav_corpus(documents)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
         import numpy as np
 
         for pdf in it:
             rows = []
             for mid, content in zip(pdf["media_id"], pdf["content"]):
-                with wave.open(io.BytesIO(bytes(content))) as w:
-                    raw = w.readframes(w.getnframes())
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+                s = _wav_samples(bytes(content))[0].reshape(-1).astype(np.int64)
                 sil = np.abs(s) < threshold
                 # run boundaries: a silent sample whose predecessor is
                 # not silent starts a run
@@ -3894,8 +3650,8 @@ def image_channel_histogram(
     Clips synthesize via :func:`synth_bmp_pixel_corpus` (pixel byte =
     (doc_id + 3x + 5y + 11c) % 256), so the DuckDB oracle recomputes
     every bin count from arithmetic over the (doc, x, y) grid — the
-    genuine container decode, stride unpack, and binning are pinned
-    end-to-end.  Integer-exact.
+    genuine container decode (``_bmp_pixels``, with every BMP guard),
+    stride unpack, and binning are pinned end-to-end.  Integer-exact.
 
     Scale: row-local decode + per-BATCH partial histograms inside ONE
     mapInPandas stage (np.bincount per channel — the shuffle carries
@@ -3910,11 +3666,9 @@ def image_channel_histogram(
         for pdf in it:
             acc = {c: np.zeros(n_bins, dtype=np.int64) for c in "bgr"}
             for content in pdf["content"]:
-                meta = _decode_bmp_pixels_raw(bytes(content))
-                for ci, c in enumerate("bgr"):
-                    acc[c] += np.bincount(
-                        meta[:, ci] // width, minlength=n_bins
-                    )
+                px = _bmp_pixels(bytes(content)).reshape(-1, 3)
+                for ci, c in enumerate("rgb"):
+                    acc[c] += np.bincount(px[:, ci] // width, minlength=n_bins)
             rows = [
                 (c, b, int(acc[c][b]))
                 for c in "bgr"
@@ -3931,30 +3685,3 @@ def image_channel_histogram(
         .where(F.col("n_pixels") > 0)
         .orderBy("channel", "bin")
     )
-
-
-def _decode_bmp_pixels_raw(content: bytes):
-    """The pixel matrix behind :func:`_decode_bmp_pixels` — (n_pixels,
-    3) uint8 BGR array after the same header walk, stride slice, and
-    guard set (shared decode contract; summaries and histograms must
-    never drift)."""
-    import struct
-
-    import numpy as np
-
-    meta = _decode_bmp(content)
-    if meta is None:
-        raise ValueError("carries the BM magic but its header does not decode")
-    if meta["bit_depth"] != 24:
-        raise NotImplementedError(
-            f"{meta['bit_depth']}-bpp BMP pixel decode requires PIL"
-        )
-    (offset,) = struct.unpack("<I", content[10:14])
-    w, h = meta["width"], meta["height"]
-    stride = (w * 3 + 3) & ~3
-    if len(content) < offset + stride * h:
-        raise ValueError("truncated BMP pixel array")
-    rows = np.frombuffer(
-        content, dtype=np.uint8, count=stride * h, offset=offset
-    ).reshape(h, stride)[:, : w * 3]
-    return rows.reshape(-1, 3)

@@ -24,6 +24,11 @@ from parcial_bigdata_spark.operators import multimodal as mm
 ZIGZAG = mm._JPEG_ZIGZAG
 
 
+def _jpeg_stats(blob):
+    """Decode one JPEG and reduce it the way ``decode_pixels`` does."""
+    return mm._frame_rgb_stats([mm._jpeg_pixels(blob)])
+
+
 # ---------------------------------------------------------------- encoder
 
 def _canon_codes(bits, vals):
@@ -248,7 +253,7 @@ def test_jpeg_gray_ac_golden():
     ]
     w, h = 24, 16
     blob = _make_jpeg_full(w, h, [blocks], QUANT_REAL)
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _gray_stats(_ref_gray_image(w, h, blocks, QUANT_REAL))
     assert (stats["width"], stats["height"], stats["n_pixels"]) == (w, h, w * h)
     assert stats["sum_r"] == stats["sum_g"] == stats["sum_b"] == ref["sum"]
@@ -262,7 +267,7 @@ def test_jpeg_mcu_crop():
     blocks = [_block(10, [(1, 2)]), _block(-5), _block(30), _block(0, [(2, 1)])]
     w, h = 13, 11  # 2x2 block grid, cropped
     blob = _make_jpeg_full(w, h, [blocks], QUANT_REAL)
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _gray_stats(_ref_gray_image(w, h, blocks, QUANT_REAL))
     assert (stats["width"], stats["height"], stats["n_pixels"]) == (w, h, w * h)
     assert stats["sum_r"] == ref["sum"]
@@ -281,7 +286,7 @@ def test_jpeg_byte_stuffing_roundtrip():
     blob = _make_jpeg_full(w, h, [blocks], [1] * 64)
     scan_start = blob.index(b"\xff\xda") + 10  # marker + 8-byte payload
     assert b"\xff\x00" in blob[scan_start:-2], "fixture lost its stuffing"
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _gray_stats(_ref_gray_image(w, h, blocks, [1] * 64))
     assert stats["sum_r"] == ref["sum"]
     assert stats["pos_weighted"] == ref["pos_weighted"]
@@ -297,7 +302,7 @@ def test_jpeg_restart_markers():
     w, h = 16, 24  # 2 wide x 3 high, restart every 2 MCUs
     blob = _make_jpeg_full(w, h, [blocks], [8] + [1] * 63, restart=2)
     assert b"\xff\xd0" in blob and b"\xff\xd1" in blob
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _gray_stats(_ref_gray_image(w, h, blocks, [8] + [1] * 63))
     assert stats["sum_r"] == ref["sum"]
     assert stats["pos_weighted"] == ref["pos_weighted"]
@@ -312,7 +317,7 @@ def test_jpeg_color_444():
     crb = [_block(-16), _block(16)]
     w, h = 16, 8
     blob = _make_jpeg_full(w, h, [yb, cbb, crb], QUANT_REAL)
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     yimg = _ref_gray_image(w, h, yb, QUANT_REAL).astype(np.float64)
     cbimg = _ref_gray_image(w, h, cbb, QUANT_REAL).astype(np.float64)
     crimg = _ref_gray_image(w, h, crb, QUANT_REAL).astype(np.float64)
@@ -396,7 +401,7 @@ def test_jpeg_420_non_neutral_chroma_golden():
     blob = _make_jpeg_full(
         w, h, [yb, cbb, crb], QUANT_REAL, hv_list=[0x22, 0x11, 0x11]
     )
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _ref_subsampled_stats(w, h, yb, cbb, crb, QUANT_REAL, 2, 2)
     for key, val in ref.items():
         assert stats[key] == val, key
@@ -415,7 +420,7 @@ def test_jpeg_420_multi_mcu_order_and_predictors():
     blob = _make_jpeg_full(
         w, h, [yb, cbb, crb], QUANT_REAL, hv_list=[0x22, 0x11, 0x11]
     )
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _ref_subsampled_stats(w, h, yb, cbb, crb, QUANT_REAL, 2, 2)
     for key, val in ref.items():
         assert stats[key] == val, key
@@ -433,7 +438,7 @@ def test_jpeg_420_mcu_crop():
     blob = _make_jpeg_full(
         w, h, [yb, cbb, crb], QUANT_REAL, hv_list=[0x22, 0x11, 0x11]
     )
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _ref_subsampled_stats(w, h, yb, cbb, crb, QUANT_REAL, 2, 2)
     for key, val in ref.items():
         assert stats[key] == val, key
@@ -450,7 +455,7 @@ def test_jpeg_422_golden():
     blob = _make_jpeg_full(
         w, h, [yb, cbb, crb], QUANT_REAL, hv_list=[0x21, 0x11, 0x11]
     )
-    stats = mm._decode_jpeg_pixels(blob)
+    stats = _jpeg_stats(blob)
     ref = _ref_subsampled_stats(w, h, yb, cbb, crb, QUANT_REAL, 2, 1)
     for key, val in ref.items():
         assert stats[key] == val, key
@@ -465,7 +470,7 @@ def test_jpeg_single_component_sampling_factors_ignored():
     w, h = 16, 8
     plain = _make_jpeg_full(w, h, [blocks], QUANT_REAL)
     declared = _make_jpeg_full(w, h, [blocks], QUANT_REAL, hv=0x22)
-    assert mm._decode_jpeg_pixels(declared) == mm._decode_jpeg_pixels(plain)
+    assert _jpeg_stats(declared) == _jpeg_stats(plain)
 
 
 def test_jpeg_taxonomy_unsupported_vs_corrupt():
@@ -478,7 +483,7 @@ def test_jpeg_taxonomy_unsupported_vs_corrupt():
     for kw in ({"sof": 0xC2}, {"precision": 12}):
         bad = _make_jpeg_full(8, 8, [blocks], [8] + [1] * 63, **kw)
         with pytest.raises(NotImplementedError):
-            mm._decode_jpeg_pixels(bad)
+            _jpeg_stats(bad)
     # out-of-scope sampling layouts (color only — single-component
     # factors are ignored per T.81 A.2.2): 4:1:1 luma, subsampled
     # chroma relative to a 2x2 luma beyond the 1x1-chroma scope
@@ -488,24 +493,24 @@ def test_jpeg_taxonomy_unsupported_vs_corrupt():
             hv_list=hvs,
         )
         with pytest.raises(NotImplementedError, match="sampling"):
-            mm._decode_jpeg_pixels(bad)
+            _jpeg_stats(bad)
     # corrupt, not unsupported: zero sampling factor
     bad = _make_jpeg_full(
         8, 8, [blocks, blocks, blocks], [8] + [1] * 63,
         hv_list=[0x01, 0x11, 0x11],
     )
     with pytest.raises(ValueError, match="sampling"):
-        mm._decode_jpeg_pixels(bad)
+        _jpeg_stats(bad)
     # corrupt: bad magic, truncated entropy, EOI before scan
     with pytest.raises(ValueError, match="magic"):
-        mm._decode_jpeg_pixels(b"\x00" + good[1:])
+        _jpeg_stats(b"\x00" + good[1:])
     with pytest.raises(ValueError):
-        mm._decode_jpeg_pixels(good[:-3])  # truncated mid-entropy
+        _jpeg_stats(good[:-3])  # truncated mid-entropy
     soi_to_sos = good[: good.index(b"\xff\xda")]
     with pytest.raises(ValueError):
-        mm._decode_jpeg_pixels(soi_to_sos + b"\xff\xd9")
+        _jpeg_stats(soi_to_sos + b"\xff\xd9")
     # the good fixture still decodes
-    assert mm._decode_jpeg_pixels(good)["n_pixels"] == 64
+    assert _jpeg_stats(good)["n_pixels"] == 64
 
 
 def test_jpeg_fill_bytes_and_standalone_markers():
@@ -518,7 +523,7 @@ def test_jpeg_fill_bytes_and_standalone_markers():
     blocks = [_block(14, [(1, 3), (2, -2)]), _block(-9, [(3, 2)])]
     w, h = 16, 8
     plain = _make_jpeg_full(w, h, [blocks], QUANT_REAL)
-    ref = mm._decode_jpeg_pixels(plain)
+    ref = _jpeg_stats(plain)
 
     # splice fill bytes before every pre-SOS marker boundary we know:
     # after SOI, before DQT; and a long run before SOF0
@@ -528,22 +533,22 @@ def test_jpeg_fill_bytes_and_standalone_markers():
         plain[:dqt_at] + b"\xff" * 3 + plain[dqt_at:sof_at]
         + b"\xff" * 7 + plain[sof_at:]
     )
-    assert mm._decode_jpeg_pixels(padded) == ref
+    assert _jpeg_stats(padded) == ref
 
     # a standalone TEM marker between segments parses as zero-length
     tem = plain[:dqt_at] + b"\xff\x01" + plain[dqt_at:]
-    assert mm._decode_jpeg_pixels(tem) == ref
+    assert _jpeg_stats(tem) == ref
 
     # both at once, including fill bytes immediately before the TEM
     both = (
         plain[:dqt_at] + b"\xff\xff\x01" + plain[dqt_at:sof_at]
         + b"\xff\x01\xff" + plain[sof_at:]
     )
-    assert mm._decode_jpeg_pixels(both) == ref
+    assert _jpeg_stats(both) == ref
 
     # a truncated trailing fill run is still corrupt, not a crash
     with pytest.raises(ValueError):
-        mm._decode_jpeg_pixels(plain[:dqt_at] + b"\xff\xff")
+        _jpeg_stats(plain[:dqt_at] + b"\xff\xff")
 
 
 def test_jpeg_corpus_end_to_end(spark, documents):
@@ -606,7 +611,7 @@ def test_jpeg_corpus_block_placement():
         v = dd if k == 0 else (127 - ee if k % 2 == 1 else ee)
         hx += format(16 + v // 16, "02X") + format((v % 16) * 16, "02X")
     hx += "FFD9"
-    stats = mm._decode_jpeg_pixels(bytes.fromhex(hx))
+    stats = _jpeg_stats(bytes.fromhex(hx))
     img = np.zeros((8 * bh, 8 * bw), dtype=np.int64)
     for k in range(bw * bh):
         by, bx = divmod(k, bw)

@@ -23,6 +23,11 @@ _HAS_AV = importlib.util.find_spec("av") is not None
 # a payload no stdlib sniffer recognizes
 _EXOTIC = b"\x00\x01exotic-codec-payload" * 4
 
+PIXEL_COLUMNS = (
+    "width", "height", "n_pixels", "sum_b", "sum_g", "sum_r",
+    "min_byte", "max_byte",
+)
+
 
 @pytest.mark.skipif(_HAS_PIL, reason="PIL installed: guard tier not active")
 class TestGuardTierWithoutPIL:
@@ -30,7 +35,7 @@ class TestGuardTierWithoutPIL:
         assert mm._optional_pil() is None
 
     def test_pixel_helper_returns_none(self):
-        assert mm._pil_decode_pixels(_EXOTIC) is None
+        assert mm._pil_pixels(_EXOTIC) is None
 
     def test_media_helper_returns_none(self):
         assert mm._pil_decode_media(_EXOTIC) is None
@@ -46,6 +51,83 @@ class TestGuardTierWithoutPIL:
         )
         with pytest.raises(Exception, match="NotImplementedError|PIL"):
             mm.decode_pixels(media, use_fake_decode=False).collect()
+
+
+class _StubImage:
+    """What ``PIL.Image.open`` returns, reduced to what the tier reads:
+    a 3x2 RGB image whose every byte is 7."""
+
+    size = (3, 2)
+    mode = "RGB"
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+    def convert(self, mode):
+        return self
+
+    def __array__(self, dtype=None, copy=None):
+        import numpy as np
+
+        return np.full((2, 3, 3), 7, dtype=dtype or np.uint8)
+
+
+class _StubPIL:
+    def __init__(self):
+        self.calls = 0
+
+    def open(self, fp):
+        self.calls += 1
+        return _StubImage()
+
+
+class TestDispatcherTierArm:
+    """The real-mode optional-tier arm of ``_decode_blob``, exercised in
+    process with PIL replaced by a stub (a monkeypatch does not reach
+    mapInPandas workers, so these call the dispatcher directly)."""
+
+    STUB_STATS = {
+        "width": 3, "height": 2, "n_pixels": 6, "sum_b": 42, "sum_g": 42,
+        "sum_r": 42, "min_byte": 7, "max_byte": 7,
+    }
+
+    @pytest.fixture
+    def stub(self, monkeypatch):
+        pil = _StubPIL()
+        monkeypatch.setattr(mm, "_optional_pil", lambda: pil)
+        return pil
+
+    def _pixels(self, blob, fake=False):
+        stats = mm._decode_blob(blob, mm._PIXELS, fake)
+        return {k: stats[k] for k in PIXEL_COLUMNS}
+
+    def test_unrecognised_payload_gets_the_tier(self, stub):
+        assert self._pixels(_EXOTIC) == self.STUB_STATS
+        assert stub.calls == 1
+        meta = mm._decode_blob(_EXOTIC, mm._MEDIA, False)
+        assert (meta["width"], meta["height"], meta["channels"]) == (3, 2, 3)
+
+    def test_unsupported_bmp_reaches_the_tier(self, stub):
+        from tests.test_sources_config import _make_bmp
+
+        assert self._pixels(_make_bmp(4, 2, bpp=8)) == self.STUB_STATS
+        assert stub.calls == 1
+
+    def test_corrupt_png_raises_without_the_tier(self, stub):
+        bad_ihdr = b"\x89PNG\r\n\x1a\n" + b"\x00" * 40
+        with pytest.raises(ValueError, match="IHDR"):
+            mm._decode_blob(bad_ihdr, mm._PIXELS, False)
+        assert stub.calls == 0
+
+    def test_fake_mode_never_consults_the_tier(self, stub):
+        from tests.test_sources_config import _make_bmp
+
+        assert self._pixels(_make_bmp(4, 2, bpp=8), fake=True)["max_byte"] == 255
+        assert self._pixels(_EXOTIC, fake=True)["max_byte"] == 255
+        assert stub.calls == 0
 
 
 @pytest.mark.skipif(not _HAS_PIL, reason="optional PIL tier not installed")
@@ -72,12 +154,13 @@ class TestPILTier:
         from PIL import Image
 
         blob = self._png_bytes("L")  # grayscale: stdlib tier declines it
-        stats = mm._pil_decode_pixels(blob)
+        stats = mm._frame_rgb_stats([mm._pil_pixels(blob)])
         arr = np.asarray(
             Image.open(io.BytesIO(blob)).convert("RGB"), dtype=np.uint8
         )
         chans = arr.reshape(-1, 3).astype(np.int64)
-        assert stats == {
+        # the shared reduction also reports n_frames and pos_weighted
+        assert {k: stats[k] for k in PIXEL_COLUMNS} == {
             "width": arr.shape[1],
             "height": arr.shape[0],
             "n_pixels": arr.shape[0] * arr.shape[1],
@@ -198,7 +281,7 @@ class TestPyAVGuardTier:
     returns None so the NotImplementedError guard names the tier."""
 
     def test_frame_helper_returns_none(self):
-        assert mm._pyav_decode_frames(_EXOTIC) is None
+        assert mm._pyav_frames(_EXOTIC) is None
 
     def test_query_not_registered_without_av(self):
         from parcial_bigdata_spark.plans import registry

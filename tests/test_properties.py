@@ -742,9 +742,9 @@ def _frame_decoder_fixtures():
     neutral = np.full((2, 2), 128, dtype=np.uint8)
     mp4 = _mp4([_i420(y, neutral, neutral)], 4, 4)
     return [
-        (jpeg, mm._decode_jpeg_pixels),
-        (avi, mm._decode_avi_frames),
-        (mp4, mm._decode_mp4_frames),
+        (jpeg, lambda b: mm._frame_rgb_stats([mm._jpeg_pixels(b)])),
+        (avi, lambda b: mm._frame_rgb_stats(mm._avi_frames(b))),
+        (mp4, lambda b: mm._frame_rgb_stats(mm._mp4_frames(b))),
     ]
 
 
@@ -761,10 +761,11 @@ def test_frame_decoders_taxonomy_total_on_magic_prefixed_bytes(
     from parcial_bigdata_spark.operators import multimodal as mm
 
     magic, fn = [
-        (b"\xff\xd8\xff", mm._decode_jpeg_pixels),
-        (b"RIFF\xff\x00\x00\x00AVI ", mm._decode_avi_frames),
+        (b"\xff\xd8\xff", lambda b: mm._frame_rgb_stats([mm._jpeg_pixels(b)])),
+        (b"RIFF\xff\x00\x00\x00AVI ",
+         lambda b: mm._frame_rgb_stats(mm._avi_frames(b))),
         (b"\x00\x00\x00\x10ftypisom\x00\x00\x00\x00",
-         mm._decode_mp4_frames),
+         lambda b: mm._frame_rgb_stats(mm._mp4_frames(b))),
     ][which]
     try:
         stats = fn(magic + payload)

@@ -601,6 +601,28 @@ def test_decode_pixels_bmp_real_golden(spark):
         assert (row.min_byte, row.max_byte) == (min(exp), max(exp))
 
 
+def _method1_bmp() -> bytes:
+    """A 4x2 24-bit BMP whose header declares compression method 1
+    (RLE8) in front of plain pixel rows."""
+    import struct
+
+    blob = bytearray(_make_bmp_with_pixels(4, 2, lambda x, y, c: 16 * x + y + c))
+    blob[30:34] = struct.pack("<I", 1)
+    return bytes(blob)
+
+
+def test_bmp_pixel_walk_owns_the_unsupported_guards():
+    """BMP pixels have one walk, so the pixel stats, the resize and the
+    channel histogram all refuse what it refuses.  A 24-bit header that
+    declares compression method 1 and an 8-bpp file are valid BMP
+    outside the stdlib decoder: NotImplementedError, never compressed
+    bytes counted as pixels."""
+    with pytest.raises(NotImplementedError, match="method 1"):
+        mm._bmp_pixels(_method1_bmp())
+    with pytest.raises(NotImplementedError, match="8-bpp"):
+        mm._bmp_pixels(_make_bmp(4, 2, bpp=8))
+
+
 def test_decode_pixels_corrupt_and_unsupported(spark):
     """Real path: truncated pixel arrays are ValueError (corruption),
     non-24-bpp is NotImplementedError (needs PIL) — never confused;
@@ -612,6 +634,11 @@ def test_decode_pixels_corrupt_and_unsupported(spark):
         # PNG magic + garbage is CORRUPTION on the real-PNG path (round
         # 10 — PNG pixel payloads now decode for real), not missing-PIL
         (3, b"\x89PNG\r\n\x1a\n" + b"\x00" * 40, "IHDR does not decode"),
+        # "BM" without a published DIB header size is not a BMP: the
+        # unsupported-media path, exactly as in decode_media
+        (4, b"BMW engine specs: inline-six, 3.0 litres, twin turbo",
+         "NotImplementedError: real pixel decode"),
+        (5, _method1_bmp(), "compressed BMP \\(method 1\\) requires PIL"),
     ]
     for mid, blob, msg in cases:
         one = spark.createDataFrame(
@@ -1061,7 +1088,7 @@ def test_decode_pixels_png_interlaced_golden(spark):
         # channel sums are placement-blind; the position-weighted
         # checksum proves the scatter put every pixel at the right
         # IMAGE coordinate, not just that the value multiset is right
-        stats = mm._decode_png_pixels(golden)
+        stats = mm._frame_rgb_stats([mm._png_pixels(golden)])
         assert stats["pos_weighted"] == sum(
             v * (i + 1) for i, v in enumerate(exp)
         ), (w, h)
@@ -1257,7 +1284,7 @@ def test_decode_pixels_gif_interlaced_golden(spark):
     # sums are row-order invariant — the position-weighted checksum is
     # what actually proves the four-pass reorder was undone correctly
     flat = [v for e in exp for v in e]
-    stats = mm._decode_gif_pixels(golden)
+    stats = mm._frame_rgb_stats([mm._gif_pixels(golden)])
     assert stats["pos_weighted"] == sum(
         v * (i + 1) for i, v in enumerate(flat)
     )
@@ -1305,9 +1332,9 @@ def test_gif_multiframe_is_not_implemented_not_corrupt():
     frame = one[frame_start:-1]  # image descriptor .. block terminator
     animated = one[:-1] + frame + b"\x3b"
     with pytest.raises(NotImplementedError, match="multi-frame"):
-        mm._decode_gif_pixels(animated)
+        mm._gif_pixels(animated)
     # the single-frame original still decodes
-    assert mm._decode_gif_pixels(one)["n_pixels"] == 20
+    assert mm._frame_rgb_stats([mm._gif_pixels(one)])["n_pixels"] == 20
 
 
 def test_gif_pixel_summary_matches_synth_arithmetic(spark, documents):

@@ -178,6 +178,19 @@ def _ref_i420_rgb(y, cb, cr):
     return np.stack([r, g, b], axis=-1).astype(np.int64)
 
 
+def _avi_stats(blob):
+    """Decode one AVI and reduce it the way ``decode_video_frames`` does."""
+    return mm._frame_rgb_stats(mm._avi_frames(blob))
+
+
+def _mp4_stats(blob):
+    return mm._frame_rgb_stats(mm._mp4_frames(blob))
+
+
+def _jpeg_stats(blob):
+    return mm._frame_rgb_stats([mm._jpeg_pixels(blob)])
+
+
 def _rgb_stats(frames):
     chans = np.concatenate([f.reshape(-1, 3) for f in frames], axis=0)
     flat = chans.reshape(-1).astype(np.int64)
@@ -206,7 +219,7 @@ def test_avi_dib_bottom_up_stride_golden():
     w, h = 7, 5  # 3*7=21 -> stride 24: real padding exercised
     imgs = [_grad_bgr(w, h, s) for s in (1, 60)]
     blob = _avi([_dib_frame(i, bottom_up=True) for i in imgs], w, h)
-    stats = mm._decode_avi_frames(blob)
+    stats = _avi_stats(blob)
     ref = _rgb_stats([i[:, :, ::-1].astype(np.int64) for i in imgs])
     assert (stats["width"], stats["height"], stats["n_frames"]) == (w, h, 2)
     assert stats["n_pixels"] == 2 * w * h
@@ -223,7 +236,7 @@ def test_avi_dib_top_down_negative_height():
     img = _grad_bgr(w, h, 9)
     up = _avi([_dib_frame(img, bottom_up=True)], w, h)
     down = _avi([_dib_frame(img, bottom_up=False)], w, -h)
-    s_up, s_down = mm._decode_avi_frames(up), mm._decode_avi_frames(down)
+    s_up, s_down = _avi_stats(up), _avi_stats(down)
     assert s_up["pos_weighted"] == s_down["pos_weighted"]
     assert s_up["sum_r"] == s_down["sum_r"]
     assert s_down["height"] == h
@@ -237,8 +250,8 @@ def test_avi_mjpg_cross_codec():
     f1 = _make_jpeg_full(8, 8, [[_block(20, [(1, 3)])]], QUANT_REAL)
     f2 = _make_jpeg_full(8, 8, [[_block(-11, [(2, -2)])]], QUANT_REAL)
     blob = _avi([f1, f2], 8, 8, compression=b"MJPG", fcc=b"00dc")
-    stats = mm._decode_avi_frames(blob)
-    s1, s2 = mm._decode_jpeg_pixels(f1), mm._decode_jpeg_pixels(f2)
+    stats = _avi_stats(blob)
+    s1, s2 = _jpeg_stats(f1), _jpeg_stats(f2)
     assert stats["n_frames"] == 2
     assert stats["sum_r"] == s1["sum_r"] + s2["sum_r"]
     assert stats["min_byte"] == min(s1["min_byte"], s2["min_byte"])
@@ -257,14 +270,14 @@ def test_avi_taxonomy():
     good = _avi([_dib_frame(img)], w, h)
     h264 = _avi([b"\x00" * 16], w, h, compression=b"H264", fcc=b"00dc")
     with pytest.raises(NotImplementedError, match="ffmpeg"):
-        mm._decode_avi_frames(h264)
+        _avi_stats(h264)
     with pytest.raises(ValueError, match="magic"):
-        mm._decode_avi_frames(b"RIFX" + good[4:])
+        _avi_stats(b"RIFX" + good[4:])
     with pytest.raises(ValueError, match="volume"):
-        mm._decode_avi_frames(_avi([_dib_frame(img)[:-4]], w, h))
+        _avi_stats(_avi([_dib_frame(img)[:-4]], w, h))
     with pytest.raises(ValueError, match="truncated"):
-        mm._decode_avi_frames(good[:-6])
-    assert mm._decode_avi_frames(good)["n_pixels"] == w * h
+        _avi_stats(good[:-6])
+    assert _avi_stats(good)["n_pixels"] == w * h
 
 
 def test_mp4_i420_color_golden():
@@ -280,7 +293,7 @@ def test_mp4_i420_color_golden():
         frames.append(_i420(y, cb, cr))
         refs.append(_ref_i420_rgb(y, cb, cr))
     blob = _mp4(frames, w, h)
-    stats = mm._decode_mp4_frames(blob)
+    stats = _mp4_stats(blob)
     ref = _rgb_stats(refs)
     assert (stats["width"], stats["height"], stats["n_frames"]) == (w, h, 2)
     assert (stats["sum_r"], stats["sum_g"], stats["sum_b"]) == (
@@ -296,9 +309,9 @@ def test_mp4_multi_chunk_and_co64():
     ys = [np.full((h, w), 40 * (f + 1), dtype=np.uint8) for f in range(5)]
     neutral = np.full((h // 2, w // 2), 128, dtype=np.uint8)
     samples = [_i420(y, neutral, neutral) for y in ys]
-    one = mm._decode_mp4_frames(_mp4(samples, w, h))
-    many = mm._decode_mp4_frames(_mp4(samples, w, h, chunks=[2, 2, 1]))
-    big = mm._decode_mp4_frames(_mp4(samples, w, h, use_co64=True))
+    one = _mp4_stats(_mp4(samples, w, h))
+    many = _mp4_stats(_mp4(samples, w, h, chunks=[2, 2, 1]))
+    big = _mp4_stats(_mp4(samples, w, h, use_co64=True))
     assert one == many == big
     assert one["n_frames"] == 5
     assert one["sum_r"] == sum(int(y.sum()) for y in ys)
@@ -318,8 +331,8 @@ def test_mp4_per_sample_stsz_table():
     # table form: verflags 0, sample_size 0, count 2
     assert b"stsz" + struct.pack(">III", 0, 0, 2) in table_blob
     assert uniform_blob != table_blob
-    uniform = mm._decode_mp4_frames(uniform_blob)
-    table = mm._decode_mp4_frames(table_blob)
+    uniform = _mp4_stats(uniform_blob)
+    table = _mp4_stats(table_blob)
     assert uniform == table
     assert uniform["n_frames"] == 2
     assert uniform["sum_r"] == int(y1.sum()) + int(y2.sum())
@@ -335,14 +348,14 @@ def test_mp4_taxonomy():
     good = _mp4([sample], w, h)
     avc = _mp4([b"\x00" * 24], w, h, fmt=b"avc1")
     with pytest.raises(NotImplementedError, match="ffmpeg"):
-        mm._decode_mp4_frames(avc)
+        _mp4_stats(avc)
     with pytest.raises(ValueError, match="magic"):
-        mm._decode_mp4_frames(b"\x00" * 24)
+        _mp4_stats(b"\x00" * 24)
     with pytest.raises(ValueError, match="volume"):
-        mm._decode_mp4_frames(_mp4([sample[:-2]], w, h))
+        _mp4_stats(_mp4([sample[:-2]], w, h))
     with pytest.raises(ValueError):
-        mm._decode_mp4_frames(good[: len(good) - len(sample) // 2])
-    assert mm._decode_mp4_frames(good)["n_pixels"] == w * h
+        _mp4_stats(good[: len(good) - len(sample) // 2])
+    assert _mp4_stats(good)["n_pixels"] == w * h
 
 
 def test_mp4_undersized_sample_table_boxes():
@@ -376,11 +389,11 @@ def test_mp4_undersized_sample_table_boxes():
 
     for name in (b"stsz", b"stsc", b"stco"):
         with pytest.raises(ValueError, match=re.escape("truncated")):
-            mm._decode_mp4_frames(shrink(good, name))
+            _mp4_stats(shrink(good, name))
     # control: the shrink helper itself keeps an otherwise-valid file
     # valid — replacing stts (which the decoder never reads) must still
     # decode
-    assert mm._decode_mp4_frames(shrink(good, b"stts"))["n_pixels"] == w * h
+    assert _mp4_stats(shrink(good, b"stts"))["n_pixels"] == w * h
 
 
 def test_mjpg_avi_corpus_end_to_end(spark, documents):
