@@ -8,23 +8,21 @@ Parquet is the columnar at-rest format (vectorized reader, row-group
 statistics for predicate pushdown, column pruning) — the architecture
 upgrade over the reference's row-oriented MySQL table (SURVEY.md §1.3).
 
-Schema memo: reading a parquet file without a schema runs one Spark job
-to infer it.  ``load_table`` infers each table file once per process and
-reads it again with the inferred schema, which runs no job.  The memo
-holds one entry per path, keyed on the file's identity (real path,
-inode, size, mtime in ns) and on the session's values of every conf the
-parquet schema converter reads (``_SCHEMA_CONFS``); a rewritten file or
-a changed conf misses and re-infers.  A directory is inferred every
-time: its identity would be its whole listing.
+Schemas come from the parquet footer: ``read_parquet`` reads a file's
+schema on the driver (pyarrow, no Spark job) and hands it to the reader,
+so loading a table runs no job and changes no session conf.  A directory
+of Spark-written part files is read by inference.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_schema
 
 TABLES = (
     "region",
@@ -49,79 +47,70 @@ SILVER_COLUMNS = (
 )
 
 
-# every SQL conf Spark's ParquetToSparkSchemaConverter reads: an inferred
-# schema is only valid under the values it was inferred with
-_SCHEMA_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.caseSensitive",
-    "spark.sql.parquet.fieldId.read.enabled",
-    "spark.sql.parquet.ignoreVariantAnnotation",
-    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
-)
-
-# path -> (file identity, conf values, inferred StructType); shared by
-# every session of the process, since the key holds all the value depends on
-_schemas: dict[str, tuple[tuple, tuple, StructType]] = {}
+# unsigned parquet integers, which from_arrow_schema rejects, and the
+# Spark types their inference gives
+_UNSIGNED = {
+    pa.uint8(): pa.int16(),
+    pa.uint16(): pa.int32(),
+    pa.uint32(): pa.int64(),
+    pa.uint64(): pa.decimal128(20, 0),
+}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring a file's schema only when
-    the file or the schema confs changed since the last read of it."""
+def _inferred_type(t: pa.DataType) -> pa.DataType:
+    """The arrow type of a top-level footer column that converts to the
+    Spark type inference gives it: nanos timestamps and durations are
+    plain INT64 to Spark (``bigint``), unsigned integers widen."""
+    if pa.types.is_timestamp(t) and t.unit == "ns" or pa.types.is_duration(t):
+        return pa.int64()
+    return _UNSIGNED.get(t, t)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the job that infers a file's
+    schema: a file is read with the schema its footer declares, typed as
+    Spark's inference types it (``_inferred_type``).  An INT64
+    TIMESTAMP(NANOS) column reads as ``bigint``, its raw nanoseconds,
+    which is what inference gives under
+    ``spark.sql.legacy.parquet.nanosAsLong``; Spark's reader rejects it
+    as a timestamp.  A directory is read by inference."""
     if not os.path.isfile(path):
         return spark.read.parquet(path)
-    st = os.stat(path)
-    ident = (os.path.realpath(path), st.st_ino, st.st_size, st.st_mtime_ns)
-    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
-    hit = _schemas.get(path)
-    if hit is not None and hit[:2] == (ident, confs):
-        return spark.read.schema(hit[2]).parquet(path)
-    df = spark.read.parquet(path)
-    _schemas[path] = (ident, confs, df.schema)
-    return df
+    # INT96 timestamps come out in micros, so every nanos timestamp left
+    # is an INT64 TIMESTAMP(NANOS) column
+    with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as pf:
+        footer = pf.schema_arrow
+    fields = [f.with_type(_inferred_type(f.type)) for f in footer]
+    return spark.read.schema(from_arrow_schema(pa.schema(fields))).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events":
-        # The events fixture has shipped ts two ways; handle both:
-        #  - TIMESTAMP(NANOS): Spark's vectorized reader rejects it, so
-        #    read nanos as long (nanosAsLong), floor-divide to micros
-        #    (integer `div` — a double loses precision at 1.7e18 ns), and
-        #    keep the raw bigint as ``ts_nanos`` so interval operators can
-        #    translate bounds to nanos and push row-group pruning onto the
-        #    physical column (the derived ts can't reach the scan).
-        #  - TIMESTAMP(MICROS) without isAdjustedToUTC: Spark infers
-        #    TIMESTAMP_NTZ by default, which breaks unix_micros() and
-        #    tz-aware arithmetic downstream.  Disable NTZ inference so the
-        #    scan yields a plain TIMESTAMP (session tz is UTC, so values
-        #    match DuckDB's naive reading) — and ts predicates push into
-        #    the parquet scan natively, no nanos escape needed.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
-        if dict(df.dtypes).get("ts") == "bigint":
-            # FLOOR division, not `div` (which truncates toward zero):
-            # interval's nanos-bound translation relies on floor algebra,
-            # and a pre-epoch timestamp (negative nanos) under `div`
-            # would round up and disagree with the pushed-down filter
-            df = df.withColumn("ts_nanos", F.col("ts")).withColumn(
-                "ts",
-                F.timestamp_micros(
-                    F.expr(
-                        "ts_nanos div 1000 - "
-                        "(CASE WHEN ts_nanos % 1000 < 0 THEN 1 ELSE 0 END)"
-                    )
-                ),
-            )
-        elif dict(df.dtypes).get("ts") == "timestamp_ntz":
-            # Reader built before the conf was set (cached schema) — coerce.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    # The events fixture has shipped ts two ways.  TIMESTAMP(MICROS)
+    # without isAdjustedToUTC reads as a plain TIMESTAMP (the footer schema
+    # never yields NTZ, which breaks unix_micros() and tz-aware arithmetic)
+    # and ts predicates push into the scan.  TIMESTAMP(NANOS) reads as its
+    # raw nanos (bigint): keep them as ``ts_nanos`` so interval operators
+    # can translate bounds to nanos and push row-group pruning onto the
+    # physical column (the derived ts can't reach the scan), and divide to
+    # micros in integer arithmetic (a double loses precision at 1.7e18 ns).
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        # FLOOR division, not `div` (which truncates toward zero):
+        # interval's nanos-bound translation relies on floor algebra,
+        # and a pre-epoch timestamp (negative nanos) under `div` would
+        # round up and disagree with the pushed-down filter
+        df = df.withColumn("ts_nanos", F.col("ts")).withColumn(
+            "ts",
+            F.timestamp_micros(
+                F.expr(
+                    "ts_nanos div 1000 - "
+                    "(CASE WHEN ts_nanos % 1000 < 0 THEN 1 ELSE 0 END)"
+                )
+            ),
+        )
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:

@@ -56,9 +56,9 @@ ORACLES["streaming_cdc_apply_bucketed"] = ORACLES["streaming_cdc_apply"]
 # bounded replay — one oracle serves both
 ORACLES["streaming_hourly_ohlc"] = ORACLES["events_hourly_ohlc"]
 
-# The events fixture stores ts as TIMESTAMP(NANOS); Spark reads it via the
-# nanos-as-long escape hatch truncated to microseconds (catalog.load_table),
-# so every oracle must apply the matching truncation on the DuckDB side.
+# The events fixture may store ts as TIMESTAMP(NANOS); Spark reads it as
+# raw nanos floored to microseconds (catalog.load_table), so every oracle
+# must apply the matching truncation on the DuckDB side.
 _EVENTS_US = (
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, "
     "value, props FROM events) events"

@@ -77,8 +77,10 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Parquet TIMESTAMP(MICROS) without isAdjustedToUTC must read as plain
-    # TIMESTAMP (not NTZ) for oracle-identical UTC semantics (see catalog).
+    # Schema inference (directories of part files; a single file's schema
+    # comes from its footer in catalog.read_parquet, which never yields
+    # NTZ) must type Parquet TIMESTAMP(MICROS) without isAdjustedToUTC as
+    # plain TIMESTAMP (not NTZ) for oracle-identical UTC semantics.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     try:
         defaults = int(spark.conf.get("spark.sql.shuffle.partitions"))

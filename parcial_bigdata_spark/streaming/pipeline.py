@@ -41,13 +41,16 @@ expression pipeline as batch.
 from __future__ import annotations
 
 import functools
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from parcial_bigdata_spark.catalog import SILVER_COLUMNS
+from parcial_bigdata_spark.catalog import SILVER_COLUMNS, read_parquet
 from parcial_bigdata_spark.sources.ingest import parse_rows, silver_date, silver_rows, write_silver
 
 
@@ -400,6 +403,27 @@ def start_merge_stream_bucketed(
     )
 
 
+def _cdc_fixture(spark: SparkSession, orders_parquet: str, upd_dir: str) -> DataFrame:
+    """Write the CDC fixture's three update files into ``upd_dir`` and
+    return its base snapshot (the semantics are in
+    ``cdc_apply_available_now``)."""
+    orders = read_parquet(spark, orders_parquet).select(
+        "o_orderkey",
+        "o_orderstatus",
+        F.col("o_totalprice").cast("double").alias("o_totalprice"),
+    )
+    upd = orders.where(F.pmod("o_orderkey", F.lit(3)) == 0).select(
+        "o_orderkey",
+        F.lit("U").alias("o_orderstatus"),
+        F.round(F.col("o_totalprice") * 2, 2).alias("o_totalprice"),
+    )
+    for i in range(3):
+        upd.where(
+            F.floor(F.pmod("o_orderkey", F.lit(9)) / 3) == i
+        ).coalesce(1).write.mode("append").parquet(upd_dir)
+    return orders.where(F.pmod("o_orderkey", F.lit(4)) != 0)
+
+
 def cdc_apply_available_now(spark: SparkSession, orders_parquet: str) -> DataFrame:
     """A REAL streaming CDC-apply run for the registry (round-9 verdict
     item 6): derive a deterministic base snapshot + three CDC update
@@ -427,31 +451,12 @@ def cdc_apply_available_now(spark: SparkSession, orders_parquet: str) -> DataFra
     semantics the stream applies incrementally.  The result is
     localCheckpoint-materialized before the temp workspace is deleted.
     """
-    import os
-    import shutil
-    import tempfile
-
-    orders = spark.read.parquet(orders_parquet).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    base = orders.where(F.pmod("o_orderkey", F.lit(4)) != 0)
-    upd = orders.where(F.pmod("o_orderkey", F.lit(3)) == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        F.round(F.col("o_totalprice") * 2, 2).alias("o_totalprice"),
-    )
     root = tempfile.mkdtemp(prefix="cdc-apply-")
     try:
         snap = os.path.join(root, "snapshot")
         upd_dir = os.path.join(root, "updates")
         ckpt = os.path.join(root, "ckpt")
-        base.write.parquet(snap)
-        for i in range(3):
-            upd.where(
-                F.floor(F.pmod("o_orderkey", F.lit(9)) / 3) == i
-            ).coalesce(1).write.mode("append").parquet(upd_dir)
+        _cdc_fixture(spark, orders_parquet, upd_dir).write.parquet(snap)
         q = start_merge_stream(
             spark, upd_dir, snap, "o_orderkey", ckpt, max_files_per_trigger=1
         )
@@ -474,31 +479,15 @@ def cdc_apply_bucketed_available_now(
     unbucketed query's SQL oracle semantics), but the snapshot lives
     bucket-partitioned and each micro-batch rewrites only the bucket
     directories its keys touch (``start_merge_stream_bucketed``)."""
-    import os
-    import shutil
-    import tempfile
-
-    orders = spark.read.parquet(orders_parquet).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.col("o_totalprice").cast("double").alias("o_totalprice"),
-    )
-    base = orders.where(F.pmod("o_orderkey", F.lit(4)) != 0)
-    upd = orders.where(F.pmod("o_orderkey", F.lit(3)) == 0).select(
-        "o_orderkey",
-        F.lit("U").alias("o_orderstatus"),
-        F.round(F.col("o_totalprice") * 2, 2).alias("o_totalprice"),
-    )
     root = tempfile.mkdtemp(prefix="cdc-bucketed-")
     try:
         snap = os.path.join(root, "snapshot")
         upd_dir = os.path.join(root, "updates")
         ckpt = os.path.join(root, "ckpt")
-        init_bucketed_snapshot(base, snap, "o_orderkey", n_buckets=16)
-        for i in range(3):
-            upd.where(
-                F.floor(F.pmod("o_orderkey", F.lit(9)) / 3) == i
-            ).coalesce(1).write.mode("append").parquet(upd_dir)
+        init_bucketed_snapshot(
+            _cdc_fixture(spark, orders_parquet, upd_dir), snap, "o_orderkey",
+            n_buckets=16,
+        )
         q = start_merge_stream_bucketed(
             spark, upd_dir, snap, "o_orderkey", ckpt,
             n_buckets=16, max_files_per_trigger=1,

@@ -11,8 +11,13 @@ same query run forever on a cluster.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from parcial_bigdata_spark.catalog import read_parquet
 
 
 def streaming_hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -105,6 +110,37 @@ def streaming_sessionize(
     )
 
 
+def _event_source(spark, events_parquet: str):
+    """A function that opens one file stream over the events parquet;
+    the schema is read once, for every stream it opens.  A directory of
+    Spark-written part files is streamed directly (a basename glob on
+    its parent would match no leaf files and silently stream nothing).
+    A single file (pyarrow-written fixtures) is streamed through its
+    parent directory, since FileStreamSource requires one, with a glob
+    pinned to the file (same trick as the bronze P1 filter)."""
+    reader = spark.readStream.schema(read_parquet(spark, events_parquet).schema)
+    if os.path.isdir(events_parquet):
+        return lambda: reader.parquet(events_parquet)
+    reader = reader.option("pathGlobFilter", os.path.basename(events_parquet))
+    return lambda: reader.parquet(os.path.dirname(events_parquet))
+
+
+def _drain(stream: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run ``stream`` to the end of its input (Trigger.AvailableNow) into
+    the memory sink ``name`` and return the final table."""
+    with tempfile.TemporaryDirectory(prefix="stream-ckpt-") as ckpt:
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return stream.sparkSession.table(name)
+
+
 def _run_available_now(
     spark, events_parquet: str, transform, name: str,
     output_mode: str = "complete",
@@ -123,36 +159,8 @@ def _run_available_now(
     sink is the test/driver harness sink; a production deployment
     writes the same query to Kafka/Delta with the same AvailableNow
     cadence (checkpointed, restart-safe)."""
-    import os
-    import tempfile
-
-    schema = spark.read.parquet(events_parquet).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(events_parquet):
-        # Spark-written parquet: a DIRECTORY of part files — stream it
-        # directly (a basename glob on the parent would match no leaf
-        # files and silently return an empty table).
-        stream = reader.parquet(events_parquet)
-    else:
-        # single-file parquet (pyarrow-written fixtures):
-        # FileStreamSource requires a directory, so stream the parent
-        # with a glob pinned to the events file (same trick as the
-        # bronze P1 filter)
-        stream = reader.option(
-            "pathGlobFilter", os.path.basename(events_parquet)
-        ).parquet(os.path.dirname(events_parquet))
-    with tempfile.TemporaryDirectory(prefix="stream-ckpt-") as ckpt:
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    stream = _event_source(spark, events_parquet)()
+    return _drain(transform(stream), name, output_mode)
 
 
 def streaming_click_attribution(
@@ -251,42 +259,18 @@ def dedup_events_available_now(
     Aggregating after the dedup (counts per event_type) keeps the
     memory-sink result stable regardless of which physical copy
     survived; complete mode emits the final census at termination."""
-    import os
-    import tempfile
-
-    schema = spark.read.parquet(events_parquet).schema
-    reader = spark.readStream.schema(schema)
-    glob = None
-    src_dir = events_parquet
-    if not os.path.isdir(events_parquet):
-        glob = os.path.basename(events_parquet)
-        src_dir = os.path.dirname(events_parquet)
-
-    def one_copy():
-        r = spark.readStream.schema(schema)
-        if glob:
-            r = r.option("pathGlobFilter", glob)
-        return r.parquet(src_dir)
-
-    stream = one_copy()
+    open_stream = _event_source(spark, events_parquet)
+    stream = open_stream()
     for _ in range(copies - 1):
-        stream = stream.unionByName(one_copy())
+        stream = stream.unionByName(open_stream())
     deduped = streaming_dedup_events(stream)
     census = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    with tempfile.TemporaryDirectory(prefix="stream-ckpt-") as ckpt:
-        q = (
-            census.writeStream.format("memory")
-            .queryName("stream_dedup_census_result")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("stream_dedup_census_result").orderBy("event_type")
+    return _drain(census, "stream_dedup_census_result", "complete").orderBy(
+        "event_type"
+    )
 
 
 def hourly_rollup_available_now(spark, events_parquet: str) -> DataFrame:
@@ -392,7 +376,7 @@ def user_tiers_static(spark, events_parquet: str) -> DataFrame:
     observed in the events table, tier = user_id % 3 — stands in for
     the account table a production stream would broadcast."""
     return (
-        spark.read.parquet(events_parquet)
+        read_parquet(spark, events_parquet)
         .select("user_id")
         .distinct()
         .withColumn("tier", F.pmod(F.col("user_id"), F.lit(3)).cast("int"))
@@ -458,7 +442,7 @@ def late_data_audit(
         F.sum("n").alias("n_events_emitted"),
     )
     totals = (
-        spark.read.parquet(events_parquet)
+        read_parquet(spark, events_parquet)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_total_events"))
     )
@@ -655,7 +639,7 @@ def outer_join_tail_audit(
             F.when(F.col("click_id").isNull(), 1).otherwise(0)
         ).alias("n_expired_unmatched"),
     )
-    ev = spark.read.parquet(events_parquet)
+    ev = read_parquet(spark, events_parquet)
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("click_user"),
         F.col("ts").alias("click_ts"),

@@ -1,14 +1,18 @@
 """tools/ab.py statistics over canned perfbench output: run parsing,
 quartiles, pair wins and the gain / worse / unresolved / level verdicts,
-with the bounds read from the repository's BENCHMARK.json."""
+with the bounds read from the repository's BENCHMARK.json; and the two
+directories the sides run from."""
 
 from __future__ import annotations
 
 import json
+import subprocess
 
 import pytest
 
-from tools.ab import compare, load_bench, parse_run, quartiles, side_summary
+from tools.ab import (
+    compare, copy_worktree, export_rev, load_bench, parse_run, quartiles, side_summary,
+)
 
 BENCH = load_bench()
 
@@ -97,3 +101,40 @@ def test_side_summary_counts_failed_runs():
 def test_side_summary_reports_median_peak_rss():
     runs = [{"metrics": {}, "report": {"peak_rss_mb": mb}} for mb in (3000.0, 2900.0, 3300.0)]
     assert side_summary(runs + [None]).endswith("median peak_rss_mb 3000")
+
+
+def _git(repo, *args):
+    subprocess.run(
+        ["git", "-c", "user.name=t", "-c", "user.email=t@example.com", *args],
+        cwd=repo, check=True, capture_output=True,
+    )
+
+
+def test_change_side_copies_the_working_tree_and_parent_side_the_revision(tmp_path):
+    """The change side gets a modified tracked file as it is on disk and
+    an untracked new file, but no ignored file and no deleted one; the
+    parent side gets the committed revision."""
+    repo = tmp_path / "repo"
+    (repo / "pkg").mkdir(parents=True)
+    (repo / ".gitignore").write_text("*.log\n")
+    (repo / "pkg" / "mod.py").write_text("old\n")
+    (repo / "gone.py").write_text("x\n")
+    _git(repo, "init", "-q")
+    _git(repo, "add", "-A")
+    _git(repo, "commit", "-q", "-m", "base")
+    (repo / "pkg" / "mod.py").write_text("new\n")
+    (repo / "pkg" / "added.py").write_text("added\n")
+    (repo / "run.log").write_text("ignored\n")
+    (repo / "gone.py").unlink()
+
+    change, parent = tmp_path / "change", tmp_path / "parent"
+    copy_worktree(str(change), root=str(repo))
+    export_rev("HEAD", str(parent), root=str(repo))
+    assert (change / "pkg" / "mod.py").read_text() == "new\n"
+    assert (change / "pkg" / "added.py").read_text() == "added\n"
+    assert not (change / "run.log").exists()
+    assert not (change / "gone.py").exists()
+    assert not (change / ".git").exists()
+    assert (parent / "pkg" / "mod.py").read_text() == "old\n"
+    assert (parent / "gone.py").exists()
+    assert not (parent / "pkg" / "added.py").exists()

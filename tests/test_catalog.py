@@ -53,13 +53,26 @@ def test_unknown_table_rejected(spark):
         load_table(spark, SF_DIR, "nope")
 
 
+def _jobs(spark, group: str, action):
+    """``(result, number of Spark jobs)`` of ``action()`` run under a
+    job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 @pytest.mark.parametrize("unit", ["us", "ns"])
 def test_events_ts_layout_drift(spark, tmp_path, unit):
     """The driver has shipped events.ts both as TIMESTAMP(NANOS) and as
     TIMESTAMP(MICROS) without isAdjustedToUTC (regenerated between
-    rounds).  load_table must yield a plain TIMESTAMP ts either way:
-    nanos via the nanosAsLong escape + micros floor-division, micros via
-    NTZ-inference off (NTZ would break unix_micros downstream)."""
+    rounds).  load_table must yield a plain TIMESTAMP ts either way, with
+    no Spark job: nanos read as raw bigint and floor-divided to micros,
+    micros read as TIMESTAMP from the footer (NTZ would break
+    unix_micros downstream)."""
     import datetime as dt
 
     import pyarrow as pa
@@ -79,26 +92,14 @@ def test_events_ts_layout_drift(spark, tmp_path, unit):
         }
     )
     pq.write_table(table, str(d / "events.parquet"))
-    # the second load reads with the memoized schema: same layout handling
-    for _ in range(2):
-        df = load_table(spark, str(d), "events")
+    for i in range(2):
+        df, jobs = _jobs(spark, f"layout_{unit}_{i}", lambda: load_table(spark, str(d), "events"))
+        assert jobs == 0
         assert dict(df.dtypes)["ts"] == "timestamp"
         got = sorted(r.ts for r in df.select("ts").collect())
         assert got == stamps
         if unit == "ns":
             assert "ts_nanos" in df.columns  # raw column kept for pushdown
-
-
-def _jobs(spark, group: str, action):
-    """``(result, number of Spark jobs)`` of ``action()`` run under a
-    job group of its own."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def _write_part(path, keys):
@@ -114,21 +115,21 @@ def _write_part(path, keys):
 
 
 def test_repeat_load_runs_no_schema_job(spark, tmp_path):
-    """The first load of a table file infers its schema (one job); a
-    second load of the unchanged file reads with the memoized schema and
-    runs no job, with the same schema and rows."""
+    """Neither the first nor a second load of a table file runs a job:
+    both read the schema from the file's footer, and both give the same
+    schema and rows."""
     _write_part(tmp_path / "part.parquet", [1, 2, 3])
-    first, jobs = _jobs(spark, "schema_memo_first", lambda: load_table(spark, str(tmp_path), "part"))
-    assert jobs >= 1
-    again, jobs = _jobs(spark, "schema_memo_again", lambda: load_table(spark, str(tmp_path), "part"))
+    first, jobs = _jobs(spark, "footer_first", lambda: load_table(spark, str(tmp_path), "part"))
+    assert jobs == 0
+    again, jobs = _jobs(spark, "footer_again", lambda: load_table(spark, str(tmp_path), "part"))
     assert jobs == 0
     assert again.schema == first.schema
     assert sorted(again.collect()) == sorted(first.collect())
 
 
 def test_rewritten_table_file_is_inferred_again(spark, tmp_path):
-    """Rewriting the same path with another column type changes the
-    file's identity: the next load infers the new type."""
+    """Every load reads the footer: rewriting the same path with another
+    column type gives the new type on the next load."""
     path = tmp_path / "part.parquet"
     _write_part(path, [1, 2, 3])
     assert dict(load_table(spark, str(tmp_path), "part").dtypes)["p_partkey"] == "bigint"
@@ -136,6 +137,87 @@ def test_rewritten_table_file_is_inferred_again(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "part")
     assert dict(df.dtypes)["p_partkey"] == "string"
     assert sorted(r.p_partkey for r in df.collect()) == ["1", "2", "3"]
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_first_load_runs_no_job(spark, tmp_path, name):
+    """The first load of each table file (a copy at a path never loaded
+    before) reads the schema from the footer on the driver: no Spark
+    job."""
+    import shutil
+
+    shutil.copy(os.path.join(SF_DIR, f"{name}.parquet"), tmp_path)
+    _, jobs = _jobs(spark, f"first_load_{name}", lambda: load_table(spark, str(tmp_path), name))
+    assert jobs == 0
+
+
+@pytest.mark.parametrize("before", [None, "false", "true"])
+def test_events_load_leaves_session_confs_unchanged(spark, before):
+    """Loading events, whose ts may need the nanos handling, sets no conf
+    in the caller's session."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    if before is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, before)
+    try:
+        load_table(spark, SF_DIR, "events")
+        assert spark.conf.get(key, None) == before
+    finally:
+        spark.conf.unset(key)
+
+
+def _inferred(spark, path):
+    return spark.read.parquet(str(path)).schema
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_footer_schema_equals_inference(spark, name):
+    """The footer conversion is a reference check against Spark's own
+    inference for every fixture table."""
+    path = os.path.join(SF_DIR, f"{name}.parquet")
+    assert catalog.read_parquet(spark, path).schema == _inferred(spark, path)
+
+
+def test_footer_types_equal_inference_where_arrow_differs(spark, tmp_path):
+    """Columns whose arrow type Spark types otherwise: an INT64
+    TIMESTAMP(NANOS) column maps to the bigint that inference gives
+    under nanosAsLong, a duration to bigint, and unsigned integers widen
+    as inference widens them (from_arrow_schema rejects them); the
+    other columns convert unchanged."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "types.parquet"
+    pq.write_table(
+        pa.table({
+            "ts": pa.array([1_704_456_000_123_456_789, -1], pa.timestamp("ns")),
+            "us": pa.array([1, 2], pa.timestamp("us")),
+            "dur": pa.array([dt.timedelta(seconds=1), None], pa.duration("us")),
+            "u8": pa.array([255, 0], pa.uint8()),
+            "u16": pa.array([65_535, 0], pa.uint16()),
+            "u32": pa.array([4_294_967_295, 0], pa.uint32()),
+            "u64": pa.array([18_446_744_073_709_551_615, 0], pa.uint64()),
+            "v": pa.array([1.0, None], pa.float64()),
+        }),
+        str(path),
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "true")
+    try:
+        expected = _inferred(spark, path)
+    finally:
+        spark.conf.unset(key)
+    df = catalog.read_parquet(spark, str(path))
+    assert df.schema == expected
+    rows = sorted(df.collect(), key=lambda r: r.ts)
+    assert [r.ts for r in rows] == [-1, 1_704_456_000_123_456_789]
+    assert tuple(rows[1][c] for c in ("dur", "u8", "u16", "u32", "u64")) == (
+        1_000_000, 255, 65_535, 4_294_967_295, Decimal(18_446_744_073_709_551_615)
+    )
 
 
 def test_create_silver_table_escapes_location(spark, tmp_path):

@@ -3,15 +3,19 @@ perfbench workload.
 
 Usage: python tools/ab.py --rev REV --workload W --seeds A-B [--trace] [--aa]
 
-Exports REV with ``git archive`` into a temporary directory, then for
-every seed runs the benchmark command of ``BENCHMARK.json`` once in the
-parent export and once in this checkout's working tree (the change),
-alternating which side runs first from one seed to the next.  Each run
-gets the same ``--seconds`` (the file's ``run_seconds``) and ``--trace``
-setting.  From each run it reads the result (the last JSON line of
-standard output) and the ``report`` line, and prints one markdown table:
-per metric, each side's median and quartiles, the change's pair wins
-(ties count for neither) and a verdict:
+Exports REV with ``git archive`` into a temporary directory and copies
+this checkout's working tree next to it (tracked files as they are on
+disk, plus untracked files that are not ignored: what the next commit
+would hold, without build output or caches), so both sides run from a
+fresh directory of the same kind.  Then for every seed it runs the
+benchmark command of ``BENCHMARK.json`` once in the parent export and
+once in the copy (the change), alternating which side runs first from
+one seed to the next.  Each run gets the same ``--seconds`` (the file's
+``run_seconds``) and ``--trace`` setting.  From each run it reads the
+result (the last JSON line of standard output) and the ``report`` line,
+and prints one markdown table: per metric, each side's median and
+quartiles, the change's pair wins (ties count for neither) and a
+verdict:
 
 - ``gain``: the change is better in at least nine tenths of the pairs,
   and the medians differ by more than the parent's interquartile range;
@@ -27,7 +31,8 @@ per metric, each side's median and quartiles, the change's pair wins
 It also prints each side's median CPU steal share, error rate and peak
 resident memory of the process tree (``peak_rss_mb``), and
 every end-to-end value per seed.  ``--aa`` runs the parent against
-itself: the control that shows how far two identical sides drift.
+itself, from two separate exports: the control that shows how far two
+identical sides drift.
 ``BENCHMARK.json`` is read, never written.
 """
 
@@ -36,6 +41,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -145,6 +151,31 @@ def _seeds(text: str) -> list[int]:
     return list(range(int(lo), int(hi or lo) + 1))
 
 
+def export_rev(rev: str, dest: str, root: str = ROOT) -> None:
+    """Extract revision ``rev`` of the repository at ``root`` into ``dest``."""
+    os.makedirs(dest)
+    archive = subprocess.run(
+        ["git", "archive", rev], cwd=root, capture_output=True, check=True
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+def copy_worktree(dest: str, root: str = ROOT) -> None:
+    """Copy the working tree of the repository at ``root`` into ``dest``:
+    tracked files as they are on disk (a deleted one is left out) and
+    untracked files that are not ignored."""
+    listing = subprocess.run(
+        ["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
+        cwd=root, capture_output=True, check=True, text=True,
+    ).stdout
+    for rel in filter(None, listing.split("\0")):
+        src = os.path.join(root, rel)
+        if not os.path.lexists(src):
+            continue
+        os.makedirs(os.path.join(dest, os.path.dirname(rel)), exist_ok=True)
+        shutil.copy2(src, os.path.join(dest, rel), follow_symlinks=False)
+
+
 def _run(bench: dict, cwd: str, workload: str, seed: int, trace: bool) -> dict | None:
     cmd = list(bench["command"]) + [
         "--workload", workload, "--seed", str(seed),
@@ -174,15 +205,17 @@ def main(argv=None) -> int:
         ap.error(f"unknown workload {args.workload}")
     seeds = _seeds(args.seeds)
 
-    with tempfile.TemporaryDirectory(prefix="ab-parent-") as tmp:
-        archive = subprocess.run(
-            ["git", "archive", args.rev], cwd=ROOT, capture_output=True, check=True
-        ).stdout
-        subprocess.run(["tar", "-x", "-C", tmp], input=archive, check=True)
-        change_dir = tmp if args.aa else ROOT
+    with tempfile.TemporaryDirectory(prefix="ab-") as tmp:
+        parent_dir = os.path.join(tmp, "parent")
+        change_dir = os.path.join(tmp, "change")
+        export_rev(args.rev, parent_dir)
+        if args.aa:
+            export_rev(args.rev, change_dir)
+        else:
+            copy_worktree(change_dir)
         parent_runs, change_runs = [], []
         for i, seed in enumerate(seeds):
-            sides = [("parent", tmp), ("change", change_dir)]
+            sides = [("parent", parent_dir), ("change", change_dir)]
             got = {}
             for side, cwd in sides if i % 2 == 0 else sides[::-1]:
                 got[side] = _run(bench, cwd, args.workload, seed, args.trace)
@@ -192,7 +225,7 @@ def main(argv=None) -> int:
 
     pairs = [(p, c) for p, c in zip(parent_runs, change_runs) if p and c]
     e2e = [m["name"] for m in bench["end_to_end"]]
-    label = f"{args.rev} (A/A)" if args.aa else f"{args.rev} vs working tree"
+    label = f"{args.rev} (A/A)" if args.aa else f"{args.rev} vs a copy of the working tree"
     print(f"workload {args.workload}, {label}, seeds {args.seeds}, "
           f"{'traced' if args.trace else 'untraced'}, {len(pairs)} complete pairs")
     print(f"parent: {side_summary(parent_runs)}")
