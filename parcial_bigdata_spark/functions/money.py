@@ -32,6 +32,8 @@ that is bit-identical at any scale, partition count, or engine.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -60,7 +62,9 @@ def ratio_round(col: Column, digits: int) -> Column:
     divided by a power-of-two weight sum produced 1.34875, rounding to
     1.3488 vs 1.3487 across engines at sf0.1).  The floor form rounds
     halves toward +inf on BOTH engines — the tie direction matters
-    less than its consistency.  Oracle twin: ``ratio_round_sql``."""
+    less than its consistency.  Oracle twin: ``ratio_round_sql``;
+    Python twin (driver-side numpy, pandas stages):
+    ``ratio_round_float``."""
     scale = float(10**digits)
     return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
 
@@ -69,3 +73,10 @@ def ratio_round_sql(expr: str, digits: int) -> str:
     """The DuckDB-side twin of ``ratio_round`` — identical double ops."""
     scale = f"1e{digits}"
     return f"floor(({expr}) * {scale} + 0.5) / {scale}"
+
+
+def ratio_round_float(x: float, digits: int) -> float:
+    """``ratio_round`` on a Python float — identical double ops, for
+    results computed outside Spark expressions."""
+    scale = float(10**digits)
+    return math.floor(x * scale + 0.5) / scale

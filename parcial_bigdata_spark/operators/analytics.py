@@ -1,19 +1,250 @@
-"""Event-sequence analytics over the ``events`` table: funnel conversion
-and retention cohorts — the bread-and-butter queries of a product
-analytics engine, expressed as linear per-user aggregations (never a
-self-join on the raw event stream).
+"""Product and statistical analytics over the ``events``, ``orders``
+and ``lineitem`` tables — 52 operators: funnels, retention and revenue
+cohorts, attribution, customer segmentation, time-series diagnostics
+and forecasts, survival estimates, and the classical parametric, rank
+and trend tests.  Each reduces the fact table in a linear pass (never a
+self-join on the raw event stream) and does the rest of its work on a
+dimension-sized frame.
 
 Beyond-reference capability (SURVEY.md §2.11): the reference stores one
 value series; these operators define the event-analytics surface a user
 of a general engine expects.
+
+Frames that several operators build come from the private helpers
+below, one definition each: the dense per-type count series, the
+right-censored life table, the click→purchase pairs, the cohort-week
+join, the double-rank of a tied block, the Mann-Kendall terms, the daily
+revenue frame and the quantity×discount cells.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from parcial_bigdata_spark.functions.money import ratio_round
+from parcial_bigdata_spark.functions.money import ratio_round, ratio_round_float
+from parcial_bigdata_spark.operators.scale import (
+    distributed_rank,
+    iter_checkpoint,
+    lit_lookup,
+)
+
+_DEC = "decimal(38,0)"
+
+
+def _since_cohort(rows: DataFrame, events: DataFrame, cohort_type: str) -> DataFrame:
+    """``rows`` (user_id, week, ...) joined to each user's ``cohort_week``
+    — the Monday of the user's first ``cohort_type`` event — from that
+    week on: one min-aggregate per user, one |users|-keyed join."""
+    cohort = (
+        events.where(F.col("event_type") == cohort_type)
+        .groupBy("user_id")
+        .agg(F.min(F.date_trunc("week", F.col("ts"))).alias("cohort_week"))
+    )
+    return rows.join(cohort, "user_id").where(F.col("week") >= F.col("cohort_week"))
+
+
+def _week_offset() -> Column:
+    """``week_offset``: whole weeks from ``cohort_week`` to ``week``."""
+    return (
+        (F.datediff(F.col("week"), F.col("cohort_week")) / 7)
+        .cast("int")
+        .alias("week_offset")
+    )
+
+
+def _click_purchase_pairs(events: DataFrame, lookback: str) -> DataFrame:
+    """Each purchase (user_id, purchase_id, purchase_ts, purchase_value)
+    paired with every same-user click (click_user, click_id, click_ts)
+    in the ``lookback`` interval (SQL interval text, e.g. ``1 day``)
+    that ends at the purchase: one interval join, shuffled on user_id,
+    the range predicate applied in the join."""
+    clicks = events.where(F.col("event_type") == "click").select(
+        F.col("user_id").alias("click_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
+    )
+    purchases = events.where(F.col("event_type") == "purchase").select(
+        "user_id",
+        F.col("event_id").alias("purchase_id"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("purchase_value"),
+    )
+    return purchases.join(
+        clicks,
+        F.expr(
+            f"""user_id = click_user
+                AND click_ts BETWEEN purchase_ts - INTERVAL {lookback}
+                                 AND purchase_ts"""
+        ),
+        "inner",
+    )
+
+
+def _dense_counts(events: DataFrame, unit: str, col: str) -> DataFrame:
+    """(event_type, lo, ``col``, c): each event type's event count per
+    ``unit`` (``day`` or ``hour``, truncated from ``ts``) on the DENSE
+    grid from the type's first unit ``lo`` to its last — a missing unit
+    is a true zero, not a dropped point.  The (type, unit) count is the
+    only fact-sized work; the grid explode and the zero-filling left
+    join run on the |types|·|units| dimension frame."""
+    counts = events.groupBy(
+        F.col("event_type"), F.date_trunc(unit, F.col("ts")).alias(col)
+    ).agg(F.count(F.lit(1)).alias("c"))
+    bounds = counts.groupBy("event_type").agg(
+        F.min(col).alias("lo"), F.max(col).alias("hi")
+    )
+    return (
+        bounds.select(
+            "event_type",
+            "lo",
+            F.explode(F.expr(f"sequence(lo, hi, interval 1 {unit})")).alias(col),
+        )
+        .join(counts, ["event_type", col], "left")
+        .select("event_type", "lo", col, F.coalesce("c", F.lit(0)).alias("c"))
+    )
+
+
+def _life_table(orders: DataFrame, bin_days: int) -> DataFrame:
+    """The right-censored repeat-purchase life table on ``bin_days``
+    bins: (bin_start_days, n_events, n_censored, n_at_risk).  Each gap
+    between a customer's consecutive orders is an observed event; the
+    span from the customer's LAST order to the horizon (the latest
+    order date) is censored.  n_at_risk is every span minus those of
+    the earlier bins (0-risk bins stay; callers filter them).
+
+    One (custkey)-partitioned lead() window over orders; the bin frame
+    (≤|horizon/bin| rows) is checkpointed, and the unpartitioned
+    windows over it are bounded by the bin count."""
+    wc = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
+    )
+    horizon = orders.agg(F.max(F.col("o_orderdate")).alias("hz"))
+    spans = (
+        orders.select(
+            "o_custkey",
+            "o_orderdate",
+            F.lead("o_orderdate", 1).over(wc).alias("next_date"),
+        )
+        .crossJoin(F.broadcast(horizon))
+        .select(
+            F.when(
+                F.col("next_date").isNotNull(),
+                F.datediff(F.col("next_date"), F.col("o_orderdate")),
+            )
+            .otherwise(F.datediff(F.col("hz"), F.col("o_orderdate")))
+            .alias("days"),
+            F.col("next_date").isNotNull().alias("observed"),
+        )
+    )
+    bins = iter_checkpoint(
+        spans.groupBy(
+            (F.floor(F.col("days") / bin_days) * bin_days).alias(
+                "bin_start_days"
+            )
+        ).agg(
+            F.sum(F.when(F.col("observed"), 1).otherwise(0)).alias(
+                "n_events"
+            ),
+            F.sum(F.when(F.col("observed"), 0).otherwise(1)).alias(
+                "n_censored"
+            ),
+        )
+    )
+    earlier = Window.orderBy(F.col("bin_start_days").asc()).rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    total = bins.agg(
+        F.sum(F.col("n_events") + F.col("n_censored")).alias("tot")
+    )
+    return bins.crossJoin(F.broadcast(total)).select(
+        "bin_start_days",
+        "n_events",
+        "n_censored",
+        (
+            F.col("tot")
+            - F.coalesce(
+                F.sum(F.col("n_events") + F.col("n_censored")).over(earlier),
+                F.lit(0),
+            )
+        ).alias("n_at_risk"),
+    )
+
+
+def _double_rank(c: str, order: str) -> Column:
+    """Twice the average rank of a tied block, on a frame of one row per
+    distinct ``order`` value holding its count ``c``:
+    dr = 2·(rows before the block) + c + 1, always an integer.  The
+    window is unpartitioned; it runs on the ≤|distinct values| frame
+    (the census-pinned post-aggregation single-partition pattern)."""
+    before = Window.orderBy(order).rowsBetween(Window.unboundedPreceding, -1)
+    return 2 * F.coalesce(F.sum(c).over(before), F.lit(0)) + F.col(c) + 1
+
+
+def _daily_revenue(orders: DataFrame) -> DataFrame:
+    """(d, y): exact DECIMAL(18,2) order revenue per order date,
+    checkpointed for callers that read it more than once (each read
+    would otherwise replay the fact scan).  NULL dates are excluded: a
+    null day would count toward the series but hold no date."""
+    return iter_checkpoint(
+        orders.where(F.col("o_orderdate").isNotNull())
+        .groupBy(F.to_date("o_orderdate").alias("d"))
+        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y"))
+    )
+
+
+def _quantity_discount_cells(lineitem: DataFrame) -> DataFrame:
+    """(x, y, n): the line count per (quantity, discount) cell on the
+    cent grid, checkpointed for callers that read it more than once
+    (each read would otherwise replay the fact scan).  NULLs are
+    excluded: Spark windows order NULLS FIRST where DuckDB orders NULLS
+    LAST, so a NULL cell would rank apart on the two engines."""
+    x = F.col("l_quantity").cast("decimal(12,2)")
+    y = F.col("l_discount").cast("decimal(12,2)")
+    return iter_checkpoint(
+        lineitem.where(
+            F.col("l_quantity").isNotNull() & F.col("l_discount").isNotNull()
+        )
+        .groupBy(x.alias("x"), y.alias("y"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def _mk_s(daily: DataFrame, pair: Column) -> DataFrame:
+    """The Mann-Kendall S = Σ sign(y_b − y_a) over the pairs of the
+    (d, y) ``daily`` frame, aliased ``a`` and ``b``, that satisfy
+    ``pair`` (0 with no pair): a 1-row frame (s_stat)."""
+    a, b = daily.alias("a"), daily.alias("b")
+    return a.join(b, pair).agg(
+        F.coalesce(
+            F.sum(F.signum(F.col("b.y") - F.col("a.y")).cast("long")),
+            F.lit(0),
+        ).alias("s_stat")
+    )
+
+
+def _mk_term(t: str) -> Column:
+    """t(t−1)(2t+5) of the count column ``t`` in exact DECIMAL(38,0):
+    the Mann-Kendall variance term of a series of t points (18·Var(S)
+    with no ties) and of a tied block of size t."""
+    return F.col(t).cast(_DEC) * (F.col(t) - 1) * (2 * F.col(t) + 5)
+
+
+def _mk_z(var: Column) -> Column:
+    """The continuity-corrected Mann-Kendall z of s_stat with variance
+    ``var``: the ±1 pulls |S| toward 0 (z = 0 at S = 0).  NULL when
+    n_days < 2 or the variance is 0 (every count tied)."""
+    sd = F.col("s_stat").cast("double")
+    return F.when(
+        F.col("n_days") > 1,
+        F.when(
+            var > 0,
+            F.when(F.col("s_stat") > 0, (sd - 1) / F.sqrt(var))
+            .when(F.col("s_stat") < 0, (sd + 1) / F.sqrt(var))
+            .otherwise(F.lit(0.0)),
+        ),
+    )
 
 
 def funnel_steps(
@@ -99,22 +330,10 @@ def retention_cohorts(events: DataFrame, cohort_type: str = "signup") -> DataFra
     # weeks stay TIMESTAMP (Monday 00:00), not DATE — the oracle compare
     # renders dates and timestamps differently across engines
     week = F.date_trunc("week", F.col("ts"))
-    cohort = (
-        events.where(F.col("event_type") == cohort_type)
-        .groupBy("user_id")
-        .agg(F.min(week).alias("cohort_week"))
-    )
     activity = events.select("user_id", week.alias("week")).distinct()
     return (
-        activity.join(cohort, "user_id")
-        .where(F.col("week") >= F.col("cohort_week"))
-        .select(
-            "user_id",
-            "cohort_week",
-            (F.datediff(F.col("week"), F.col("cohort_week")) / 7)
-            .cast("int")
-            .alias("week_offset"),
-        )
+        _since_cohort(activity, events, cohort_type)
+        .select("user_id", "cohort_week", _week_offset())
         .groupBy("cohort_week", "week_offset")
         .agg(F.count("*").alias("n_users"))
         .orderBy("cohort_week", "week_offset")
@@ -131,26 +350,14 @@ def cohort_revenue(events: DataFrame, cohort_type: str = "signup") -> DataFrame:
     purchase... first cohort event per user, one |users| join, one
     final groupBy); revenue sums in exact DECIMAL so the triangle is
     bit-identical across engines."""
-    week = F.date_trunc("week", F.col("ts"))
-    cohort = (
-        events.where(F.col("event_type") == cohort_type)
-        .groupBy("user_id")
-        .agg(F.min(week).alias("cohort_week"))
-    )
     purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id",
-        week.alias("week"),
+        F.date_trunc("week", F.col("ts")).alias("week"),
         F.col("value").cast("decimal(18,2)").alias("v"),
     )
     return (
-        purchases.join(cohort, "user_id")
-        .where(F.col("week") >= F.col("cohort_week"))
-        .groupBy(
-            "cohort_week",
-            (F.datediff(F.col("week"), F.col("cohort_week")) / 7)
-            .cast("int")
-            .alias("week_offset"),
-        )
+        _since_cohort(purchases, events, cohort_type)
+        .groupBy("cohort_week", _week_offset())
         .agg(
             F.countDistinct("user_id").alias("n_buyers"),
             F.count(F.lit(1)).alias("n_purchases"),
@@ -168,8 +375,6 @@ def repeat_purchase_intervals(orders: DataFrame) -> DataFrame:
     One customer-keyed shuffle shared by the lag window and the
     closing groupBy; gaps are exact datediff integers, so the average
     (an integer quotient of identical ints) matches bit-for-bit."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     gaps = orders.select(
         "o_custkey",
@@ -205,28 +410,7 @@ def multi_touch_attribution(
     credits are deterministic.  Credit is rounded at the output edge
     (both engines compute value·weight from identical doubles).
     """
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("click_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    pairs = purchases.join(
-        clicks,
-        F.expr(
-            f"""user_id = click_user
-                AND click_ts BETWEEN purchase_ts - INTERVAL {lookback}
-                                 AND purchase_ts"""
-        ),
-        "inner",
-    )
-    from pyspark.sql.window import Window
-
+    pairs = _click_purchase_pairs(events, lookback)
     w = Window.partitionBy("purchase_id").orderBy("click_ts", "click_id")
     wn = Window.partitionBy("purchase_id")
     ranked = pairs.select(
@@ -261,8 +445,6 @@ def event_transition_matrix(events: DataFrame) -> DataFrame:
     window touches |types|² rows, never the raw stream.  Counts are
     exact integers; the probability quotient of identical integers is
     bit-identical across engines."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = events.select(
         F.col("event_type").alias("from_type"),
@@ -303,28 +485,7 @@ def time_decay_attribution(
     the model's shape.  Same plan as ``multi_touch_attribution``: one
     user-keyed interval join, one purchase-keyed window, credits
     rounded at the output edge."""
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("click_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    pairs = purchases.join(
-        clicks,
-        F.expr(
-            f"""user_id = click_user
-                AND click_ts BETWEEN purchase_ts - INTERVAL {lookback_days} DAYS
-                                 AND purchase_ts"""
-        ),
-        "inner",
-    )
-    from pyspark.sql.window import Window
-
+    pairs = _click_purchase_pairs(events, f"{lookback_days} DAYS")
     day_us = 86_400_000_000
     age_buckets = F.expr(
         f"(unix_micros(purchase_ts) - unix_micros(click_ts)) "
@@ -504,8 +665,6 @@ def revenue_gini_by_nation(
         ),
         "o_custkey",
     )
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
     ranked = distributed_rank(
         keyed, "x", "o_custkey", part_cols=["nation"], out_col="i"
     ).select("nation", "x", "i")
@@ -548,8 +707,6 @@ def rfm_customer_segments(orders: DataFrame) -> DataFrame:
     the AGGREGATED per-customer frame and joined back on the customer
     key, so the three rank passes share narrow inputs.  The customer
     count broadcasts as a single-row stats frame."""
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
     m = (
         orders.groupBy("o_custkey")
         .agg(
@@ -616,8 +773,6 @@ def quantile_normalize_values(events: DataFrame) -> DataFrame:
     huge, the exact skew case a type-partitioned window serializes;
     per-type counts broadcast as a tiny frame.  A single-member type
     maps to 0.0 (the n=1 guard both engines share)."""
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
     ranked = distributed_rank(
         events.select(
             "event_id", "event_type", F.col("value").cast("double").alias("value")
@@ -655,8 +810,6 @@ def daily_user_accumulation(events: DataFrame) -> DataFrame:
     cumulative curve is a running sum over the |days|-row aggregated
     frame — the unkeyed window touches days, never events.  All counts
     exact integers."""
-    from pyspark.sql.window import Window
-
     day = F.date_trunc("day", F.col("ts"))
     actives = (
         events.select(day.alias("day"), "user_id")
@@ -756,8 +909,6 @@ def _lit_map(d: dict, col: str = "event_type"):
     """Event-type-keyed form of :func:`~parcial_bigdata_spark.
     operators.scale.lit_lookup` (the ≤|types| bounded-dict contract) —
     keeps each selection pass a single scan→agg job."""
-    from parcial_bigdata_spark.operators.scale import lit_lookup
-
     return lit_lookup(d, col)
 
 
@@ -791,10 +942,6 @@ def _sketch_exact_median(
     free — falls back to the full-stream rank, so the result is
     exact at ANY input while the hot path never shuffles the stream.
     """
-    from pyspark.sql.window import Window
-
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
     eps = 2.0 / accuracy
     sk = df.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("__n"),
@@ -938,8 +1085,6 @@ def activity_streaks(events: DataFrame) -> DataFrame:
     user_id as prefix; the stream is pre-collapsed to distinct
     (user, day) pairs first, so every later stage touches at most
     |users|·|days| rows regardless of per-day event volume."""
-    from pyspark.sql.window import Window
-
     day_idx = F.datediff(
         F.date_trunc("day", F.col("ts")), F.lit("2024-01-01").cast("date")
     )
@@ -1010,8 +1155,6 @@ def interarrival_histogram(events: DataFrame) -> DataFrame:
 
     One user-keyed lag window (gaps are per USER within type, never
     across users) + one small bucket aggregate."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("event_type", "user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     gaps = events.select(
@@ -1054,27 +1197,7 @@ def hourly_autocorrelation(events: DataFrame, lags=(1, 24)) -> DataFrame:
     events.  The series frame is ``iter_checkpoint``-materialized: it
     feeds both sides of every lag's self-join (2·|lags| consumers) and
     each would otherwise replan the raw-event aggregate."""
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    hour = F.date_trunc("hour", F.col("ts"))
-    counts = events.groupBy(
-        F.col("event_type"), hour.alias("h")
-    ).agg(F.count(F.lit(1)).alias("c"))
-    bounds = counts.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    series = iter_checkpoint(
-        bounds.select(
-            "event_type",
-            F.explode(
-                F.expr("sequence(lo, hi, interval 1 hour)")
-            ).alias("h"),
-        )
-        .join(counts, ["event_type", "h"], "left")
-        .select(
-            "event_type", "h", F.coalesce("c", F.lit(0)).alias("c")
-        )
-    )
+    series = iter_checkpoint(_dense_counts(events, "hour", "h").drop("lo"))
     out = None
     for lag in lags:
         a = series.select(
@@ -1085,7 +1208,7 @@ def hourly_autocorrelation(events: DataFrame, lags=(1, 24)) -> DataFrame:
             F.expr(f"h - interval {int(lag)} hours").alias("ha"),
             F.col("c").alias("y"),
         )
-        dec = lambda col: F.col(col).cast("decimal(38,0)")  # noqa: E731
+        dec = lambda col: F.col(col).cast(_DEC)  # noqa: E731
         sums = (
             a.join(b, ["event_type", "ha"])
             .groupBy("event_type")
@@ -1134,8 +1257,6 @@ def order_backlog_timeseries(orders: DataFrame, lineitem: DataFrame) -> DataFram
     grain aggregate; the cumulative window runs over the |dates|-row
     aggregate (the documented post-aggregation unkeyed-window
     pattern)."""
-    from pyspark.sql.window import Window
-
     # days stay TIMESTAMP (midnight), not DATE — the oracle compare
     # renders dates and timestamps differently across engines
     placed = orders.groupBy(
@@ -1189,8 +1310,6 @@ def fulfillment_percentiles(
     dimension-sized.  The CDF frame is ``iter_checkpoint``-materialized
     (one consumer per percentile plus the totals — each would
     otherwise replan the order-grain aggregate)."""
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     done = lineitem.groupBy("l_orderkey").agg(
         F.max("l_shipdate").alias("done_ts")
     )
@@ -1208,8 +1327,6 @@ def fulfillment_percentiles(
     counts = lat.groupBy("o_orderpriority", "days").agg(
         F.count(F.lit(1)).alias("c")
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("o_orderpriority").orderBy("days").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -1258,23 +1375,7 @@ def daily_change_point(events: DataFrame) -> DataFrame:
     Scale: one (type, day) count aggregate; the grid explode and the
     cumulative window run over the |types|·|days| dimension-sized
     series (the documented post-aggregation pattern)."""
-    from pyspark.sql.window import Window
-
-    day = F.date_trunc("day", F.col("ts"))
-    counts = events.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    bounds = counts.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    series = (
-        bounds.select(
-            "event_type",
-            F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("d"),
-        )
-        .join(counts, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("c", F.lit(0)).alias("c"))
-    )
+    series = _dense_counts(events, "day", "d")
     w = Window.partitionBy("event_type").orderBy("d").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -1343,11 +1444,6 @@ def pareto_revenue_share(
     Scale: one map-side customer aggregate; the global rank
     decomposes over percentile buckets (no single-task sort); the
     per-quantile reductions are map-side sums over the ranked frame."""
-    from parcial_bigdata_spark.operators.scale import (
-        distributed_rank,
-        iter_checkpoint,
-    )
-
     rev_units = (
         F.col("o_totalprice").cast("decimal(18,4)") * 10000
     ).cast("long")
@@ -1407,8 +1503,6 @@ def ab_proportion_test(events: DataFrame) -> DataFrame:
     conversion flag is a bool_or), then a 2-row variant aggregate and
     a single-row cross of the two variants.  No window, no skew
     surface: the user grain is the natural partition key."""
-    from parcial_bigdata_spark.functions.money import ratio_round
-
     m = F.pmod(F.col("user_id"), F.lit(1048573))
     h = F.pmod(m * F.lit(2654435761), F.lit(4294967296))
     users = (
@@ -1479,9 +1573,6 @@ def seasonal_naive_backtest(events: DataFrame) -> DataFrame:
     |types|·168-row dimension frame.  The counts frame is
     ``iter_checkpoint``-materialized (two join consumers — actual and
     lag-168 forecast — would each replan the raw-event aggregate)."""
-    from parcial_bigdata_spark.functions.money import ratio_round
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     hour = F.date_trunc("hour", F.col("ts"))
     counts = iter_checkpoint(
         events.groupBy(F.col("event_type"), hour.alias("h")).agg(
@@ -1561,8 +1652,6 @@ def top_session_paths(
     path assembly is a map-side-combining groupBy on (user, session),
     and the top-k is a TakeOrdered over the path-count aggregate — no
     global sort of anything row-sized."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )
@@ -1629,11 +1718,6 @@ def theil_sen_daily_trend(events: DataFrame) -> DataFrame:
     ~6.7M pairs per type, executor-trivial) — never on raw events.
     The rank window partitions by event_type over that bounded pair
     frame; raw-event work is one map-side-combining groupBy."""
-    from pyspark.sql import Window
-
-    from parcial_bigdata_spark.functions.money import ratio_round
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     day = F.date_trunc("day", F.col("ts"))
     daily = iter_checkpoint(
         events.groupBy(F.col("event_type"), day.alias("d"))
@@ -1705,70 +1789,15 @@ def kaplan_meier_repurchase(
     Scale: one (custkey)-partitioned lead() window over orders, then
     everything lives on the ≤~80-row bin frame (the unpartitioned
     cumulative windows there are bounded-dimension by construction)."""
-    from pyspark.sql import Window
-
-    from parcial_bigdata_spark.functions.money import ratio_round
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    wc = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
-    )
-    horizon = orders.agg(F.max(F.col("o_orderdate")).alias("hz"))
-    spans = (
-        orders.select(
-            "o_custkey",
-            "o_orderdate",
-            F.lead("o_orderdate", 1).over(wc).alias("next_date"),
-        )
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            F.when(
-                F.col("next_date").isNotNull(),
-                F.datediff(F.col("next_date"), F.col("o_orderdate")),
-            )
-            .otherwise(F.datediff(F.col("hz"), F.col("o_orderdate")))
-            .alias("days"),
-            F.col("next_date").isNotNull().alias("observed"),
-        )
-    )
-    bins = iter_checkpoint(
-        spans.groupBy(
-            (F.floor(F.col("days") / bin_days) * bin_days).alias(
-                "bin_start_days"
-            )
-        ).agg(
-            F.sum(F.when(F.col("observed"), 1).otherwise(0)).alias(
-                "n_events"
-            ),
-            F.sum(F.when(F.col("observed"), 0).otherwise(1)).alias(
-                "n_censored"
-            ),
-        )
-    )
-    wb = Window.orderBy(F.col("bin_start_days").asc())
-    total = bins.agg(
-        F.sum(F.col("n_events") + F.col("n_censored")).alias("tot")
-    )
-    at_risk = bins.crossJoin(F.broadcast(total)).select(
-        "bin_start_days",
-        "n_events",
-        "n_censored",
-        (
-            F.col("tot")
-            - F.coalesce(
-                F.sum(F.col("n_events") + F.col("n_censored")).over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).alias("n_at_risk"),
-    )
+    at_risk = _life_table(orders, bin_days)
     f = F.lit(1.0) - F.col("n_events").cast("double") / F.col(
         "n_at_risk"
     ).cast("double")
     # ln(0) is an ANSI error and S is identically 0 from the first bin
     # where everyone at risk repurchases — track extinction explicitly
-    cum = wb.rowsBetween(Window.unboundedPreceding, 0)
+    cum = Window.orderBy(F.col("bin_start_days").asc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
     extinct = F.max(F.when(f <= 0, 1).otherwise(0)).over(cum) == 1
     surv = F.when(extinct, F.lit(0.0)).otherwise(
         F.exp(F.sum(F.log(F.when(f > 0, f))).over(cum))
@@ -1921,26 +1950,7 @@ def cusum_alarms(
     Types whose baseline variance is 0 (a constant first fortnight)
     have no standardized scale and are reported with NULL cusum/alarm
     rather than an arbitrary fallback."""
-    import math
-
-    import pandas as pd
-
-    day = F.date_trunc("day", F.col("ts"))
-    counts = events.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    bounds = counts.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    series = (
-        bounds.select(
-            "event_type",
-            F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("d"),
-        )
-        .join(counts, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("c", F.lit(0)).alias("c"))
-    )
-
+    series = _dense_counts(events, "day", "d").drop("lo")
     out_schema = (
         "event_type string, d timestamp, c long, cusum double, alarm boolean"
     )
@@ -1970,8 +1980,7 @@ def cusum_alarms(
             s = s + (x - mu) / sigma - k
             if s < 0.0:
                 s = 0.0
-            # the ratio_round floor form — engine-consistent at halves
-            cus.append(math.floor(s * 1e6 + 0.5) / 1e6)
+            cus.append(ratio_round_float(s, 6))
             alarms.append(s > h)
         pdf["cusum"] = cus
         pdf["alarm"] = alarms
@@ -2008,26 +2017,7 @@ def holt_linear_smoothing(
 
     Types with fewer than 2 observed days cannot initialize a trend
     and are omitted (at any realistic scale every type has a month)."""
-    import math
-
-    import pandas as pd
-
-    day = F.date_trunc("day", F.col("ts"))
-    counts = events.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    bounds = counts.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    series = (
-        bounds.select(
-            "event_type",
-            F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("d"),
-        )
-        .join(counts, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("c", F.lit(0)).alias("c"))
-    )
-
+    series = _dense_counts(events, "day", "d").drop("lo")
     out_schema = (
         "event_type string, horizon_days int, level double, trend double,"
         " forecast double"
@@ -2057,10 +2047,9 @@ def holt_linear_smoothing(
             {
                 "event_type": et,
                 "horizon_days": h,
-                "level": math.floor(level * 1e6 + 0.5) / 1e6,
-                "trend": math.floor(trend * 1e6 + 0.5) / 1e6,
-                "forecast": math.floor((level + h * trend) * 1e6 + 0.5)
-                / 1e6,
+                "level": ratio_round_float(level, 6),
+                "trend": ratio_round_float(trend, 6),
+                "forecast": ratio_round_float(level + h * trend, 6),
             }
             for h in range(1, horizon + 1)
         ]
@@ -2089,24 +2078,7 @@ def weekday_seasonality(events: DataFrame) -> DataFrame:
     Scale: one (type, day) count aggregate (map-side combined), then
     everything runs on the |types|·|days| dimension frame; the grand
     mean rides a window over the ≤7-row weekday frame."""
-    from pyspark.sql.window import Window
-
-    day = F.date_trunc("day", F.col("ts"))
-    counts = events.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    bounds = counts.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    series = (
-        bounds.select(
-            "event_type",
-            F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("d"),
-        )
-        .join(counts, ["event_type", "d"], "left")
-        .select("event_type", "d", F.coalesce("c", F.lit(0)).alias("c"))
-    )
-    per_dow = series.groupBy(
+    per_dow = _dense_counts(events, "day", "d").groupBy(
         "event_type", F.dayofweek("d").alias("dow")
     ).agg(
         F.count(F.lit(1)).alias("n_days"),
@@ -2176,8 +2148,6 @@ def bootstrap_mean_ci(
     Scale: explode ×B before the map-side combine — the shuffle
     carries B rows per input partition, not B× the data; the closing
     sort runs on a B-element array in one row."""
-    from parcial_bigdata_spark.functions.money import ratio_round
-
     vals = events.where(F.col("event_type") == event_type).select(
         "event_id", F.col("value").cast("decimal(18,2)").alias("v")
     )
@@ -2264,11 +2234,6 @@ def conversion_latency_percentiles(
     Scale: one per-user conditional-min aggregate (map-side combined)
     is the only fact-sized shuffle; everything after runs on the
     ≤|hours| dimension frame."""
-    from pyspark.sql.window import Window
-
-    from parcial_bigdata_spark.functions.money import ratio_round
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     per_user = events.groupBy("user_id").agg(
         F.min(
             F.when(F.col("event_type") == "view", F.col("ts"))
@@ -2359,29 +2324,10 @@ def hourly_periodogram(
     Scale: one (type, hour) count is the only fact-sized shuffle;
     the trig pass runs over the |types|·|hours|·|periods| dimension
     frame."""
-    hour = F.date_trunc("hour", F.col("ts"))
-    counts = events.groupBy(F.col("event_type"), hour.alias("h")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    bounds = counts.groupBy("event_type").agg(
-        F.min("h").alias("lo"), F.max("h").alias("hi")
-    )
-    series = (
-        bounds.select(
-            "event_type",
-            "lo",
-            F.explode(
-                F.expr("sequence(lo, hi, interval 1 hour)")
-            ).alias("h"),
-        )
-        .join(counts, ["event_type", "h"], "left")
-        .select(
-            "event_type",
-            F.expr(
-                "(unix_micros(h) - unix_micros(lo)) div 3600000000"
-            ).alias("t"),
-            F.coalesce("c", F.lit(0)).alias("c"),
-        )
+    series = _dense_counts(events, "hour", "h").select(
+        "event_type",
+        F.expr("(unix_micros(h) - unix_micros(lo)) div 3600000000").alias("t"),
+        "c",
     )
     stats = series.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.sum("c").alias("s")
@@ -2447,63 +2393,7 @@ def nelson_aalen_hazard(orders: DataFrame, bin_days: int = 30) -> DataFrame:
 
     Scale: identical to the KM twin — one custkey lead() window over
     orders, then dimension-frame windows only."""
-    from pyspark.sql import Window
-
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    wc = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
-    )
-    horizon = orders.agg(F.max(F.col("o_orderdate")).alias("hz"))
-    spans = (
-        orders.select(
-            "o_custkey",
-            "o_orderdate",
-            F.lead("o_orderdate", 1).over(wc).alias("next_date"),
-        )
-        .crossJoin(F.broadcast(horizon))
-        .select(
-            F.when(
-                F.col("next_date").isNotNull(),
-                F.datediff(F.col("next_date"), F.col("o_orderdate")),
-            )
-            .otherwise(F.datediff(F.col("hz"), F.col("o_orderdate")))
-            .alias("days"),
-            F.col("next_date").isNotNull().alias("observed"),
-        )
-    )
-    bins = iter_checkpoint(
-        spans.groupBy(
-            (F.floor(F.col("days") / bin_days) * bin_days).alias(
-                "bin_start_days"
-            )
-        ).agg(
-            F.sum(F.when(F.col("observed"), 1).otherwise(0)).alias(
-                "n_events"
-            ),
-            F.sum(F.when(F.col("observed"), 0).otherwise(1)).alias(
-                "n_censored"
-            ),
-        )
-    )
-    wb = Window.orderBy(F.col("bin_start_days").asc())
-    total = bins.agg(
-        F.sum(F.col("n_events") + F.col("n_censored")).alias("tot")
-    )
-    at_risk = bins.crossJoin(F.broadcast(total)).select(
-        "bin_start_days",
-        "n_events",
-        "n_censored",
-        (
-            F.col("tot")
-            - F.coalesce(
-                F.sum(F.col("n_events") + F.col("n_censored")).over(
-                    wb.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-        ).alias("n_at_risk"),
-    ).where(F.col("n_at_risk") > 0)
+    at_risk = _life_table(orders, bin_days).where(F.col("n_at_risk") > 0)
     inc = F.col("n_events").cast("double") / F.col("n_at_risk").cast(
         "double"
     )
@@ -2546,8 +2436,6 @@ def mann_whitney_quantity(
     is the only fact-sized shuffle; the window and everything after run
     on the ≤|distinct quantities| frame (the census-pinned
     post-aggregation single-partition pattern)."""
-    from pyspark.sql.window import Window
-
     q = F.col("l_quantity").cast("decimal(12,2)")
     # NULL quantities are excluded explicitly: Spark windows order
     # NULLS FIRST where DuckDB orders NULLS LAST, so a null group would
@@ -2568,22 +2456,13 @@ def mann_whitney_quantity(
         )
         .select("v", "ca", "cb", (F.col("ca") + F.col("cb")).alias("c"))
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = counts.select(
-        "ca",
-        "cb",
-        "c",
-        (
-            2 * F.coalesce(F.sum("c").over(w), F.lit(0)) + F.col("c") + 1
-        ).alias("dr"),
-    )
-    dec = "decimal(38,0)"
+    ranked = counts.select("ca", "cb", "c", _double_rank("c", "v").alias("dr"))
     agg = ranked.agg(
         F.sum("ca").alias("n_a"),
         F.sum("cb").alias("n_b"),
-        F.sum(F.col("ca").cast(dec) * F.col("dr")).alias("r2a"),
+        F.sum(F.col("ca").cast(_DEC) * F.col("dr")).alias("r2a"),
         F.sum(
-            F.col("c").cast(dec) * F.col("c") * F.col("c") - F.col("c")
+            F.col("c").cast(_DEC) * F.col("c") * F.col("c") - F.col("c")
         ).alias("ties"),
     )
     na = F.col("n_a").cast("double")
@@ -2641,8 +2520,6 @@ def kruskal_wallis_value(events: DataFrame) -> DataFrame:
     scan is the only fact-sized shuffle; the pooled-rank window, the
     broadcast rank join, and the k-row reduce all run on frames
     bounded by |cent-grid values| and |types|, never by row count."""
-    from pyspark.sql.window import Window
-
     v = F.col("value").cast("decimal(12,2)")
     counts = (
         events.where(F.col("value").isNotNull())
@@ -2650,25 +2527,18 @@ def kruskal_wallis_value(events: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     pooled = counts.groupBy("v").agg(F.sum("c").alias("ct"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    dr = pooled.select(
-        "v",
-        "ct",
-        (2 * F.coalesce(F.sum("ct").over(w), F.lit(0)) + F.col("ct") + 1)
-        .alias("dr"),
-    )
-    dec = "decimal(38,0)"
+    dr = pooled.select("v", "ct", _double_rank("ct", "v").alias("dr"))
     grp = (
         counts.join(F.broadcast(dr.select("v", "dr")), "v")
         .groupBy("event_type")
         .agg(
             F.sum("c").alias("n_j"),
-            F.sum(F.col("c").cast(dec) * F.col("dr")).alias("r2_j"),
+            F.sum(F.col("c").cast(_DEC) * F.col("dr")).alias("r2_j"),
         )
     )
     ties = dr.agg(
         F.sum(
-            F.col("ct").cast(dec) * F.col("ct") * F.col("ct") - F.col("ct")
+            F.col("ct").cast(_DEC) * F.col("ct") * F.col("ct") - F.col("ct")
         ).alias("tie")
     )
     tot = grp.agg(
@@ -2724,44 +2594,18 @@ def mann_kendall_daily(events: DataFrame) -> DataFrame:
         .groupBy(F.to_date("ts").alias("d"))
         .agg(F.count(F.lit(1)).alias("y"))
     )
-    a, b = daily.alias("a"), daily.alias("b")
-    s = a.join(b, F.col("a.d") < F.col("b.d")).agg(
-        F.coalesce(
-            F.sum(
-                F.signum(F.col("b.y") - F.col("a.y")).cast("long")
-            ),
-            F.lit(0),
-        ).alias("s_stat")
-    )
-    dec = "decimal(38,0)"
+    s = _mk_s(daily, F.col("a.d") < F.col("b.d"))
     ties = daily.groupBy("y").agg(F.count(F.lit(1)).alias("t")).agg(
         F.count(F.lit(1)).alias("n_distinct"),
         F.sum("t").alias("n_days"),
-        F.coalesce(
-            F.sum(
-                F.col("t").cast(dec)
-                * (F.col("t") - 1)
-                * (2 * F.col("t") + 5)
-            ),
-            F.lit(0).cast(dec),
-        ).alias("tie"),
+        F.coalesce(F.sum(_mk_term("t")), F.lit(0).cast(_DEC)).alias("tie"),
     )
     tot = ties.crossJoin(s)
     n = F.col("n_days").cast("double")
     var = (
         n * (n - 1) * (2 * n + 5) - F.col("tie").cast("double")
     ) / F.lit(18.0)
-    sd = F.col("s_stat").cast("double")
-    # continuity correction: the ±1 pulls |S| toward 0 (z = 0 at S = 0)
-    z = F.when(
-        (F.col("n_days") > 1),
-        F.when(
-            var > 0,
-            F.when(F.col("s_stat") > 0, (sd - 1) / F.sqrt(var))
-            .when(F.col("s_stat") < 0, (sd + 1) / F.sqrt(var))
-            .otherwise(F.lit(0.0)),
-        ),
-    )
+    z = _mk_z(var)
     return tot.select(
         F.col("n_days").cast("long").alias("n_days"),
         F.col("s_stat").cast("long").alias("s_stat"),
@@ -2801,56 +2645,29 @@ def seasonal_mann_kendall_daily(events: DataFrame) -> DataFrame:
             "wd", F.pmod(F.datediff("d", F.lit("1970-01-01")), F.lit(7))
         )
     )
-    a, b = daily.alias("a"), daily.alias("b")
-    s = a.join(
-        b, (F.col("a.wd") == F.col("b.wd")) & (F.col("a.d") < F.col("b.d"))
-    ).agg(
-        F.coalesce(
-            F.sum(F.signum(F.col("b.y") - F.col("a.y")).cast("long")),
-            F.lit(0),
-        ).alias("s_stat")
+    s = _mk_s(
+        daily, (F.col("a.wd") == F.col("b.wd")) & (F.col("a.d") < F.col("b.d"))
     )
-    dec = "decimal(38,0)"
     per_season = (
         daily.groupBy("wd", "y")
         .agg(F.count(F.lit(1)).alias("t"))
         .groupBy("wd")
         .agg(
             F.sum("t").alias("n_w"),
-            F.coalesce(
-                F.sum(
-                    F.col("t").cast(dec)
-                    * (F.col("t") - 1)
-                    * (2 * F.col("t") + 5)
-                ),
-                F.lit(0).cast(dec),
-            ).alias("tie_w"),
+            F.coalesce(F.sum(_mk_term("t")), F.lit(0).cast(_DEC)).alias("tie_w"),
         )
     )
     # 18·Var_w = n_w(n_w−1)(2n_w+5) − tie_w is INTEGER, so the season
     # sum stays exact decimal and only the final /18 enters doubles —
     # no order-sensitive double summation anywhere before the z ratio
-    var18_w = (
-        F.col("n_w").cast(dec) * (F.col("n_w") - 1) * (2 * F.col("n_w") + 5)
-        - F.col("tie_w")
-    )
+    var18_w = _mk_term("n_w") - F.col("tie_w")
     tot = per_season.agg(
         F.count(F.lit(1)).alias("n_seasons"),
         F.sum("n_w").alias("n_days"),
         F.sum("tie_w").alias("tie"),
         F.sum(var18_w).alias("var18"),
     ).crossJoin(s)
-    var_total = F.col("var18").cast("double") / F.lit(18.0)
-    sd = F.col("s_stat").cast("double")
-    z = F.when(
-        F.col("n_days") > 1,
-        F.when(
-            var_total > 0,
-            F.when(F.col("s_stat") > 0, (sd - 1) / F.sqrt(var_total))
-            .when(F.col("s_stat") < 0, (sd + 1) / F.sqrt(var_total))
-            .otherwise(F.lit(0.0)),
-        ),
-    )
+    z = _mk_z(F.col("var18").cast("double") / F.lit(18.0))
     return tot.select(
         F.col("n_days").cast("long").alias("n_days"),
         F.col("n_seasons").cast("int").alias("n_seasons"),
@@ -2881,8 +2698,6 @@ def levene_value_by_type(events: DataFrame) -> DataFrame:
     frame, then the deviation moments after a k-row broadcast join);
     windows run only on the (type, value) frame, whose size is bounded
     by |types| × |cent-grid values|, never by row count."""
-    from pyspark.sql.window import Window
-
     v = F.col("value").cast("decimal(12,2)")
     # NULL values excluded explicitly (cross-engine NULLS FIRST/LAST
     # window-order divergence — same posture as the Mann-Whitney frame)
@@ -2979,18 +2794,8 @@ def ols_daily_trend(orders: DataFrame) -> DataFrame:
     Scale: one map-side-combining daily aggregate over the scan, a
     1-row min-day broadcast for the index origin, then a single
     aggregate over the ≤|days| frame — no window, no skew surface."""
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    price = F.col("o_totalprice").cast("decimal(18,2)")
-    # NULL dates excluded explicitly: a null day would contribute to
-    # n_days but not to Σt, silently corrupting the moment system.
-    # Materialized ONCE: the origin row and the moment aggregate both
-    # derive from the daily frame
-    daily = iter_checkpoint(
-        orders.where(F.col("o_orderdate").isNotNull())
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum(price).alias("y"))
-    )
+    # the origin row and the moment aggregate both read the daily frame
+    daily = _daily_revenue(orders)
     origin = daily.agg(F.min("d").alias("d0"))
     t = F.datediff(F.col("d"), F.col("d0"))
     moments = (
@@ -3057,8 +2862,6 @@ def chi2_independence(
     derivation would replay the whole fact scan); everything after
     runs on the ≤|row cats| × |col cats| frame with broadcast margin
     joins — one fact pass, no window over row data."""
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     cells = iter_checkpoint(
         orders.where(
             F.col(row_col).isNotNull() & F.col(col_col).isNotNull()
@@ -3137,20 +2940,9 @@ def kendall_tau_quantity_discount(lineitem: DataFrame) -> DataFrame:
     quadratic self-join is bounded by the GRID size (≤550 × 550 here),
     not the row count — the bounded-domain analogue of the all-pairs
     τ that cannot scale."""
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    x = F.col("l_quantity").cast("decimal(12,2)")
-    y = F.col("l_discount").cast("decimal(12,2)")
-    # materialized ONCE: the pair join (twice), both margin aggregates,
-    # and the total all derive from the cell frame — without the
-    # lineage cut each derivation replays the whole fact scan
-    cells = iter_checkpoint(
-        lineitem.where(
-            F.col("l_quantity").isNotNull() & F.col("l_discount").isNotNull()
-        )
-        .groupBy(x.alias("x"), y.alias("y"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    # the pair join (twice), both margin aggregates and the total all
+    # read the cell frame
+    cells = _quantity_discount_cells(lineitem)
     a = cells.select(
         F.col("x").alias("xa"), F.col("y").alias("ya"),
         F.col("n").cast("decimal(38,0)").alias("na"),
@@ -3174,15 +2966,14 @@ def kendall_tau_quantity_discount(lineitem: DataFrame) -> DataFrame:
             F.lit(0).cast("decimal(38,0)")
         )).alias("d_pairs"),
     )
-    dec = "decimal(38,0)"
     # the x-margin aggregate carries the grand total too (Σ_x t_x = N),
     # so the plan needs three 1-row aggregates, not four
     tx = (
         cells.groupBy("x").agg(F.sum("n").alias("t"))
         .agg(
             F.sum(
-                F.col("t").cast(dec) * (F.col("t") - 1) / 2
-            ).cast(dec).alias("t1"),
+                F.col("t").cast(_DEC) * (F.col("t") - 1) / 2
+            ).cast(_DEC).alias("t1"),
             F.sum("t").alias("nn"),
         )
     )
@@ -3190,8 +2981,8 @@ def kendall_tau_quantity_discount(lineitem: DataFrame) -> DataFrame:
         cells.groupBy("y").agg(F.sum("n").alias("t"))
         .agg(
             F.sum(
-                F.col("t").cast(dec) * (F.col("t") - 1) / 2
-            ).cast(dec).alias("t2")
+                F.col("t").cast(_DEC) * (F.col("t") - 1) / 2
+            ).cast(_DEC).alias("t2")
         )
     )
     out = cd.crossJoin(F.broadcast(tx)).crossJoin(F.broadcast(ty))
@@ -3232,18 +3023,8 @@ def runs_test_daily_revenue(orders: DataFrame) -> DataFrame:
     Scale: one map-side daily aggregate over the scan; the median
     counting, sign sequence, lag, and run count all run on the
     ≤|days| frame (post-aggregation single-partition pattern)."""
-    from pyspark.sql.window import Window
-
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    price = F.col("o_totalprice").cast("decimal(18,2)")
-    # materialized ONCE: the median frame and the sign sequence both
-    # derive from the daily aggregate
-    daily = iter_checkpoint(
-        orders.where(F.col("o_orderdate").isNotNull())
-        .groupBy(F.to_date("o_orderdate").alias("d"))
-        .agg(F.sum(price).alias("y"))
-    )
+    # the median frame and the sign sequence both read the daily frame
+    daily = _daily_revenue(orders)
     wc = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, 0)
     wt = Window.partitionBy()
     cum = daily.select(
@@ -3318,61 +3099,32 @@ def spearman_rho_quantity_discount(lineitem: DataFrame) -> DataFrame:
     margin frames and the final reduce derive from it); rank windows
     and the 1-row reduce run on the ≤|x-grid|×|y-grid| cell frame under
     broadcast joins."""
-    from pyspark.sql.window import Window
-
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
-    x = F.col("l_quantity").cast("decimal(12,2)")
-    y = F.col("l_discount").cast("decimal(12,2)")
-    # NULLs excluded explicitly (cross-engine NULLS FIRST/LAST window
-    # order divergence — the Mann-Whitney posture)
-    cells = iter_checkpoint(
-        lineitem.where(
-            F.col("l_quantity").isNotNull() & F.col("l_discount").isNotNull()
-        )
-        .groupBy(x.alias("x"), y.alias("y"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    wx = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, -1)
+    cells = _quantity_discount_cells(lineitem)
     xm = (
         cells.groupBy("x")
         .agg(F.sum("n").alias("cx"))
-        .select(
-            "x",
-            (
-                2 * F.coalesce(F.sum("cx").over(wx), F.lit(0))
-                + F.col("cx") + 1
-            ).alias("drx"),
-        )
+        .select("x", _double_rank("cx", "x").alias("drx"))
     )
-    wy = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
     ym = (
         cells.groupBy("y")
         .agg(F.sum("n").alias("cy"))
-        .select(
-            "y",
-            (
-                2 * F.coalesce(F.sum("cy").over(wy), F.lit(0))
-                + F.col("cy") + 1
-            ).alias("dry"),
-        )
+        .select("y", _double_rank("cy", "y").alias("dry"))
     )
-    dec = "decimal(38,0)"
     j = cells.join(F.broadcast(xm), "x").join(F.broadcast(ym), "y")
     agg = j.agg(
         F.sum("n").alias("nn"),
         F.countDistinct("x").alias("n_x_levels"),
         F.countDistinct("y").alias("n_y_levels"),
-        F.sum(F.col("n").cast(dec) * F.col("drx")).alias("sx"),
-        F.sum(F.col("n").cast(dec) * F.col("dry")).alias("sy"),
+        F.sum(F.col("n").cast(_DEC) * F.col("drx")).alias("sx"),
+        F.sum(F.col("n").cast(_DEC) * F.col("dry")).alias("sy"),
         F.sum(
-            F.col("n").cast(dec) * F.col("drx") * F.col("drx")
+            F.col("n").cast(_DEC) * F.col("drx") * F.col("drx")
         ).alias("sxx"),
         F.sum(
-            F.col("n").cast(dec) * F.col("dry") * F.col("dry")
+            F.col("n").cast(_DEC) * F.col("dry") * F.col("dry")
         ).alias("syy"),
         F.sum(
-            F.col("n").cast(dec) * F.col("drx") * F.col("dry")
+            F.col("n").cast(_DEC) * F.col("drx") * F.col("dry")
         ).alias("sxy"),
     )
     nn = F.col("nn").cast("double")
@@ -3479,8 +3231,6 @@ def markov_event_transitions(events: DataFrame) -> DataFrame:
     stream (AQE-splittable by user); the census aggregate is map-side-
     combining onto the ≤|types|² grid, and the probability window runs
     on that grid frame only."""
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = (
         events.where(
@@ -3537,8 +3287,6 @@ def lag_xcorr_click_purchase(
     Scale: ONE map-side-combining hourly fact aggregate; the spine
     explode, lag join, and per-lag reduce all run on the |hours|-row
     frame (the census-pinned post-aggregation pattern)."""
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     # floor, not cast-truncation: the DuckDB oracle floors epoch/3600,
     # and the two diverge for pre-1970 (negative-epoch) timestamps
     hid = F.floor(
@@ -3583,14 +3331,13 @@ def lag_xcorr_click_purchase(
         F.broadcast(filled.select(F.col("hid").alias("bhid"), "cb")),
         F.col("hid") + F.col("lag") == F.col("bhid"),
     )
-    dec = "decimal(38,0)"
     agg = paired.groupBy("lag").agg(
         F.count(F.lit(1)).alias("n_hours"),
-        F.sum(F.col("ca").cast(dec)).alias("sa"),
-        F.sum(F.col("cb").cast(dec)).alias("sb"),
-        F.sum(F.col("ca").cast(dec) * F.col("ca")).alias("saa"),
-        F.sum(F.col("cb").cast(dec) * F.col("cb")).alias("sbb"),
-        F.sum(F.col("ca").cast(dec) * F.col("cb")).alias("sab"),
+        F.sum(F.col("ca").cast(_DEC)).alias("sa"),
+        F.sum(F.col("cb").cast(_DEC)).alias("sb"),
+        F.sum(F.col("ca").cast(_DEC) * F.col("ca")).alias("saa"),
+        F.sum(F.col("cb").cast(_DEC) * F.col("cb")).alias("sbb"),
+        F.sum(F.col("ca").cast(_DEC) * F.col("cb")).alias("sab"),
     )
     nn = F.col("n_hours").cast("double")
     sa = F.col("sa").cast("double")
@@ -3708,10 +3455,6 @@ def friedman_activity_blocks(events: DataFrame) -> DataFrame:
     partition), the ranked frame is checkpointed for the same reason
     (the per-type sum and the A4/n reduce both read it), and
     everything after runs on |types|-row and 1-row frames."""
-    from pyspark.sql.window import Window
-
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     base = events.where(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
@@ -3742,26 +3485,25 @@ def friedman_activity_blocks(events: DataFrame) -> DataFrame:
             ).alias("dr"),
         )
     )
-    dec = "decimal(38,0)"
     per_type = dr.groupBy("event_type").agg(
-        F.sum(F.col("dr").cast(dec)).alias("r2_t")
+        F.sum(F.col("dr").cast(_DEC)).alias("r2_t")
     )
     reduced = per_type.agg(
         F.coalesce(
-            F.sum(F.col("r2_t") * F.col("r2_t")), F.lit(0).cast(dec)
+            F.sum(F.col("r2_t") * F.col("r2_t")), F.lit(0).cast(_DEC)
         ).alias("sr2")
     ).crossJoin(
         dr.agg(
             F.countDistinct("user_id").alias("n"),
             F.coalesce(
-                F.sum(F.col("dr").cast(dec) * F.col("dr")),
-                F.lit(0).cast(dec),
+                F.sum(F.col("dr").cast(_DEC) * F.col("dr")),
+                F.lit(0).cast(_DEC),
             ).alias("a4"),
         )
     ).crossJoin(F.broadcast(k_row))
-    nn = F.col("n").cast(dec)
-    kk = F.col("k").cast(dec)
-    kp1sq = (F.col("k") + 1).cast(dec) * (F.col("k") + 1)
+    nn = F.col("n").cast(_DEC)
+    kk = F.col("k").cast(_DEC)
+    kp1sq = (F.col("k") + 1).cast(_DEC) * (F.col("k") + 1)
     num = F.col("sr2") - nn * nn * kk * kp1sq
     den = F.col("a4") - nn * kk * kp1sq
     defined = (F.col("n") > 0) & (F.col("k") > 1) & (den > 0)

@@ -15,12 +15,14 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parcial_bigdata_spark.functions.money import ratio_round, ratio_round_float
 from parcial_bigdata_spark.functions.vector import (
     cosine,
     dot,
     elementwise_avg,
     norm,
 )
+from parcial_bigdata_spark.operators.scale import distributed_rank, iter_checkpoint
 
 
 def _queries(embeddings: DataFrame, query_ids: list[int], *extra) -> DataFrame:
@@ -209,8 +211,6 @@ def train_spherical_kmeans(embeddings: DataFrame, k: int = 8, iters: int = 2) ->
             F.col("embedding").alias("centroid"),
         )
     )
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     for _ in range(iters):
         asg = assign_clusters(e, cents)
         cents = iter_checkpoint(elementwise_avg(asg, ["cluster"], "embedding"))
@@ -311,8 +311,6 @@ def embedding_norm_stats(embeddings: DataFrame) -> DataFrame:
     cosine-based search (catches unnormalized or degenerate vectors).
     norm() is a sequential fold in double precision, so the value is
     bitwise-deterministic and oracle-comparable."""
-    from parcial_bigdata_spark.functions.vector import norm
-
     n = norm(F.col("embedding"))
     return (
         embeddings.groupBy("label")
@@ -491,8 +489,6 @@ def dimension_stats(embeddings: DataFrame) -> DataFrame:
 
     Scale: posexplode is row-local; ONE map-side-combining groupBy on
     the |dims|-ary dimension key carries the whole profile."""
-    from parcial_bigdata_spark.functions.money import ratio_round
-
     pos = embeddings.select(
         F.posexplode("embedding").alias("pos", "val")
     ).select(
@@ -541,8 +537,6 @@ def pair_cosine_histogram(embeddings: DataFrame, n_buckets: int = 10) -> DataFra
 
     Scale: two slim rank-equi joins carry ids only; payloads join back
     once per side; the histogram is a ≤n_buckets-row aggregate."""
-    from parcial_bigdata_spark.operators.scale import distributed_rank
-
     hashed = embeddings.select(
         "vec_id",
         "embedding",
@@ -619,8 +613,6 @@ def mahalanobis_outliers(
     second row-local pass, and the closing top-n is a global sort of
     |vectors| single-double rows — the same shape as knn's result
     collapse."""
-    from parcial_bigdata_spark.functions.money import ratio_round
-
     pos = embeddings.select(
         "vec_id", F.posexplode("embedding").alias("pos", "val")
     ).select(
@@ -693,9 +685,6 @@ def random_projection_audit(
     Scale: the projection is row-local (|dims|·k multiply-adds in
     interpreted HOFs); pairing is ONE equi-join on vec_id+1; the histogram is a
     |buckets|-row aggregate.  No all-pairs anything."""
-    from parcial_bigdata_spark.functions.money import ratio_round  # noqa: F401
-    from parcial_bigdata_spark.operators.scale import iter_checkpoint
-
     dim = _vec_dim(embeddings)
     emb = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     idx = F.sequence(F.lit(0), F.lit(dim - 1))
@@ -826,6 +815,25 @@ def _exact_covariance_moments(embeddings: DataFrame):
     return dims, pairs
 
 
+def _covariance(embeddings: DataFrame) -> tuple[list, int, np.ndarray]:
+    """(dim_rows, n, cov): the per-dimension exact moments of
+    ``_exact_covariance_moments``, the row count, and the d×d
+    covariance matrix Qᵢⱼ/n − μᵢμⱼ assembled from them on the driver."""
+    dim_rows, pair_rows = _exact_covariance_moments(embeddings)
+    d = max(r["i"] for r in dim_rows)
+    n = dim_rows[0]["n"]
+    mu = np.zeros(d)
+    for r in dim_rows:
+        mu[r["i"] - 1] = float(r["s"]) / n
+    cov = np.zeros((d, d))
+    for r in pair_rows:
+        i, j = r["i"] - 1, r["j"] - 1
+        c = float(r["q"]) / n - mu[i] * mu[j]
+        cov[i, j] = c
+        cov[j, i] = c
+    return dim_rows, n, cov
+
+
 def pca_variance_spectrum(embeddings: DataFrame) -> DataFrame:
     """Full-covariance PCA variance spectrum
     (`embedding_pca_variance`): eigen-decompose the embedding
@@ -843,23 +851,8 @@ def pca_variance_spectrum(embeddings: DataFrame) -> DataFrame:
     can eigen-decompose, so this entry is rows-only by design; its
     hard-check twin is `embedding_pca_trace_audit` (Σ eigenvalues must
     reproduce the SQL-computable trace bit-for-bit at 6 dp)."""
-    import math
-
-    import numpy as np
-
     spark = embeddings.sparkSession
-    dim_rows, pair_rows = _exact_covariance_moments(embeddings)
-    d = max(r["i"] for r in dim_rows)
-    n = dim_rows[0]["n"]
-    mu = np.zeros(d)
-    for r in dim_rows:
-        mu[r["i"] - 1] = float(r["s"]) / n
-    cov = np.zeros((d, d))
-    for r in pair_rows:
-        i, j = r["i"] - 1, r["j"] - 1
-        c = float(r["q"]) / n - mu[i] * mu[j]
-        cov[i, j] = c
-        cov[j, i] = c
+    _, _, cov = _covariance(embeddings)
     eig = np.linalg.eigh(cov)[0][::-1]  # descending
     trace = float(eig.sum())
     # degenerate corpus (constant embeddings, or a single row): every
@@ -874,11 +867,9 @@ def pca_variance_spectrum(embeddings: DataFrame) -> DataFrame:
         rows.append(
             (
                 k,
-                math.floor(ev * 1e6 + 0.5) / 1e6,
-                None if degenerate
-                else math.floor(ev / trace * 1e6 + 0.5) / 1e6,
-                None if degenerate
-                else math.floor(cum / trace * 1e6 + 0.5) / 1e6,
+                ratio_round_float(ev, 6),
+                None if degenerate else ratio_round_float(ev / trace, 6),
+                None if degenerate else ratio_round_float(cum / trace, 6),
             )
         )
     return spark.createDataFrame(
@@ -896,33 +887,19 @@ def pca_trace_audit(embeddings: DataFrame) -> DataFrame:
     μᵢ²).  Both numbers are reported rounded at 6 dp; the DuckDB
     oracle emits the trace TWICE, so any eigensolver / moment-pipeline
     drift beyond 5e-7 breaks the hash."""
-    import math
-
-    import numpy as np
-
     spark = embeddings.sparkSession
-    dim_rows, pair_rows = _exact_covariance_moments(embeddings)
-    d = max(r["i"] for r in dim_rows)
-    n = dim_rows[0]["n"]
-    mu = np.zeros(d)
+    dim_rows, n, cov = _covariance(embeddings)
     trace = 0.0
     for r in dim_rows:
         m = float(r["s"]) / n
-        mu[r["i"] - 1] = m
         trace += float(r["q"]) / n - m * m
-    cov = np.zeros((d, d))
-    for r in pair_rows:
-        i, j = r["i"] - 1, r["j"] - 1
-        c = float(r["q"]) / n - mu[i] * mu[j]
-        cov[i, j] = c
-        cov[j, i] = c
     sum_eig = float(np.linalg.eigh(cov)[0].sum())
     return spark.createDataFrame(
         [
             (
-                d,
-                math.floor(trace * 1e6 + 0.5) / 1e6,
-                math.floor(sum_eig * 1e6 + 0.5) / 1e6,
+                cov.shape[0],
+                ratio_round_float(trace, 6),
+                ratio_round_float(sum_eig, 6),
             )
         ],
         "n_dims int, trace double, sum_eigenvalues double",

@@ -9,8 +9,13 @@ DuckDB oracle, which is UTC-naive.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package: Python workers import the
+# package's functions (UDFs and pandas stages pickle them by reference)
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def _cpus() -> int:
@@ -61,6 +66,24 @@ def get_spark(
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
+    return _workers_import_package(spark)
+
+
+def _workers_import_package(spark: SparkSession) -> SparkSession:
+    """Put the package's root on the Python workers' ``PYTHONPATH``.
+
+    Workers otherwise find the package only through their working
+    directory, the driver's: a driver run outside the repository root
+    without ``PYTHONPATH`` fails every query whose Python stage calls a
+    package function with ``ModuleNotFoundError``.  The context's
+    environment is what each Python function ships to its worker, and
+    Spark prepends that ``PYTHONPATH`` to the worker's own, so the entry
+    reaches every Python stage built after this call, at no Spark cost.
+    """
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
     return spark
 
 
@@ -74,7 +97,11 @@ def tune_runtime(spark: SparkSession) -> SparkSession:
     Static conf is out of its reach: a session not built by ``get_spark``
     keeps Spark's generated-class cache of 100 entries, so a repeated
     query mix larger than that recompiles its classes on every pass.
+
+    The session's Python workers can import the package afterwards,
+    wherever the driver runs (``_workers_import_package``).
     """
+    _workers_import_package(spark)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # Schema inference (directories of part files; a single file's schema

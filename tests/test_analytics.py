@@ -6,6 +6,7 @@ import datetime as dt
 
 import pytest
 
+from parcial_bigdata_spark.functions.money import ratio_round_float
 from parcial_bigdata_spark.operators import analytics
 
 
@@ -557,3 +558,110 @@ def test_interarrival_histogram_buckets(spark):
         for r in analytics.interarrival_histogram(ev).collect()
     }
     assert out == {("a", 1): (1, 1, 1), ("a", 3): (1, 7, 7)}
+
+
+# The dense daily series the day-grain operators share: each type's
+# count per day from its own first to its own last event day, a day
+# without events counting 0.  "a" has no event on its third day, "b"
+# none on its second, and the two spans differ.
+GRID_T0 = dt.datetime(2024, 1, 1)  # a Monday
+GRID = {"a": (0, [3, 1, 0, 2, 5]), "b": (2, [2, 0, 2, 6, 6, 1])}
+
+
+def _grid_days(t):
+    start, xs = GRID[t]
+    return [GRID_T0 + dt.timedelta(days=start + i) for i in range(len(xs))]
+
+
+def _change_point(xs):
+    # the split maximizing L·R·(mean_L − mean_R)², ties to the earlier day
+    n, s = len(xs), sum(xs)
+
+    def score(lft):
+        sl = sum(xs[:lft])
+        gap = sl * (n - lft) - (s - sl) * lft
+        return gap * gap / (lft * (n - lft) * n)
+
+    lft = max(range(1, n), key=lambda k: (score(k), -k))
+    sl = sum(xs[:lft])
+    mean_r = (s - sl) / (n - lft)
+    return lft, ratio_round_float(sl / lft, 6), ratio_round_float(mean_r, 6)
+
+
+def _holt(xs, alpha=0.5, beta=0.25):
+    level, trend = float(xs[0]), float(xs[1] - xs[0])
+    for x in xs[2:]:
+        prev = level
+        level = alpha * x + (1.0 - alpha) * (level + trend)
+        trend = beta * (level - prev) + (1.0 - beta) * trend
+    return ratio_round_float(level, 6), ratio_round_float(trend, 6)
+
+
+def _per_weekday(t):
+    out = {}
+    for day, x in zip(_grid_days(t), GRID[t][1]):
+        dow = day.isoweekday() % 7 + 1  # Spark dayofweek: Sunday = 1
+        n_days, n_events = out.get(dow, (0, 0))
+        out[dow] = (n_days + 1, n_events + x)
+    return out
+
+
+def _view_change_point(df):
+    return {
+        r.event_type: (
+            r.n_days_before, r.mean_before, r.mean_after,
+            r.n_days_before + r.n_days_after,
+            r.split_after_day == _grid_days(r.event_type)[r.n_days_before - 1],
+        )
+        for r in df.collect()
+    }
+
+
+def _view_cusum(df):
+    out = {}
+    for r in df.orderBy("event_type", "d").collect():
+        out.setdefault(r.event_type, []).append((r.d, r.c))
+    return out
+
+
+def _view_holt(df):
+    return {
+        r.event_type: (r.level, r.trend)
+        for r in df.where("horizon_days = 1").collect()
+    }
+
+
+def _view_weekday(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r.event_type, {})[r.dow] = (r.n_days, r.n_events)
+    return out
+
+
+DAILY_CONSUMERS = {
+    "change_point": (
+        analytics.daily_change_point,
+        _view_change_point,
+        lambda t: (*_change_point(GRID[t][1]), len(GRID[t][1]), True),
+    ),
+    "cusum": (
+        analytics.cusum_alarms,
+        _view_cusum,
+        lambda t: list(zip(_grid_days(t), GRID[t][1])),
+    ),
+    "holt": (analytics.holt_linear_smoothing, _view_holt, lambda t: _holt(GRID[t][1])),
+    "weekday": (analytics.weekday_seasonality, _view_weekday, _per_weekday),
+}
+
+
+@pytest.mark.parametrize("consumer", sorted(DAILY_CONSUMERS))
+def test_daily_consumers_read_each_types_dense_span(spark, consumer):
+    rows, eid = [], 0
+    for t in GRID:
+        for day, x in zip(_grid_days(t), GRID[t][1]):
+            for h in range(x):
+                rows.append((eid, t, day + dt.timedelta(hours=h)))
+                eid += 1
+    ev = spark.createDataFrame(rows, "event_id long, event_type string, ts timestamp")
+    operator, view, expected = DAILY_CONSUMERS[consumer]
+    assert view(operator(ev)) == {t: expected(t) for t in GRID}

@@ -70,6 +70,7 @@ def test_ratio_round_agrees_with_duckdb_on_exact_half(spark):
 
     from parcial_bigdata_spark.functions.money import (
         ratio_round,
+        ratio_round_float,
         ratio_round_sql,
     )
 
@@ -82,7 +83,7 @@ def test_ratio_round_agrees_with_duckdb_on_exact_half(spark):
     duck_val = duckdb.sql(
         f"SELECT {ratio_round_sql('10.79 * 0.125', 4)}"
     ).fetchone()[0]
-    assert spark_val == duck_val
+    assert spark_val == duck_val == ratio_round_float(10.79 * 0.125, 4)
     # and the bare-round divergence that motivated the helper is real:
     bare_spark = (
         spark.range(1)
