@@ -2,6 +2,14 @@
 DataFrame callable, plus the DuckDB oracle SQL twin for differential
 correctness (driver contract, __spark_entry__.py).
 
+``QUERIES`` is a table.  A query that is one operator call is one row,
+``_op(operator, inputs, *constants)``: the inputs are the tables (or
+derived frames) it reads, the constants pass through as given.  A query
+with glue (streaming runs, multi-step frames, merges) is a function:
+of its input frames when a row binds it, of ``(spark, sf_dir)`` when it
+needs the session or the files themselves.  A new query is one row, or
+one function and its row.
+
 Column names are aliased identically on both sides — the driver's
 compare sorts columns by name before hashing values.  Aggregate doubles
 are rounded at the output edge on BOTH sides so partial-aggregation
@@ -13,6 +21,8 @@ IS oracle-checked.
 
 from __future__ import annotations
 
+import os
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +49,12 @@ from parcial_bigdata_spark.operators import (
 )
 from parcial_bigdata_spark.functions.money import money_sum
 from parcial_bigdata_spark.session import tune_runtime
+from parcial_bigdata_spark.sources.csvio import csv_roundtrip_accounting
+from parcial_bigdata_spark.streaming import (
+    pipeline as stream_pipe,
+    stateful as stream_state,
+    windows as stream_win,
+)
 
 from parcial_bigdata_spark.plans.oracles import ORACLES  # noqa: E402,F401
 from parcial_bigdata_spark.plans.oracles._shared import (  # noqa: E402,F401
@@ -49,29 +65,59 @@ from parcial_bigdata_spark.plans.oracles._shared import (  # noqa: E402,F401
     _WS_PAIRS_SQL,
 )
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune_runtime(spark)
-    return load_table(spark, sf_dir, name)
+Query = Callable[[SparkSession, str], DataFrame]
+
+
+def _op(fn: Callable[..., DataFrame], inputs, *args, **kwargs) -> Query:
+    """One ``QUERIES`` row: ``fn(*frames, *args, **kwargs)``.
+
+    ``inputs`` names the frames: one table name, several table names in
+    one space-separated string, a derived frame (a ``(spark, sf_dir)``
+    callable such as ``_copurchase_edges``), or a tuple of these.  Only
+    ``inputs`` is loaded; every other argument is a constant, so a
+    string constant such as a column name never reads as a table.
+    Building the query tunes the session once, then loads the inputs in
+    order."""
+    if isinstance(inputs, str):
+        inputs = tuple(inputs.split())
+    elif not isinstance(inputs, tuple):
+        inputs = (inputs,)
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        tune_runtime(spark)
+        frames = [
+            load_table(spark, sf_dir, s) if isinstance(s, str) else s(spark, sf_dir)
+            for s in inputs
+        ]
+        return fn(*frames, *args, **kwargs)
+
+    return build
 
 
 # --------------------------------------------------------------------------
-# Spark-side query callables
+# Derived input frames: (spark, sf_dir) callables a row names as an input
 # --------------------------------------------------------------------------
 
-def q_interval(spark, sf_dir):
-    return interval_ops.interval(
-        _t(spark, sf_dir, "events"), "ts", "value", INTERVAL_START, INTERVAL_END
-    )
+def _copurchase_edges(spark, sf_dir):
+    # co-purchase graph: two parts are linked when some order contains
+    # both.  Pair generation is keyed by order (TPC-H orders hold ≤7
+    # lines), so the per-key fanout is constant — scale-safe even
+    # though the resulting graph is dense.
+    op = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    a = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("src"))
+    b = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("dst"))
+    return a.join(b, "o").where(F.col("src") < F.col("dst")).select("src", "dst")
 
 
-def q_interval_count(spark, sf_dir):
-    return interval_ops.interval_count(
-        _t(spark, sf_dir, "events"), "ts", INTERVAL_START, INTERVAL_END
-    )
+def _near_dup_pairs(spark, sf_dir):
+    return dedup_ops.jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.6)
 
 
-def q_ingest_accounting(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+# --------------------------------------------------------------------------
+# Queries with glue: functions of their input frames, bound by a row
+# --------------------------------------------------------------------------
+
+def _ingest_accounting(docs):
     return (
         docs.groupBy("source")
         .agg(F.count("*").alias("rows_inserted"), F.sum("n_chars").alias("total_chars"))
@@ -79,8 +125,7 @@ def q_ingest_accounting(spark, sf_dir):
     )
 
 
-def q_json_props(spark, sf_dir):
-    events = _t(spark, sf_dir, "events")
+def _json_props(events):
     k = F.get_json_object("props", "$.k").try_cast("int")
     return (
         events.select("event_type", k.alias("k"))
@@ -94,69 +139,7 @@ def q_json_props(spark, sf_dir):
     )
 
 
-def q_pricing_summary(spark, sf_dir):
-    return agg_ops.pricing_summary(_t(spark, sf_dir, "lineitem"))
-
-
-def q_revenue_forecast(spark, sf_dir):
-    return agg_ops.revenue_forecast(_t(spark, sf_dir, "lineitem"))
-
-
-def q_distinct_customers(spark, sf_dir):
-    return agg_ops.distinct_customers_per_status(_t(spark, sf_dir, "orders"))
-
-
-def q_rollup_orders(spark, sf_dir):
-    return agg_ops.rollup_order_totals(_t(spark, sf_dir, "orders"))
-
-
-def q_cube_lineitem(spark, sf_dir):
-    return agg_ops.cube_lineitem_counts(_t(spark, sf_dir, "lineitem"))
-
-
-def q_top_orders(spark, sf_dir):
-    return agg_ops.top_orders_by_price(_t(spark, sf_dir, "orders"))
-
-
-def q_revenue_by_brand(spark, sf_dir):
-    return join_ops.revenue_by_brand(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_shipping_priority(spark, sf_dir):
-    return join_ops.shipping_priority(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_region_revenue(spark, sf_dir):
-    return join_ops.region_revenue(
-        _t(spark, sf_dir, "region"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_semi_join(spark, sf_dir):
-    return join_ops.orders_with_big_items(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_anti_join(spark, sf_dir):
-    return join_ops.customers_without_orders(
-        _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    )
-
-
-def q_asof_join(spark, sf_dir):
-    events = _t(spark, sf_dir, "events")
+def _asof_purchase_signup(events, tolerance=None):
     purchases = events.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
@@ -165,74 +148,8 @@ def q_asof_join(spark, sf_dir):
     )
     return join_ops.asof_join(
         purchases, signups, on="user_id", left_ts="ts", right_ts="ts",
-        right_vals=["signup_ts"],
+        right_vals=["signup_ts"], tolerance=tolerance,
     ).orderBy("event_id")
-
-
-
-
-def q_asof_join_tolerance(spark, sf_dir):
-    """asof_join WITH tolerance (pandas merge_asof semantics): a signup
-    match older than 7 days nulls out.  Round 5 found the parameter was
-    silently ignored and no oracle-checked query exercised it — this
-    entry pins the tolerance gate driver-side (round-5 verdict item 3)."""
-    events = _t(spark, sf_dir, "events")
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    signups = events.where(F.col("event_type") == "signup").select(
-        "user_id", "ts", F.col("ts").alias("signup_ts")
-    )
-    return join_ops.asof_join(
-        purchases, signups, on="user_id", left_ts="ts", right_ts="ts",
-        right_vals=["signup_ts"], tolerance=_ASOF_TOLERANCE_S,
-    ).orderBy("event_id")
-
-
-def q_window_delta(spark, sf_dir):
-    return win_ops.value_delta(_t(spark, sf_dir, "events")).orderBy("event_id")
-
-
-def q_window_topk(spark, sf_dir):
-    return win_ops.top_events_per_user(_t(spark, sf_dir, "events")).orderBy(
-        "user_id", "rnk"
-    )
-
-
-def q_running_total(spark, sf_dir):
-    return win_ops.running_total(_t(spark, sf_dir, "events")).orderBy("event_id")
-
-
-def q_sessionize(spark, sf_dir):
-    return win_ops.sessionize(_t(spark, sf_dir, "events"))
-
-
-def q_hourly_rollup(spark, sf_dir):
-    return win_ops.hourly_rollup(_t(spark, sf_dir, "events"))
-
-
-def q_repeat_customers(spark, sf_dir):
-    return set_ops.repeat_customers(_t(spark, sf_dir, "orders"))
-
-
-def q_churned_customers(spark, sf_dir):
-    return set_ops.churned_customers(_t(spark, sf_dir, "orders"))
-
-
-def q_status_bag_overlap(spark, sf_dir):
-    return set_ops.status_bag_overlap(_t(spark, sf_dir, "orders"))
-
-
-def q_sliding_counts(spark, sf_dir):
-    return win_ops.sliding_counts(_t(spark, sf_dir, "events"))
-
-
-def q_funnel_steps(spark, sf_dir):
-    return ana_ops.funnel_steps(_t(spark, sf_dir, "events"))
-
-
-def q_retention_cohorts(spark, sf_dir):
-    return ana_ops.retention_cohorts(_t(spark, sf_dir, "events"))
 
 
 # FK edges of the TPC-H-ish star schema: (child, fk, parent, pk).
@@ -245,29 +162,19 @@ _FK_EDGES = [
     ("orders", "o_custkey", "customer", "c_custkey"),
     ("supplier", "s_nationkey", "nation", "n_nationkey"),
 ]
+_FK_TABLES = tuple(sorted({t for c, _, p, _ in _FK_EDGES for t in (c, p)}))
 
 
-def q_integrity_audit(spark, sf_dir):
+def _integrity_audit(*tables):
     # whole-schema referential-integrity gate: every FK edge audited
     # via distinct-key joins — fact payloads never shuffle
-    names = {t for c, _, p, _ in _FK_EDGES for t in (c, p)}
-    tables = {t: _t(spark, sf_dir, t) for t in names}
-    return prof_ops.integrity_audit(tables, _FK_EDGES)
+    return prof_ops.integrity_audit(dict(zip(_FK_TABLES, tables)), _FK_EDGES)
 
 
-def q_profile_orders(spark, sf_dir):
-    return prof_ops.profile_table(_t(spark, sf_dir, "orders"))
-
-
-def q_skew_lineitem_suppkey(spark, sf_dir):
-    return prof_ops.skew_profile(_t(spark, sf_dir, "lineitem"), "l_suppkey", top_n=10)
-
-
-def q_merge_upsert(spark, sf_dir):
+def _merge_upsert(orders):
     # CDC-apply over a simulated base snapshot (keys ≢0 mod 4) with an
     # even-key change batch: matched keys update price/status, even keys
     # missing from base insert, updated prices over the threshold delete
-    orders = _t(spark, sf_dir, "orders")
     base = orders.where(F.col("o_orderkey") % 4 != 0)
     updates = (
         orders.where(F.col("o_orderkey") % 2 == 0)
@@ -291,15 +198,11 @@ def q_merge_upsert(spark, sf_dir):
     )
 
 
-def q_ewma_smooth(spark, sf_dir):
-    return win_ops.ewma_smooth(_t(spark, sf_dir, "events")).orderBy("event_id")
-
-
-def q_pagerank(spark, sf_dir):
+def _pagerank_suppliers(lineitem):
     # part↔supplier sourcing graph from lineitem (both directions, so
     # rank circulates); report the supplier side — "which suppliers sit
     # at the center of the sourcing network"
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = lineitem.select("l_partkey", "l_suppkey")
     p = F.concat(F.lit("p"), F.col("l_partkey")).alias("src")
     s = F.concat(F.lit("s"), F.col("l_suppkey")).alias("dst")
     edges = li.select(p, s).unionByName(
@@ -316,38 +219,12 @@ def q_pagerank(spark, sf_dir):
     )
 
 
-def _copurchase_edges(spark, sf_dir):
-    # co-purchase graph: two parts are linked when some order contains
-    # both.  Pair generation is keyed by order (TPC-H orders hold ≤7
-    # lines), so the per-key fanout is constant — scale-safe even
-    # though the resulting graph is dense.
-    op = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("src"))
-    b = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("dst"))
-    return a.join(b, "o").where(F.col("src") < F.col("dst")).select("src", "dst")
-
-
-def q_triangle_stats(spark, sf_dir):
-    return graph_ops.triangle_stats(_copurchase_edges(spark, sf_dir))
-
-
-def q_triangle_nodes(spark, sf_dir):
-    # top 10 parts by triangle participation — the densest neighborhoods
-    # of the co-purchase graph; (count desc, node asc) is a total order
-    return (
-        graph_ops.node_triangle_counts(_copurchase_edges(spark, sf_dir))
-        .orderBy(F.col("n_triangles").desc(), F.col("node"))
-        .limit(10)
-    )
-
-
-def q_incremental_agg(spark, sf_dir):
+def _incremental_agg(orders):
     # incremental view maintenance: the materialized per-status census
     # of pre-1997 orders is maintained by a signed change batch (all
     # 1997+ orders inserted, every 50th pre-1997 key deleted) WITHOUT
     # rescanning the base — the oracle recomputes from scratch and the
     # decimal accumulation contract makes the two bit-identical
-    orders = _t(spark, sf_dir, "orders")
     cutoff = F.lit("1997-01-01").cast("date")
     base = (
         orders.where(F.col("o_orderdate") < cutoff)
@@ -371,114 +248,12 @@ def q_incremental_agg(spark, sf_dir):
     ).orderBy("o_orderstatus")
 
 
-def q_multi_touch_attribution(spark, sf_dir):
-    return ana_ops.multi_touch_attribution(
-        _t(spark, sf_dir, "events")
-    ).orderBy("purchase_id", "touch_rank")
-
-
-def q_monthly_yoy(spark, sf_dir):
-    # seasonality report: lag windows over the |months|-row aggregate
-    return agg_ops.monthly_revenue_yoy(_t(spark, sf_dir, "orders"))
-
-
-def q_token_length_hist(spark, sf_dir):
-    # power-of-two sequence-length buckets via exact integer boundaries
-    return sample_ops.token_length_histogram(_t(spark, sf_dir, "documents"))
-
-
-def q_user_drawdown(spark, sf_dir):
-    # running-peak drawdown, exact decimal throughout
-    return win_ops.user_drawdown(_t(spark, sf_dir, "events"))
-
-
-def q_supplier_returns(spark, sf_dir):
-    return agg_ops.supplier_return_report(_t(spark, sf_dir, "lineitem"))
-
-
-def q_daily_users(spark, sf_dir):
-    # DAU/new/cumulative via first-seen decomposition — the running
-    # distinct that never rescans history
-    return ana_ops.daily_user_accumulation(_t(spark, sf_dir, "events"))
-
-
-def q_kcore(spark, sf_dir):
-    # 3-core of the near-dup graph: iterative peel to the unique
-    # fixpoint; the oracle unrolls the same peel (extra rounds past
-    # convergence are no-ops by monotonicity)
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup_ops.jaccard_pairs(docs, threshold=0.6)
-    return graph_ops.kcore(pairs, k=3, src="doc_a", dst="doc_b")
-
-
-def q_value_outliers(spark, sf_dir):
-    # z-score outlier counts with the division/sqrt-cleared exact
-    # decision rule — selection bit-deterministic across engines
-    return ana_ops.value_outliers_exact(_t(spark, sf_dir, "events"))
-
-
-def q_revenue_gini(spark, sf_dir):
-    return ana_ops.revenue_gini_by_nation(
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "nation"),
-    )
-
-
-def q_copurchase_rules(spark, sf_dir):
-    # market-basket mining: basket-key self-join (bounded blow-up),
-    # exact-count ranking, confidence/lift as reported quotients.
-    # min_support=2: TPC-H part choice is near-uniform, so higher
-    # floors leave an empty result at test SFs
-    return ana_ops.copurchase_rules(_t(spark, sf_dir, "lineitem"), min_support=2)
-
-
-def q_cohort_revenue(spark, sf_dir):
-    return ana_ops.cohort_revenue(_t(spark, sf_dir, "events"))
-
-
-def q_repeat_intervals(spark, sf_dir):
-    return ana_ops.repeat_purchase_intervals(_t(spark, sf_dir, "orders"))
-
-
-def q_pmi_collocations(spark, sf_dir):
-    # count-ranked collocations with PMI as the reported value: the
-    # selected row set is exact-integer deterministic
-    return text_ops.pmi_collocations(_t(spark, sf_dir, "documents"))
-
-
-def q_transition_matrix(spark, sf_dir):
-    # first-order Markov transitions over each user's event timeline
-    return ana_ops.event_transition_matrix(_t(spark, sf_dir, "events"))
-
-
-def q_time_decay_attribution(spark, sf_dir):
-    # recency-weighted attribution twin: power-of-two day-bucket decay
-    # keeps the per-purchase weight sum order-insensitive and exact
-    return ana_ops.time_decay_attribution(
-        _t(spark, sf_dir, "events")
-    ).orderBy("purchase_id", "click_id")
-
-
-def q_top_tfidf(spark, sf_dir):
-    # per-doc keyword extraction: top-5 TF-IDF terms, deterministic
-    # (score desc, word asc) ranking, WindowGroupLimit-pruned top-k
-    return text_ops.top_tfidf_terms(_t(spark, sf_dir, "documents"))
-
-
-def q_lm_perplexity(spark, sf_dir):
-    return text_ops.lm_perplexity(_t(spark, sf_dir, "documents")).orderBy(
-        "doc_id"
-    )
-
-
-def q_fuzzy_part_names(spark, sf_dir):
+def _fuzzy_part_names(part):
     # record linkage: every third part's name is deterministically
     # corrupted (3rd character dropped) and linked back to the clean
     # name vocabulary at edit distance <= 2 — the blocked fuzzy join's
     # output is EXACTLY the lev<=k pair set, so a plain SQL
     # levenshtein join is the oracle
-    part = _t(spark, sf_dir, "part")
     dirty = part.where(F.col("p_partkey") % 3 == 0).select(
         F.col("p_partkey").alias("dirty_id"),
         F.expr(
@@ -491,23 +266,22 @@ def q_fuzzy_part_names(spark, sf_dir):
     ).orderBy("dirty_id", "clean_name")
 
 
-def q_zorder_census(spark, sf_dir):
+def _zorder_census(lineitem):
     # z-order layout census over (l_partkey, l_suppkey): per-z-bucket
     # min/max spans of BOTH dimensions — the measurable form of the
     # multi-column pruning property (see scale.write_zorder_clustered
     # for the layout writer itself; tests/test_scale.py measures real
     # parquet-footer span shrinkage vs a linear sort)
     return scale_ops.zorder_pruning_stats(
-        _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey"),
-        ["l_partkey", "l_suppkey"],
+        lineitem.select("l_partkey", "l_suppkey"), ["l_partkey", "l_suppkey"]
     )
 
 
-def q_scd2_history(spark, sf_dir):
+def _scd2_history(orders):
     # SCD Type-2 dimension build: each customer's order stream is the
     # change feed, (status, priority) the tracked attributes; sampled
     # key slice keeps the certified result set compact
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_custkey") % 10 == 0)
+    orders = orders.where(F.col("o_custkey") % 10 == 0)
     hist = merge_ops.scd2_history(
         orders.select("o_custkey", "o_orderdate", "o_orderstatus", "o_orderpriority"),
         "o_custkey",
@@ -517,10 +291,9 @@ def q_scd2_history(spark, sf_dir):
     return hist.orderBy("o_custkey", "version")
 
 
-def q_snapshot_diff(spark, sf_dir):
+def _snapshot_diff(orders):
     # simulated second snapshot of orders: drop every 20th key, bump
     # totalprice on every 7th — classification must find all four classes
-    orders = _t(spark, sf_dir, "orders")
     old = orders.where(F.col("o_orderkey") % 13 != 0)
     new = orders.where(F.col("o_orderkey") % 20 != 0).withColumn(
         "o_totalprice",
@@ -531,312 +304,10 @@ def q_snapshot_diff(spark, sf_dir):
     return prof_ops.snapshot_diff(old, new, "o_orderkey")
 
 
-def q_component_survivors(spark, sf_dir):
-    return dedup_ops.component_survivors(_t(spark, sf_dir, "documents"))
-
-
-def q_session_overlap(spark, sf_dir):
-    return join_ops.session_overlap_pairs(_t(spark, sf_dir, "events"))
-
-
-def q_time_range_avg(spark, sf_dir):
-    return win_ops.time_range_moving_avg(_t(spark, sf_dir, "events"))
-
-
-def q_revenue_share(spark, sf_dir):
-    return agg_ops.revenue_share_by_priority(_t(spark, sf_dir, "orders"))
-
-
-def q_price_histogram(spark, sf_dir):
-    return agg_ops.price_histogram(_t(spark, sf_dir, "orders"))
-
-
-def q_price_boxplot(spark, sf_dir):
-    # five-number summary + Tukey-fence outlier counts per status; the
-    # percentile row broadcasts back over the scan
-    return agg_ops.price_boxplot(_t(spark, sf_dir, "orders"))
-
-
-def q_equidepth_histogram(spark, sf_dir):
-    # quantile-bucketed histogram: one exact-percentile cutpoint row
-    # broadcast over the scan, row-local bucket fold, one groupBy —
-    # never ntile over the raw facts
-    return agg_ops.equidepth_histogram(_t(spark, sf_dir, "orders"))
-
-
-def q_user_bookends(spark, sf_dir):
-    # first_value/last_value as struct argmin/argmax — one map-side-
-    # combining groupBy, never a per-user window over the raw stream
-    return win_ops.user_bookends(_t(spark, sf_dir, "events"))
-
-
-def q_time_weighted_avg(spark, sf_dir):
-    # per-user TWAP: left-constant interpolation, exact decimal·micros
-    # numerator, one user-keyed shuffle shared by window + groupBy
-    return win_ops.time_weighted_avg(_t(spark, sf_dir, "events"))
-
-
-def q_pps_sample(spark, sf_dir):
-    # deterministic PPS systematic sample: integer-exact stride
-    # boundaries over an md5-ordered weight line, one source shuffle
-    return sample_ops.pps_systematic_sample(_t(spark, sf_dir, "documents"))
-
-
-def q_word_pairs(spark, sf_dir):
-    return text_ops.word_pair_counts(_t(spark, sf_dir, "documents"))
-
-
-def q_streaming_sessionize(spark, sf_dir):
-    """Second real-streaming oracle query: session windows under
-    AvailableNow must converge to the batch gap-sessionization."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import sessionize_available_now
-
-    tune_runtime(spark)
-    return sessionize_available_now(spark, os.path.join(sf_dir, "events.parquet"))
-
-
-def q_streaming_tier_rollup(spark, sf_dir):
-    """A REAL stream-static enrichment run: file stream broadcast-joins
-    a static user-tier dimension, then rolls up watermarked hourly
-    windows per tier — the remaining core streaming join shape; the
-    bounded replay hash-matches the plain batch join+rollup oracle."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import tier_rollup_available_now
-
-    tune_runtime(spark)
-    return tier_rollup_available_now(spark, os.path.join(sf_dir, "events.parquet"))
-
-
-def q_streaming_hourly_rollup(spark, sf_dir):
-    """A REAL structured-streaming run (file stream → watermarked window
-    → AvailableNow → memory sink), hash-checked against the same SQL
-    oracle as the batch rollup: streaming converges to the batch answer
-    on a bounded replay."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import hourly_rollup_available_now
-
-    tune_runtime(spark)
-    return hourly_rollup_available_now(spark, os.path.join(sf_dir, "events.parquet"))
-
-
-def q_streaming_click_attribution(spark, sf_dir):
-    """Third real-streaming oracle query: a watermarked STREAM-STREAM
-    interval self-join (purchase ← clicks within 1 day) under
-    AvailableNow must emit exactly the batch interval join."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import (
-        click_attribution_available_now,
-    )
-
-    tune_runtime(spark)
-    return click_attribution_available_now(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-
-
-def q_streaming_dedup_census(spark, sf_dir):
-    """Fourth real-streaming oracle query: row-level exactly-once dedup
-    (dropDuplicatesWithinWatermark) over a 3x duplicate-delivery replay
-    must reproduce the plain batch census of the original table."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import (
-        dedup_events_available_now,
-    )
-
-    tune_runtime(spark)
-    return dedup_events_available_now(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-
-
-def q_validate_expectations(spark, sf_dir):
-    # declarative data-contract gate: every rule a conditional count in
-    # ONE single-scan stacked aggregate (adding a rule adds no scan)
-    return prof_ops.validate_expectations(_t(spark, sf_dir, "orders"))
-
-
-def q_negative_samples(spark, sf_dir):
-    # deterministic contrastive negatives: md5-shuffled rank line +
-    # modular offsets; exactly k negatives per doc, k appearances as a
-    # negative, no self-pairs, one slim rank-equi self-join
-    return sample_ops.negative_sample_pairs(_t(spark, sf_dir, "documents"))
-
-
-def q_trimmed_means(spark, sf_dir):
-    # rank-trimmed + winsorized per-status means: integer rank bounds
-    # (bit-deterministic cross-engine), exact-decimal sums, skew-proof
-    # distributed rank over the few-statuses partition
-    return agg_ops.trimmed_price_means(_t(spark, sf_dir, "orders"))
-
-
-def q_quantile_normalize(spark, sf_dir):
-    # empirical-CDF normalization per event type via distributed_rank
-    return ana_ops.quantile_normalize_values(_t(spark, sf_dir, "events"))
-
-
-def q_scalar_quantization(spark, sf_dir):
-    # row-local int8 affine quantization audit: floor(+0.5) codes are
-    # bit-identical cross-engine; zero exchanges before the output sort
-    return sim_ops.scalar_quantization_stats(_t(spark, sf_dir, "embeddings"))
-
-
-def q_centroid_dispersion(spark, sf_dir):
-    # per-label elementwise-mean centroid (one |labels|*dim shuffle,
-    # broadcast back) + sequential zip_with distance folds
-    return sim_ops.label_centroid_dispersion(_t(spark, sf_dir, "embeddings"))
-
-
-def q_sentence_stats(spark, sf_dir):
-    # row-local sentence segmentation profile (chunking-planner input)
-    return text_ops.sentence_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_streaming_cdc_apply_bucketed(spark, sf_dir):
-    """Sixth real-streaming oracle query: the PARTITION-PRUNED CDC
-    MERGE stream (bucket-partitioned snapshot, per-batch rewrites
-    bounded to touched bucket directories) must converge to the same
-    batch full-outer MERGE as the full-rewrite form."""
-    import os
-
-    from parcial_bigdata_spark.streaming.pipeline import (
-        cdc_apply_bucketed_available_now,
-    )
-
-    tune_runtime(spark)
-    return cdc_apply_bucketed_available_now(
-        spark, os.path.join(sf_dir, "orders.parquet")
-    )
-
-
-def q_rfm_segments(spark, sf_dir):
-    # rank-quintile RFM via three skew-proof distributed ranks over the
-    # per-customer aggregate, joined back on the customer key
-    return ana_ops.rfm_customer_segments(_t(spark, sf_dir, "orders"))
-
-
-def q_dup_ngram_coverage(spark, sf_dir):
-    # corpus-internal duplicate-5-gram coverage per doc: hashed-gram
-    # stream -> per-gram doc frequency -> semi-join -> doc counts;
-    # totals ride the row-local array form
-    return dedup_ops.dup_ngram_coverage(_t(spark, sf_dir, "documents"))
-
-
-def q_zipf_fit(spark, sf_dir):
-    # per-lang Zipf slope over the top-100 words: one word-count
-    # shuffle, map-side top-k window, <=100-row closing regression
-    return text_ops.zipf_fit(_t(spark, sf_dir, "documents"))
-
-
-def q_streaming_cdc_apply(spark, sf_dir):
-    """Fifth real-streaming oracle query: a checkpointed foreachBatch
-    CDC MERGE stream (3 disjoint-key update files, one MERGE per
-    micro-batch under AvailableNow) must converge the keyed snapshot to
-    the batch full-outer MERGE of base and updates."""
-    import os
-
-    from parcial_bigdata_spark.streaming.pipeline import cdc_apply_available_now
-
-    tune_runtime(spark)
-    return cdc_apply_available_now(spark, os.path.join(sf_dir, "orders.parquet"))
-
-
-def q_all_party_keys(spark, sf_dir):
-    return set_ops.all_party_keys(
-        _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "supplier")
-    )
-
-
-def q_text_quality(spark, sf_dir):
-    return text_ops.quality_metrics(_t(spark, sf_dir, "documents"))
-
-
-def q_token_counts(spark, sf_dir):
-    return text_ops.token_counts(_t(spark, sf_dir, "documents"))
-
-
-def q_language_id(spark, sf_dir):
-    return text_ops.language_id(_t(spark, sf_dir, "documents"))
-
-
-def q_fingerprints(spark, sf_dir):
-    return text_ops.fingerprints(_t(spark, sf_dir, "documents"))
-
-
-def q_gopher_flags(spark, sf_dir):
-    return text_ops.gopher_quality_flags(_t(spark, sf_dir, "documents"))
-
-
-def q_repetition_ratios(spark, sf_dir):
-    return text_ops.repetition_ratios(_t(spark, sf_dir, "documents"))
-
-
-def q_pii_accounting(spark, sf_dir):
-    return text_ops.pii_redaction_accounting(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_exact(spark, sf_dir):
-    return dedup_ops.exact_duplicates(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_survivors(spark, sf_dir):
-    return dedup_ops.dedup_exact_survivors(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_paragraphs(spark, sf_dir):
-    return dedup_ops.paragraph_dedup(_t(spark, sf_dir, "documents"))
-
-
-def q_word_entropy(spark, sf_dir):
-    return text_ops.word_entropy(_t(spark, sf_dir, "documents"))
-
-
-def q_shuffle_shards(spark, sf_dir):
-    return sample_ops.shuffle_shards(_t(spark, sf_dir, "documents"))
-
-
-def q_quality_gate(spark, sf_dir):
-    return text_ops.quality_gate_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_bpe_merges(spark, sf_dir):
-    return text_ops.bpe_train_merges(_t(spark, sf_dir, "documents"), n_merges=8)
-
-
-def q_bpe_encode(spark, sf_dir):
-    # trains the 8 merges, then applies them row-locally corpus-wide
-    return text_ops.bpe_encode_token_counts(
-        _t(spark, sf_dir, "documents"), n_merges=8
-    )
-
-
-def q_bm25_search(spark, sf_dir):
-    return text_ops.bm25_search(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_jaccard(spark, sf_dir):
-    return dedup_ops.jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.6)
-
-
-def q_dedup_containment(spark, sf_dir):
-    # asymmetric doc-in-doc near-dup: containment |A∩B|/|A| with the
-    # PPJoin prefix filter carrying the pruning (no length band — the
-    # whole point is embedded shorter docs resemblance-Jaccard misses)
-    return dedup_ops.containment_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.7
-    )
-
-
-def q_dedup_incremental(spark, sf_dir):
+def _incremental_jaccard(docs):
     # daily-crawl incremental dedup: every fifth document arrives as
     # the "new batch", the rest is the settled base corpus; the probe
     # side of the candidate join is the batch only
-    docs = _t(spark, sf_dir, "documents")
     return dedup_ops.jaccard_pairs_incremental(
         docs.where(F.col("doc_id") % 5 != 0),
         docs.where(F.col("doc_id") % 5 == 0),
@@ -844,511 +315,38 @@ def q_dedup_incremental(spark, sf_dir):
     ).orderBy("new_doc", "dup_of")
 
 
-def q_dedup_minhash(spark, sf_dir):
-    return dedup_ops.minhash_near_duplicates(_t(spark, sf_dir, "documents"), threshold=0.6)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    return dedup_ops.simhash_near_duplicates(_t(spark, sf_dir, "documents"), max_hamming=3)
-
-
-def q_contamination(spark, sf_dir):
-    return dedup_ops.cross_split_contamination(_t(spark, sf_dir, "documents"))
-
-
-def decontaminate_inputs(spark, sf_dir):
-    """(train, eval) document frames for the decontamination queries:
-    even-numbered sources = train split, odd = eval (fixture sources are
-    src0..src19; a real pipeline passes its actual split frames)."""
-    docs = _t(spark, sf_dir, "documents")
+def _ngram_decontaminate(docs):
+    # even-numbered sources = train split, odd = eval (fixture sources
+    # are src0..src19; a real pipeline passes its actual split frames)
     is_train = F.substring("source", 4, 10).cast("int") % 2 == 0
-    return docs.where(is_train), docs.where(~is_train)
+    return dedup_ops.ngram_contamination(docs.where(is_train), docs.where(~is_train), n=5)
 
 
-def q_ngram_decontaminate(spark, sf_dir):
-    train, eval_ = decontaminate_inputs(spark, sf_dir)
-    return dedup_ops.ngram_contamination(train, eval_, n=5)
-
-
-def q_embedding_dups(spark, sf_dir):
-    return dedup_ops.embedding_near_duplicates(
-        _t(spark, sf_dir, "embeddings"), threshold=0.3
-    )
-
-
-def q_dedup_components(spark, sf_dir):
-    pairs = dedup_ops.jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.6)
-    return dedup_ops.duplicate_components_sorted(pairs)
-
-
-def q_embedding_dups_lsh(spark, sf_dir):
-    # Data-derived blocking (no label column needed).  The fixture has no
-    # true near-dups (max pairwise cosine ~0.51), so the threshold and
-    # table geometry are tuned to its similarity range: 2-plane tables
-    # collide pairs at cosine >= 0.4 with p ~ 0.4 each, and 8 OR'd tables
-    # put recall ~ 0.98.  Real corpora keep the 0.95/8-plane defaults.
-    # max_bucket=None: 2-plane tables have FOUR buckets, so the global
-    # LSH skew cap would wholesale-truncate the corpus, not trim
-    # outliers (measured recall 0.29@500/0.015@2000 vecs capped vs
-    # ~0.98 uncapped — caught by dedup_embedding_lsh_check, round 5);
-    # coarse geometries bound bucket size by corpus size instead.
-    return dedup_ops.embedding_near_duplicates_lsh(
-        _t(spark, sf_dir, "embeddings"),
-        threshold=0.4,
-        n_planes=2,
-        n_tables=8,
-        max_bucket=None,
-    )
-
-
-def q_minhash_check(spark, sf_dir):
-    return dedup_ops.minhash_recall_check(_t(spark, sf_dir, "documents"))
-
-
-def q_simhash_check(spark, sf_dir):
-    return dedup_ops.simhash_recall_check(_t(spark, sf_dir, "documents"))
-
-
-def q_embedding_lsh_check(spark, sf_dir):
-    return dedup_ops.embedding_lsh_recall_check(_t(spark, sf_dir, "embeddings"))
-
-
-def q_knn_brute(spark, sf_dir):
-    return sim_ops.knn_brute_force(_t(spark, sf_dir, "embeddings"), KNN_QUERY_IDS)
-
-
-def q_knn_ivf(spark, sf_dir):
-    return sim_ops.knn_ivf(_t(spark, sf_dir, "embeddings"), KNN_QUERY_IDS)
-
-
-def q_knn_lsh(spark, sf_dir):
-    return sim_ops.knn_lsh(_t(spark, sf_dir, "embeddings"), KNN_QUERY_IDS)
-
-
-def q_knn_arrow(spark, sf_dir):
-    return sim_ops.knn_brute_force_arrow(_t(spark, sf_dir, "embeddings"), KNN_QUERY_IDS)
-
-
-def q_approx_distinct(spark, sf_dir):
-    # the _checked audit form: same sketches, plus exact twins + bound
-    # flags so the driver row hash-greens instead of err:no_oracle
-    # (round-4 verdict item 6); the raw sketch-only operator stays the
-    # production path (aggregations.approx_distinct_parts, pytest-pinned)
-    return agg_ops.approx_distinct_parts_checked(_t(spark, sf_dir, "lineitem"))
-
-
-def q_stats_by_status(spark, sf_dir):
-    return agg_ops.stats_price_by_status(_t(spark, sf_dir, "orders"))
-
-
-def q_pivot_priority(spark, sf_dir):
-    return agg_ops.pivot_priority_counts(_t(spark, sf_dir, "orders"))
-
-
-def q_grouping_sets(spark, sf_dir):
-    return agg_ops.grouping_sets_revenue(_t(spark, sf_dir, "lineitem"))
-
-
-def q_top_words(spark, sf_dir):
-    return text_ops.top_words_per_lang(_t(spark, sf_dir, "documents"))
-
-
-def q_value_bands(spark, sf_dir):
-    return join_ops.value_band_join(_t(spark, sf_dir, "events"))
-
-
-def q_big_spenders(spark, sf_dir):
-    return join_ops.reliable_big_spenders(
-        _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    )
-
-
-def q_daily_delta(spark, sf_dir):
-    return win_ops.daily_delta(_t(spark, sf_dir, "events"))
-
-
-def q_user_trend(spark, sf_dir):
-    return win_ops.user_value_trend(_t(spark, sf_dir, "events"))
-
-
-def q_user_trend_pandas(spark, sf_dir):
-    return win_ops.user_value_trend_pandas(_t(spark, sf_dir, "events"))
-
-
-def q_quality_pass(spark, sf_dir):
-    return text_ops.quality_pass_rates(_t(spark, sf_dir, "documents"))
-
-
-def q_embedding_norms(spark, sf_dir):
-    return sim_ops.embedding_norm_stats(_t(spark, sf_dir, "embeddings"))
-
-
-def q_kmeans_train(spark, sf_dir):
-    return sim_ops.kmeans_cluster_summary(
-        _t(spark, sf_dir, "embeddings"), k=8, iters=2
-    )
-
-
-def q_media_summary(spark, sf_dir):
-    return mm_ops.media_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_image_decode(spark, sf_dir):
-    # REAL-path header decode (stdlib struct) over genuine PNG/BMP/GIF
-    # containers synthesized from doc_id — no fakes on this path
-    return mm_ops.image_decode_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_bmp_pixel_decode(spark, sf_dir):
-    # REAL pixel-PAYLOAD decode (stdlib struct + numpy, stride-aware)
-    # over genuine uncompressed 24-bit BMPs synthesized with full pixel
-    # arrays from doc_id — the one payload codec that needs no PIL
-    return mm_ops.bmp_pixel_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_png_pixel_decode(spark, sf_dir):
-    # REAL compressed-container pixel decode (stdlib zlib inflate with
-    # adler32 verification + the genuine five-filter scanline unfilter)
-    # over valid 8-bit RGB PNGs synthesized with stored-deflate IDAT
-    # streams from doc_id — the first payload codec past raw BMP/WAV
-    return mm_ops.png_pixel_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_png_palette_decode(spark, sf_dir):
-    # indexed-color sibling: color-type-3 PNGs with a real-CRC PLTE,
-    # five filters at bpp = 1, palette-mapped RGB statistics
-    return mm_ops.png_palette_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_png_interlaced_decode(spark, sf_dir):
-    # REAL Adam7 deinterlacing: pass walk + per-pass unfilter + scatter
-    # over interlace-method-1 PNGs carrying the SAME closed-form pixels
-    # as the RGB corpus — shares that oracle verbatim
-    return mm_ops.png_interlaced_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_gif_pixel_decode(spark, sf_dir):
-    # REAL GIF pixel decode: container walk + sub-block reassembly +
-    # the genuine variable-width LZW algorithm + global-color-table map
-    # over spec-legal clear-interleaved single-frame GIF89a payloads
-    return mm_ops.gif_pixel_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_gif_interlaced_decode(spark, sf_dir):
-    # interlaced sibling: four-pass row serialization undone by the
-    # real decode; shares the GIF oracle (placement pinned by pytest)
-    return mm_ops.gif_interlaced_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_avi_frame_decode(spark, sf_dir):
-    # REAL AVI frame-payload decode: RIFF tree walk + strh/strf
-    # validation + per-frame stride-aware bottom-up DIB decode over
-    # spec-legal uncompressed 24-bit AVIs with closed-form frames
-    return mm_ops.avi_frame_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_mp4_frame_decode(spark, sf_dir):
-    # REAL MP4 frame-payload decode: box walk + hdlr gate + genuine
-    # stsd/stsz/stsc/stco sample-table resolution + per-sample I420
-    # plane split, chroma upsample, and BT.601 transform over
-    # spec-legal ISO-BMFF files with closed-form neutral-chroma frames
-    return mm_ops.mp4_frame_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_mjpg_avi_decode(spark, sf_dir):
-    # REAL cross-codec decode: the AVI RIFF walk hands each 00dc chunk
-    # to the genuine baseline JPEG decoder — container logic and
-    # entropy-decode logic composed, the Motion-JPEG production shape
-    return mm_ops.mjpg_avi_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_jpeg_restart_decode(spark, sf_dir):
-    # DRI + RSTn markers on the genuine decode path: marker consume,
-    # byte realign, predictor reset, sequence check — all hash-pinned
-    # (interval 2 keeps the pixel closed form equal to the base corpus)
-    return mm_ops.jpeg_restart_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_jpeg_subsampled_decode(spark, sf_dir):
-    # REAL 4:2:0 decode — the dominant real-world JPEG layout: generic
-    # T.81 MCU interleave (4 Y + Cb + Cr per 16x16 MCU), per-component
-    # DC predictor chains, 2x2 nearest-neighbor chroma upsample, T.871
-    # color transform; neutral chroma keeps the closed form exact
-    return mm_ops.jpeg_subsampled_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_jpeg_pixel_decode(spark, sf_dir):
-    # REAL baseline JPEG pixel decode: marker walk + canonical Huffman
-    # construction + the genuine entropy decode (DC categories, EXTEND,
-    # EOB) + dequantize + IDCT + level shift over spec-legal DC-only
-    # grayscale payloads whose pixels are an exact closed form
-    return mm_ops.jpeg_pixel_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_wav_sample_decode(spark, sf_dir):
-    # REAL sample-PAYLOAD decode (stdlib wave + numpy) over genuine
-    # PCM16 WAV clips synthesized with full frame blocks from doc_id
-    return mm_ops.wav_sample_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_video_decode(spark, sf_dir):
-    # REAL-path container walk (RIFF chunk tree / ISO-BMFF boxes) over
-    # genuine AVI/MP4 files synthesized from doc_id
-    return mm_ops.video_decode_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_frame_sample(spark, sf_dir):
-    media = mm_ops.as_media(_t(spark, sf_dir, "documents"), "doc_id", "text", "source")
+def _frame_sample(docs):
+    media = mm_ops.as_media(docs, "doc_id", "text", "source")
     return mm_ops.frame_sample(media, every_n_bytes=64)
 
 
-def q_order_priority(spark, sf_dir):
-    return join_ops.order_priority_counts(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
+def _label_propagation(edges):
+    # 3-round min-label propagation communities on the REPEAT
+    # co-purchase graph (pairs bought together in >=2 orders — the
+    # unthresholded graph is one giant component, which is correct but
+    # uninformative): |E|-join + min-agg per round, checkpointed rounds
+    repeat = (
+        edges.groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .where(F.col("w") >= 2)
+        .select("src", "dst")
     )
+    return graph_ops.label_propagation_communities(repeat)
 
 
-def q_returned_items(spark, sf_dir):
-    return join_ops.returned_item_revenue(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
+# --------------------------------------------------------------------------
+# Queries that need the session or the files: (spark, sf_dir) functions
+# --------------------------------------------------------------------------
 
-
-def q_promo_share(spark, sf_dir):
-    return join_ops.promo_revenue_share(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_large_orders(spark, sf_dir):
-    return join_ops.large_orders(
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_brand_bands(spark, sf_dir):
-    return join_ops.brand_band_revenue(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_top_suppliers(spark, sf_dir):
-    return join_ops.top_revenue_suppliers(
-        _t(spark, sf_dir, "supplier"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_wealthy_inactive(spark, sf_dir):
-    return join_ops.wealthy_inactive_customers(
-        _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    )
-
-
-def q_nation_volume(spark, sf_dir):
-    return join_ops.nation_trade_volume(
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_market_share(spark, sf_dir):
-    return join_ops.market_share(
-        _t(spark, sf_dir, "region"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "customer"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "part"),
-    )
-
-
-def q_profit_by_nation(spark, sf_dir):
-    return join_ops.profit_by_nation_year(
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "part"),
-    )
-
-
-def q_order_distribution(spark, sf_dir):
-    return join_ops.customer_order_distribution(
-        _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    )
-
-
-def q_important_parts(spark, sf_dir):
-    return agg_ops.important_parts_by_value(_t(spark, sf_dir, "lineitem"))
-
-
-def q_supplier_variety(spark, sf_dir):
-    return join_ops.supplier_variety(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_small_qty_revenue(spark, sf_dir):
-    return join_ops.small_quantity_revenue(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_split_assign(spark, sf_dir):
-    return sample_ops.split_assign(_t(spark, sf_dir, "documents"))
-
-
-def q_stratified_sample(spark, sf_dir):
-    return sample_ops.stratified_sample_exact(_t(spark, sf_dir, "documents"))
-
-
-def q_pack_sequences(spark, sf_dir):
-    return sample_ops.pack_sequences(_t(spark, sf_dir, "documents"))
-
-
-def q_chunk_documents(spark, sf_dir):
-    return sample_ops.chunk_documents(_t(spark, sf_dir, "documents"))
-
-
-def q_leakage_safe_split(spark, sf_dir):
-    return sample_ops.leakage_safe_split(_t(spark, sf_dir, "documents"))
-
-
-def q_vocabulary_stats(spark, sf_dir):
-    return text_ops.vocabulary_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_quota_sample(spark, sf_dir):
-    return sample_ops.quota_sample_by_source(_t(spark, sf_dir, "documents"))
-
-
-def q_epoch_repeat(spark, sf_dir):
-    return sample_ops.epoch_repeat_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_temperature_mix(spark, sf_dir):
-    return sample_ops.temperature_mixture(_t(spark, sf_dir, "documents"))
-
-
-def q_waiting_suppliers(spark, sf_dir):
-    return join_ops.waiting_suppliers(
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "orders"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_min_cost_supplier(spark, sf_dir):
-    return join_ops.min_cost_supplier(
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "region"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_priority_lines(spark, sf_dir):
-    return join_ops.line_priority_by_status(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_dominant_suppliers(spark, sf_dir):
-    return join_ops.dominant_part_suppliers(
-        _t(spark, sf_dir, "part"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "nation"),
-        _t(spark, sf_dir, "lineitem"),
-    )
-
-
-def q_rank_bands(spark, sf_dir):
-    return win_ops.order_price_rank_bands(_t(spark, sf_dir, "orders"))
-
-
-def q_percentiles(spark, sf_dir):
-    return agg_ops.percentile_value_by_type(_t(spark, sf_dir, "events"))
-
-
-def q_correlation(spark, sf_dir):
-    return agg_ops.correlation_stats(_t(spark, sf_dir, "lineitem"))
-
-
-def q_unpivot_status(spark, sf_dir):
-    return agg_ops.unpivot_status_metrics(_t(spark, sf_dir, "orders"))
-
-
-def q_approx_percentiles(spark, sf_dir):
-    # audit form with oracle — see q_approx_distinct
-    return agg_ops.approx_percentile_value_by_type_checked(
-        _t(spark, sf_dir, "events")
-    )
-
-
-def q_gapfill(spark, sf_dir):
-    return win_ops.gapfill_daily_series(_t(spark, sf_dir, "events"))
-
-
-def q_sliding_distinct_users(spark, sf_dir):
-    # rolling 7-day distinct users: contribution-explode inversion —
-    # shuffle volume is 7·|user-days|, history never rescanned
-    return ana_ops.sliding_distinct_users(_t(spark, sf_dir, "events"))
-
-
-def q_mad_outliers(spark, sf_dir):
-    # rank-selected median + MAD per event type (distributed_rank both
-    # passes); lower-middle ELEMENT medians keep the cut bit-exact
-    return ana_ops.mad_outliers(_t(spark, sf_dir, "events"))
-
-
-def q_rolling_median(spark, sf_dir):
-    # exact trailing-7-row median per user: odd full frame → the middle
-    # element, never an interpolated average
-    return win_ops.rolling_median(_t(spark, sf_dir, "events"))
-
-
-def q_source_drift(spark, sf_dir):
-    # chi-square vocabulary drift between corpus halves; drift selection
-    # cross-multiplied into decimal(38,0) integers — bit-exact
-    return text_ops.source_drift_chisq(_t(spark, sf_dir, "documents"))
-
-
-def q_bfs_distances(spark, sf_dir):
-    # single-source BFS hop histogram over the co-purchase graph from
-    # the smallest part id; layered frontier expansion, O(E) total
-    return graph_ops.bfs_hop_histogram(_copurchase_edges(spark, sf_dir))
-
-
-def q_hourly_ohlc(spark, sf_dir):
-    # time-bucket OHLC bars: struct-argmin/argmax bookends in one
-    # map-side groupBy, exact-decimal volume
-    return agg_ops.hourly_ohlc(_t(spark, sf_dir, "events"))
-
-
-def q_temporal_split(spark, sf_dir):
-    # leakage-safe temporal split with a visible embargo stratum
-    return sample_ops.temporal_split(_t(spark, sf_dir, "events"))
-
-
-def q_group_kfold(spark, sf_dir):
-    # group-aware k-fold by portable md5 hash of the user key
-    return sample_ops.group_kfold(_t(spark, sf_dir, "events"))
-
-
-def q_wav_frame_features(spark, sf_dir):
-    # frame-level audio features (energy, zero crossings) over REAL
-    # PCM16 decode — integer-exact, every frame pinned by the synth
-    # closed form
-    return mm_ops.wav_frame_features(_t(spark, sf_dir, "documents"))
+def _events_file(sf_dir):
+    return os.path.join(sf_dir, "events.parquet")
 
 
 def q_csv_roundtrip(spark, sf_dir):
@@ -1356,11 +354,6 @@ def q_csv_roundtrip(spark, sf_dir):
     accounting must equal pure arithmetic on the events table plus the
     literal injected bad-line count — a parsing regression (delimiter,
     type coercion, corrupt routing) breaks the hash."""
-    import os
-    import tempfile
-
-    from parcial_bigdata_spark.sources.csvio import csv_roundtrip_accounting
-
     # per-RUN path keyed by the Spark application id (round-11 advice:
     # a fixed world-shared name races concurrent driver/test runs —
     # one overwrites the directory mid-scan of the other — and fails
@@ -1371,52 +364,77 @@ def q_csv_roundtrip(spark, sf_dir):
         tempfile.gettempdir(),
         f"spark-graft-csv-roundtrip-{spark.sparkContext.applicationId}",
     )
-    return csv_roundtrip_accounting(spark, _t(spark, sf_dir, "events"), out)
+    tune_runtime(spark)
+    return csv_roundtrip_accounting(spark, load_table(spark, sf_dir, "events"), out)
 
 
-def q_vocab_growth(spark, sf_dir):
-    # Heaps'-law curve: md5 doc line, integer slice arithmetic, one
-    # min-slice aggregate per word
-    return text_ops.vocab_growth_curve(_t(spark, sf_dir, "documents"))
+def q_streaming_sessionize(spark, sf_dir):
+    """Second real-streaming oracle query: session windows under
+    AvailableNow must converge to the batch gap-sessionization."""
+    tune_runtime(spark)
+    return stream_win.sessionize_available_now(spark, _events_file(sf_dir))
 
 
-def q_interarrival_hist(spark, sf_dir):
-    # power-of-two inter-arrival histogram per type: integer-second
-    # gaps, binary-digit buckets — the watermark/session-gap input
-    return ana_ops.interarrival_histogram(_t(spark, sf_dir, "events"))
+def q_streaming_tier_rollup(spark, sf_dir):
+    """A REAL stream-static enrichment run: file stream broadcast-joins
+    a static user-tier dimension, then rolls up watermarked hourly
+    windows per tier — the remaining core streaming join shape; the
+    bounded replay hash-matches the plain batch join+rollup oracle."""
+    tune_runtime(spark)
+    return stream_win.tier_rollup_available_now(spark, _events_file(sf_dir))
 
 
-def q_supplier_hhi(spark, sf_dir):
-    # Herfindahl supplier concentration per nation: exact decimal
-    # sums of squared integer-grid revenue, one division at the edge
-    return agg_ops.nation_supplier_hhi(
-        _t(spark, sf_dir, "lineitem"),
-        _t(spark, sf_dir, "supplier"),
-        _t(spark, sf_dir, "nation"),
+def q_streaming_hourly_rollup(spark, sf_dir):
+    """A REAL structured-streaming run (file stream → watermarked window
+    → AvailableNow → memory sink), hash-checked against the same SQL
+    oracle as the batch rollup: streaming converges to the batch answer
+    on a bounded replay."""
+    tune_runtime(spark)
+    return stream_win.hourly_rollup_available_now(spark, _events_file(sf_dir))
+
+
+def q_streaming_click_attribution(spark, sf_dir):
+    """Third real-streaming oracle query: a watermarked STREAM-STREAM
+    interval self-join (purchase ← clicks within 1 day) under
+    AvailableNow must emit exactly the batch interval join."""
+    tune_runtime(spark)
+    return stream_win.click_attribution_available_now(spark, _events_file(sf_dir))
+
+
+def q_streaming_dedup_census(spark, sf_dir):
+    """Fourth real-streaming oracle query: row-level exactly-once dedup
+    (dropDuplicatesWithinWatermark) over a 3x duplicate-delivery replay
+    must reproduce the plain batch census of the original table."""
+    tune_runtime(spark)
+    return stream_win.dedup_events_available_now(spark, _events_file(sf_dir))
+
+
+def q_streaming_cdc_apply(spark, sf_dir):
+    """Fifth real-streaming oracle query: a checkpointed foreachBatch
+    CDC MERGE stream (3 disjoint-key update files, one MERGE per
+    micro-batch under AvailableNow) must converge the keyed snapshot to
+    the batch full-outer MERGE of base and updates."""
+    tune_runtime(spark)
+    return stream_pipe.cdc_apply_available_now(spark, os.path.join(sf_dir, "orders.parquet"))
+
+
+def q_streaming_cdc_apply_bucketed(spark, sf_dir):
+    """Sixth real-streaming oracle query: the PARTITION-PRUNED CDC
+    MERGE stream (bucket-partitioned snapshot, per-batch rewrites
+    bounded to touched bucket directories) must converge to the same
+    batch full-outer MERGE as the full-rewrite form."""
+    tune_runtime(spark)
+    return stream_pipe.cdc_apply_bucketed_available_now(
+        spark, os.path.join(sf_dir, "orders.parquet")
     )
 
 
-def q_length_ks_drift(spark, sf_dir):
-    # exact KS drift of the length CDF between corpus halves; argmax
-    # ranked by the integer cross-multiplied gap
-    return text_ops.length_ks_drift(_t(spark, sf_dir, "documents"))
-
-
-def q_degree_hist(spark, sf_dir):
-    # power-of-two degree histogram of the co-purchase graph; buckets
-    # by binary digit count, no float log
-    return graph_ops.degree_histogram(_copurchase_edges(spark, sf_dir))
-
-
-def q_pair_cosine_hist(spark, sf_dir):
-    # isotropy diagnostic: cosine histogram over the deterministic md5
-    # rank-line pairing; round-6 before bucketing pins the buckets
-    return sim_ops.pair_cosine_histogram(_t(spark, sf_dir, "embeddings"))
-
-
-def q_undersample_balance(spark, sf_dir):
-    # class-balancing undersampler accounting: min-class cap, md5 draw
-    return sample_ops.undersample_balance(_t(spark, sf_dir, "documents"))
+def q_streaming_ohlc(spark, sf_dir):
+    """Eighth real-streaming oracle query: watermarked tumbling OHLC
+    bars (struct-bookend argmin/argmax state) under AvailableNow must
+    reproduce the batch hourly_ohlc exactly — they share one oracle."""
+    tune_runtime(spark)
+    return stream_win.ohlc_available_now(spark, _events_file(sf_dir))
 
 
 def q_streaming_zscore(spark, sf_dir):
@@ -1425,245 +443,8 @@ def q_streaming_zscore(spark, sf_dir):
     per-event prefix z-score anomaly flags; the exact-integer decision
     rule makes the stateful emission hash-match the batch prefix-window
     SQL on a bounded replay."""
-    import os
-
-    from parcial_bigdata_spark.streaming.stateful import (
-        running_zscore_available_now,
-    )
-
     tune_runtime(spark)
-    return running_zscore_available_now(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-
-
-def q_bmp_resize(spark, sf_dir):
-    # REAL nearest-neighbor resize over genuine BMP pixel arrays;
-    # post-resize channel stats pinned by the synthesis closed form
-    return mm_ops.bmp_resized_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_user_entropy(spark, sf_dir):
-    # behavioral-diversity entropy per user: sequential fold over the
-    # type-sorted count array (fixed evaluation order on both engines)
-    return ana_ops.user_behavior_entropy(_t(spark, sf_dir, "events"))
-
-
-def q_dim_stats(spark, sf_dir):
-    # per-dimension whitening profile: exact-decimal moment sums (order-
-    # insensitive), fixed IEEE op sequence shared with the oracle
-    return sim_ops.dimension_stats(_t(spark, sf_dir, "embeddings"))
-
-
-def q_streaming_ohlc(spark, sf_dir):
-    """Eighth real-streaming oracle query: watermarked tumbling OHLC
-    bars (struct-bookend argmin/argmax state) under AvailableNow must
-    reproduce the batch hourly_ohlc exactly — they share one oracle."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import ohlc_available_now
-
-    tune_runtime(spark)
-    return ohlc_available_now(spark, os.path.join(sf_dir, "events.parquet"))
-
-
-def q_abc_classes(spark, sf_dir):
-    # Pareto/ABC revenue classification: integer 1e-4-grid revenue,
-    # exact cross-multiplied 80/95 cutoffs, cumulative window over the
-    # per-part aggregate only
-    return agg_ops.abc_revenue_classes(_t(spark, sf_dir, "lineitem"))
-
-
-def q_functional_deps(spark, sf_dir):
-    # FD / key-uniqueness audit: grouping-level quality checks the
-    # row-level expectations gate cannot express
-    return prof_ops.functional_dependencies(_t(spark, sf_dir, "lineitem"))
-
-
-def q_activity_streaks(spark, sf_dir):
-    # gaps-and-islands: rn-difference island key, integer day indexes,
-    # stream pre-collapsed to distinct (user, day) pairs
-    return ana_ops.activity_streaks(_t(spark, sf_dir, "events"))
-
-
-def q_heavy_hitters(spark, sf_dir):
-    return text_ops.heavy_hitters(_t(spark, sf_dir, "documents"))
-
-
-def q_hourly_autocorr(spark, sf_dir):
-    # lag-1/lag-24 autocorrelation of the dense hourly count series per
-    # type: exact-integer Pearson sums, one IEEE edge
-    return ana_ops.hourly_autocorrelation(_t(spark, sf_dir, "events"))
-
-
-def q_benford_audit(spark, sf_dir):
-    # Benford first-digit audit of order totals: string-of-floor digit
-    # extraction, shared Python-literal expected shares
-    return prof_ops.benford_audit(_t(spark, sf_dir, "orders"))
-
-
-def q_assortativity(spark, sf_dir):
-    # degree assortativity of the co-purchase graph: symmetric-form
-    # exact-integer Pearson, no sqrt
-    return graph_ops.degree_assortativity(_copurchase_edges(spark, sf_dir))
-
-
-def q_mahalanobis_outliers(spark, sf_dir):
-    # diagonal-covariance Mahalanobis embedding outliers: decimal-grid
-    # moments, exact-decimal per-vector sums, bit-deterministic top-n
-    return sim_ops.mahalanobis_outliers(_t(spark, sf_dir, "embeddings"))
-
-
-def q_gif_frame_census(spark, sf_dir):
-    # real multi-frame GIF block walk over the synthetic animation
-    # corpus: frames / extensions / delays / LZW volume per media
-    return mm_ops.gif_frame_census(
-        mm_ops.synth_gif_corpus(_t(spark, sf_dir, "documents"))
-    )
-
-
-def q_curriculum_order(spark, sf_dir):
-    # length-banded curriculum schedule with round-robin interleave;
-    # within-band md5 order on distributed_rank
-    return sample_ops.curriculum_order(_t(spark, sf_dir, "documents"))
-
-
-def q_backlog_timeseries(spark, sf_dir):
-    # open-order backlog: +/- integer event differencing, |dates|-row
-    # cumulative window
-    return ana_ops.order_backlog_timeseries(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_fulfillment_percentiles(spark, sf_dir):
-    # exact SLA percentiles via bounded-domain counting: integer
-    # cross-multiplied CDF selection, no rank shuffle, no sketch
-    return ana_ops.fulfillment_percentiles(
-        _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_importance_weights(spark, sf_dir):
-    # uniform-mixture reweighting: weight = total/(k*n) per source
-    return sample_ops.importance_weights(_t(spark, sf_dir, "documents"))
-
-
-def q_media_dedup(spark, sf_dir):
-    # exact payload dedup census: md5(hex(content)) fingerprints over
-    # the synthetic image corpus (which genuinely collides)
-    return mm_ops.media_dedup_census(
-        mm_ops.synth_image_corpus(_t(spark, sf_dir, "documents"))
-    )
-
-
-def q_change_point(spark, sf_dir):
-    # binary-segmentation change point on the dense daily series per
-    # type: exact decimal cumsums, one IEEE score sequence, earlier-day
-    # tiebreak
-    return ana_ops.daily_change_point(_t(spark, sf_dir, "events"))
-
-
-def q_pareto_share(spark, sf_dir):
-    # revenue concentration curve: integer-grid revenue, skew-proof
-    # global rank, integer ceil cutoffs, one division per point
-    return ana_ops.pareto_revenue_share(_t(spark, sf_dir, "orders"))
-
-
-def q_compaction_plan(spark, sf_dir):
-    # sort-desc + cumulative-quota bin assignment over a simulated
-    # 200-file census; integer div binning
-    return merge_ops.compaction_plan(_t(spark, sf_dir, "lineitem"))
-
-
-def q_ab_proportion_test(spark, sf_dir):
-    # two-proportion z-test on a deterministic multiplicative-hash
-    # 50/50 user split: integer counts, one IEEE z sequence
-    return ana_ops.ab_proportion_test(_t(spark, sf_dir, "events"))
-
-
-def q_seasonal_forecast(spark, sf_dir):
-    # lag-168 seasonal-naive backtest on the dense final-week hourly
-    # grid: integer forecasts => integer error sums, one IEEE edge
-    return ana_ops.seasonal_naive_backtest(_t(spark, sf_dir, "events"))
-
-
-def q_schema_drift(spark, sf_dir):
-    # two-period column-stats drift report: one-pass period aggregate,
-    # enum-sized mode argmax, exact decimal/integer metrics
-    return prof_ops.schema_drift(_t(spark, sf_dir, "orders"))
-
-
-def q_top_paths(spark, sf_dir):
-    # top-k session journeys: stacked windows on one user shuffle,
-    # prefix row_number, TakeOrdered over the path-count aggregate
-    return ana_ops.top_session_paths(_t(spark, sf_dir, "events"))
-
-
-def q_theil_sen(spark, sf_dir):
-    # Theil-Sen robust daily trend: pairwise slopes on the
-    # post-aggregation |days| frame, exact-median selection
-    return ana_ops.theil_sen_daily_trend(_t(spark, sf_dir, "events"))
-
-
-def q_kaplan_meier(spark, sf_dir):
-    # Kaplan-Meier repurchase survival with right censoring: life-table
-    # bins, ordered cumulative exp(sum(ln)) product
-    return ana_ops.kaplan_meier_repurchase(_t(spark, sf_dir, "orders"))
-
-
-def q_readability(spark, sf_dir):
-    # corpus-level Flesch/FK per lang: row-local codegen counts, one
-    # |langs|-row aggregate, one IEEE score sequence
-    return text_ops.readability_scores(_t(spark, sf_dir, "documents"))
-
-
-def q_label_propagation(spark, sf_dir):
-    # 3-round min-label propagation communities on the REPEAT
-    # co-purchase graph (pairs bought together in >=2 orders — the
-    # unthresholded graph is one giant component, which is correct but
-    # uninformative): |E|-join + min-agg per round, checkpointed rounds
-    op = (
-        _t(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("src"))
-    b = op.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "o")
-        .where(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= 2)
-        .select("src", "dst")
-    )
-    return graph_ops.label_propagation_communities(edges)
-
-
-def q_random_projection(spark, sf_dir):
-    # JL ±1 projection distance audit: row-local codegen projection,
-    # one vec_id+1 equi-join, |buckets|-row histogram
-    return sim_ops.random_projection_audit(_t(spark, sf_dir, "embeddings"))
-
-
-def q_streaming_topk(spark, sf_dir):
-    """Tenth real-streaming oracle query: 6-hour tumbling (window,
-    type) counts maintained in the state store under a REAL
-    AvailableNow run, then a batch top-3 rank over the final
-    |windows|·|types| table (Structured Streaming forbids the second
-    aggregation in-stream) — hash-checked against the batch windowed
-    rank."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import (
-        topk_per_window_available_now,
-    )
-
-    tune_runtime(spark)
-    return topk_per_window_available_now(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
+    return stream_state.running_zscore_available_now(spark, _events_file(sf_dir))
 
 
 def q_streaming_late_audit(spark, sf_dir):
@@ -1673,228 +454,19 @@ def q_streaming_late_audit(spark, sf_dir):
     the oracle recomputes the emitted/dropped accounting from the
     midpoint-split + watermark arithmetic, so append/late-drop
     semantics drift breaks the hash."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import late_data_audit
-
     tune_runtime(spark)
-    return late_data_audit(spark, os.path.join(sf_dir, "events.parquet"))
-
-
-def q_nelson_aalen(spark, sf_dir):
-    # cumulative-hazard sibling of orders_kaplan_meier on the identical
-    # life table: ordered cumsum of exact-count divisions
-    return ana_ops.nelson_aalen_hazard(_t(spark, sf_dir, "orders"))
-
-
-def q_mann_whitney(spark, sf_dir):
-    # nonparametric rank-sum sibling of stats_welch_ttest: bounded-
-    # domain integer double-ranks, decimal(38,0) rank/tie sums, one
-    # IEEE z sequence
-    return ana_ops.mann_whitney_quantity(_t(spark, sf_dir, "lineitem"))
-
-
-def q_mann_kendall(spark, sf_dir):
-    # nonparametric monotone-trend test on daily counts next to
-    # Theil–Sen and OLS: exact integer S + tie term on the calendar-
-    # bounded dimension grid, one IEEE continuity-corrected z sequence
-    return ana_ops.mann_kendall_daily(_t(spark, sf_dir, "events"))
-
-
-def q_seasonal_mann_kendall(spark, sf_dir):
-    # Hirsch–Slack seasonal MK with weekday seasons: within-season
-    # pairwise sign census on the weekday-partitioned calendar grid,
-    # exact integer S and 18·Var sums, one IEEE z sequence — the
-    # weekly cycle can no longer mask or fake a monotone drift
-    return ana_ops.seasonal_mann_kendall_daily(_t(spark, sf_dir, "events"))
-
-
-def q_mcnemar_paired(spark, sf_dir):
-    # McNemar's paired before/after conversion test: each user is
-    # their own pair across the corpus' two time halves; only the
-    # discordant users carry information (Edwards continuity, 1 df)
-    return ana_ops.mcnemar_purchase_halves(_t(spark, sf_dir, "events"))
-
-
-def q_friedman_blocks(spark, sf_dir):
-    # Friedman repeated-measures ranks: users as blocks, types as
-    # treatments — within-block ranking removes the user-volume
-    # nuisance a pooled Kruskal-Wallis cannot
-    return ana_ops.friedman_activity_blocks(_t(spark, sf_dir, "events"))
-
-
-def q_local_clustering(spark, sf_dir):
-    # per-node local clustering deciles of the co-purchase graph —
-    # pure integer bucketing (20*T div wedges), zero-IEEE semantics
-    return graph_ops.local_clustering_histogram(
-        _copurchase_edges(spark, sf_dir)
-    )
-
-
-def q_kruskal_wallis(spark, sf_dir):
-    # k-group rank omnibus: pooled bounded-domain integer double-ranks,
-    # decimal(38,0) rank/tie sums, one IEEE H sequence at the 4 dp
-    # k-term-double-sum margin — completes the nonparametric family
-    # next to Mann-Whitney (2-group) and ANOVA (parametric k-group)
-    return ana_ops.kruskal_wallis_value(_t(spark, sf_dir, "events"))
-
-
-def q_levene_value(spark, sf_dir):
-    # Brown–Forsythe variance homogeneity across event types: exact
-    # cent-grid lower medians, exact decimal deviation moments, W at
-    # the 4 dp entropy-contract margin
-    return ana_ops.levene_value_by_type(_t(spark, sf_dir, "events"))
-
-
-def q_ols_trend(spark, sf_dir):
-    # classical OLS daily-revenue trend next to the Theil–Sen robust
-    # line: six exact decimal/int64 moments, one IEEE slope/R² sequence
-    return ana_ops.ols_daily_trend(_t(spark, sf_dir, "orders"))
-
-
-def q_hapax_stats(spark, sf_dir):
-    # corpus lexical richness: hapax share, TTR, Herdan's C from one
-    # word-grain aggregate + one global row
-    return text_ops.hapax_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_chi2_independence(spark, sf_dir):
-    # status x priority contingency: one cell aggregate, broadcast
-    # margins, chi-square + Cramér's V from exact integer counts
-    return ana_ops.chi2_independence(_t(spark, sf_dir, "orders"))
-
-
-def q_kendall_tau(spark, sf_dir):
-    # tie-robust monotonic association on the bounded quantity/discount
-    # grid: cell-frame self-join pair counts, decimal(38,0) sums
-    return ana_ops.kendall_tau_quantity_discount(
-        _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_runs_test(spark, sf_dir):
-    # Wald-Wolfowitz randomness check on daily revenue: lower-median
-    # counting + one lag over the |days| frame
-    return ana_ops.runs_test_daily_revenue(_t(spark, sf_dir, "orders"))
-
-
-def q_spearman_rho(spark, sf_dir):
-    # average-rank correlation on the bounded quantity/discount grid:
-    # double-rank margin frames + one exact-decimal cell reduce
-    return ana_ops.spearman_rho_quantity_discount(
-        _t(spark, sf_dir, "lineitem")
-    )
-
-
-def q_anova_oneway(spark, sf_dir):
-    # k-group omnibus mean test on event value: one fact aggregate,
-    # Koenig terms on the k-row frame
-    return ana_ops.anova_oneway_value(_t(spark, sf_dir, "events"))
-
-
-def q_markov_transitions(spark, sf_dir):
-    # per-user event-type transition census: one user-window lag pass,
-    # map-side census onto the |types|^2 grid
-    return ana_ops.markov_event_transitions(_t(spark, sf_dir, "events"))
-
-
-def q_lag_xcorr(spark, sf_dir):
-    # lagged click->purchase cross-correlation on the zero-filled hour
-    # spine: exact integer moments per lag
-    return ana_ops.lag_xcorr_click_purchase(_t(spark, sf_dir, "events"))
-
-
-def q_pil_pixel_decode(spark, sf_dir):
-    # optional-tier twin of multimodal_png_pixel_decode: PIL-forced
-    # decode of the same spec-valid PNG corpus, same closed-form oracle
-    # (registered only when PIL is importable — see OPTIONAL_QUERIES)
-    return mm_ops.pil_pixel_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_pyav_frame_decode(spark, sf_dir):
-    # optional-tier twin of multimodal_avi_frame_decode: PyAV-forced
-    # decode of the same uncompressed-DIB AVI corpus, same closed-form
-    # oracle (registered only when PyAV is importable)
-    return mm_ops.pyav_frame_summary(_t(spark, sf_dir, "documents"))
-
-
-def q_rich_club(spark, sf_dir):
-    # hub-interconnection diagnostic: TakeOrdered top-k club broadcast
-    # over the edge list, all club sizes in ONE conditional-sum agg
-    return graph_ops.rich_club_coefficients(_copurchase_edges(spark, sf_dir))
-
-
-def q_image_histogram(spark, sf_dir):
-    # corpus BGR intensity histogram over REAL BMP decode: per-batch
-    # np.bincount partials, shuffle carries <=|batches|*48 rows
-    return mm_ops.image_channel_histogram(_t(spark, sf_dir, "documents"))
-
-
-def q_component_size_hist(spark, sf_dir):
-    # dedup savings readout: star-rounds CC labels + two bounded
-    # aggregates (comp -> size -> histogram), singletons included
-    pairs = dedup_ops.jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.6)
-    return dedup_ops.component_size_histogram(
-        _t(spark, sf_dir, "documents"), pairs
-    )
-
-
-def q_periodogram(spark, sf_dir):
-    # Schuster periodogram at daily/weekly/half-daily periods: one
-    # (type, hour) count; trig pass on the dimension grid only
-    return ana_ops.hourly_periodogram(_t(spark, sf_dir, "events"))
-
-
-def q_bigram_entropy(spark, sf_dir):
-    # Shannon bigram conditional entropy per lang: one bigram-stream
-    # aggregate; the unigram marginal re-aggregates the bigram frame
-    return text_ops.bigram_conditional_entropy(_t(spark, sf_dir, "documents"))
-
-
-def q_conversion_latency(spark, sf_dir):
-    # first-view -> first-purchase latency percentiles: one per-user
-    # conditional-min aggregate, bounded-domain counting percentiles
-    # on the <=|hours| frame (integer cross-multiplication pick)
-    return ana_ops.conversion_latency_percentiles(_t(spark, sf_dir, "events"))
-
-
-def q_harmonic_closeness(spark, sf_dir):
-    # landmark harmonic centrality: multi-source layered BFS keyed
-    # (seed, node) — max_hops rounds total regardless of seed count
-    return graph_ops.harmonic_closeness(_copurchase_edges(spark, sf_dir))
-
-
-def q_bootstrap_ci(spark, sf_dir):
-    # Poisson-bootstrap CI for the mean purchase value: deterministic
-    # integer hash -> Poisson(1) weights, 32 resample means in ONE
-    # map-side-combined pass, nearest-rank CI from the 32-row frame
-    return ana_ops.bootstrap_mean_ci(_t(spark, sf_dir, "events"))
-
-
-def q_wav_silence(spark, sf_dir):
-    # VAD-style silence runs over REAL PCM16 decode: numpy run-length
-    # scan in one mapInPandas stage, gaps-and-islands oracle
-    return mm_ops.wav_silence_runs(_t(spark, sf_dir, "documents"))
-
-
-def q_pca_variance(spark, sf_dir):
-    # full-covariance PCA spectrum: exact-decimal distributed moments,
-    # driver-side d x d eigh (bounded by dimension, not rows);
-    # rows-only by design — its hard check is the trace-audit twin
-    return sim_ops.pca_variance_spectrum(_t(spark, sf_dir, "embeddings"))
-
-
-def q_pca_trace_audit(spark, sf_dir):
-    # oracle-checked PCA twin: sum(eigenvalues) must hash-match the
-    # SQL-computable covariance trace at 6 dp
-    return sim_ops.pca_trace_audit(_t(spark, sf_dir, "embeddings"))
-
-
-def q_weekday_seasonality(spark, sf_dir):
-    # day-of-week multiplicative indices per type on the dense daily
-    # grid: integer sums at every grain, |types|-row window for the
-    # grand mean
-    return ana_ops.weekday_seasonality(_t(spark, sf_dir, "events"))
+    return stream_win.late_data_audit(spark, _events_file(sf_dir))
+
+
+def q_streaming_topk(spark, sf_dir):
+    """Tenth real-streaming oracle query: 6-hour tumbling (window,
+    type) counts maintained in the state store under a REAL
+    AvailableNow run, then a batch top-3 rank over the final
+    |windows|·|types| table (Structured Streaming forbids the second
+    aggregation in-stream) — hash-checked against the batch windowed
+    rank."""
+    tune_runtime(spark)
+    return stream_win.topk_per_window_available_now(spark, _events_file(sf_dir))
 
 
 def q_streaming_outer_join(spark, sf_dir):
@@ -1904,16 +476,8 @@ def q_streaming_outer_join(spark, sf_dir):
     no-data batch's watermark evicts them.  The oracle recomputes both
     populations from the batch join + the pinned watermark arithmetic,
     so outer-emission/eviction semantics drift breaks the hash."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import (
-        outer_attribution_available_now,
-    )
-
     tune_runtime(spark)
-    return outer_attribution_available_now(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
+    return stream_win.outer_attribution_available_now(spark, _events_file(sf_dir))
 
 
 def q_streaming_join_tail(spark, sf_dir):
@@ -1922,71 +486,8 @@ def q_streaming_join_tail(spark, sf_dir):
     watermark-evicted null rows, and the deliberately-retained
     unmatched tail, reconciled per purchase day in one output (emitted
     nulls + retained tail must equal batch unmatched, exactly)."""
-    import os
-
-    from parcial_bigdata_spark.streaming.windows import (
-        outer_join_tail_audit,
-    )
-
     tune_runtime(spark)
-    return outer_join_tail_audit(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-
-
-def q_holt_forecast(spark, sf_dir):
-    # Holt level+trend smoothing per type on the dense daily grid:
-    # dyadic coefficients make the sequential recursion bit-identical
-    # cross-engine; applyInPandas per type, recursive-CTE oracle
-    return ana_ops.holt_linear_smoothing(_t(spark, sf_dir, "events"))
-
-
-def q_price_elasticity(spark, sf_dir):
-    # log-log OLS elasticity per brand: row-local logs, one map-side
-    # combined 6-moment brand aggregate after the partkey join
-    return agg_ops.price_elasticity_by_brand(
-        _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
-    )
-
-
-def q_common_neighbors(spark, sf_dir):
-    # Jaccard/common-neighbor link prediction on the co-purchase graph:
-    # hub-capped wedge join (fanout <= cap^2), left_anti on existing
-    # edges, total-order top-k
-    return graph_ops.common_neighbor_scores(_copurchase_edges(spark, sf_dir))
-
-
-def q_boilerplate_ngrams(spark, sf_dir):
-    # C4-style cross-doc boilerplate 5-gram census: row-local distinct
-    # gram arrays, one map-side-combined gram count, TakeOrdered top-k
-    return text_ops.boilerplate_ngrams(_t(spark, sf_dir, "documents"))
-
-
-def q_js_divergence(spark, sf_dir):
-    # per-source vs corpus unigram Jensen-Shannon drift: one (source,
-    # word) aggregate, vocab-sized shuffle join, closed-form out-of-
-    # source tail (no vocabulary anti-join)
-    return text_ops.js_divergence_by_source(_t(spark, sf_dir, "documents"))
-
-
-def q_welch_ttest(spark, sf_dir):
-    # Welch unequal-variance t-test F vs O order values: exact decimal
-    # moment sums, one IEEE t/dof sequence, broadcast single-row cross
-    return ana_ops.welch_ttest_by_status(_t(spark, sf_dir, "orders"))
-
-
-def q_poisson_rate_test(spark, sf_dir):
-    # equal-exposure two-period Poisson rate z per event type: one
-    # conditional-count aggregate, integer inputs to one IEEE sequence
-    return ana_ops.poisson_rate_test(_t(spark, sf_dir, "events"))
-
-
-def q_cusum_alarm(spark, sf_dir):
-    # Page's one-sided CUSUM per event type on the dense daily grid:
-    # fact cost is one (type, day) count; the sequential scan runs
-    # applyInPandas per type over the |days|-row series (recursive-CTE
-    # oracle replays the identical IEEE recursion)
-    return ana_ops.cusum_alarms(_t(spark, sf_dir, "events"))
+    return stream_win.outer_join_tail_audit(spark, _events_file(sf_dir))
 
 
 # Dict order matters: the correctness driver checks the FIRST 50 entries.
@@ -2001,303 +502,604 @@ def q_cusum_alarm(spark, sf_dir):
 # happened this round; streaming_hourly_rollup keeps a real-streaming row
 # every round.  Parked below the cut: the full r5-green window (every row
 # non-red last round); the judge's tool still verifies everything.
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+QUERIES: dict[str, Query] = {
     # reference parity (SURVEY.md §2.1-2.7) — a driver row every round
-    "interval_query": q_interval,
-    "interval_count": q_interval_count,
-    "ingest_accounting": q_ingest_accounting,
-    "json_props_agg": q_json_props,
-    # as-of family: the new tolerance gate + the plain form (r5 edits)
-    "asof_purchase_signup_tolerance": q_asof_join_tolerance,
-    "asof_purchase_signup": q_asof_join,
+    "interval_query": _op(
+        interval_ops.interval, "events", "ts", "value", INTERVAL_START, INTERVAL_END
+    ),
+    "interval_count": _op(
+        interval_ops.interval_count, "events", "ts", INTERVAL_START, INTERVAL_END
+    ),
+    "ingest_accounting": _op(_ingest_accounting, "documents"),
+    "json_props_agg": _op(_json_props, "events"),
+    # as-of family: the new tolerance gate + the plain form (r5 edits).
+    # With tolerance (pandas merge_asof semantics) a signup match older
+    # than 7 days nulls out; round 5 found the parameter silently
+    # ignored because no oracle-checked query exercised it.
+    "asof_purchase_signup_tolerance": _op(
+        _asof_purchase_signup, "events", tolerance=_ASOF_TOLERANCE_S
+    ),
+    "asof_purchase_signup": _op(_asof_purchase_signup, "events"),
     # full TPC-H block (last full driver pass: r4)
-    "q1_pricing_summary": q_pricing_summary,
-    "q2_min_cost_supplier": q_min_cost_supplier,
-    "q3_shipping_priority": q_shipping_priority,
-    "q4_order_priority": q_order_priority,
-    "q5_region_revenue": q_region_revenue,
-    "q6_revenue_forecast": q_revenue_forecast,
-    "q7_nation_volume": q_nation_volume,
-    "q8_market_share": q_market_share,
-    "q9_profit_by_nation": q_profit_by_nation,
-    "q10_returned_items": q_returned_items,
-    "q11_important_parts": q_important_parts,
-    "q12_priority_lines": q_priority_lines,
-    "q13_order_distribution": q_order_distribution,
-    "q14_promo_share": q_promo_share,
-    "q15_top_suppliers": q_top_suppliers,
-    "q16_supplier_variety": q_supplier_variety,
-    "q17_small_qty_revenue": q_small_qty_revenue,
-    "q18_large_orders": q_large_orders,
-    "q19_brand_bands": q_brand_bands,
-    "q20_dominant_suppliers": q_dominant_suppliers,
-    "q21_waiting_suppliers": q_waiting_suppliers,
-    "q22_wealthy_inactive": q_wealthy_inactive,
+    "q1_pricing_summary": _op(agg_ops.pricing_summary, "lineitem"),
+    "q2_min_cost_supplier": _op(
+        join_ops.min_cost_supplier, "part supplier nation region lineitem"
+    ),
+    "q3_shipping_priority": _op(join_ops.shipping_priority, "customer orders lineitem"),
+    "q4_order_priority": _op(join_ops.order_priority_counts, "orders lineitem"),
+    "q5_region_revenue": _op(
+        join_ops.region_revenue, "region nation customer supplier orders lineitem"
+    ),
+    "q6_revenue_forecast": _op(agg_ops.revenue_forecast, "lineitem"),
+    "q7_nation_volume": _op(
+        join_ops.nation_trade_volume, "nation customer supplier orders lineitem"
+    ),
+    "q8_market_share": _op(
+        join_ops.market_share, "region nation customer supplier orders lineitem part"
+    ),
+    "q9_profit_by_nation": _op(
+        join_ops.profit_by_nation_year, "nation supplier orders lineitem part"
+    ),
+    "q10_returned_items": _op(join_ops.returned_item_revenue, "customer orders lineitem"),
+    "q11_important_parts": _op(agg_ops.important_parts_by_value, "lineitem"),
+    "q12_priority_lines": _op(join_ops.line_priority_by_status, "orders lineitem"),
+    "q13_order_distribution": _op(join_ops.customer_order_distribution, "customer orders"),
+    "q14_promo_share": _op(join_ops.promo_revenue_share, "lineitem part"),
+    "q15_top_suppliers": _op(join_ops.top_revenue_suppliers, "supplier lineitem"),
+    "q16_supplier_variety": _op(join_ops.supplier_variety, "lineitem part"),
+    "q17_small_qty_revenue": _op(join_ops.small_quantity_revenue, "lineitem part"),
+    "q18_large_orders": _op(join_ops.large_orders, "customer orders lineitem"),
+    "q19_brand_bands": _op(join_ops.brand_band_revenue, "lineitem part"),
+    "q20_dominant_suppliers": _op(
+        join_ops.dominant_part_suppliers, "part supplier nation lineitem"
+    ),
+    "q21_waiting_suppliers": _op(join_ops.waiting_suppliers, "supplier orders lineitem"),
+    "q22_wealthy_inactive": _op(join_ops.wealthy_inactive_customers, "customer orders"),
     # join family beyond TPC-H (r5 review wave touched joins.py)
-    "join_revenue_by_brand": q_revenue_by_brand,
-    "semi_join_big_orders": q_semi_join,
-    "anti_join_idle_customers": q_anti_join,
-    "range_value_bands": q_value_bands,
-    "subquery_big_spenders": q_big_spenders,
-    "session_overlap_pairs": q_session_overlap,
+    "join_revenue_by_brand": _op(join_ops.revenue_by_brand, "lineitem part"),
+    "semi_join_big_orders": _op(join_ops.orders_with_big_items, "orders lineitem"),
+    "anti_join_idle_customers": _op(join_ops.customers_without_orders, "customer orders"),
+    "range_value_bands": _op(join_ops.value_band_join, "events"),
+    "subquery_big_spenders": _op(join_ops.reliable_big_spenders, "customer orders"),
+    "session_overlap_pairs": _op(join_ops.session_overlap_pairs, "events"),
     # window family (last driver-checked r4)
-    "window_value_delta": q_window_delta,
-    "window_topk_per_user": q_window_topk,
-    "window_running_total": q_running_total,
-    "window_rank_bands": q_rank_bands,
-    "window_daily_delta": q_daily_delta,
-    "window_time_range_avg": q_time_range_avg,
-    "window_sliding_counts": q_sliding_counts,
-    "sessionize_events": q_sessionize,
-    "hourly_rollup": q_hourly_rollup,
-    "gapfill_daily_series": q_gapfill,
-    "agg_user_value_trend": q_user_trend,
-    "agg_user_value_trend_pandas": q_user_trend_pandas,
+    "window_value_delta": _op(lambda e: win_ops.value_delta(e).orderBy("event_id"), "events"),
+    "window_topk_per_user": _op(
+        lambda e: win_ops.top_events_per_user(e).orderBy("user_id", "rnk"), "events"
+    ),
+    "window_running_total": _op(lambda e: win_ops.running_total(e).orderBy("event_id"), "events"),
+    "window_rank_bands": _op(win_ops.order_price_rank_bands, "orders"),
+    "window_daily_delta": _op(win_ops.daily_delta, "events"),
+    "window_time_range_avg": _op(win_ops.time_range_moving_avg, "events"),
+    "window_sliding_counts": _op(win_ops.sliding_counts, "events"),
+    "sessionize_events": _op(win_ops.sessionize, "events"),
+    "hourly_rollup": _op(win_ops.hourly_rollup, "events"),
+    "gapfill_daily_series": _op(win_ops.gapfill_daily_series, "events"),
+    "agg_user_value_trend": _op(win_ops.user_value_trend, "events"),
+    "agg_user_value_trend_pandas": _op(win_ops.user_value_trend_pandas, "events"),
     # edited this round (stack→inline rewrite) — re-certify immediately
-    "events_funnel_steps": q_funnel_steps,
+    "events_funnel_steps": _op(ana_ops.funnel_steps, "events"),
     # a REAL structured-streaming run keeps a driver row every round
     "streaming_hourly_rollup": q_streaming_hourly_rollup,
     "streaming_tier_rollup": q_streaming_tier_rollup,
-    "grouping_sets_revenue": q_grouping_sets,
-    "correlation_stats": q_correlation,
+    "grouping_sets_revenue": _op(agg_ops.grouping_sets_revenue, "lineitem"),
+    "correlation_stats": _op(agg_ops.correlation_stats, "lineitem"),
     # ---- first-50 cut ----
     # parked: the full r5-green window (reference-LLM-pipeline block,
     # aggregation family, approximate dedup + audit twins — every row
     # non-red last round); the judge's tool still verifies everything
-    "dedup_minhash_lsh": q_dedup_minhash,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_embedding_lsh": q_embedding_dups_lsh,
-    "dedup_minhash_lsh_check": q_minhash_check,
-    "dedup_simhash_check": q_simhash_check,
-    "dedup_embedding_lsh_check": q_embedding_lsh_check,
-    "distinct_customers_per_status": q_distinct_customers,
-    "rollup_order_totals": q_rollup_orders,
-    "cube_lineitem_counts": q_cube_lineitem,
-    "top_orders_by_price": q_top_orders,
-    "approx_distinct_parts": q_approx_distinct,
-    "stats_price_by_status": q_stats_by_status,
-    "pivot_priority_counts": q_pivot_priority,
-    "unpivot_status_metrics": q_unpivot_status,
-    "percentile_value_by_type": q_percentiles,
-    "approx_percentile_value_by_type": q_approx_percentiles,
-    "setop_repeat_customers": q_repeat_customers,
-    "setop_churned_customers": q_churned_customers,
-    "setop_all_party_keys": q_all_party_keys,
-    "setop_status_bag_overlap": q_status_bag_overlap,
-    "events_retention_cohorts": q_retention_cohorts,
-    "profile_orders_table": q_profile_orders,
-    "integrity_fk_audit": q_integrity_audit,
-    "skew_lineitem_suppkey": q_skew_lineitem_suppkey,
-    "text_quality_metrics": q_text_quality,
-    "text_token_counts": q_token_counts,
-    "text_language_id": q_language_id,
-    "text_vocabulary": q_vocabulary_stats,
-    "sample_stratified_exact": q_stratified_sample,
-    "sample_chunk_documents": q_chunk_documents,
-    "sample_quota_by_source": q_quota_sample,
-    "dedup_exact": q_dedup_exact,
-    "dedup_exact_survivors": q_dedup_survivors,
-    "dedup_paragraphs": q_dedup_paragraphs,
-    "text_word_entropy": q_word_entropy,
-    "sample_shuffle_shards": q_shuffle_shards,
-    "pipeline_quality_gate": q_quality_gate,
-    "text_bpe_merges": q_bpe_merges,
-    "text_bpe_encode": q_bpe_encode,
-    "dedup_ngram_jaccard": q_dedup_jaccard,
-    "dedup_incremental_jaccard": q_dedup_incremental,
-    "dedup_components": q_dedup_components,
-    "dedup_embedding_cosine": q_embedding_dups,
-    "dedup_cross_split_contamination": q_contamination,
-    "dedup_ngram_decontaminate": q_ngram_decontaminate,
-    "knn_cosine_brute_force": q_knn_brute,
-    "knn_cosine_arrow": q_knn_arrow,
-    "embedding_kmeans_train": q_kmeans_train,
-    "multimodal_media_summary": q_media_summary,
-    "multimodal_image_decode": q_image_decode,
-    "multimodal_bmp_pixel_decode": q_bmp_pixel_decode,
-    "multimodal_png_pixel_decode": q_png_pixel_decode,
-    "multimodal_wav_sample_decode": q_wav_sample_decode,
-    "multimodal_video_decode": q_video_decode,
-    "multimodal_frame_sample": q_frame_sample,
-    "sample_leakage_safe_split": q_leakage_safe_split,
+    "dedup_minhash_lsh": _op(dedup_ops.minhash_near_duplicates, "documents", threshold=0.6),
+    "dedup_simhash": _op(dedup_ops.simhash_near_duplicates, "documents", max_hamming=3),
+    # Data-derived blocking (no label column needed).  The fixture has no
+    # true near-dups (max pairwise cosine ~0.51), so the threshold and
+    # table geometry are tuned to its similarity range: 2-plane tables
+    # collide pairs at cosine >= 0.4 with p ~ 0.4 each, and 8 OR'd tables
+    # put recall ~ 0.98.  Real corpora keep the 0.95/8-plane defaults.
+    # max_bucket=None: 2-plane tables have FOUR buckets, so the global
+    # LSH skew cap would wholesale-truncate the corpus, not trim
+    # outliers (measured recall 0.29@500/0.015@2000 vecs capped vs
+    # ~0.98 uncapped — caught by dedup_embedding_lsh_check, round 5);
+    # coarse geometries bound bucket size by corpus size instead.
+    "dedup_embedding_lsh": _op(
+        dedup_ops.embedding_near_duplicates_lsh, "embeddings",
+        threshold=0.4, n_planes=2, n_tables=8, max_bucket=None,
+    ),
+    "dedup_minhash_lsh_check": _op(dedup_ops.minhash_recall_check, "documents"),
+    "dedup_simhash_check": _op(dedup_ops.simhash_recall_check, "documents"),
+    "dedup_embedding_lsh_check": _op(dedup_ops.embedding_lsh_recall_check, "embeddings"),
+    "distinct_customers_per_status": _op(agg_ops.distinct_customers_per_status, "orders"),
+    "rollup_order_totals": _op(agg_ops.rollup_order_totals, "orders"),
+    "cube_lineitem_counts": _op(agg_ops.cube_lineitem_counts, "lineitem"),
+    "top_orders_by_price": _op(agg_ops.top_orders_by_price, "orders"),
+    # the _checked audit form: same sketches, plus exact twins + bound
+    # flags so the driver row hash-greens instead of err:no_oracle
+    # (round-4 verdict item 6); the raw sketch-only operator stays the
+    # production path (aggregations.approx_distinct_parts, pytest-pinned)
+    "approx_distinct_parts": _op(agg_ops.approx_distinct_parts_checked, "lineitem"),
+    "stats_price_by_status": _op(agg_ops.stats_price_by_status, "orders"),
+    "pivot_priority_counts": _op(agg_ops.pivot_priority_counts, "orders"),
+    "unpivot_status_metrics": _op(agg_ops.unpivot_status_metrics, "orders"),
+    "percentile_value_by_type": _op(agg_ops.percentile_value_by_type, "events"),
+    # audit form with oracle — see approx_distinct_parts
+    "approx_percentile_value_by_type": _op(
+        agg_ops.approx_percentile_value_by_type_checked, "events"
+    ),
+    "setop_repeat_customers": _op(set_ops.repeat_customers, "orders"),
+    "setop_churned_customers": _op(set_ops.churned_customers, "orders"),
+    "setop_all_party_keys": _op(set_ops.all_party_keys, "customer supplier"),
+    "setop_status_bag_overlap": _op(set_ops.status_bag_overlap, "orders"),
+    "events_retention_cohorts": _op(ana_ops.retention_cohorts, "events"),
+    "profile_orders_table": _op(prof_ops.profile_table, "orders"),
+    "integrity_fk_audit": _op(_integrity_audit, _FK_TABLES),
+    "skew_lineitem_suppkey": _op(prof_ops.skew_profile, "lineitem", "l_suppkey", top_n=10),
+    "text_quality_metrics": _op(text_ops.quality_metrics, "documents"),
+    "text_token_counts": _op(text_ops.token_counts, "documents"),
+    "text_language_id": _op(text_ops.language_id, "documents"),
+    "text_vocabulary": _op(text_ops.vocabulary_stats, "documents"),
+    "sample_stratified_exact": _op(sample_ops.stratified_sample_exact, "documents"),
+    "sample_chunk_documents": _op(sample_ops.chunk_documents, "documents"),
+    "sample_quota_by_source": _op(sample_ops.quota_sample_by_source, "documents"),
+    "dedup_exact": _op(dedup_ops.exact_duplicates, "documents"),
+    "dedup_exact_survivors": _op(dedup_ops.dedup_exact_survivors, "documents"),
+    "dedup_paragraphs": _op(dedup_ops.paragraph_dedup, "documents"),
+    "text_word_entropy": _op(text_ops.word_entropy, "documents"),
+    "sample_shuffle_shards": _op(sample_ops.shuffle_shards, "documents"),
+    "pipeline_quality_gate": _op(text_ops.quality_gate_summary, "documents"),
+    "text_bpe_merges": _op(text_ops.bpe_train_merges, "documents", n_merges=8),
+    # trains the 8 merges, then applies them row-locally corpus-wide
+    "text_bpe_encode": _op(text_ops.bpe_encode_token_counts, "documents", n_merges=8),
+    "dedup_ngram_jaccard": _op(dedup_ops.jaccard_pairs, "documents", threshold=0.6),
+    "dedup_incremental_jaccard": _op(_incremental_jaccard, "documents"),
+    "dedup_components": _op(dedup_ops.duplicate_components_sorted, _near_dup_pairs),
+    "dedup_embedding_cosine": _op(
+        dedup_ops.embedding_near_duplicates, "embeddings", threshold=0.3
+    ),
+    "dedup_cross_split_contamination": _op(dedup_ops.cross_split_contamination, "documents"),
+    "dedup_ngram_decontaminate": _op(_ngram_decontaminate, "documents"),
+    "knn_cosine_brute_force": _op(sim_ops.knn_brute_force, "embeddings", KNN_QUERY_IDS),
+    "knn_cosine_arrow": _op(sim_ops.knn_brute_force_arrow, "embeddings", KNN_QUERY_IDS),
+    "embedding_kmeans_train": _op(sim_ops.kmeans_cluster_summary, "embeddings", k=8, iters=2),
+    "multimodal_media_summary": _op(mm_ops.media_summary, "documents"),
+    "multimodal_image_decode": _op(mm_ops.image_decode_summary, "documents"),
+    # uncompressed 24-bit BMP: the one payload codec that needs no PIL
+    "multimodal_bmp_pixel_decode": _op(mm_ops.bmp_pixel_summary, "documents"),
+    "multimodal_png_pixel_decode": _op(mm_ops.png_pixel_summary, "documents"),
+    "multimodal_wav_sample_decode": _op(mm_ops.wav_sample_summary, "documents"),
+    "multimodal_video_decode": _op(mm_ops.video_decode_summary, "documents"),
+    "multimodal_frame_sample": _op(_frame_sample, "documents"),
+    "sample_leakage_safe_split": _op(sample_ops.leakage_safe_split, "documents"),
     "streaming_sessionize": q_streaming_sessionize,
-    "price_histogram": q_price_histogram,
-    "equidepth_price_histogram": q_equidepth_histogram,
-    "stats_price_boxplot": q_price_boxplot,
-    "events_time_weighted_avg": q_time_weighted_avg,
-    "agg_user_bookends": q_user_bookends,
-    "sample_pps_systematic": q_pps_sample,
-    "text_word_pairs": q_word_pairs,
-    "revenue_share_by_priority": q_revenue_share,
-    "dedup_component_survivors": q_component_survivors,
-    "snapshot_diff_orders": q_snapshot_diff,
-    "text_fingerprints": q_fingerprints,
-    "text_top_words_per_lang": q_top_words,
-    "text_quality_pass_rates": q_quality_pass,
-    "text_gopher_flags": q_gopher_flags,
-    "text_repetition_ratios": q_repetition_ratios,
-    "text_pii_redaction": q_pii_accounting,
-    "sample_split_assign": q_split_assign,
-    "sample_pack_sequences": q_pack_sequences,
-    "sample_epoch_repeat": q_epoch_repeat,
-    "sample_temperature_mix": q_temperature_mix,
-    "knn_cosine_ivf": q_knn_ivf,
-    "knn_cosine_lsh": q_knn_lsh,
-    "embedding_norm_stats": q_embedding_norms,
-    "text_bm25_search": q_bm25_search,
-    "text_top_tfidf_terms": q_top_tfidf,
-    "merge_upsert_orders": q_merge_upsert,
-    "scd2_customer_history": q_scd2_history,
-    "pagerank_suppliers": q_pagerank,
-    "window_ewma_smooth": q_ewma_smooth,
-    "graph_triangle_stats": q_triangle_stats,
-    "graph_triangle_nodes": q_triangle_nodes,
+    "price_histogram": _op(agg_ops.price_histogram, "orders"),
+    # one exact-percentile cutpoint row broadcast over the scan,
+    # row-local bucket fold, one groupBy — never ntile over the raw facts
+    "equidepth_price_histogram": _op(agg_ops.equidepth_histogram, "orders"),
+    "stats_price_boxplot": _op(agg_ops.price_boxplot, "orders"),
+    # per-user TWAP: left-constant interpolation, exact decimal·micros
+    # numerator, one user-keyed shuffle shared by window + groupBy
+    "events_time_weighted_avg": _op(win_ops.time_weighted_avg, "events"),
+    # first_value/last_value as struct argmin/argmax — one map-side-
+    # combining groupBy, never a per-user window over the raw stream
+    "agg_user_bookends": _op(win_ops.user_bookends, "events"),
+    # integer-exact stride boundaries over an md5-ordered weight line
+    "sample_pps_systematic": _op(sample_ops.pps_systematic_sample, "documents"),
+    "text_word_pairs": _op(text_ops.word_pair_counts, "documents"),
+    "revenue_share_by_priority": _op(agg_ops.revenue_share_by_priority, "orders"),
+    "dedup_component_survivors": _op(dedup_ops.component_survivors, "documents"),
+    "snapshot_diff_orders": _op(_snapshot_diff, "orders"),
+    "text_fingerprints": _op(text_ops.fingerprints, "documents"),
+    "text_top_words_per_lang": _op(text_ops.top_words_per_lang, "documents"),
+    "text_quality_pass_rates": _op(text_ops.quality_pass_rates, "documents"),
+    "text_gopher_flags": _op(text_ops.gopher_quality_flags, "documents"),
+    "text_repetition_ratios": _op(text_ops.repetition_ratios, "documents"),
+    "text_pii_redaction": _op(text_ops.pii_redaction_accounting, "documents"),
+    "sample_split_assign": _op(sample_ops.split_assign, "documents"),
+    "sample_pack_sequences": _op(sample_ops.pack_sequences, "documents"),
+    "sample_epoch_repeat": _op(sample_ops.epoch_repeat_summary, "documents"),
+    "sample_temperature_mix": _op(sample_ops.temperature_mixture, "documents"),
+    "knn_cosine_ivf": _op(sim_ops.knn_ivf, "embeddings", KNN_QUERY_IDS),
+    "knn_cosine_lsh": _op(sim_ops.knn_lsh, "embeddings", KNN_QUERY_IDS),
+    "embedding_norm_stats": _op(sim_ops.embedding_norm_stats, "embeddings"),
+    "text_bm25_search": _op(text_ops.bm25_search, "documents"),
+    # deterministic (score desc, word asc) ranking, WindowGroupLimit-pruned top-k
+    "text_top_tfidf_terms": _op(text_ops.top_tfidf_terms, "documents"),
+    "merge_upsert_orders": _op(_merge_upsert, "orders"),
+    "scd2_customer_history": _op(_scd2_history, "orders"),
+    "pagerank_suppliers": _op(_pagerank_suppliers, "lineitem"),
+    "window_ewma_smooth": _op(lambda e: win_ops.ewma_smooth(e).orderBy("event_id"), "events"),
+    "graph_triangle_stats": _op(graph_ops.triangle_stats, _copurchase_edges),
+    # top 10 parts by triangle participation — the densest neighborhoods
+    # of the co-purchase graph; (count desc, node asc) is a total order
+    "graph_triangle_nodes": _op(
+        lambda edges: graph_ops.node_triangle_counts(edges)
+        .orderBy(F.col("n_triangles").desc(), F.col("node"))
+        .limit(10),
+        _copurchase_edges,
+    ),
     "streaming_click_attribution": q_streaming_click_attribution,
-    "scale_zorder_census": q_zorder_census,
-    "fuzzy_match_part_names": q_fuzzy_part_names,
-    "text_lm_perplexity": q_lm_perplexity,
-    "events_multi_touch_attribution": q_multi_touch_attribution,
-    "events_time_decay_attribution": q_time_decay_attribution,
-    "events_transition_matrix": q_transition_matrix,
-    "events_cohort_revenue": q_cohort_revenue,
-    "parts_copurchase_rules": q_copurchase_rules,
-    "events_value_outliers": q_value_outliers,
-    "revenue_gini_by_nation": q_revenue_gini,
-    "graph_kcore": q_kcore,
-    "events_daily_users": q_daily_users,
-    "window_user_drawdown": q_user_drawdown,
-    "sample_token_length_hist": q_token_length_hist,
-    "orders_monthly_yoy": q_monthly_yoy,
-    "supplier_return_report": q_supplier_returns,
-    "orders_repeat_intervals": q_repeat_intervals,
-    "text_pmi_collocations": q_pmi_collocations,
+    "scale_zorder_census": _op(_zorder_census, "lineitem"),
+    "fuzzy_match_part_names": _op(_fuzzy_part_names, "part"),
+    "text_lm_perplexity": _op(lambda d: text_ops.lm_perplexity(d).orderBy("doc_id"), "documents"),
+    "events_multi_touch_attribution": _op(
+        lambda e: ana_ops.multi_touch_attribution(e).orderBy("purchase_id", "touch_rank"),
+        "events",
+    ),
+    # recency-weighted attribution twin: power-of-two day-bucket decay
+    # keeps the per-purchase weight sum order-insensitive and exact
+    "events_time_decay_attribution": _op(
+        lambda e: ana_ops.time_decay_attribution(e).orderBy("purchase_id", "click_id"),
+        "events",
+    ),
+    "events_transition_matrix": _op(ana_ops.event_transition_matrix, "events"),
+    "events_cohort_revenue": _op(ana_ops.cohort_revenue, "events"),
+    # market-basket mining: basket-key self-join (bounded blow-up),
+    # exact-count ranking, confidence/lift as reported quotients.
+    # min_support=2: TPC-H part choice is near-uniform, so higher
+    # floors leave an empty result at test SFs
+    "parts_copurchase_rules": _op(ana_ops.copurchase_rules, "lineitem", min_support=2),
+    # z-score outlier counts with the division/sqrt-cleared exact
+    # decision rule — selection bit-deterministic across engines
+    "events_value_outliers": _op(ana_ops.value_outliers_exact, "events"),
+    "revenue_gini_by_nation": _op(ana_ops.revenue_gini_by_nation, "orders customer nation"),
+    # 3-core of the near-dup graph: iterative peel to the unique
+    # fixpoint; the oracle unrolls the same peel (extra rounds past
+    # convergence are no-ops by monotonicity)
+    "graph_kcore": _op(graph_ops.kcore, _near_dup_pairs, k=3, src="doc_a", dst="doc_b"),
+    # DAU/new/cumulative via first-seen decomposition — the running
+    # distinct that never rescans history
+    "events_daily_users": _op(ana_ops.daily_user_accumulation, "events"),
+    # running-peak drawdown, exact decimal throughout
+    "window_user_drawdown": _op(win_ops.user_drawdown, "events"),
+    # power-of-two sequence-length buckets via exact integer boundaries
+    "sample_token_length_hist": _op(sample_ops.token_length_histogram, "documents"),
+    # seasonality report: lag windows over the |months|-row aggregate
+    "orders_monthly_yoy": _op(agg_ops.monthly_revenue_yoy, "orders"),
+    "supplier_return_report": _op(agg_ops.supplier_return_report, "lineitem"),
+    "orders_repeat_intervals": _op(ana_ops.repeat_purchase_intervals, "orders"),
+    # count-ranked collocations with PMI as the reported value: the
+    # selected row set is exact-integer deterministic
+    "text_pmi_collocations": _op(text_ops.pmi_collocations, "documents"),
     "streaming_dedup_census": q_streaming_dedup_census,
-    "incremental_agg_orders": q_incremental_agg,
+    "incremental_agg_orders": _op(_incremental_agg, "orders"),
     "streaming_cdc_apply": q_streaming_cdc_apply,
-    "customers_rfm_segments": q_rfm_segments,
-    "dedup_ngram_coverage": q_dup_ngram_coverage,
-    "text_zipf_fit": q_zipf_fit,
+    # rank-quintile RFM via three skew-proof distributed ranks over the
+    # per-customer aggregate, joined back on the customer key
+    "customers_rfm_segments": _op(ana_ops.rfm_customer_segments, "orders"),
+    # hashed-gram stream -> per-gram doc frequency -> semi-join -> doc
+    # counts; totals ride the row-local array form
+    "dedup_ngram_coverage": _op(dedup_ops.dup_ngram_coverage, "documents"),
+    # per-lang Zipf slope over the top-100 words: one word-count
+    # shuffle, map-side top-k window, <=100-row closing regression
+    "text_zipf_fit": _op(text_ops.zipf_fit, "documents"),
     "streaming_cdc_apply_bucketed": q_streaming_cdc_apply_bucketed,
-    "embedding_scalar_quantization": q_scalar_quantization,
-    "embedding_centroid_dispersion": q_centroid_dispersion,
-    "text_sentence_stats": q_sentence_stats,
-    "stats_price_trimmed_means": q_trimmed_means,
-    "events_quantile_normalize": q_quantile_normalize,
-    "sample_negative_pairs": q_negative_samples,
-    "integrity_expectations": q_validate_expectations,
-    "events_sliding_distinct_users": q_sliding_distinct_users,
-    "events_mad_outliers": q_mad_outliers,
-    "window_rolling_median": q_rolling_median,
-    "text_source_drift": q_source_drift,
-    "graph_bfs_distances": q_bfs_distances,
-    "events_hourly_ohlc": q_hourly_ohlc,
-    "sample_temporal_split": q_temporal_split,
-    "sample_group_kfold": q_group_kfold,
-    "text_heavy_hitters": q_heavy_hitters,
-    "events_activity_streaks": q_activity_streaks,
-    "parts_abc_classes": q_abc_classes,
-    "integrity_functional_deps": q_functional_deps,
+    # row-local int8 affine quantization audit: floor(+0.5) codes are
+    # bit-identical cross-engine; zero exchanges before the output sort
+    "embedding_scalar_quantization": _op(sim_ops.scalar_quantization_stats, "embeddings"),
+    # per-label elementwise-mean centroid (one |labels|*dim shuffle,
+    # broadcast back) + sequential zip_with distance folds
+    "embedding_centroid_dispersion": _op(sim_ops.label_centroid_dispersion, "embeddings"),
+    # row-local sentence segmentation profile (chunking-planner input)
+    "text_sentence_stats": _op(text_ops.sentence_stats, "documents"),
+    # rank-trimmed + winsorized per-status means: integer rank bounds
+    # (bit-deterministic cross-engine), exact-decimal sums, skew-proof
+    # distributed rank over the few-statuses partition
+    "stats_price_trimmed_means": _op(agg_ops.trimmed_price_means, "orders"),
+    # empirical-CDF normalization per event type via distributed_rank
+    "events_quantile_normalize": _op(ana_ops.quantile_normalize_values, "events"),
+    # deterministic contrastive negatives: md5-shuffled rank line +
+    # modular offsets; exactly k negatives per doc, k appearances as a
+    # negative, no self-pairs, one slim rank-equi self-join
+    "sample_negative_pairs": _op(sample_ops.negative_sample_pairs, "documents"),
+    # declarative data-contract gate: every rule a conditional count in
+    # ONE single-scan stacked aggregate (adding a rule adds no scan)
+    "integrity_expectations": _op(prof_ops.validate_expectations, "orders"),
+    # rolling 7-day distinct users: contribution-explode inversion —
+    # shuffle volume is 7·|user-days|, history never rescanned
+    "events_sliding_distinct_users": _op(ana_ops.sliding_distinct_users, "events"),
+    # rank-selected median + MAD per event type (distributed_rank both
+    # passes); lower-middle ELEMENT medians keep the cut bit-exact
+    "events_mad_outliers": _op(ana_ops.mad_outliers, "events"),
+    # exact trailing-7-row median per user: odd full frame → the middle
+    # element, never an interpolated average
+    "window_rolling_median": _op(win_ops.rolling_median, "events"),
+    # chi-square vocabulary drift between corpus halves; drift selection
+    # cross-multiplied into decimal(38,0) integers — bit-exact
+    "text_source_drift": _op(text_ops.source_drift_chisq, "documents"),
+    # single-source BFS hop histogram over the co-purchase graph from
+    # the smallest part id; layered frontier expansion, O(E) total
+    "graph_bfs_distances": _op(graph_ops.bfs_hop_histogram, _copurchase_edges),
+    # time-bucket OHLC bars: struct-argmin/argmax bookends in one
+    # map-side groupBy, exact-decimal volume
+    "events_hourly_ohlc": _op(agg_ops.hourly_ohlc, "events"),
+    # leakage-safe temporal split with a visible embargo stratum
+    "sample_temporal_split": _op(sample_ops.temporal_split, "events"),
+    # group-aware k-fold by portable md5 hash of the user key
+    "sample_group_kfold": _op(sample_ops.group_kfold, "events"),
+    "text_heavy_hitters": _op(text_ops.heavy_hitters, "documents"),
+    # gaps-and-islands: rn-difference island key, integer day indexes,
+    # stream pre-collapsed to distinct (user, day) pairs
+    "events_activity_streaks": _op(ana_ops.activity_streaks, "events"),
+    # Pareto/ABC revenue classification: integer 1e-4-grid revenue,
+    # exact cross-multiplied 80/95 cutoffs, cumulative window over the
+    # per-part aggregate only
+    "parts_abc_classes": _op(agg_ops.abc_revenue_classes, "lineitem"),
+    # FD / key-uniqueness audit: grouping-level quality checks the
+    # row-level expectations gate cannot express
+    "integrity_functional_deps": _op(prof_ops.functional_dependencies, "lineitem"),
     "streaming_hourly_ohlc": q_streaming_ohlc,
-    "embedding_dim_stats": q_dim_stats,
-    "multimodal_wav_frame_features": q_wav_frame_features,
-    "events_user_entropy": q_user_entropy,
-    "multimodal_bmp_resize": q_bmp_resize,
+    # per-dimension whitening profile: exact-decimal moment sums (order-
+    # insensitive), fixed IEEE op sequence shared with the oracle
+    "embedding_dim_stats": _op(sim_ops.dimension_stats, "embeddings"),
+    # frame-level audio features over REAL PCM16 decode — integer-exact,
+    # every frame pinned by the synth closed form
+    "multimodal_wav_frame_features": _op(mm_ops.wav_frame_features, "documents"),
+    # behavioral-diversity entropy per user: sequential fold over the
+    # type-sorted count array (fixed evaluation order on both engines)
+    "events_user_entropy": _op(ana_ops.user_behavior_entropy, "events"),
+    # post-resize channel stats pinned by the synthesis closed form
+    "multimodal_bmp_resize": _op(mm_ops.bmp_resized_summary, "documents"),
     "streaming_running_zscore": q_streaming_zscore,
-    "embedding_pair_cosine_hist": q_pair_cosine_hist,
-    "sample_undersample_balance": q_undersample_balance,
-    "text_length_ks_drift": q_length_ks_drift,
-    "graph_degree_hist": q_degree_hist,
-    "text_vocab_growth": q_vocab_growth,
-    "events_interarrival_hist": q_interarrival_hist,
-    "nation_supplier_hhi": q_supplier_hhi,
+    # isotropy diagnostic: cosine histogram over the deterministic md5
+    # rank-line pairing; round-6 before bucketing pins the buckets
+    "embedding_pair_cosine_hist": _op(sim_ops.pair_cosine_histogram, "embeddings"),
+    # class-balancing undersampler accounting: min-class cap, md5 draw
+    "sample_undersample_balance": _op(sample_ops.undersample_balance, "documents"),
+    # exact KS drift of the length CDF between corpus halves; argmax
+    # ranked by the integer cross-multiplied gap
+    "text_length_ks_drift": _op(text_ops.length_ks_drift, "documents"),
+    # power-of-two degree histogram of the co-purchase graph; buckets
+    # by binary digit count, no float log
+    "graph_degree_hist": _op(graph_ops.degree_histogram, _copurchase_edges),
+    # Heaps'-law curve: md5 doc line, integer slice arithmetic, one
+    # min-slice aggregate per word
+    "text_vocab_growth": _op(text_ops.vocab_growth_curve, "documents"),
+    # power-of-two inter-arrival histogram per type: integer-second
+    # gaps, binary-digit buckets — the watermark/session-gap input
+    "events_interarrival_hist": _op(ana_ops.interarrival_histogram, "events"),
+    # Herfindahl supplier concentration per nation: exact decimal
+    # sums of squared integer-grid revenue, one division at the edge
+    "nation_supplier_hhi": _op(agg_ops.nation_supplier_hhi, "lineitem supplier nation"),
     "source_csv_roundtrip": q_csv_roundtrip,
     # round-11 additions (INTRODUCED_ROUND 11; first slots due r14 by
     # the introduced+3 rule — the r14 plan has 32 rotating seats past
     # the r9 remainder, see the rotation note)
-    "events_hourly_autocorr": q_hourly_autocorr,
-    "integrity_benford_audit": q_benford_audit,
-    "graph_assortativity": q_assortativity,
-    "embedding_mahalanobis_outliers": q_mahalanobis_outliers,
-    "multimodal_gif_frame_census": q_gif_frame_census,
-    "sample_curriculum_order": q_curriculum_order,
-    "orders_backlog_timeseries": q_backlog_timeseries,
-    "orders_fulfillment_percentiles": q_fulfillment_percentiles,
-    "sample_importance_weights": q_importance_weights,
-    "multimodal_media_dedup": q_media_dedup,
+    # lag-1/lag-24 autocorrelation of the dense hourly count series per
+    # type: exact-integer Pearson sums, one IEEE edge
+    "events_hourly_autocorr": _op(ana_ops.hourly_autocorrelation, "events"),
+    # string-of-floor digit extraction, shared Python-literal expected shares
+    "integrity_benford_audit": _op(prof_ops.benford_audit, "orders"),
+    # symmetric-form exact-integer Pearson, no sqrt
+    "graph_assortativity": _op(graph_ops.degree_assortativity, _copurchase_edges),
+    # diagonal-covariance Mahalanobis embedding outliers: decimal-grid
+    # moments, exact-decimal per-vector sums, bit-deterministic top-n
+    "embedding_mahalanobis_outliers": _op(sim_ops.mahalanobis_outliers, "embeddings"),
+    # real multi-frame GIF block walk over the synthetic animation
+    # corpus: frames / extensions / delays / LZW volume per media
+    "multimodal_gif_frame_census": _op(
+        lambda d: mm_ops.gif_frame_census(mm_ops.synth_gif_corpus(d)), "documents"
+    ),
+    # length-banded curriculum schedule with round-robin interleave;
+    # within-band md5 order on distributed_rank
+    "sample_curriculum_order": _op(sample_ops.curriculum_order, "documents"),
+    # open-order backlog: +/- integer event differencing, |dates|-row
+    # cumulative window
+    "orders_backlog_timeseries": _op(ana_ops.order_backlog_timeseries, "orders lineitem"),
+    # exact SLA percentiles via bounded-domain counting: integer
+    # cross-multiplied CDF selection, no rank shuffle, no sketch
+    "orders_fulfillment_percentiles": _op(ana_ops.fulfillment_percentiles, "orders lineitem"),
+    # uniform-mixture reweighting: weight = total/(k*n) per source
+    "sample_importance_weights": _op(sample_ops.importance_weights, "documents"),
+    # exact payload dedup census: md5(hex(content)) fingerprints over
+    # the synthetic image corpus (which genuinely collides)
+    "multimodal_media_dedup": _op(
+        lambda d: mm_ops.media_dedup_census(mm_ops.synth_image_corpus(d)), "documents"
+    ),
     "streaming_late_data_audit": q_streaming_late_audit,
-    "events_change_point": q_change_point,
-    "customers_pareto_share": q_pareto_share,
-    "maintenance_compaction_plan": q_compaction_plan,
+    # binary-segmentation change point on the dense daily series per
+    # type: exact decimal cumsums, one IEEE score sequence, earlier-day
+    # tiebreak
+    "events_change_point": _op(ana_ops.daily_change_point, "events"),
+    # revenue concentration curve: integer-grid revenue, skew-proof
+    # global rank, integer ceil cutoffs, one division per point
+    "customers_pareto_share": _op(ana_ops.pareto_revenue_share, "orders"),
+    # sort-desc + cumulative-quota bin assignment over a simulated
+    # 200-file census; integer div binning
+    "maintenance_compaction_plan": _op(merge_ops.compaction_plan, "lineitem"),
     # round-12 additions (INTRODUCED_ROUND 12; first slots due r15)
-    "events_ab_proportion_test": q_ab_proportion_test,
-    "events_seasonal_forecast": q_seasonal_forecast,
-    "integrity_schema_drift": q_schema_drift,
-    "events_top_paths": q_top_paths,
-    "events_theil_sen_trend": q_theil_sen,
-    "orders_kaplan_meier": q_kaplan_meier,
-    "text_readability": q_readability,
-    "graph_label_propagation": q_label_propagation,
-    "embedding_random_projection": q_random_projection,
+    # two-proportion z-test on a deterministic multiplicative-hash
+    # 50/50 user split: integer counts, one IEEE z sequence
+    "events_ab_proportion_test": _op(ana_ops.ab_proportion_test, "events"),
+    # lag-168 seasonal-naive backtest on the dense final-week hourly
+    # grid: integer forecasts => integer error sums, one IEEE edge
+    "events_seasonal_forecast": _op(ana_ops.seasonal_naive_backtest, "events"),
+    # two-period column-stats drift report: one-pass period aggregate,
+    # enum-sized mode argmax, exact decimal/integer metrics
+    "integrity_schema_drift": _op(prof_ops.schema_drift, "orders"),
+    # top-k session journeys: stacked windows on one user shuffle,
+    # prefix row_number, TakeOrdered over the path-count aggregate
+    "events_top_paths": _op(ana_ops.top_session_paths, "events"),
+    # Theil-Sen robust daily trend: pairwise slopes on the
+    # post-aggregation |days| frame, exact-median selection
+    "events_theil_sen_trend": _op(ana_ops.theil_sen_daily_trend, "events"),
+    # Kaplan-Meier repurchase survival with right censoring: life-table
+    # bins, ordered cumulative exp(sum(ln)) product
+    "orders_kaplan_meier": _op(ana_ops.kaplan_meier_repurchase, "orders"),
+    # corpus-level Flesch/FK per lang: row-local codegen counts, one
+    # |langs|-row aggregate, one IEEE score sequence
+    "text_readability": _op(text_ops.readability_scores, "documents"),
+    "graph_label_propagation": _op(_label_propagation, _copurchase_edges),
+    # JL ±1 projection distance audit: row-local codegen projection,
+    # one vec_id+1 equi-join, |buckets|-row histogram
+    "embedding_random_projection": _op(sim_ops.random_projection_audit, "embeddings"),
     "streaming_topk_per_window": q_streaming_topk,
-    "stats_welch_ttest": q_welch_ttest,
-    "events_poisson_rate_test": q_poisson_rate_test,
-    "events_cusum_alarm": q_cusum_alarm,
-    "text_boilerplate_ngrams": q_boilerplate_ngrams,
-    "text_js_divergence": q_js_divergence,
-    "graph_common_neighbors": q_common_neighbors,
-    "parts_price_elasticity": q_price_elasticity,
-    "events_holt_forecast": q_holt_forecast,
+    # Welch unequal-variance t-test F vs O order values: exact decimal
+    # moment sums, one IEEE t/dof sequence, broadcast single-row cross
+    "stats_welch_ttest": _op(ana_ops.welch_ttest_by_status, "orders"),
+    # equal-exposure two-period Poisson rate z per event type: one
+    # conditional-count aggregate, integer inputs to one IEEE sequence
+    "events_poisson_rate_test": _op(ana_ops.poisson_rate_test, "events"),
+    # Page's one-sided CUSUM per event type on the dense daily grid:
+    # fact cost is one (type, day) count; the sequential scan runs
+    # applyInPandas per type over the |days|-row series (recursive-CTE
+    # oracle replays the identical IEEE recursion)
+    "events_cusum_alarm": _op(ana_ops.cusum_alarms, "events"),
+    # C4-style cross-doc boilerplate 5-gram census: row-local distinct
+    # gram arrays, one map-side-combined gram count, TakeOrdered top-k
+    "text_boilerplate_ngrams": _op(text_ops.boilerplate_ngrams, "documents"),
+    # per-source vs corpus unigram Jensen-Shannon drift: one (source,
+    # word) aggregate, vocab-sized shuffle join, closed-form out-of-
+    # source tail (no vocabulary anti-join)
+    "text_js_divergence": _op(text_ops.js_divergence_by_source, "documents"),
+    # Jaccard/common-neighbor link prediction on the co-purchase graph:
+    # hub-capped wedge join (fanout <= cap^2), left_anti on existing
+    # edges, total-order top-k
+    "graph_common_neighbors": _op(graph_ops.common_neighbor_scores, _copurchase_edges),
+    # log-log OLS elasticity per brand: row-local logs, one map-side
+    # combined 6-moment brand aggregate after the partkey join
+    "parts_price_elasticity": _op(agg_ops.price_elasticity_by_brand, "lineitem part"),
+    # Holt level+trend smoothing per type on the dense daily grid:
+    # dyadic coefficients make the sequential recursion bit-identical
+    # cross-engine; applyInPandas per type, recursive-CTE oracle
+    "events_holt_forecast": _op(ana_ops.holt_linear_smoothing, "events"),
     "streaming_outer_join_expiry": q_streaming_outer_join,
-    "events_weekday_seasonality": q_weekday_seasonality,
-    "embedding_pca_variance": q_pca_variance,
-    "embedding_pca_trace_audit": q_pca_trace_audit,
-    "multimodal_wav_silence": q_wav_silence,
-    "events_bootstrap_ci": q_bootstrap_ci,
-    "graph_harmonic_closeness": q_harmonic_closeness,
-    "events_conversion_latency": q_conversion_latency,
-    "text_bigram_entropy": q_bigram_entropy,
-    "events_periodogram": q_periodogram,
-    "dedup_component_size_hist": q_component_size_hist,
-    "multimodal_image_histogram": q_image_histogram,
-    "graph_rich_club": q_rich_club,
-    "orders_nelson_aalen": q_nelson_aalen,
+    # day-of-week multiplicative indices per type on the dense daily
+    # grid: integer sums at every grain, |types|-row window for the
+    # grand mean
+    "events_weekday_seasonality": _op(ana_ops.weekday_seasonality, "events"),
+    # full-covariance PCA spectrum: exact-decimal distributed moments,
+    # driver-side d x d eigh (bounded by dimension, not rows);
+    # rows-only by design — its hard check is the trace-audit twin
+    "embedding_pca_variance": _op(sim_ops.pca_variance_spectrum, "embeddings"),
+    # oracle-checked PCA twin: sum(eigenvalues) must hash-match the
+    # SQL-computable covariance trace at 6 dp
+    "embedding_pca_trace_audit": _op(sim_ops.pca_trace_audit, "embeddings"),
+    # VAD-style silence runs over REAL PCM16 decode: numpy run-length
+    # scan in one mapInPandas stage, gaps-and-islands oracle
+    "multimodal_wav_silence": _op(mm_ops.wav_silence_runs, "documents"),
+    # Poisson-bootstrap CI for the mean purchase value: deterministic
+    # integer hash -> Poisson(1) weights, 32 resample means in ONE
+    # map-side-combined pass, nearest-rank CI from the 32-row frame
+    "events_bootstrap_ci": _op(ana_ops.bootstrap_mean_ci, "events"),
+    # landmark harmonic centrality: multi-source layered BFS keyed
+    # (seed, node) — max_hops rounds total regardless of seed count
+    "graph_harmonic_closeness": _op(graph_ops.harmonic_closeness, _copurchase_edges),
+    # first-view -> first-purchase latency percentiles: one per-user
+    # conditional-min aggregate, bounded-domain counting percentiles
+    # on the <=|hours| frame (integer cross-multiplication pick)
+    "events_conversion_latency": _op(ana_ops.conversion_latency_percentiles, "events"),
+    # Shannon bigram conditional entropy per lang: one bigram-stream
+    # aggregate; the unigram marginal re-aggregates the bigram frame
+    "text_bigram_entropy": _op(text_ops.bigram_conditional_entropy, "documents"),
+    # Schuster periodogram at daily/weekly/half-daily periods: one
+    # (type, hour) count; trig pass on the dimension grid only
+    "events_periodogram": _op(ana_ops.hourly_periodogram, "events"),
+    # dedup savings readout: star-rounds CC labels + two bounded
+    # aggregates (comp -> size -> histogram), singletons included
+    "dedup_component_size_hist": _op(
+        dedup_ops.component_size_histogram, ("documents", _near_dup_pairs)
+    ),
+    # corpus BGR intensity histogram over REAL BMP decode: per-batch
+    # np.bincount partials, shuffle carries <=|batches|*48 rows
+    "multimodal_image_histogram": _op(mm_ops.image_channel_histogram, "documents"),
+    # hub-interconnection diagnostic: TakeOrdered top-k club broadcast
+    # over the edge list, all club sizes in ONE conditional-sum agg
+    "graph_rich_club": _op(graph_ops.rich_club_coefficients, _copurchase_edges),
+    # cumulative-hazard sibling of orders_kaplan_meier on the identical
+    # life table: ordered cumsum of exact-count divisions
+    "orders_nelson_aalen": _op(ana_ops.nelson_aalen_hazard, "orders"),
     # round-13 additions (INTRODUCED_ROUND 13; first slots due r16) —
     # seven total, inside the r12 verdict's <=10 cap; 246 rotating
     # queries against the 260-query capacity tripwire leaves 14 seats
     # of headroom for r14
-    "stats_mann_whitney": q_mann_whitney,
-    "stats_levene_value": q_levene_value,
-    "orders_ols_trend": q_ols_trend,
-    "text_hapax_stats": q_hapax_stats,
-    "stats_chi2_independence": q_chi2_independence,
-    "stats_kendall_tau": q_kendall_tau,
-    "orders_runs_test": q_runs_test,
+    # nonparametric rank-sum sibling of stats_welch_ttest: bounded-
+    # domain integer double-ranks, decimal(38,0) rank/tie sums, one
+    # IEEE z sequence
+    "stats_mann_whitney": _op(ana_ops.mann_whitney_quantity, "lineitem"),
+    # Brown–Forsythe variance homogeneity across event types: exact
+    # cent-grid lower medians, exact decimal deviation moments, W at
+    # the 4 dp entropy-contract margin
+    "stats_levene_value": _op(ana_ops.levene_value_by_type, "events"),
+    # classical OLS daily-revenue trend next to the Theil–Sen robust
+    # line: six exact decimal/int64 moments, one IEEE slope/R² sequence
+    "orders_ols_trend": _op(ana_ops.ols_daily_trend, "orders"),
+    # corpus lexical richness: hapax share, TTR, Herdan's C from one
+    # word-grain aggregate + one global row
+    "text_hapax_stats": _op(text_ops.hapax_stats, "documents"),
+    # status x priority contingency: one cell aggregate, broadcast
+    # margins, chi-square + Cramér's V from exact integer counts
+    "stats_chi2_independence": _op(ana_ops.chi2_independence, "orders"),
+    # tie-robust monotonic association on the bounded quantity/discount
+    # grid: cell-frame self-join pair counts, decimal(38,0) sums
+    "stats_kendall_tau": _op(ana_ops.kendall_tau_quantity_discount, "lineitem"),
+    # Wald-Wolfowitz randomness check on daily revenue: lower-median
+    # counting + one lag over the |days| frame
+    "orders_runs_test": _op(ana_ops.runs_test_daily_revenue, "orders"),
     # round-14 additions (INTRODUCED_ROUND 14; first slots due r17)
-    "stats_spearman_rho": q_spearman_rho,
-    "stats_anova_oneway": q_anova_oneway,
-    "events_markov_transitions": q_markov_transitions,
-    "events_lag_xcorr": q_lag_xcorr,
-    "multimodal_png_palette_decode": q_png_palette_decode,
-    "multimodal_png_interlaced_decode": q_png_interlaced_decode,
-    "multimodal_gif_pixel_decode": q_gif_pixel_decode,
-    "multimodal_gif_interlaced_decode": q_gif_interlaced_decode,
+    # average-rank correlation on the bounded quantity/discount grid:
+    # double-rank margin frames + one exact-decimal cell reduce
+    "stats_spearman_rho": _op(ana_ops.spearman_rho_quantity_discount, "lineitem"),
+    # k-group omnibus mean test on event value: one fact aggregate,
+    # Koenig terms on the k-row frame
+    "stats_anova_oneway": _op(ana_ops.anova_oneway_value, "events"),
+    # per-user event-type transition census: one user-window lag pass,
+    # map-side census onto the |types|^2 grid
+    "events_markov_transitions": _op(ana_ops.markov_event_transitions, "events"),
+    # lagged click->purchase cross-correlation on the zero-filled hour
+    # spine: exact integer moments per lag
+    "events_lag_xcorr": _op(ana_ops.lag_xcorr_click_purchase, "events"),
+    "multimodal_png_palette_decode": _op(mm_ops.png_palette_summary, "documents"),
+    # interlace-method-1 PNGs carrying the SAME closed-form pixels as
+    # the RGB corpus — shares that oracle verbatim
+    "multimodal_png_interlaced_decode": _op(mm_ops.png_interlaced_summary, "documents"),
+    "multimodal_gif_pixel_decode": _op(mm_ops.gif_pixel_summary, "documents"),
+    # shares the GIF oracle (placement pinned by pytest)
+    "multimodal_gif_interlaced_decode": _op(mm_ops.gif_interlaced_summary, "documents"),
     "streaming_join_tail_audit": q_streaming_join_tail,
     # round-15 additions (INTRODUCED_ROUND 15; first slots due r18)
-    "multimodal_jpeg_pixel_decode": q_jpeg_pixel_decode,
-    "multimodal_avi_frame_decode": q_avi_frame_decode,
-    "multimodal_mp4_frame_decode": q_mp4_frame_decode,
-    "multimodal_mjpg_avi_decode": q_mjpg_avi_decode,
-    "stats_kruskal_wallis": q_kruskal_wallis,
-    "multimodal_jpeg_restart_decode": q_jpeg_restart_decode,
-    "events_mann_kendall_trend": q_mann_kendall,
-    "events_seasonal_mann_kendall": q_seasonal_mann_kendall,
+    # DC-only grayscale payloads whose pixels are an exact closed form
+    "multimodal_jpeg_pixel_decode": _op(mm_ops.jpeg_pixel_summary, "documents"),
+    "multimodal_avi_frame_decode": _op(mm_ops.avi_frame_summary, "documents"),
+    # closed-form neutral-chroma frames keep the I420 → BT.601 decode exact
+    "multimodal_mp4_frame_decode": _op(mm_ops.mp4_frame_summary, "documents"),
+    # each AVI 00dc chunk goes to the baseline JPEG decoder: the
+    # Motion-JPEG production shape
+    "multimodal_mjpg_avi_decode": _op(mm_ops.mjpg_avi_summary, "documents"),
+    # k-group rank omnibus: pooled bounded-domain integer double-ranks,
+    # decimal(38,0) rank/tie sums, one IEEE H sequence at the 4 dp
+    # k-term-double-sum margin — completes the nonparametric family
+    # next to Mann-Whitney (2-group) and ANOVA (parametric k-group)
+    "stats_kruskal_wallis": _op(ana_ops.kruskal_wallis_value, "events"),
+    # restart interval 2 keeps the pixel closed form equal to the base corpus
+    "multimodal_jpeg_restart_decode": _op(mm_ops.jpeg_restart_summary, "documents"),
+    # nonparametric monotone-trend test on daily counts next to
+    # Theil–Sen and OLS: exact integer S + tie term on the calendar-
+    # bounded dimension grid, one IEEE continuity-corrected z sequence
+    "events_mann_kendall_trend": _op(ana_ops.mann_kendall_daily, "events"),
+    # Hirsch–Slack seasonal MK with weekday seasons: within-season
+    # pairwise sign census on the weekday-partitioned calendar grid,
+    # exact integer S and 18·Var sums, one IEEE z sequence — the
+    # weekly cycle can no longer mask or fake a monotone drift
+    "events_seasonal_mann_kendall": _op(ana_ops.seasonal_mann_kendall_daily, "events"),
     # round-16 additions (INTRODUCED_ROUND 16; first slots due r19)
-    "multimodal_jpeg_subsampled_decode": q_jpeg_subsampled_decode,
-    "dedup_ngram_containment": q_dedup_containment,
-    "stats_mcnemar_paired": q_mcnemar_paired,
-    "graph_local_clustering": q_local_clustering,
-    "stats_friedman_blocks": q_friedman_blocks,
+    # 4:2:0, the dominant real-world JPEG layout; neutral chroma keeps
+    # the closed form exact
+    "multimodal_jpeg_subsampled_decode": _op(mm_ops.jpeg_subsampled_summary, "documents"),
+    # asymmetric doc-in-doc near-dup: containment |A∩B|/|A| with the
+    # PPJoin prefix filter carrying the pruning (no length band — the
+    # whole point is embedded shorter docs resemblance-Jaccard misses)
+    "dedup_ngram_containment": _op(dedup_ops.containment_pairs, "documents", threshold=0.7),
+    # McNemar's paired before/after conversion test: each user is
+    # their own pair across the corpus' two time halves; only the
+    # discordant users carry information (Edwards continuity, 1 df)
+    "stats_mcnemar_paired": _op(ana_ops.mcnemar_purchase_halves, "events"),
+    # per-node local clustering deciles of the co-purchase graph —
+    # pure integer bucketing (20*T div wedges), zero-IEEE semantics
+    "graph_local_clustering": _op(graph_ops.local_clustering_histogram, _copurchase_edges),
+    # Friedman repeated-measures ranks: users as blocks, types as
+    # treatments — within-block ranking removes the user-volume
+    # nuisance a pooled Kruskal-Wallis cannot
+    "stats_friedman_blocks": _op(ana_ops.friedman_activity_blocks, "events"),
 }
+
 
 # Optional-tier queries: registered ONLY when their optional dependency
 # is importable (round-12 verdict item 6 — make the PIL tier
@@ -2311,11 +1113,14 @@ OPTIONAL_QUERIES: set[str] = {
 }
 import importlib.util as _ilu  # noqa: E402
 
+# optional-tier twins of multimodal_png_pixel_decode and
+# multimodal_avi_frame_decode: the same corpora, decoded by the forced
+# PIL / PyAV tier, checked against the same closed-form oracles
 if _ilu.find_spec("PIL") is not None:
-    QUERIES["multimodal_pil_pixel_decode"] = q_pil_pixel_decode
+    QUERIES["multimodal_pil_pixel_decode"] = _op(mm_ops.pil_pixel_summary, "documents")
 
 if _ilu.find_spec("av") is not None:
-    QUERIES["multimodal_pyav_frame_decode"] = q_pyav_frame_decode
+    QUERIES["multimodal_pyav_frame_decode"] = _op(mm_ops.pyav_frame_summary, "documents")
 
 # Round each oracle-checked query was added to the registry, ONLY for
 # queries that have never yet held a driver-window slot (the staleness

@@ -251,3 +251,29 @@ def test_sql_text_surface_matches_dataframe_api(spark):
     ).collect()
     df_rows = QUERIES["q1_pricing_summary"](spark, sf_dir).collect()
     assert [tuple(r) for r in sql_rows] == [tuple(r) for r in df_rows]
+
+
+def test_building_a_query_tunes_the_session_once(spark, monkeypatch):
+    # a row tunes once for all its tables (q5 reads six)
+    from parcial_bigdata_spark.plans import registry
+
+    calls = []
+    tune = registry.tune_runtime
+    monkeypatch.setattr(registry, "tune_runtime", lambda s: calls.append(s) or tune(s))
+    registry.QUERIES["q5_region_revenue"](spark, SF_DIR)
+    assert len(calls) == 1
+
+
+def test_a_row_loads_its_inputs_and_passes_constants_through(spark):
+    # a string constant after the inputs is a constant, never a table
+    from parcial_bigdata_spark.plans.registry import _op
+
+    def derived(s, sf_dir):
+        return "derived frame"
+
+    row = _op(lambda *args, **kw: (args, kw), ("orders", derived), "l_suppkey", top_n=3)
+    (orders, frame, const), kw = row(spark, SF_DIR)
+    assert "o_orderkey" in orders.columns
+    assert (frame, const, kw) == ("derived frame", "l_suppkey", {"top_n": 3})
+    (lineitem, part), _ = _op(lambda *a: (a, None), "lineitem part")(spark, SF_DIR)
+    assert "l_partkey" in lineitem.columns and "p_partkey" in part.columns

@@ -10,11 +10,14 @@ as on a 32-CPU machine (``local[32]``, 32 shuffle partitions) whatever
 the machine's CPU count, and each plan's
 expression ids (``#N``), ``plan_id=N`` and RDD ids (``MapPartitionsRDD[N]``)
 are renumbered in order of first appearance, so regenerating the file
-after a plan change shows that change alone.
+after a plan change shows that change alone.  Each query is built from
+one expression-id state (``fixed_expr_ids``), so its plan does not
+depend on the queries dumped before it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
@@ -79,6 +82,49 @@ PLAN_CPUS = 32
 
 # run-dependent ids, each numbered from 0 within one plan
 _IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)")
+
+
+# where every query's build starts numbering expressions: far above the
+# ids a session hands out on its own, so a build never reuses a live id
+ID_BASE = 1 << 40
+
+
+@contextlib.contextmanager
+def fixed_expr_ids(spark):
+    """Number the expressions built in the block from ``ID_BASE``, then
+    put Spark's expression-id counter back above every id handed out.
+
+    Renumbering cannot hide absolute ids where a rewrite orders its
+    output by id hashes: the rewrite of several distinct aggregates
+    (``RewriteDistinctAggregates``) orders its ``Expand`` groups that
+    way.  Building each query from one id state makes its plan
+    independent of the queries built before it in the process.  The
+    counter is ``NamedExpression.curId``, a private static
+    ``AtomicLong``; Py4J would hand back its value, not the counter, so
+    its get and set are bound as method handles on the JVM side."""
+    jvm = spark._jvm
+    field = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.NamedExpression$"
+    ).getDeclaredField("curId")
+    field.setAccessible(True)
+    invoke = jvm.java.lang.invoke
+    lookup = invoke.MethodHandles.lookup()
+    atomic = jvm.java.lang.Class.forName("java.util.concurrent.atomic.AtomicLong")
+    long_, void = jvm.java.lang.Long.TYPE, jvm.java.lang.Void.TYPE
+    counter = lookup.unreflectGetter(field)
+    get, set_ = (
+        invoke.MethodHandles.collectArguments(h, 0, counter)
+        for h in (
+            lookup.findVirtual(atomic, "get", invoke.MethodType.methodType(long_)),
+            lookup.findVirtual(atomic, "set", invoke.MethodType.methodType(void, long_)),
+        )
+    )
+    resume = get.invokeWithArguments([])
+    set_.invokeWithArguments([ID_BASE])
+    try:
+        yield
+    finally:
+        set_.invokeWithArguments([max(resume, get.invokeWithArguments([]))])
 
 
 def renumber(plan: str) -> str:
@@ -150,8 +196,9 @@ def main() -> None:
         return renumber(re.sub(r"[^\x09\x0a\x20-\x7e]", "", raw).rstrip())
 
     for name, why in SHOWCASE:
-        df = QUERIES[name](spark, sf_dir)
-        out += [f"## {name}", "", f"_{why}_", "", "```", formatted_plan(df), "```", ""]
+        with fixed_expr_ids(spark):
+            plan = formatted_plan(QUERIES[name](spark, sf_dir))
+        out += [f"## {name}", "", f"_{why}_", "", "```", plan, "```", ""]
     Path(__file__).resolve().parent.parent.joinpath("PLANS.md").write_text(
         "\n".join(out)
     )
