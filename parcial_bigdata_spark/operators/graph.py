@@ -439,6 +439,64 @@ def kcore(
 _LAST_KCORE_STATS: dict = {}
 
 
+def _symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every undirected edge as (s, t), checkpointed:
+    the edge frame a layered BFS joins its frontier to every round."""
+    from parcial_bigdata_spark.operators.scale import iter_checkpoint
+
+    und = _canonical_undirected(edges, src, dst)
+    return iter_checkpoint(
+        und.select(F.col("u").alias("s"), F.col("v").alias("t")).unionByName(
+            und.select(F.col("v").alias("s"), F.col("u").alias("t"))
+        )
+    )
+
+
+def _bfs_dist(e: DataFrame, seed: DataFrame, max_hops: int) -> DataFrame:
+    """Layered BFS over the symmetric edge frame ``e`` (from
+    ``_symmetric_edges``) from the hop-0 rows of ``seed``: every round
+    the frontier joins ``e``, anti-joins everything already labeled and
+    becomes the next frontier, until a round labels nothing or
+    ``max_hops`` rounds ran.  ``seed``'s columns before ``hop`` key a
+    row: ``node`` for one source, ``seed, node`` for several sources
+    advancing in the same rounds.  Returns the labeled rows (key
+    columns and ``hop``), checkpointed; each round costs one bounded
+    convergence count, and superseded checkpoints are released."""
+    from parcial_bigdata_spark.operators.scale import (
+        iter_checkpoint,
+        release_checkpoint,
+    )
+
+    keys = seed.columns[:-1]
+    dist = iter_checkpoint(seed)
+    frontier = dist
+    for h in range(1, max_hops + 1):
+        reached = (
+            frontier.join(e, frontier["node"] == e["s"])
+            .select(*keys[:-1], F.col("t").alias("node"))
+            .distinct()
+        )
+        new = iter_checkpoint(
+            reached.join(dist, keys, "left_anti").select(
+                *keys, F.lit(h).alias("hop")
+            )
+        )
+        if new.count() == 0:  # bounded scalar: convergence probe
+            release_checkpoint(new)
+            break
+        nxt = iter_checkpoint(dist.unionByName(new))
+        release_checkpoint(dist)
+        if frontier is not dist:
+            release_checkpoint(frontier)
+        dist, frontier = nxt, new
+    # the last non-empty frontier's rows already live inside the
+    # materialized dist union — release its superseded blocks whether
+    # the loop broke on convergence or exhausted max_hops
+    if frontier is not dist:
+        release_checkpoint(frontier)
+    return dist
+
+
 def bfs_hop_histogram(
     edges: DataFrame,
     src: str = "src",
@@ -465,49 +523,14 @@ def bfs_hop_histogram(
     Scale: each round shuffles |frontier ⋈ edges| rows on the node
     key — Σ over rounds touches each edge twice, O(E) total like CC's
     star rounds; no path enumeration ever materializes."""
-    from parcial_bigdata_spark.operators.scale import (
-        iter_checkpoint,
-        release_checkpoint,
-    )
-
-    und = _canonical_undirected(edges, src, dst)
-    e = iter_checkpoint(
-        und.select(F.col("u").alias("s"), F.col("v").alias("t")).unionByName(
-            und.select(F.col("v").alias("s"), F.col("u").alias("t"))
-        )
-    )
+    e = _symmetric_edges(edges, src, dst)
     nodes = e.select(F.col("s").alias("node")).distinct()
     seed = (
         nodes.agg(F.min("node").alias("node"))
         .where(F.col("node").isNotNull())
         .select("node", F.lit(0).alias("hop"))
     )
-    dist = iter_checkpoint(seed)
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        reached = (
-            frontier.join(e, frontier["node"] == e["s"])
-            .select(F.col("t").alias("node"))
-            .distinct()
-        )
-        new = iter_checkpoint(
-            reached.join(dist, "node", "left_anti").select(
-                "node", F.lit(h).alias("hop")
-            )
-        )
-        if new.count() == 0:  # bounded scalar: convergence probe
-            release_checkpoint(new)
-            break
-        nxt = iter_checkpoint(dist.unionByName(new))
-        release_checkpoint(dist)
-        if frontier is not dist:
-            release_checkpoint(frontier)
-        dist, frontier = nxt, new
-    # the last non-empty frontier's rows already live inside the
-    # materialized dist union — release its superseded blocks whether
-    # the loop broke on convergence or exhausted max_hops
-    if frontier is not dist:
-        release_checkpoint(frontier)
+    dist = _bfs_dist(e, seed, max_hops)
     hops = dist.groupBy("hop").agg(F.count(F.lit(1)).alias("n_nodes"))
     unreached = (
         nodes.join(dist, "node", "left_anti")
@@ -792,17 +815,8 @@ def harmonic_closeness(
     one left_anti against the labeled set; total work O(n_seeds · E)
     worst case, frontiers lineage-cut per round."""
     from parcial_bigdata_spark.functions.money import ratio_round
-    from parcial_bigdata_spark.operators.scale import (
-        iter_checkpoint,
-        release_checkpoint,
-    )
 
-    und = _canonical_undirected(edges, src, dst)
-    e = iter_checkpoint(
-        und.select(F.col("u").alias("s"), F.col("v").alias("t")).unionByName(
-            und.select(F.col("v").alias("s"), F.col("u").alias("t"))
-        )
-    )
+    e = _symmetric_edges(edges, src, dst)
     seeds = (
         e.select(F.col("s").alias("node"))
         .distinct()
@@ -810,29 +824,7 @@ def harmonic_closeness(
         .limit(n_seeds)
         .select(F.col("node").alias("seed"), F.col("node"), F.lit(0).alias("hop"))
     )
-    dist = iter_checkpoint(seeds)
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        reached = (
-            frontier.join(e, frontier["node"] == e["s"])
-            .select("seed", F.col("t").alias("node"))
-            .distinct()
-        )
-        new = iter_checkpoint(
-            reached.join(dist, ["seed", "node"], "left_anti").select(
-                "seed", "node", F.lit(h).alias("hop")
-            )
-        )
-        if new.count() == 0:  # bounded scalar: convergence probe
-            release_checkpoint(new)
-            break
-        nxt = iter_checkpoint(dist.unionByName(new))
-        release_checkpoint(dist)
-        if frontier is not dist:
-            release_checkpoint(frontier)
-        dist, frontier = nxt, new
-    if frontier is not dist:
-        release_checkpoint(frontier)
+    dist = _bfs_dist(e, seeds, max_hops)
     per_hop = (
         dist.where(F.col("hop") > 0)
         .groupBy("seed", "hop")

@@ -40,6 +40,18 @@ PyAV is probed the same way and used by ``frame_sample``'s real mode
 and the ``pyav_frame_summary`` twin.  Everything around the decode
 (schema, Arrow batch shape, mapInPandas plumbing, partitioning) is the
 same on every tier.
+
+The ``synth_*_corpus`` builders make the decode queries' inputs from
+the documents table with built-in expressions only, in closed forms
+the DuckDB oracles replicate.  Each container's framing is written
+once, in the encode kit: ``_png`` (IHDR, optional PLTE, stored-zlib
+IDAT with adler-32, IEND, real CRCs) over ``_filtered_scanlines``,
+``_bmp``, ``_gif_screen`` and ``_gif_image_descriptor``,
+``_avi_hex_sql`` (the RIFF/AVI tree for DIB or MJPG frames) and
+``_jpeg_file_hex_sql`` (the baseline JPEG skeleton around a scan).
+Every corpus ends in ``_corpus``, which spreads the documents over the
+shuffle partitions and selects ``media_id, content, media_type,
+source``.
 """
 
 from __future__ import annotations
@@ -577,6 +589,304 @@ def _parallel_docs(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", "source").repartition(n, "doc_id")
 
 
+def _corpus(
+    documents: DataFrame, content, media_type, rename_first: bool = False,
+    **staged,
+) -> DataFrame:
+    """The one tail of every synthetic corpus: the documents spread by
+    ``_parallel_docs``, then ``media_id`` (the doc_id), ``content``,
+    ``media_type`` and ``source``.  ``content`` is a binary column or a
+    hex-string SQL expression; ``media_type`` a string or a column.
+    ``staged`` columns are projected first, beside doc_id and source,
+    so ``content`` can name one of them several times and it is still
+    computed once per row.  ``rename_first`` renames doc_id to media_id
+    in that staged projection, for a ``content`` that reads staged
+    columns only."""
+    docs = _parallel_docs(documents)
+    media_id = F.col("doc_id").cast("long").alias("media_id")
+    if staged:
+        ids = [media_id, "source"] if rename_first else ["doc_id", "source"]
+        docs = docs.select(*ids, *(c.alias(k) for k, c in staged.items()))
+    if isinstance(content, str):
+        content = F.unhex(F.expr(content))
+    if isinstance(media_type, str):
+        media_type = F.lit(media_type)
+    return docs.select(
+        "media_id" if rename_first else media_id,
+        content.alias("content"),
+        media_type.alias("media_type"),
+        "source",
+    )
+
+
+# -- the encode kit: each container's framing, written once ------------
+#
+# Every synthetic corpus is pure built-in expressions (no UDF), so the
+# corpora stay whole-stage codegen and their DuckDB twins can compute
+# expected statistics in closed form.  Column-form fragments build
+# binary directly; the SQL-fragment forms build one hex string that is
+# unhexed once, and work inside higher-order-function lambdas.
+
+# the pixel corpora's geometry (BMP, PNG, GIF): width 4-15, so BMP row
+# padding is exercised, and height 4-11
+_PX_W = "(4 + doc_id % 12)"
+_PX_H = "(4 + (doc_id * 7) % 8)"
+
+# the JPEG corpora's block geometry and base values D and E
+_JPEG_BW = "(1 + doc_id % 3)"
+_JPEG_BH = "(1 + (doc_id * 7) % 3)"
+_JPEG_D = "64 + doc_id % 64"
+_JPEG_E = "64 + (doc_id * 5) % 64"
+
+
+def _pixel_geometry():
+    """The pixel corpora's (width, height) as bigint columns."""
+    return (
+        (F.lit(4) + F.col("doc_id") % 12).cast("bigint"),
+        (F.lit(4) + (F.col("doc_id") * 7) % 8).cast("bigint"),
+    )
+
+
+def _bmp(w, h, pixel_bytes, *pixels):
+    """A 24-bit uncompressed BMP as a binary column: the file header
+    for a file of 54 + ``pixel_bytes`` bytes, a BITMAPINFOHEADER of
+    ``w`` × ``h`` (bottom-up rows), then the ``pixels`` parts."""
+    return F.concat(
+        F.unhex(F.lit("424D")),                              # 'BM'
+        _le_bytes(F.lit(54) + pixel_bytes, 4),               # file size
+        _zero_bytes(4), _le_bytes(F.lit(54), 4),             # rsvd, offset
+        _le_bytes(F.lit(40), 4),                             # DIB size
+        _le_bytes(w, 4), _le_bytes(h, 4),
+        _le_bytes(F.lit(1), 2), _le_bytes(F.lit(24), 2),     # planes, bpp
+        _zero_bytes(24),                                     # compression..colors
+        *pixels,
+    )
+
+
+def _le_hex_sql(expr: str, n: int) -> str:
+    """SQL fragment: little-endian n-byte hex string of an unsigned
+    integer SQL expression (the expression-level twin of ``_le_hex``,
+    usable inside higher-order-function lambdas)."""
+    parts = ", ".join(
+        f"lpad(hex(CAST(({expr}) AS BIGINT) div {256 ** i} % 256), 2, '0')"
+        for i in range(n)
+    )
+    return f"concat({parts})"
+
+
+def _be_hex_sql(expr: str, n: int) -> str:
+    """SQL fragment: big-endian n-byte hex string of an unsigned
+    integer SQL expression."""
+    return f"lpad(hex(CAST(({expr}) AS BIGINT)), {2 * n}, '0')"
+
+
+def _hex_join(col):
+    """A byte array as one hex string, two digits per element."""
+    return F.array_join(
+        F.transform(col, lambda b: F.lpad(F.hex(b), 2, "0")), ""
+    )
+
+
+def _palette_bytes(n: int):
+    """``n`` RGB palette entries as one flat byte array, entry i being
+    ((3·doc_id + 17i) % 256, +29, +58): the PNG PLTE and the GIF global
+    color table."""
+    return F.expr(
+        f"flatten(transform(sequence(0, {n - 1}), i -> array("
+        "  CAST((3 * doc_id + 17 * i) % 256 AS INT),"
+        "  CAST((3 * doc_id + 17 * i + 29) % 256 AS INT),"
+        "  CAST((3 * doc_id + 17 * i + 58) % 256 AS INT))))"
+    )
+
+
+def _filtered_scanlines(bpp: int, mod: int, sub: str = "", up: str = ""):
+    """PNG scanlines of the closed form raw(y, j) =
+    (doc_id + 7j + 13y) % ``mod`` over the pixel geometry at ``bpp``
+    bytes per pixel, each row led by its filter byte y % 5 so rows
+    cycle all five spec §9 filters (None / Sub / Up / Average / Paeth).
+    The left / up / upper-left neighbours are the same form shifted by
+    −7·bpp / −13 / −(7·bpp + 13), with left and upper-left 0 before
+    the first pixel; Average rows have y ≥ 3 and Paeth rows y ≥ 4, so
+    the shifted bases stay non-negative and plain % is exact.  ``sub``
+    and ``up`` replace the generic Sub and Up bytes by a simplified
+    closed form."""
+
+    def at(shift: str) -> str:
+        return f"(doc_id + 7 * j + 13 * y{shift}) % {mod}"
+
+    raw, u = at(""), at(" - 13")
+    lf = f"IF(j < {bpp}, 0, {at(f' - {7 * bpp}')})"
+    ul = f"IF(j < {bpp}, 0, {at(f' - {7 * bpp + 13}')})"
+    # Paeth predictor with the deltas pre-simplified: |p−left| = |up−ul|,
+    # |p−up| = |left−ul|, |p−ul| = |left+up−2·ul| (ties pick left, then
+    # up — spec §9 order)
+    paeth = (
+        f"CASE WHEN abs(({u}) - ({ul})) <= abs(({lf}) - ({ul}))"
+        f" AND abs(({u}) - ({ul})) <= abs(({lf}) + ({u}) - 2 * ({ul}))"
+        f" THEN {lf}"
+        f" WHEN abs(({lf}) - ({ul})) <= abs(({lf}) + ({u}) - 2 * ({ul}))"
+        f" THEN {u} ELSE {ul} END"
+    )
+    row = f"CAST({_PX_W} AS INT)" if bpp == 1 else f"{bpp} * CAST({_PX_W} AS INT)"
+    return F.expr(
+        f"flatten(transform(sequence(0, CAST({_PX_H} AS INT) - 1), y -> "
+        f"concat(array(CAST(y % 5 AS INT)), transform(sequence(0, {row} - 1), j -> "
+        f"CAST(CASE WHEN y % 5 = 0 THEN {raw}"
+        f" WHEN y % 5 = 1 THEN {sub or f'pmod(({raw}) - ({lf}), 256)'}"
+        f" WHEN y % 5 = 2 THEN {up or f'pmod(({raw}) - ({u}), 256)'}"
+        f" WHEN y % 5 = 3 THEN pmod(({raw}) - ((({lf}) + ({u})) div 2), 256)"
+        f" ELSE pmod(({raw}) - ({paeth}), 256) END AS INT)))))"
+    )
+
+
+def _png(ihdr_flags: str, raw_len, plte: bool = False):
+    """A spec-valid PNG as a binary column over the pixel geometry and
+    the staged scanline bytes ``__png_bytes`` (``raw_len`` bytes, each
+    row led by its filter byte): magic; IHDR with width, height, then
+    ``ihdr_flags`` (bit depth, color type, compression, filter,
+    interlace); a 16-entry PLTE from the staged ``__plte_bytes`` when
+    ``plte``; one IDAT holding a zlib stream of a single stored-mode
+    deflate block (BFINAL=1, BTYPE=00), whose adler-32 trailer an
+    ``aggregate`` HOF computes in-expression so stdlib
+    ``zlib.decompress`` verifies it; and IEND.  Every chunk CRC is
+    CRC-32 over chunk type + data, and ``F.crc32`` implements the
+    polynomial PNG mandates, so a decoder that checks CRCs (PIL)
+    accepts every file."""
+    w, h = _pixel_geometry()
+    adler = F.expr(
+        "aggregate(__png_bytes,"
+        "  named_struct('a', 1L, 'b', 0L),"
+        "  (acc, x) -> named_struct("
+        "    'a', (acc.a + x) % 65521,"
+        "    'b', (acc.b + acc.a + x) % 65521),"
+        "  acc -> acc.b * 65536 + acc.a)"
+    )
+    ihdr = F.concat(
+        F.unhex(F.lit("49484452")),                          # 'IHDR'
+        _be_bytes(w, 4), _be_bytes(h, 4), F.unhex(F.lit(ihdr_flags)),
+    )
+    palette = []
+    if plte:
+        chunk = F.concat(
+            F.unhex(F.lit("504C5445")), F.unhex(_hex_join("__plte_bytes"))
+        )
+        palette = [F.unhex(F.lit("00000030")), chunk, _be_bytes(F.crc32(chunk), 4)]
+    idat = F.concat(
+        F.unhex(F.lit("49444154")),                          # 'IDAT'
+        F.unhex(F.lit("7801")),                              # zlib header
+        F.unhex(F.lit("01")),                                # BFINAL, stored
+        _le_bytes(raw_len, 2), _le_bytes(F.lit(65535) - raw_len, 2),
+        F.unhex(_hex_join("__png_bytes")),                   # scanlines
+        _be_bytes(adler, 4),                                 # zlib adler32
+    )
+    return F.concat(
+        F.unhex(F.lit("89504E470D0A1A0A")),                  # magic
+        F.unhex(F.lit("0000000D")),                          # IHDR length
+        ihdr, _be_bytes(F.crc32(ihdr), 4),
+        *palette,
+        _be_bytes(raw_len + 11, 4), idat, _be_bytes(F.crc32(idat), 4),
+        F.unhex(F.lit("0000000049454E44AE426082")),          # IEND (real CRC)
+    )
+
+
+def _gif_screen(w16, h16, flags: str) -> list:
+    """Hex parts of the GIF89a header and logical screen descriptor:
+    width and height (LE16 hex columns), then ``flags`` (packed byte,
+    background index, aspect ratio)."""
+    return [F.lit("474946383961"), w16, h16, F.lit(flags)]
+
+
+def _gif_image_descriptor(w16, h16, packed: str) -> list:
+    """Hex parts of a GIF image descriptor at (0, 0): width, height,
+    then the ``packed`` byte (local table, interlace)."""
+    return [F.lit("2C00000000"), w16, h16, F.lit(packed)]
+
+
+def _avi_hex_sql(
+    w: str, h: str, n: str, s_frame: str, frame_hex: str, mjpg: bool = False
+) -> str:
+    """SQL fragment: a complete AVI file as hex — RIFF 'AVI ', LIST
+    hdrl (avih at 25 fps, one 'vids' stream: strh + a 40-byte
+    BITMAPINFOHEADER strf at 24 bpp), then LIST movi with ``n`` frame
+    chunks of ``s_frame`` bytes, frame f's hex being ``frame_hex``
+    (which may read the lambda variable ``f``).  Uncompressed frames
+    are 'DIB ' / BI_RGB in ``00db`` chunks; ``mjpg`` frames are 'MJPG'
+    in ``00dc`` chunks, each followed by the RIFF pad byte (every JPEG
+    frame here is odd-sized)."""
+    handler, compression, chunk, pad = (
+        ("'4D4A5047'", "'4D4A5047'", "'30306463'", ", '00'") if mjpg
+        else ("'44494220'", "repeat('00', 4)", "'30306462'", "")
+    )
+    movi_size = f"(4 + {n} * (8 + {s_frame}{' + 1' if pad else ''}))"
+    riff_size = f"(4 + 200 + 8 + {movi_size})"
+    return (
+        "concat("
+        f"'52494646', {_le_hex_sql(riff_size, 4)}, '41564920',"   # RIFF/AVI
+        f"'4C495354', {_le_hex_sql('192', 4)}, '6864726C',"       # LIST hdrl
+        f"'61766968', {_le_hex_sql('56', 4)},"                    # avih
+        f"{_le_hex_sql('40000', 4)}, repeat('00', 12),"     # usec_pf, pad
+        f"{_le_hex_sql(n, 4)}, repeat('00', 4),"            # frames, init
+        f"{_le_hex_sql('1', 4)}, repeat('00', 4),"          # streams, buf
+        f"{_le_hex_sql(w, 4)}, {_le_hex_sql(h, 4)}, repeat('00', 16),"
+        f"'4C495354', {_le_hex_sql('116', 4)}, '7374726C',"       # LIST strl
+        f"'73747268', {_le_hex_sql('56', 4)},"                    # strh
+        f"'76696473', {handler}, repeat('00', 12),"         # 'vids', flags
+        f"{_le_hex_sql('1', 4)}, {_le_hex_sql('25', 4)},"   # scale, rate
+        f"repeat('00', 4), {_le_hex_sql(n, 4)}, repeat('00', 20),"
+        f"'73747266', {_le_hex_sql('40', 4)},"                    # strf
+        f"{_le_hex_sql('40', 4)}, {_le_hex_sql(w, 4)},"     # biSize, biWidth
+        f"{_le_hex_sql(h, 4)}, '0100', '1800', {compression},"
+        f"{_le_hex_sql(s_frame, 4)}, repeat('00', 16),"     # biSizeImage
+        f"'4C495354', {_le_hex_sql(movi_size, 4)}, '6D6F7669',"   # LIST movi
+        f"array_join(transform(sequence(0, {n} - 1), f -> concat("
+        f"{chunk}, {_le_hex_sql(s_frame, 4)}, {frame_hex}{pad})), ''))"
+    )
+
+
+def _jpeg_file_hex_sql(
+    scan: str, cols: str, rows: str, mcu: int = 8,
+    components: str = "01011100", dri: str = "",
+    sos: str = "'FFDA000801010000', '3F00'",
+) -> str:
+    """SQL fragment: a COMPLETE baseline JPEG file as hex around the
+    entropy-coded ``scan`` — SOI, DQT (Q[0] = 8, the rest 1), SOF0 for
+    ``cols`` × ``rows`` MCUs of ``mcu`` pixels with ``components``
+    (count, then id / sampling / table per component), the byte-aligned
+    custom DC and AC Huffman tables, the optional ``dri`` segment, the
+    ``sos`` header, the scan and EOI.  The fixed segments of a
+    grayscale file take 141 bytes (SOI 2 + DQT 69 + SOF0 13 + DHT
+    23+22 + SOS 10 + EOI 2)."""
+    dims = (
+        f"concat(lpad(hex({mcu} * {rows}), 4, '0'), "
+        f"lpad(hex({mcu} * {cols}), 4, '0'))"
+    )
+    return (
+        "concat('FFD8', 'FFDB004300', '08', repeat('01', 63), "
+        f"'FFC000{7 + len(components) // 2:02X}08', {dims}, '{components}', "
+        "'FFC4001500', '0000000101', repeat('00', 11), '0007', "
+        "'FFC4001410', '00000001', repeat('00', 12), '00', "
+        f"{dri}{sos}, {scan}, 'FFD9')"
+    )
+
+
+def _jpeg_dc_scan_sql(bw: str, bh: str, d: str, e: str) -> str:
+    """SQL fragment: the hex scan of ``synth_jpeg_pixel_corpus``'s
+    closed form over bw × bh DC-only blocks — block k's value is ``d``
+    at k = 0, 127 − ``e`` at odd k and ``e`` at even k ≥ 2, coded as
+    the byte pair (16 + v div 16, 16·(v mod 16)).  ``d`` and ``e`` may
+    read a lambda variable of the caller (the MJPG frame ``f``)."""
+    vk = (
+        f"CASE WHEN k = 0 THEN ({d}) WHEN k % 2 = 1 THEN 127 - ({e}) "
+        f"ELSE ({e}) END"
+    )
+    return (
+        f"array_join(transform(flatten(transform("
+        f"sequence(0, CAST(({bw} * {bh}) AS INT) - 1), k -> "
+        f"array(16 + ({vk}) div 16, (({vk}) % 16) * 16))), "
+        f"b -> lpad(hex(b), 2, '0')), '')"
+    )
+
+
 def synth_image_corpus(documents: DataFrame) -> DataFrame:
     """Deterministic REAL image containers built from the documents
     table with pure built-in byte expressions (no UDF): ``doc_id``
@@ -589,7 +899,6 @@ def synth_image_corpus(documents: DataFrame) -> DataFrame:
     same stdlib struct code an actual image corpus hits.  Fixed
     container sizes (png 33 B, bmp 54 B, gif 13 B, jpeg 39 B) make
     byte accounting oracle-exact."""
-    documents = _parallel_docs(documents)
     w = (F.lit(16) + F.col("doc_id") % 64).cast("bigint")
     h = (F.lit(16) + (F.col("doc_id") * 7) % 48).cast("bigint")
     png = F.concat(
@@ -599,20 +908,9 @@ def synth_image_corpus(documents: DataFrame) -> DataFrame:
         F.unhex(F.lit("0806000000")),           # depth 8, RGBA, + flags
         _zero_bytes(4),                         # CRC (header-parse only)
     )
-    bmp = F.concat(
-        F.unhex(F.lit("424D")),                              # 'BM'
-        _le_bytes(F.lit(54) + w * h * 3, 4),                 # file size
-        _zero_bytes(4), _le_bytes(F.lit(54), 4),             # rsvd, offset
-        _le_bytes(F.lit(40), 4),                             # DIB size
-        _le_bytes(w, 4), _le_bytes(h, 4),
-        _le_bytes(F.lit(1), 2), _le_bytes(F.lit(24), 2),     # planes, bpp
-        _zero_bytes(24),                                     # rest of DIB
-    )
-    gif = F.concat(
-        F.unhex(F.lit("474946383961")),          # 'GIF89a'
-        _le_bytes(w, 2), _le_bytes(h, 2),
-        F.unhex(F.lit("700000")),                # packed: no GCT, res 8; bg, aspect
-    )
+    bmp = _bmp(w, h, w * h * 3)
+    # 'GIF89a' + screen descriptor (packed: no GCT, res 8; bg, aspect)
+    gif = F.concat(*map(F.unhex, _gif_screen(_le_hex(w, 2), _le_hex(h, 2), "700000")))
     jpeg = F.concat(
         F.unhex(F.lit("FFD8")),                  # SOI
         # APP0/JFIF (len 16): the walk must SKIP a segment to reach SOF
@@ -631,12 +929,7 @@ def synth_image_corpus(documents: DataFrame) -> DataFrame:
         .when(fmt == "gif", gif)
         .otherwise(jpeg)
     )
-    return documents.select(
-        F.col("doc_id").cast("long").alias("media_id"),
-        content.alias("content"),
-        fmt.alias("media_type"),
-        F.col("source").alias("source"),
-    )
+    return _corpus(documents, content, fmt)
 
 
 def synth_video_corpus(documents: DataFrame) -> DataFrame:
@@ -648,7 +941,6 @@ def synth_video_corpus(documents: DataFrame) -> DataFrame:
     duration).  ``decode_media``'s REAL path walks these with the same
     stdlib chunk/box code an actual video corpus hits.  Fixed container
     sizes (avi 88 B, mp4 132 B) make byte accounting oracle-exact."""
-    documents = _parallel_docs(documents)
     frames = (F.lit(10) + F.col("doc_id") % 240).cast("bigint")
     w = (F.lit(32) + F.col("doc_id") % 32).cast("bigint")
     h = (F.lit(24) + F.col("doc_id") % 24).cast("bigint")
@@ -675,12 +967,7 @@ def synth_video_corpus(documents: DataFrame) -> DataFrame:
         _zero_bytes(80),                                             # rate..next_track
     )
     fmt = F.when(F.col("doc_id") % 2 == 0, F.lit("avi")).otherwise(F.lit("mp4"))
-    return documents.select(
-        F.col("doc_id").cast("long").alias("media_id"),
-        F.when(fmt == "avi", avi).otherwise(mp4).alias("content"),
-        fmt.alias("media_type"),
-        F.col("source").alias("source"),
-    )
+    return _corpus(documents, F.when(fmt == "avi", avi).otherwise(mp4), fmt)
 
 
 def _dib_stride(w: int) -> int:
@@ -2108,145 +2395,53 @@ def synth_bmp_pixel_corpus(documents: DataFrame) -> DataFrame:
     channel sum and byte extremum is pinned end-to-end.  Rows are
     emitted in file order (bottom-up for positive height, but every
     pinned statistic is orientation-free)."""
-    documents = _parallel_docs(documents)
-    w = (F.lit(4) + F.col("doc_id") % 12).cast("bigint")
-    h = (F.lit(4) + (F.col("doc_id") * 7) % 8).cast("bigint")
+    w, h = _pixel_geometry()
     stride = F.floor((w * 3 + 3) / 4).cast("bigint") * 4
     pixels_hex = F.expr(
-        "array_join(transform(sequence(0, CAST(4 + (doc_id * 7) % 8 AS INT) - 1), y -> "
+        f"array_join(transform(sequence(0, CAST({_PX_H} AS INT) - 1), y -> "
         "  concat("
-        "    array_join(transform(sequence(0, CAST(4 + doc_id % 12 AS INT) - 1), x -> "
+        f"    array_join(transform(sequence(0, CAST({_PX_W} AS INT) - 1), x -> "
         "      concat(lpad(hex((doc_id + 3*x + 5*y) % 256), 2, '0'),"
         "             lpad(hex((doc_id + 3*x + 5*y + 11) % 256), 2, '0'),"
         "             lpad(hex((doc_id + 3*x + 5*y + 22) % 256), 2, '0'))), ''),"
-        "    repeat('00', CAST((4 - ((4 + doc_id % 12) * 3) % 4) % 4 AS INT)))), '')"
+        f"    repeat('00', CAST((4 - ({_PX_W} * 3) % 4) % 4 AS INT)))), '')"
     )
-    content = F.concat(
-        F.unhex(F.lit("424D")),                              # 'BM'
-        _le_bytes(F.lit(54) + stride * h, 4),                # file size
-        _zero_bytes(4), _le_bytes(F.lit(54), 4),             # rsvd, offset
-        _le_bytes(F.lit(40), 4),                             # DIB size
-        _le_bytes(w, 4), _le_bytes(h, 4),
-        _le_bytes(F.lit(1), 2), _le_bytes(F.lit(24), 2),     # planes, bpp
-        _zero_bytes(24),                                     # compression..colors
-        F.unhex(pixels_hex),
-    )
-    return documents.select(
-        F.col("doc_id").cast("long").alias("media_id"),
-        content.alias("content"),
-        F.lit("bmp").alias("media_type"),
-        F.col("source").alias("source"),
+    return _corpus(
+        documents, _bmp(w, h, stride * h, F.unhex(pixels_hex)), "bmp"
     )
 
 
 def synth_png_pixel_corpus(documents: DataFrame) -> DataFrame:
     """Deterministic REAL 8-bit RGB PNGs — magic, IHDR, a VALID zlib
-    IDAT stream, IEND — built from the documents table with pure
-    built-in byte expressions (no UDF on the construction side).
+    IDAT stream, IEND (``_png``: stored-mode deflate, in-expression
+    adler32, real chunk CRCs) — built from the documents table with
+    pure built-in byte expressions (no UDF on the construction side).
 
-    The IDAT payload is a single stored-mode deflate block (BFINAL=1,
-    BTYPE=00 — spec-legal zlib, chosen because raw scanlines stay a
-    closed form), and the adler32 trailer is computed IN-EXPRESSION
-    with an ``aggregate`` HOF over the scanline bytes, so stdlib
-    ``zlib.decompress`` verifies the checksum end-to-end on the decode
-    side.  Scanlines exercise the REAL unfilter over ALL FIVE spec §9
-    filter types: row filter cycles y % 5 (None / Sub / Up / Average /
-    Paeth), with filtered bytes derived in closed form from the raw
-    byte (doc_id + 7j + 13y) % 256 — Sub deltas collapse to the
-    constant 21 past the first pixel, Up deltas to 13, and the Average
-    and Paeth filtered bytes are exact mod-256 arithmetic over the
-    closed-form left / up / upper-left raw neighbours (left and
-    upper-left are 0 before the first pixel, so the decoder's
-    sequential predictors are exercised at the boundary too).  Every
-    image carries an Average row (y=3; heights are ≥4) and all but the
-    h=4 images carry a Paeth row (y=4).  Geometry matches the BMP
-    corpus (width 4-15, height 4-11).  Chunk
-    CRCs are REAL since round 13 (``F.crc32`` over chunk type + data —
-    the same CRC-32 polynomial PNG mandates), so the corpus is fully
-    spec-valid and any external decoder (e.g. the optional PIL tier,
+    Scanlines exercise the REAL unfilter over ALL FIVE spec §9 filter
+    types (``_filtered_scanlines`` at bpp = 3): row filter cycles y % 5
+    (None / Sub / Up / Average / Paeth), with filtered bytes derived in
+    closed form from the raw byte (doc_id + 7j + 13y) % 256 — Sub
+    deltas collapse to the constant 21 past the first pixel, Up deltas
+    to 13, and the Average and Paeth filtered bytes are exact mod-256
+    arithmetic over the closed-form left / up / upper-left raw
+    neighbours (left and upper-left are 0 before the first pixel, so
+    the decoder's sequential predictors are exercised at the boundary
+    too).  Every image carries an Average row (y=3; heights are ≥4) and
+    all but the h=4 images carry a Paeth row (y=4).  Geometry matches
+    the BMP corpus (width 4-15, height 4-11).  The corpus is fully
+    spec-valid, so any external decoder (e.g. the optional PIL tier,
     which VERIFIES chunk CRCs where stdlib zlib does not) accepts it;
-    the stdlib chunk walk reads lengths, not CRCs, so the decoded
-    statistics are unchanged.  The oracle replicates the raw-byte
-    closed form per RGB channel, pinning every statistic end-to-end."""
-    documents = _parallel_docs(documents)
-    w = (F.lit(4) + F.col("doc_id") % 12).cast("bigint")
-    h = (F.lit(4) + (F.col("doc_id") * 7) % 8).cast("bigint")
-    raw_len = h * (1 + 3 * w)
-    # closed-form raw neighbours for the predictor filters: raw(y, j) =
-    # (doc_id + 7j + 13y) % 256, so left / up / upper-left are the same
-    # form shifted by -21 / -13 / -34 (left and upper-left are 0 before
-    # the first pixel; Average/Paeth rows have y >= 3 so the shifted
-    # bases stay non-negative and plain % is exact)
-    r_ = "(doc_id + 7 * j + 13 * y) % 256"
-    l_ = "IF(j < 3, 0, (doc_id + 7 * j + 13 * y - 21) % 256)"
-    u_ = "(doc_id + 7 * j + 13 * y - 13) % 256"
-    ul_ = "IF(j < 3, 0, (doc_id + 7 * j + 13 * y - 34) % 256)"
-    # Paeth predictor with the deltas pre-simplified: |p−left| = |up−ul|,
-    # |p−up| = |left−ul|, |p−ul| = |left+up−2·ul| (ties pick left, then
-    # up — spec §9 order)
-    paeth_pred = (
-        f"CASE WHEN abs(({u_}) - ({ul_})) <= abs(({l_}) - ({ul_}))"
-        f" AND abs(({u_}) - ({ul_})) <= abs(({l_}) + ({u_}) - 2 * ({ul_}))"
-        f" THEN {l_}"
-        f" WHEN abs(({l_}) - ({ul_})) <= abs(({l_}) + ({u_}) - 2 * ({ul_}))"
-        f" THEN {u_} ELSE {ul_} END"
+    the stdlib chunk walk reads lengths, not CRCs.  The oracle
+    replicates the raw-byte closed form per RGB channel, pinning every
+    statistic end-to-end."""
+    w, h = _pixel_geometry()
+    # Sub deltas collapse to the constant 21 past the first pixel, Up to 13
+    scanlines = _filtered_scanlines(
+        3, 256, sub="IF(j < 3, (doc_id + 7 * j + 13 * y) % 256, 21)", up="13"
     )
-    scanline_bytes = F.expr(
-        "flatten(transform(sequence(0, CAST(4 + (doc_id * 7) % 8 AS INT) - 1), y -> "
-        "  concat("
-        "    array(CAST(y % 5 AS INT)),"
-        "    transform(sequence(0, 3 * CAST(4 + doc_id % 12 AS INT) - 1), j -> "
-        "      CAST(CASE"
-        f"        WHEN y % 5 = 0 THEN {r_}"
-        f"        WHEN y % 5 = 1 THEN IF(j < 3, {r_}, 21)"
-        "        WHEN y % 5 = 2 THEN 13"
-        f"        WHEN y % 5 = 3 THEN pmod(({r_}) - ((({l_}) + ({u_})) div 2), 256)"
-        f"        ELSE pmod(({r_}) - ({paeth_pred}), 256) END AS INT)))))"
-    )
-    adler = F.expr(
-        "aggregate(__png_bytes,"
-        "  named_struct('a', 1L, 'b', 0L),"
-        "  (acc, x) -> named_struct("
-        "    'a', (acc.a + x) % 65521,"
-        "    'b', (acc.b + acc.a + x) % 65521),"
-        "  acc -> acc.b * 65536 + acc.a)"
-    )
-    bytes_hex = F.array_join(
-        F.transform("__png_bytes", lambda b: F.lpad(F.hex(b), 2, "0")), ""
-    )
-    # chunk CRCs are CRC-32 over (type || data) — F.crc32 implements the
-    # identical polynomial, so both chunks carry REAL spec-valid CRCs
-    ihdr_chunk = F.concat(
-        F.unhex(F.lit("49484452")),                          # 'IHDR'
-        _be_bytes(w, 4), _be_bytes(h, 4),
-        F.unhex(F.lit("0802000000")),                        # depth 8, RGB
-    )
-    idat_chunk = F.concat(
-        F.unhex(F.lit("49444154")),                          # 'IDAT'
-        F.unhex(F.lit("7801")),                              # zlib header
-        F.unhex(F.lit("01")),                                # BFINAL, stored
-        _le_bytes(raw_len, 2), _le_bytes(F.lit(65535) - raw_len, 2),
-        F.unhex(bytes_hex),                                  # raw scanlines
-        _be_bytes(adler, 4),                                 # zlib adler32
-    )
-    content = F.concat(
-        F.unhex(F.lit("89504E470D0A1A0A")),                  # magic
-        F.unhex(F.lit("0000000D")),                          # IHDR length
-        ihdr_chunk,
-        _be_bytes(F.crc32(ihdr_chunk), 4),                   # IHDR CRC
-        _be_bytes(raw_len + 11, 4),                          # IDAT length
-        idat_chunk,
-        _be_bytes(F.crc32(idat_chunk), 4),                   # IDAT CRC
-        F.unhex(F.lit("0000000049454E44AE426082")),          # IEND (real CRC)
-    )
-    return (
-        documents.withColumn("__png_bytes", scanline_bytes)
-        .select(
-            F.col("doc_id").cast("long").alias("media_id"),
-            content.alias("content"),
-            F.lit("png").alias("media_type"),
-            F.col("source").alias("source"),
-        )
+    return _corpus(
+        documents, _png("0802000000", h * (1 + 3 * w)), "png",
+        __png_bytes=scanlines,
     )
 
 
@@ -2281,16 +2476,13 @@ def synth_png_interlaced_corpus(documents: DataFrame) -> DataFrame:
     filter ids and corrupt values); pure PLACEMENT errors are
     sum-invisible, so the golden pytest pins them with a
     position-weighted checksum over the final image bytes."""
-    documents = _parallel_docs(documents)
     x0 = "element_at(array(0,4,0,2,0,1,0), CAST(k + 1 AS INT))"
     y0 = "element_at(array(0,0,4,0,2,0,1), CAST(k + 1 AS INT))"
     dx = "element_at(array(8,8,4,4,2,2,1), CAST(k + 1 AS INT))"
     dy = "element_at(array(8,8,8,4,4,2,2), CAST(k + 1 AS INT))"
-    w_ = "(4 + doc_id % 12)"
-    h_ = "(4 + (doc_id * 7) % 8)"
-    pw = f"(({w_} - {x0} + {dx} - 1) div {dx})"
-    ph = f"(({h_} - {y0} + {dy} - 1) div {dy})"
-    scanline_bytes = F.expr(
+    pw = f"(({_PX_W} - {x0} + {dx} - 1) div {dx})"
+    ph = f"(({_PX_H} - {y0} + {dy} - 1) div {dy})"
+    scanlines = F.expr(
         f"flatten(transform(sequence(0, 6), k -> "
         f"IF({pw} <= 0 OR {ph} <= 0, CAST(array() AS ARRAY<INT>), "
         f"flatten(transform(sequence(0, CAST({ph} AS INT) - 1), j -> "
@@ -2300,51 +2492,9 @@ def synth_png_interlaced_corpus(documents: DataFrame) -> DataFrame:
         f"CAST((doc_id + 7 * (3 * ({x0} + i * {dx}) + c) "
         f"+ 13 * ({y0} + j * {dy})) % 256 AS INT))))))))))"
     )
-    w = (F.lit(4) + F.col("doc_id") % 12).cast("bigint")
-    h = (F.lit(4) + (F.col("doc_id") * 7) % 8).cast("bigint")
-    adler = F.expr(
-        "aggregate(__png_bytes,"
-        "  named_struct('a', 1L, 'b', 0L),"
-        "  (acc, x) -> named_struct("
-        "    'a', (acc.a + x) % 65521,"
-        "    'b', (acc.b + acc.a + x) % 65521),"
-        "  acc -> acc.b * 65536 + acc.a)"
-    )
-    bytes_hex = F.array_join(
-        F.transform("__png_bytes", lambda b: F.lpad(F.hex(b), 2, "0")), ""
-    )
     raw_len = F.size(F.col("__png_bytes")).cast("bigint")
-    ihdr_chunk = F.concat(
-        F.unhex(F.lit("49484452")),                          # 'IHDR'
-        _be_bytes(w, 4), _be_bytes(h, 4),
-        F.unhex(F.lit("0802000001")),                        # interlace 1
-    )
-    idat_chunk = F.concat(
-        F.unhex(F.lit("49444154")),                          # 'IDAT'
-        F.unhex(F.lit("7801")),                              # zlib header
-        F.unhex(F.lit("01")),                                # BFINAL, stored
-        _le_bytes(raw_len, 2), _le_bytes(F.lit(65535) - raw_len, 2),
-        F.unhex(bytes_hex),                                  # pass scanlines
-        _be_bytes(adler, 4),                                 # zlib adler32
-    )
-    content = F.concat(
-        F.unhex(F.lit("89504E470D0A1A0A")),                  # magic
-        F.unhex(F.lit("0000000D")),                          # IHDR length
-        ihdr_chunk,
-        _be_bytes(F.crc32(ihdr_chunk), 4),                   # IHDR CRC
-        _be_bytes(raw_len + 11, 4),                          # IDAT length
-        idat_chunk,
-        _be_bytes(F.crc32(idat_chunk), 4),                   # IDAT CRC
-        F.unhex(F.lit("0000000049454E44AE426082")),          # IEND (real CRC)
-    )
-    return (
-        documents.withColumn("__png_bytes", scanline_bytes)
-        .select(
-            F.col("doc_id").cast("long").alias("media_id"),
-            content.alias("content"),
-            F.lit("png").alias("media_type"),
-            F.col("source").alias("source"),
-        )
+    return _corpus(
+        documents, _png("0802000001", raw_len), "png", __png_bytes=scanlines
     )
 
 
@@ -2374,100 +2524,14 @@ def synth_png_palette_corpus(documents: DataFrame) -> DataFrame:
     types (y % 5) at bpp = 1 — the one-byte-per-pixel stride exercises
     the decoder's generalized left-offset paths (the RGB corpus only
     ever hits bpp = 3) — with filtered bytes in closed form over the
-    index arithmetic.  The stored-mode deflate + HOF adler32 + F.crc32
-    chunk CRCs make every byte spec-valid, exactly as the RGB corpus.
+    index arithmetic.  ``_png`` frames
+    it exactly as the RGB corpus, so every byte is spec-valid.
     The oracle replicates index → palette arithmetic per channel."""
-    documents = _parallel_docs(documents)
-    w = (F.lit(4) + F.col("doc_id") % 12).cast("bigint")
-    h = (F.lit(4) + (F.col("doc_id") * 7) % 8).cast("bigint")
-    raw_len = h * (1 + w)
-    # closed-form index neighbours (bpp = 1): ix(y, j) =
-    # (doc_id + 7j + 13y) % 16; left / up / upper-left are the same form
-    # shifted by -7 / -13 / -20 (0 before the first pixel; Average rows
-    # have y >= 3 and Paeth rows y >= 4, so shifted bases stay
-    # non-negative and plain % is exact)
-    ix_ = "(doc_id + 7 * j + 13 * y) % 16"
-    l_ = "IF(j < 1, 0, (doc_id + 7 * j + 13 * y - 7) % 16)"
-    u_ = "(doc_id + 7 * j + 13 * y - 13) % 16"
-    ul_ = "IF(j < 1, 0, (doc_id + 7 * j + 13 * y - 20) % 16)"
-    paeth_pred = (
-        f"CASE WHEN abs(({u_}) - ({ul_})) <= abs(({l_}) - ({ul_}))"
-        f" AND abs(({u_}) - ({ul_})) <= abs(({l_}) + ({u_}) - 2 * ({ul_}))"
-        f" THEN {l_}"
-        f" WHEN abs(({l_}) - ({ul_})) <= abs(({l_}) + ({u_}) - 2 * ({ul_}))"
-        f" THEN {u_} ELSE {ul_} END"
-    )
-    scanline_bytes = F.expr(
-        "flatten(transform(sequence(0, CAST(4 + (doc_id * 7) % 8 AS INT) - 1), y -> "
-        "  concat("
-        "    array(CAST(y % 5 AS INT)),"
-        "    transform(sequence(0, CAST(4 + doc_id % 12 AS INT) - 1), j -> "
-        "      CAST(CASE"
-        f"        WHEN y % 5 = 0 THEN {ix_}"
-        f"        WHEN y % 5 = 1 THEN pmod(({ix_}) - ({l_}), 256)"
-        f"        WHEN y % 5 = 2 THEN pmod(({ix_}) - ({u_}), 256)"
-        f"        WHEN y % 5 = 3 THEN pmod(({ix_}) - ((({l_}) + ({u_})) div 2), 256)"
-        f"        ELSE pmod(({ix_}) - ({paeth_pred}), 256) END AS INT)))))"
-    )
-    plte_bytes = F.expr(
-        "flatten(transform(sequence(0, 15), i -> array("
-        "  CAST((3 * doc_id + 17 * i) % 256 AS INT),"
-        "  CAST((3 * doc_id + 17 * i + 29) % 256 AS INT),"
-        "  CAST((3 * doc_id + 17 * i + 58) % 256 AS INT))))"
-    )
-    adler = F.expr(
-        "aggregate(__png_bytes,"
-        "  named_struct('a', 1L, 'b', 0L),"
-        "  (acc, x) -> named_struct("
-        "    'a', (acc.a + x) % 65521,"
-        "    'b', (acc.b + acc.a + x) % 65521),"
-        "  acc -> acc.b * 65536 + acc.a)"
-    )
-
-    def _hex_join(col):
-        return F.array_join(
-            F.transform(col, lambda b: F.lpad(F.hex(b), 2, "0")), ""
-        )
-
-    ihdr_chunk = F.concat(
-        F.unhex(F.lit("49484452")),                          # 'IHDR'
-        _be_bytes(w, 4), _be_bytes(h, 4),
-        F.unhex(F.lit("0803000000")),                        # depth 8, palette
-    )
-    plte_chunk = F.concat(
-        F.unhex(F.lit("504C5445")),                          # 'PLTE'
-        F.unhex(_hex_join("__plte_bytes")),                  # 48 bytes
-    )
-    idat_chunk = F.concat(
-        F.unhex(F.lit("49444154")),                          # 'IDAT'
-        F.unhex(F.lit("7801")),                              # zlib header
-        F.unhex(F.lit("01")),                                # BFINAL, stored
-        _le_bytes(raw_len, 2), _le_bytes(F.lit(65535) - raw_len, 2),
-        F.unhex(_hex_join("__png_bytes")),                   # raw scanlines
-        _be_bytes(adler, 4),                                 # zlib adler32
-    )
-    content = F.concat(
-        F.unhex(F.lit("89504E470D0A1A0A")),                  # magic
-        F.unhex(F.lit("0000000D")),                          # IHDR length
-        ihdr_chunk,
-        _be_bytes(F.crc32(ihdr_chunk), 4),                   # IHDR CRC
-        F.unhex(F.lit("00000030")),                          # PLTE length (48)
-        plte_chunk,
-        _be_bytes(F.crc32(plte_chunk), 4),                   # PLTE CRC
-        _be_bytes(raw_len + 11, 4),                          # IDAT length
-        idat_chunk,
-        _be_bytes(F.crc32(idat_chunk), 4),                   # IDAT CRC
-        F.unhex(F.lit("0000000049454E44AE426082")),          # IEND (real CRC)
-    )
-    return (
-        documents.withColumn("__png_bytes", scanline_bytes)
-        .withColumn("__plte_bytes", plte_bytes)
-        .select(
-            F.col("doc_id").cast("long").alias("media_id"),
-            content.alias("content"),
-            F.lit("png").alias("media_type"),
-            F.col("source").alias("source"),
-        )
+    w, h = _pixel_geometry()
+    return _corpus(
+        documents, _png("0803000000", h * (1 + w), plte=True), "png",
+        __png_bytes=_filtered_scanlines(1, 16),
+        __plte_bytes=_palette_bytes(16),
     )
 
 
@@ -2507,58 +2571,33 @@ def synth_gif_pixel_corpus(
     index (doc_id + 7x + 13y) % 16.  Geometry matches the PNG corpora
     (width 4-15, height 4-11), so the stream (2wh+1 ≤ 331 bytes) spans
     at most two data sub-blocks — both split arms exercised."""
-    documents = _parallel_docs(documents)
-    w = (F.lit(4) + F.col("doc_id") % 12).cast("bigint")
-    h = (F.lit(4) + (F.col("doc_id") * 7) % 8).cast("bigint")
+    w, h = _pixel_geometry()
     # stream = (CLEAR, pixel) per pixel + one EOI = 2wh + 1 bytes
     total = (F.lit(2) * w * h + 1).cast("bigint")
     if not interlaced:
         px_seq = (
             "flatten(transform("
-            "  sequence(0, CAST((4 + doc_id % 12) * (4 + (doc_id * 7) % 8) AS INT) - 1),"
-            "  p -> array(128, CAST((doc_id + 7 * (p % (4 + doc_id % 12))"
-            "       + 13 * (p div (4 + doc_id % 12))) % 16 AS INT))))"
+            f"  sequence(0, CAST({_PX_W} * {_PX_H} AS INT) - 1),"
+            f"  p -> array(128, CAST((doc_id + 7 * (p % {_PX_W})"
+            f"       + 13 * (p div {_PX_W})) % 16 AS INT))))"
         )
     else:
         # four-pass row order (spec appendix E); pass 2 (start 4,
         # step 8) is EMPTY for h = 4 images — slice() yields the typed
         # empty array Spark's IF branch unification needs
-        h_ = "(4 + (doc_id * 7) % 8)"
         row_order = (
-            f"concat(sequence(0, {h_} - 1, 8),"
-            f" IF({h_} > 4, sequence(4, {h_} - 1, 8),"
+            f"concat(sequence(0, {_PX_H} - 1, 8),"
+            f" IF({_PX_H} > 4, sequence(4, {_PX_H} - 1, 8),"
             f"    slice(sequence(0, 0), 1, 0)),"
-            f" sequence(2, {h_} - 1, 4),"
-            f" sequence(1, {h_} - 1, 2))"
+            f" sequence(2, {_PX_H} - 1, 4),"
+            f" sequence(1, {_PX_H} - 1, 2))"
         )
         px_seq = (
             f"flatten(transform({row_order}, y -> "
             "flatten(transform("
-            "  sequence(0, CAST(4 + doc_id % 12 AS INT) - 1), x -> "
+            f"  sequence(0, CAST({_PX_W} AS INT) - 1), x -> "
             "  array(128, CAST((doc_id + 7 * x + 13 * y) % 16 AS INT))))))"
         )
-    stream_bytes = F.expr(f"concat({px_seq}, array(129))")
-    gct_bytes = F.expr(
-        "flatten(transform(sequence(0, 127), i -> array("
-        " CAST((3 * doc_id + 17 * i) % 256 AS INT),"
-        " CAST((3 * doc_id + 17 * i + 29) % 256 AS INT),"
-        " CAST((3 * doc_id + 17 * i + 58) % 256 AS INT))))"
-    )
-
-    def _hex_join(col):
-        return F.array_join(
-            F.transform(col, lambda b: F.lpad(F.hex(b), 2, "0")), ""
-        )
-
-    staged = documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("source"),
-        total.alias("__total"),
-        _hex_join(stream_bytes).alias("__shex"),
-        _hex_join(gct_bytes).alias("__gct"),
-        _le_hex(w, 2).alias("__w16"),
-        _le_hex(h, 2).alias("__h16"),
-    )
     # LZW data: min code size 07, then the stream split into <=255-byte
     # sub-blocks (one or two at this geometry), then the 00 terminator
     data_hex = F.concat(
@@ -2578,23 +2617,22 @@ def synth_gif_pixel_corpus(
         ),
         F.lit("00"),
     )
+    w16, h16 = F.col("__w16"), F.col("__h16")
     content_hex = F.concat(
-        F.lit("474946383961"),                    # 'GIF89a'
-        F.col("__w16"), F.col("__h16"),
         # LSD flags 0xF6: GCT present, color resolution 8, size 128
-        F.lit("F60000"),
+        *_gif_screen(w16, h16, "F60000"),
         F.col("__gct"),
-        F.lit("2C00000000"),                      # image descriptor
-        F.col("__w16"), F.col("__h16"),
-        F.lit("40" if interlaced else "00"),      # interlace flag
+        *_gif_image_descriptor(w16, h16, "40" if interlaced else "00"),
         data_hex,
         F.lit("3B"),                              # trailer
     )
-    return staged.select(
-        "media_id",
-        F.unhex(content_hex).alias("content"),
-        F.lit("image/gif").alias("media_type"),
-        "source",
+    return _corpus(
+        documents, F.unhex(content_hex), "image/gif", rename_first=True,
+        __total=total,
+        __shex=_hex_join(F.expr(f"concat({px_seq}, array(129))")),
+        __gct=_hex_join(_palette_bytes(128)),
+        __w16=_le_hex(w, 2),
+        __h16=_le_hex(h, 2),
     )
 
 
@@ -2631,52 +2669,27 @@ def synth_mjpg_avi_corpus(documents: DataFrame) -> DataFrame:
     """Deterministic REAL Motion-JPEG AVIs — the full RIFF tree of
     ``synth_avi_frame_corpus`` with strf biCompression = 'MJPG' and
     every ``00dc`` chunk a COMPLETE baseline JPEG file (the
-    ``_jpeg_file_hex_sql`` closed form, geometry fixed per doc, frame
+    ``_jpeg_dc_scan_sql`` closed form, geometry fixed per doc, frame
     f's values D = 64 + (doc_id + 31f) % 64,
     E = 64 + (5·doc_id + 13f) % 64) — built with pure built-in byte
     expressions.  Each JPEG is 141 + 2·bw·bh bytes — always ODD, so
     every frame chunk carries the RIFF pad byte (the spec path the
     even-sized DIB corpus never exercises)."""
-    documents = _parallel_docs(documents)
-    bw = "(1 + doc_id % 3)"
-    bh = "(1 + (doc_id * 7) % 3)"
-    w = f"(8 * {bw})"
-    h = f"(8 * {bh})"
-    n = "(2 + doc_id % 2)"
-    s_frame = f"(141 + 2 * {bw} * {bh})"
+    bw, bh = _JPEG_BW, _JPEG_BH
     frame_hex = _jpeg_file_hex_sql(
+        _jpeg_dc_scan_sql(
+            bw, bh,
+            "64 + (doc_id + 31 * f) % 64", "64 + (doc_id * 5 + 13 * f) % 64",
+        ),
         bw, bh,
-        "64 + (doc_id + 31 * f) % 64", "64 + (doc_id * 5 + 13 * f) % 64",
     )
-    movi_size = f"(4 + {n} * (8 + {s_frame} + 1))"  # +1: odd-size pad
-    riff_size = f"(4 + 200 + 8 + {movi_size})"
-    content_hex = F.expr(
-        "concat("
-        f"'52494646', {_le_hex_sql(riff_size, 4)}, '41564920',"   # RIFF/AVI
-        f"'4C495354', {_le_hex_sql('192', 4)}, '6864726C',"       # LIST hdrl
-        f"'61766968', {_le_hex_sql('56', 4)},"                    # avih
-        f"{_le_hex_sql('40000', 4)}, repeat('00', 12),"
-        f"{_le_hex_sql(n, 4)}, repeat('00', 4),"
-        f"{_le_hex_sql('1', 4)}, repeat('00', 4),"
-        f"{_le_hex_sql(w, 4)}, {_le_hex_sql(h, 4)}, repeat('00', 16),"
-        f"'4C495354', {_le_hex_sql('116', 4)}, '7374726C',"       # LIST strl
-        f"'73747268', {_le_hex_sql('56', 4)},"                    # strh
-        "'76696473', '4D4A5047', repeat('00', 12),"  # 'vids','MJPG'
-        f"{_le_hex_sql('1', 4)}, {_le_hex_sql('25', 4)},"
-        f"repeat('00', 4), {_le_hex_sql(n, 4)}, repeat('00', 20),"
-        f"'73747266', {_le_hex_sql('40', 4)},"                    # strf
-        f"{_le_hex_sql('40', 4)}, {_le_hex_sql(w, 4)},"
-        f"{_le_hex_sql(h, 4)}, '0100', '1800', '4D4A5047',"  # 24bpp, MJPG
-        f"{_le_hex_sql(s_frame, 4)}, repeat('00', 16),"
-        f"'4C495354', {_le_hex_sql(movi_size, 4)}, '6D6F7669',"   # LIST movi
-        f"array_join(transform(sequence(0, {n} - 1), f -> concat("
-        f"'30306463', {_le_hex_sql(s_frame, 4)}, {frame_hex}, '00')), ''))"
-    )
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.unhex(content_hex).alias("content"),
-        F.lit("video/avi").alias("media_type"),
-        "source",
+    return _corpus(
+        documents,
+        _avi_hex_sql(
+            f"(8 * {bw})", f"(8 * {bh})", "(2 + doc_id % 2)",
+            f"(141 + 2 * {bw} * {bh})", frame_hex, mjpg=True,
+        ),
+        "video/avi",
     )
 
 
@@ -2693,37 +2706,6 @@ def mjpg_avi_summary(documents: DataFrame) -> DataFrame:
     return decode_video_frames(
         synth_mjpg_avi_corpus(documents)
     ).transform(_ordered_once)
-
-
-def _jpeg_file_hex_sql(bw: str, bh: str, d: str, e: str) -> str:
-    """SQL fragment: a COMPLETE closed-form baseline JPEG file as hex —
-    the ``synth_jpeg_pixel_corpus`` construction (byte-aligned custom
-    Huffman, DC-only blocks, Q[0] = 8) with parametric block geometry
-    and D/E value expressions, so the MJPG-in-AVI corpus can vary the
-    frame content per FRAME inside a transform lambda (``d``/``e`` may
-    reference the lambda variable ``f``).  File size is
-    141 + 2·bw·bh bytes (fixed segments 141: SOI 2 + DQT 69 + SOF0 13
-    + DHT 23+22 + SOS 10 + EOI 2)."""
-    nb = f"({bw} * {bh})"
-    vk = (
-        f"CASE WHEN k = 0 THEN ({d}) WHEN k % 2 = 1 THEN 127 - ({e}) "
-        f"ELSE ({e}) END"
-    )
-    scan = (
-        f"array_join(transform(flatten(transform("
-        f"sequence(0, CAST({nb} AS INT) - 1), k -> "
-        f"array(16 + ({vk}) div 16, (({vk}) % 16) * 16))), "
-        f"b -> lpad(hex(b), 2, '0')), '')"
-    )
-    dims = f"concat(lpad(hex(8 * {bh}), 4, '0'), lpad(hex(8 * {bw}), 4, '0'))"
-    return (
-        "concat('FFD8', 'FFDB004300', '08', repeat('01', 63), "
-        f"'FFC0000B08', {dims}, '01011100', "
-        "'FFC4001500', '0000000101', repeat('00', 11), '0007', "
-        "'FFC4001410', '00000001', repeat('00', 12), '00', "
-        "'FFDA000801010000', '3F00', "
-        f"{scan}, 'FFD9')"
-    )
 
 
 def synth_jpeg_pixel_corpus(documents: DataFrame) -> DataFrame:
@@ -2749,18 +2731,9 @@ def synth_jpeg_pixel_corpus(documents: DataFrame) -> DataFrame:
     baseline algorithm (multi-length Huffman, AC run/size, stuffing,
     restarts, and color are pinned by pytest goldens on genuinely
     compressed fixtures)."""
-    documents = _parallel_docs(documents)
-    content_hex = F.expr(
-        _jpeg_file_hex_sql(
-            "(1 + doc_id % 3)", "(1 + (doc_id * 7) % 3)",
-            "64 + doc_id % 64", "64 + (doc_id * 5) % 64",
-        )
-    )
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.unhex(content_hex).alias("content"),
-        F.lit("image/jpeg").alias("media_type"),
-        "source",
+    scan = _jpeg_dc_scan_sql(_JPEG_BW, _JPEG_BH, _JPEG_D, _JPEG_E)
+    return _corpus(
+        documents, _jpeg_file_hex_sql(scan, _JPEG_BW, _JPEG_BH), "image/jpeg"
     )
 
 
@@ -2776,15 +2749,8 @@ def synth_jpeg_restart_corpus(documents: DataFrame) -> DataFrame:
     oracle verbatim, and any failure to consume a marker, realign the
     bit reader, reset the predictors, or verify the RST sequence
     corrupts values and breaks the hash."""
-    documents = _parallel_docs(documents)
-    bw = "(1 + doc_id % 3)"
-    bh = "(1 + (doc_id * 7) % 3)"
-    nb = f"({bw} * {bh})"
-    d = "64 + doc_id % 64"
-    e = "64 + (doc_id * 5) % 64"
-    vk = (
-        f"CASE WHEN k % 2 = 0 THEN ({d}) ELSE 127 - ({e}) END"
-    )
+    nb = f"({_JPEG_BW} * {_JPEG_BH})"
+    vk = f"CASE WHEN k % 2 = 0 THEN ({_JPEG_D}) ELSE 127 - ({_JPEG_E}) END"
     # block bytes + an RSTn marker after every odd block except the last
     scan = (
         f"array_join(transform(sequence(0, CAST({nb} AS INT) - 1), k -> "
@@ -2793,22 +2759,10 @@ def synth_jpeg_restart_corpus(documents: DataFrame) -> DataFrame:
         f" IF(k % 2 = 1 AND k < {nb} - 1,"
         f"    concat('FFD', hex((k div 2) % 8)), ''))), '')"
     )
-    dims = f"concat(lpad(hex(8 * {bh}), 4, '0'), lpad(hex(8 * {bw}), 4, '0'))"
-    content_hex = F.expr(
-        "concat('FFD8', 'FFDB004300', '08', repeat('01', 63), "
-        f"'FFC0000B08', {dims}, '01011100', "
-        "'FFC4001500', '0000000101', repeat('00', 11), '0007', "
-        "'FFC4001410', '00000001', repeat('00', 12), '00', "
-        "'FFDD00040002', "                       # DRI: restart interval 2
-        "'FFDA000801010000', '3F00', "
-        f"{scan}, 'FFD9')"
+    content = _jpeg_file_hex_sql(
+        scan, _JPEG_BW, _JPEG_BH, dri="'FFDD00040002', "  # restart interval 2
     )
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.unhex(content_hex).alias("content"),
-        F.lit("image/jpeg").alias("media_type"),
-        "source",
-    )
+    return _corpus(documents, content, "image/jpeg")
 
 
 def jpeg_restart_summary(documents: DataFrame) -> DataFrame:
@@ -2848,37 +2802,23 @@ def synth_jpeg_subsampled_corpus(documents: DataFrame) -> DataFrame:
     Geometry: mw x mh MCUs (16mw x 16mh px), mw = 1 + doc_id % 2,
     mh = 1 + (doc_id div 2) % 2 — no MCU crop, so the padded grid IS
     the frame and the closed form needs no edge case."""
-    documents = _parallel_docs(documents)
     mw = "(1 + doc_id % 2)"
     mh = "(1 + (doc_id div 2) % 2)"
-    nm = f"({mw} * {mh})"
-    d = "64 + doc_id % 64"
-    e = "64 + (doc_id * 5) % 64"
     vk = (
-        f"CASE WHEN (4 * m1 + j) = 0 THEN ({d}) "
-        f"WHEN j % 2 = 1 THEN 127 - ({e}) ELSE ({e}) END"
+        f"CASE WHEN (4 * m1 + j) = 0 THEN ({_JPEG_D}) "
+        f"WHEN j % 2 = 1 THEN 127 - ({_JPEG_E}) ELSE ({_JPEG_E}) END"
     )
     scan = (
-        f"array_join(transform(sequence(0, CAST({nm} AS INT) - 1), m1 -> "
+        f"array_join(transform(sequence(0, CAST(({mw} * {mh}) AS INT) - 1), m1 -> "
         f"concat(array_join(transform(sequence(0, 3), j -> "
         f"concat(lpad(hex(16 + ({vk}) div 16), 2, '0'), "
         f"lpad(hex((({vk}) % 16) * 16), 2, '0'))), ''), '0000')), '')"
     )
-    dims = f"concat(lpad(hex(16 * {mh}), 4, '0'), lpad(hex(16 * {mw}), 4, '0'))"
-    content_hex = F.expr(
-        "concat('FFD8', 'FFDB004300', '08', repeat('01', 63), "
-        f"'FFC0001108', {dims}, '03012200021100031100', "
-        "'FFC4001500', '0000000101', repeat('00', 11), '0007', "
-        "'FFC4001410', '00000001', repeat('00', 12), '00', "
-        "'FFDA000C03010002000300', '003F00', "
-        f"{scan}, 'FFD9')"
+    content = _jpeg_file_hex_sql(
+        scan, mw, mh, mcu=16, components="03012200021100031100",
+        sos="'FFDA000C03010002000300', '003F00'",
     )
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.unhex(content_hex).alias("content"),
-        F.lit("image/jpeg").alias("media_type"),
-        "source",
-    )
+    return _corpus(documents, content, "image/jpeg")
 
 
 def jpeg_subsampled_summary(documents: DataFrame) -> DataFrame:
@@ -2913,23 +2853,6 @@ def jpeg_pixel_summary(documents: DataFrame) -> DataFrame:
     ).transform(_ordered_once)
 
 
-def _le_hex_sql(expr: str, n: int) -> str:
-    """SQL fragment: little-endian n-byte hex string of an unsigned
-    integer SQL expression (the expression-level twin of ``_le_hex``,
-    usable inside higher-order-function lambdas)."""
-    parts = ", ".join(
-        f"lpad(hex(CAST(({expr}) AS BIGINT) div {256 ** i} % 256), 2, '0')"
-        for i in range(n)
-    )
-    return f"concat({parts})"
-
-
-def _be_hex_sql(expr: str, n: int) -> str:
-    """SQL fragment: big-endian n-byte hex string of an unsigned
-    integer SQL expression."""
-    return f"lpad(hex(CAST(({expr}) AS BIGINT)), {2 * n}, '0')"
-
-
 def synth_avi_frame_corpus(documents: DataFrame) -> DataFrame:
     """Deterministic REAL AVI files with DECODABLE uncompressed DIB
     frame payloads — full RIFF tree (hdrl → avih + strl → strh 'vids' /
@@ -2944,12 +2867,9 @@ def synth_avi_frame_corpus(documents: DataFrame) -> DataFrame:
     GENERAL stride-aware bottom-up DIB walk (row order, stride
     slicing, and MJPG frames are pinned by pytest goldens on
     non-constant fixtures built by an independent encoder)."""
-    documents = _parallel_docs(documents)
     w = "(8 + doc_id % 8)"
     h = "(4 + doc_id % 4)"
-    n = "(2 + doc_id % 3)"
     stride = f"((3 * {w} + 3) div 4 * 4)"
-    s_frame = f"({stride} * {h})"
     frame_hex = (
         f"repeat(concat(repeat(concat("
         f"lpad(hex((doc_id + 11 * f) % 256), 2, '0'),"
@@ -2957,36 +2877,10 @@ def synth_avi_frame_corpus(documents: DataFrame) -> DataFrame:
         f"lpad(hex((doc_id + 11 * f + 170) % 256), 2, '0')), {w}),"
         f"repeat('00', {stride} - 3 * {w})), {h})"
     )
-    movi_size = f"(4 + {n} * (8 + {s_frame}))"
-    riff_size = f"(4 + 200 + 8 + {movi_size})"
-    content_hex = F.expr(
-        "concat("
-        f"'52494646', {_le_hex_sql(riff_size, 4)}, '41564920',"   # RIFF/AVI
-        f"'4C495354', {_le_hex_sql('192', 4)}, '6864726C',"       # LIST hdrl
-        f"'61766968', {_le_hex_sql('56', 4)},"                    # avih
-        f"{_le_hex_sql('40000', 4)}, repeat('00', 12),"     # usec_pf, pad
-        f"{_le_hex_sql(n, 4)}, repeat('00', 4),"            # frames, init
-        f"{_le_hex_sql('1', 4)}, repeat('00', 4),"          # streams, buf
-        f"{_le_hex_sql(w, 4)}, {_le_hex_sql(h, 4)}, repeat('00', 16),"
-        f"'4C495354', {_le_hex_sql('116', 4)}, '7374726C',"       # LIST strl
-        f"'73747268', {_le_hex_sql('56', 4)},"                    # strh
-        "'76696473', '44494220', repeat('00', 12),"  # 'vids','DIB ',flags
-        f"{_le_hex_sql('1', 4)}, {_le_hex_sql('25', 4)},"   # scale, rate
-        f"repeat('00', 4), {_le_hex_sql(n, 4)}, repeat('00', 20),"
-        f"'73747266', {_le_hex_sql('40', 4)},"                    # strf
-        f"{_le_hex_sql('40', 4)}, {_le_hex_sql(w, 4)},"     # biSize, biWidth
-        f"{_le_hex_sql(h, 4)}, '0100', '1800', repeat('00', 4),"
-        f"{_le_hex_sql(s_frame, 4)}, repeat('00', 16),"     # biSizeImage
-        f"'4C495354', {_le_hex_sql(movi_size, 4)}, '6D6F7669',"   # LIST movi
-        f"array_join(transform(sequence(0, {n} - 1), f -> concat("
-        f"'30306462', {_le_hex_sql(s_frame, 4)}, {frame_hex})), ''))"
+    content = _avi_hex_sql(
+        w, h, "(2 + doc_id % 3)", f"({stride} * {h})", frame_hex
     )
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.unhex(content_hex).alias("content"),
-        F.lit("video/avi").alias("media_type"),
-        "source",
-    )
+    return _corpus(documents, content, "video/avi")
 
 
 def avi_frame_summary(documents: DataFrame) -> DataFrame:
@@ -3071,7 +2965,6 @@ def synth_mp4_frame_corpus(documents: DataFrame) -> DataFrame:
     chroma upsample + matrix transform (non-neutral chroma and
     multi-chunk layouts are pinned by pytest goldens built by an
     independent encoder)."""
-    documents = _parallel_docs(documents)
     w = "(8 + 2 * (doc_id % 5))"
     h = "(4 + 2 * (doc_id % 3))"
     n = "(2 + doc_id % 3)"
@@ -3084,7 +2977,7 @@ def synth_mp4_frame_corpus(documents: DataFrame) -> DataFrame:
     # moov 555 (mvhd 108, trak 439: tkhd 92, mdia 339: mdhd 32, hdlr 33,
     # minf 266: vmhd 20, dinf 36, stbl 202: stsd 102/stts 24/stsc 28/
     # stsz 20/stco 20), mdat 8 + n*S at payload offset 579
-    content_hex = F.expr(
+    content_hex = (
         "concat("
         "'00000010', '66747970', '69736F6D', '00000000',"        # ftyp
         "'0000022B', '6D6F6F76',"                                # moov 555
@@ -3131,12 +3024,7 @@ def synth_mp4_frame_corpus(documents: DataFrame) -> DataFrame:
         f"{_be_hex_sql(f'8 + {n} * {s_frame}', 4)}, '6D646174',"  # mdat
         f"array_join(transform(sequence(0, {n} - 1), f -> {frame_hex}), ''))"
     )
-    return documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.unhex(content_hex).alias("content"),
-        F.lit("video/mp4").alias("media_type"),
-        "source",
-    )
+    return _corpus(documents, content_hex, "video/mp4")
 
 
 def mp4_frame_summary(documents: DataFrame) -> DataFrame:
@@ -3205,7 +3093,6 @@ def synth_wav_corpus(documents: DataFrame) -> DataFrame:
     i is the two's-complement reading of ``(doc_id*13 + i*7) % 65536``
     — a closed form the DuckDB oracle replicates, pinning every decoded
     amplitude sum/square/extremum end-to-end."""
-    documents = _parallel_docs(documents)
     n = (F.lit(64) + F.col("doc_id") % 128).cast("bigint")
     samples_hex = F.expr(
         "array_join(transform("
@@ -3224,12 +3111,7 @@ def synth_wav_corpus(documents: DataFrame) -> DataFrame:
         F.unhex(F.lit("64617461")), _le_bytes(n * 2, 4),              # data
         F.unhex(samples_hex),
     )
-    return documents.select(
-        F.col("doc_id").cast("long").alias("media_id"),
-        content.alias("content"),
-        F.lit("wav").alias("media_type"),
-        F.col("source").alias("source"),
-    )
+    return _corpus(documents, content, "wav")
 
 
 def wav_sample_summary(documents: DataFrame) -> DataFrame:
@@ -3439,18 +3321,12 @@ def synth_gif_corpus(documents: DataFrame) -> DataFrame:
     filler.  The whole payload is assembled as ONE hex string
     (header ‖ repeat(frame, n) ‖ trailer) and unhexed once — codegen
     end to end."""
-    documents = _parallel_docs(documents)
     w = (F.lit(8) + F.col("doc_id") % 32).cast("bigint")
     h = (F.lit(8) + (F.col("doc_id") * 3) % 24).cast("bigint")
     n_frames = (F.lit(1) + F.col("doc_id") % 5).cast("int")
     delay = (F.lit(1) + F.col("doc_id") % 100).cast("bigint")
     sub_len = (F.lit(1) + F.col("doc_id") % 3).cast("int")
-    # GCE (8 B): 21 F9 04 flags=00 delay(LE16) transparent=00 term=00
-    gce = F.concat(F.lit("21F90400"), _le_hex(delay, 2), F.lit("0000"))
-    # image descriptor (10 B): 2C left=0 top=0 w(LE16) h(LE16) packed=00
-    desc = F.concat(
-        F.lit("2C00000000"), _le_hex(w, 2), _le_hex(h, 2), F.lit("00")
-    )
+    w16, h16 = _le_hex(w, 2), _le_hex(h, 2)
     # data: LZW min-code 07, one sub-block of sub_len 0xAA bytes, term 00
     data = F.concat(
         F.lit("07"),
@@ -3458,34 +3334,24 @@ def synth_gif_corpus(documents: DataFrame) -> DataFrame:
         F.expr("repeat('AA', __sub)"),
         F.lit("00"),
     )
-    # header (6 B) + logical screen descriptor (7 B, no global table)
-    header = F.concat(
-        F.lit("474946383961"), _le_hex(w, 2), _le_hex(h, 2), F.lit("700000")
-    )
-    staged = documents.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("source"),
-        n_frames.alias("__n"),
-        sub_len.alias("__sub"),
-        header.alias("__head"),
-        gce.alias("__gce"),
-        desc.alias("__desc"),
-    )
     frame = F.concat(F.col("__gce"), F.col("__desc"), data)
-    return (
-        staged.withColumn("__frame", frame)
-        .select(
-            "media_id",
-            F.unhex(
-                F.concat(
-                    F.col("__head"),
-                    F.expr("repeat(__frame, __n)"),
-                    F.lit("3B"),
-                )
-            ).alias("content"),
-            F.lit("image/gif").alias("media_type"),
-            "source",
+    content = F.unhex(
+        F.concat(
+            F.col("__head"),
+            F.call_function("repeat", frame, F.col("__n")),
+            F.lit("3B"),
         )
+    )
+    return _corpus(
+        documents, content, "image/gif", rename_first=True,
+        __n=n_frames,
+        __sub=sub_len,
+        # header (6 B) + logical screen descriptor (7 B, no global table)
+        __head=F.concat(*_gif_screen(w16, h16, "700000")),
+        # GCE (8 B): 21 F9 04 flags=00 delay(LE16) transparent=00 term=00
+        __gce=F.concat(F.lit("21F90400"), _le_hex(delay, 2), F.lit("0000")),
+        # image descriptor (10 B): 2C left=0 top=0 w(LE16) h(LE16) packed=00
+        __desc=F.concat(*_gif_image_descriptor(w16, h16, "00")),
     )
 
 

@@ -369,7 +369,7 @@ def q_csv_roundtrip(spark, sf_dir):
 
 
 def q_streaming_sessionize(spark, sf_dir):
-    """Second real-streaming oracle query: session windows under
+    """Real-streaming oracle query: session windows under
     AvailableNow must converge to the batch gap-sessionization."""
     tune_runtime(spark)
     return stream_win.sessionize_available_now(spark, _events_file(sf_dir))
@@ -394,7 +394,7 @@ def q_streaming_hourly_rollup(spark, sf_dir):
 
 
 def q_streaming_click_attribution(spark, sf_dir):
-    """Third real-streaming oracle query: a watermarked STREAM-STREAM
+    """Real-streaming oracle query: a watermarked STREAM-STREAM
     interval self-join (purchase ← clicks within 1 day) under
     AvailableNow must emit exactly the batch interval join."""
     tune_runtime(spark)
@@ -402,7 +402,7 @@ def q_streaming_click_attribution(spark, sf_dir):
 
 
 def q_streaming_dedup_census(spark, sf_dir):
-    """Fourth real-streaming oracle query: row-level exactly-once dedup
+    """Real-streaming oracle query: row-level exactly-once dedup
     (dropDuplicatesWithinWatermark) over a 3x duplicate-delivery replay
     must reproduce the plain batch census of the original table."""
     tune_runtime(spark)
@@ -410,7 +410,7 @@ def q_streaming_dedup_census(spark, sf_dir):
 
 
 def q_streaming_cdc_apply(spark, sf_dir):
-    """Fifth real-streaming oracle query: a checkpointed foreachBatch
+    """Real-streaming oracle query: a checkpointed foreachBatch
     CDC MERGE stream (3 disjoint-key update files, one MERGE per
     micro-batch under AvailableNow) must converge the keyed snapshot to
     the batch full-outer MERGE of base and updates."""
@@ -419,7 +419,7 @@ def q_streaming_cdc_apply(spark, sf_dir):
 
 
 def q_streaming_cdc_apply_bucketed(spark, sf_dir):
-    """Sixth real-streaming oracle query: the PARTITION-PRUNED CDC
+    """Real-streaming oracle query: the PARTITION-PRUNED CDC
     MERGE stream (bucket-partitioned snapshot, per-batch rewrites
     bounded to touched bucket directories) must converge to the same
     batch full-outer MERGE as the full-rewrite form."""
@@ -430,7 +430,7 @@ def q_streaming_cdc_apply_bucketed(spark, sf_dir):
 
 
 def q_streaming_ohlc(spark, sf_dir):
-    """Eighth real-streaming oracle query: watermarked tumbling OHLC
+    """Real-streaming oracle query: watermarked tumbling OHLC
     bars (struct-bookend argmin/argmax state) under AvailableNow must
     reproduce the batch hourly_ohlc exactly — they share one oracle."""
     tune_runtime(spark)
@@ -438,17 +438,17 @@ def q_streaming_ohlc(spark, sf_dir):
 
 
 def q_streaming_zscore(spark, sf_dir):
-    """Ninth real-streaming oracle query — and the second CUSTOM
-    STATEFUL operator (applyInPandasWithState) with a hard oracle:
-    per-event prefix z-score anomaly flags; the exact-integer decision
-    rule makes the stateful emission hash-match the batch prefix-window
-    SQL on a bounded replay."""
+    """Real-streaming oracle query over a CUSTOM STATEFUL operator
+    (applyInPandasWithState) with a hard oracle: per-event prefix
+    z-score anomaly flags; the exact-integer decision rule makes the
+    stateful emission hash-match the batch prefix-window SQL on a
+    bounded replay."""
     tune_runtime(spark)
     return stream_state.running_zscore_available_now(spark, _events_file(sf_dir))
 
 
 def q_streaming_late_audit(spark, sf_dir):
-    """Ninth real-streaming oracle query: a TWO-micro-batch replay in
+    """Real-streaming oracle query: a TWO-micro-batch replay in
     deliberate event-time disorder (later half first, earlier half as
     a late barrage) through an append-mode watermarked hourly count —
     the oracle recomputes the emitted/dropped accounting from the
@@ -459,7 +459,7 @@ def q_streaming_late_audit(spark, sf_dir):
 
 
 def q_streaming_topk(spark, sf_dir):
-    """Tenth real-streaming oracle query: 6-hour tumbling (window,
+    """Real-streaming oracle query: 6-hour tumbling (window,
     type) counts maintained in the state store under a REAL
     AvailableNow run, then a batch top-3 rank over the final
     |windows|·|types| table (Structured Streaming forbids the second
@@ -470,7 +470,7 @@ def q_streaming_topk(spark, sf_dir):
 
 
 def q_streaming_outer_join(spark, sf_dir):
-    """Eleventh real-streaming oracle query: a watermarked stream-stream
+    """Real-streaming oracle query: a watermarked stream-stream
     LEFT OUTER interval join under AvailableNow — matched pairs emit as
     found; unmatched purchases emit a null-click row only when the final
     no-data batch's watermark evicts them.  The oracle recomputes both
@@ -481,7 +481,7 @@ def q_streaming_outer_join(spark, sf_dir):
 
 
 def q_streaming_join_tail(spark, sf_dir):
-    """Twelfth real-streaming oracle query: the stream-stream LEFT-join
+    """Real-streaming oracle query: the stream-stream LEFT-join
     retained-tail audit — streamed vs batch matched pairs side by side,
     watermark-evicted null rows, and the deliberately-retained
     unmatched tail, reconciled per purchase day in one output (emitted

@@ -163,6 +163,47 @@ def _run_available_now(
     return _drain(transform(stream), name, output_mode)
 
 
+def _attribution_join(
+    events: DataFrame, lookback: str, watermark: str, how: str, *purchase_cols
+) -> DataFrame:
+    """Purchases joined (``how``) to the same user's clicks in the
+    ``lookback`` window ending at the purchase: both sides are
+    event-type slices of ``events``, each watermarked on its own event
+    time by ``watermark``, so the time-bounded condition gives Spark a
+    state-retention bound for each side.  The purchase side carries
+    ``user_id``, ``purchase_id``, ``purchase_ts`` and any
+    ``purchase_cols``; the click side ``click_user``, ``click_id`` and
+    ``click_ts``."""
+    clicks = (
+        events.where(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("click_user"),
+            F.col("event_id").alias("click_id"),
+            F.col("ts").alias("click_ts"),
+        )
+        .withWatermark("click_ts", watermark)
+    )
+    purchases = (
+        events.where(F.col("event_type") == "purchase")
+        .select(
+            "user_id",
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("purchase_ts"),
+            *purchase_cols,
+        )
+        .withWatermark("purchase_ts", watermark)
+    )
+    return purchases.join(
+        clicks,
+        F.expr(
+            f"""user_id = click_user
+                AND click_ts BETWEEN purchase_ts - INTERVAL {lookback}
+                                 AND purchase_ts"""
+        ),
+        how,
+    )
+
+
 def streaming_click_attribution(
     events: DataFrame, lookback: str = "1 day", watermark: str = "1 hour"
 ) -> DataFrame:
@@ -182,33 +223,9 @@ def streaming_click_attribution(
     stream (the supported stream-stream self-join pattern) — no second
     scan of the source.
     """
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("click_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
-    )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""user_id = click_user
-                AND click_ts BETWEEN purchase_ts - INTERVAL {lookback}
-                                 AND purchase_ts"""
-        ),
-        "inner",
+    return _attribution_join(
+        events, lookback, watermark, "inner",
+        F.col("value").alias("purchase_value"),
     ).select(
         "user_id", "purchase_id", "purchase_ts", "purchase_value",
         "click_id", "click_ts",
@@ -531,33 +548,9 @@ def streaming_outer_attribution(
     the row and emits it with a null click side.  State stays
     O(lookback window of traffic); the null-row latency is exactly the
     watermark delay — the price of outer correctness on a stream."""
-    clicks = (
-        events.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("click_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", watermark)
+    return _attribution_join(events, lookback, watermark, "leftOuter").select(
+        "user_id", "purchase_id", "purchase_ts", "click_id"
     )
-    purchases = (
-        events.where(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    return purchases.join(
-        clicks,
-        F.expr(
-            f"""user_id = click_user
-                AND click_ts BETWEEN purchase_ts - INTERVAL {lookback}
-                                 AND purchase_ts"""
-        ),
-        "leftOuter",
-    ).select("user_id", "purchase_id", "purchase_ts", "click_id")
 
 
 def outer_attribution_available_now(
